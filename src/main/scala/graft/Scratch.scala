@@ -3,11 +3,12 @@ package graft
 import java.io.File
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Cross-session parquet scratch for the DOC-side session tables —
-  * the WmCache pattern generalized to every checkpointed build the
-  * entrypoint keeps (g_simpairs, g_jpairs, g_mhsig, g_hybrid_scores,
-  * g_bpe_vocab, g_lpa, the markov transition census, the decont
-  * shingle indexes, the basket table, the MMR pool).
+/** Cross-session parquet scratch for every per-artifact build: the
+  * ANN indexes WmCache ensures on demand (g_ivf_ct, g_ivf_asg, g_pq_ct,
+  * g_pq_codes, g_bq) and every checkpointed build the entrypoint keeps
+  * (g_simpairs, g_jpairs, g_mhsig, g_hybrid_scores, g_bpe_vocab, g_lpa,
+  * the markov transition census, the decont shingle indexes, the basket
+  * table, the MMR pool).
   *
   * These are exactly the "kept production artifacts" of a curation
   * pipeline: a candidate-pair table, a signature table, a posting /
@@ -18,8 +19,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * as the chain scratch:
   *
   *  - key = md5(sf dir | fingerprint of ALL source parquet files
-  *    (length + mtime each) | table name = build SQL), so a testdata
-  *    refresh or ANY edit to the build SQL auto-invalidates — stale
+  *    (length + mtime each) | table name = build SQL + the build SQL
+  *    of every WmCache artifact it reads), so a testdata refresh or ANY
+  *    edit to the build SQL or its inputs' auto-invalidates — stale
   *    rows are unservable by construction;
   *  - writes go to a process-unique tmp dir renamed into place, so
   *    concurrent builders race safely (either winner's files serve);
@@ -55,11 +57,21 @@ object Scratch {
 
   /** Build-or-read the scratch table `name` for (spark, dir) from
     * `sql`, register it as temp view `name`, and return it. Memoized
-    * per (session, dir, name); `sql` is only rendered on a miss. */
+    * per (session, dir, name); `sql` is only rendered on a miss. The
+    * WmCache artifacts the build reads are ensured first, and their
+    * build SQL joins the cache key. */
   def table(spark: SparkSession, dir: String, name: String,
             sql: => String): DataFrame = {
-    val df = mem.computeIfAbsent((spark, dir, name),
-      _ => build(spark, dir, name, sql))
+    val k = (spark, dir, name)
+    val hit = mem.get(k)
+    val df = if (hit != null) hit else {
+      val text = sql
+      // outside computeIfAbsent: ensuring an input can build another
+      // table, and a nested computeIfAbsent on this map may throw
+      // IllegalStateException("Recursive update")
+      val lineage = WmCache.ensureReads(spark, dir, text)
+      mem.computeIfAbsent(k, _ => build(spark, dir, name, text, lineage))
+    }
     df.createOrReplaceTempView(name)
     df
   }
@@ -106,9 +118,10 @@ object Scratch {
       Seq(dir, dataFingerprint(dir), name + "=" + sql).mkString("|")).take(16)
 
   private def build(spark: SparkSession, dir: String, name: String,
-                    sql: String): DataFrame = {
+                    sql: String, lineage: String): DataFrame = {
     val viaScratch = WmCache.scratchRoot(spark).flatMap { root =>
-      try Some(ensureScratch(spark, dir, root, name, sql))
+      try Some(ensureScratchFrom(spark, dir, root, name,
+        cacheKey(dir, name, sql + lineage), spark.sql(sql)))
       catch { case e: Exception =>
         System.err.println(s"[scratch] $name failed (${e.getMessage}), " +
           "falling back to localCheckpoint"); None }
@@ -118,11 +131,6 @@ object Scratch {
     // Catalyst's CTE-def bookkeeping inside consumers' own CTEs
     viaScratch.getOrElse(timed(name)(spark.sql(sql).localCheckpoint()))
   }
-
-  private def ensureScratch(spark: SparkSession, dir: String, root: File,
-                            name: String, sql: String): DataFrame =
-    ensureScratchFrom(spark, dir, root, name,
-      cacheKey(dir, name, sql), spark.sql(sql))
 
   private def ensureScratchDf(spark: SparkSession, dir: String, root: File,
                               name: String, version: String,
@@ -134,7 +142,7 @@ object Scratch {
                                 name: String, key: String,
                                 mk: => DataFrame): DataFrame = {
     val base = new File(root, "doc-" + key)
-    if (!new File(base, "_DONE").exists()) {
+    val served = if (new File(base, "_DONE").exists()) base else {
       val tmp = new File(root,
         s"${base.getName}.tmp-${ProcessHandle.current().pid()}-${System.nanoTime()}")
       tmp.mkdirs()
@@ -143,31 +151,41 @@ object Scratch {
         Tables.vectorCount(spark, dir) / 200000L)).toInt
       val p = new File(tmp, name).getAbsolutePath
       timed(name)(mk.repartition(parts).write.mode("overwrite").parquet(p))
-      new File(tmp, "_DONE").createNewFile()
-      if (!tmp.renameTo(base)) {
-        // lost a race: a COMPLETE winner serves everyone — drop ours
-        if (new File(base, "_DONE").exists()) deleteRec(tmp)
-        else {
-          // base exists but incomplete (a dead builder's partial):
-          // rename it ASIDE first, then delete the renamed dir — a
-          // delete-in-place would yank parquet files out from under a
-          // concurrent reader in another process that already resolved
-          // `base` (readers holding the old inode via the renamed path
-          // keep valid files); then retry, so the scratch actually
-          // lands and future sessions read instead of rebuilding
-          val stale = new File(root,
-            s"${base.getName}.stale-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-          if (base.renameTo(stale)) deleteRec(stale)
-          if (!tmp.renameTo(base)) {
-            // a live concurrent builder got in between — serve our tmp
-            // this session and say the path leaked instead of hiding it
-            System.err.println(s"[scratch] rename race on $name: serving and leaking $tmp")
-            return spark.read.parquet(p)
-          }
-        }
+      publish(tmp, base, name)
+    }
+    spark.read.parquet(new File(served, name).getAbsolutePath)
+  }
+
+  /** Publishes the complete build in `tmp` as `base` and returns the
+    * directory to serve from: `base`, or `tmp` itself when a live
+    * concurrent writer keeps `base` incomplete. Shared by the WmCache
+    * chain scratch. */
+  private[graft] def publish(tmp: File, base: File, what: String): File = {
+    new File(tmp, "_DONE").createNewFile()
+    if (tmp.renameTo(base)) base
+    else if (new File(base, "_DONE").exists()) {
+      // lost a race: a COMPLETE winner serves everyone — drop ours
+      deleteRec(tmp)
+      base
+    } else {
+      // base exists but incomplete (a dead writer's partial): rename
+      // it ASIDE first, then delete the renamed dir — a delete-in-place
+      // would yank parquet files out from under a concurrent reader in
+      // another process that already resolved `base` (readers holding
+      // the old inode via the renamed path keep valid files); then
+      // retry, so the scratch actually lands and future sessions read
+      // instead of rebuilding
+      val stale = new File(base.getParentFile,
+        s"${base.getName}.stale-${ProcessHandle.current().pid()}-${System.nanoTime()}")
+      if (base.renameTo(stale)) deleteRec(stale)
+      if (tmp.renameTo(base)) base
+      else {
+        // a live concurrent writer got in between — serve our tmp
+        // this session and say the path leaked instead of hiding it
+        System.err.println(s"[scratch] rename race on $what: serving and leaking $tmp")
+        tmp
       }
     }
-    spark.read.parquet(new File(base, name).getAbsolutePath)
   }
 
   private def deleteRec(f: File): Unit = {

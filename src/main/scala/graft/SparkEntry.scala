@@ -7,8 +7,9 @@ import graft.operators.PcaSolve
 /** Driver contract — see /root/repo/SURVEY.md §2 for the operator
   * inventory behind each query key. */
 object SparkEntry {
-  // Spark rendering reads the wm chain from WmCache's materialized
-  // views; the DuckDB oracle always renders the full inline chain.
+  // Spark rendering reads the wm chain and the ANN indexes from
+  // WmCache's materialized g_* views; the DuckDB oracle always renders
+  // the full inline chain.
   //
   // The Spark side derives its LSH plane count from the corpus size
   // (the §4 sizing formula, wired into the entrypoint): at the
@@ -19,7 +20,15 @@ object SparkEntry {
   // instead of ever-fatter ones.
   private val sparkGens =
     new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int), Gen]()
-  private def sparkGenFor(s: SparkSession, dir: String): Gen = {
+  private def genFor(planes: Int, bands: Int, l1j: Int): Gen =
+    sparkGens.computeIfAbsent((planes, bands, l1j), { case (p, b, j) =>
+      new Gen(SparkDialect, useViews = true, lshPlanes = p, simhashBands = b,
+        l1Hashes = j) })
+
+  /** The Spark rendering for `dir`'s corpus — also the one WmCache
+    * builds `dir`'s artifacts from, so the g_* views and every query
+    * reading them agree on the bucket layout. */
+  private[graft] def sparkGenFor(s: SparkSession, dir: String): Gen = {
     val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
     // the doc-side analog: the SimHash band split widens once the
     // corpus outgrows the 5×12 geometry (~82k docs) — §4's band
@@ -30,12 +39,19 @@ object SparkEntry {
     // the L1 rung's AND-construction depth (r11): grows past ~45k
     // vectors, floors at the static default below
     val l1j = graft.sqlgen.Wm.l1HashesFor(Tables.vectorCount(s, dir))
-    sparkGens.computeIfAbsent((planes, bands, l1j), { case (p, b, j) =>
-      new Gen(SparkDialect, useViews = true, lshPlanes = p, simhashBands = b,
-        l1Hashes = j) })
+    genFor(planes, bands, l1j)
   }
-  private lazy val sparkGen = new Gen(SparkDialect, useViews = true)
+  /** The Spark rendering at the static default geometry (what every
+    * verify-scale corpus gets from [[sparkGenFor]]). */
+  private[graft] lazy val sparkGen: Gen = genFor(
+    graft.sqlgen.Wm.LshPlanes, graft.sqlgen.Wm.SimhashBands, 2)
   private lazy val duckGen  = new Gen(DuckDialect)
+
+  /** `sql` as a DataFrame, after ensuring every artifact it reads. */
+  private def sqlOn(s: SparkSession, dir: String, sql: String): DataFrame = {
+    WmCache.ensureReads(s, dir, sql)
+    s.sql(sql)
+  }
 
   /** Flagship: watermark recall-impact pipeline (LSH buckets → kNN graph
     * → in-degree carrier selection → QIM embed → top-k recall overlap)
@@ -45,13 +61,14 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. The
     * programmatic (non-SQL-generated) entries run typed Dataset
-    * pipelines; their oracle SQL lives next to the operator. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    sparkGen.sqls.keys.map { name =>
+    * pipelines; their oracle SQL lives next to the operator. Every
+    * entry ensures the g_* artifacts its statements read, and no
+    * others. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    sparkGen.keys.map { name =>
       name -> ((s: SparkSession, dir: String) => {
         Tables.register(s, dir)
-        if (WmCache.dependents(name)) WmCache.ensure(s, dir)
-        s.sql(sparkGenFor(s, dir).sql(name))
+        sqlOn(s, dir, sparkGenFor(s, dir).sql(name))
       })
     }.toMap ++ programmatic
 
@@ -72,13 +89,11 @@ object SparkEntry {
       // serving leg; r10 verdict item 3). Oracles inline the chain.
       "vec_graph_append" -> ((s, dir) => {
         Tables.register(s, dir)
-        WmCache.ensure(s, dir)
-        s.sql(sparkGenFor(s, dir).graphAppendSql(Some(appendLinksView(s, dir))))
+        sqlOn(s, dir, sparkGenFor(s, dir).graphAppendSql(Some(appendLinksView(s, dir))))
       }),
       "vec_graph_compact" -> ((s, dir) => {
         Tables.register(s, dir)
-        WmCache.ensure(s, dir)
-        s.sql(sparkGenFor(s, dir).graphCompactSql(Some(appendLinksView(s, dir))))
+        sqlOn(s, dir, sparkGenFor(s, dir).graphCompactSql(Some(appendLinksView(s, dir))))
       }),
       // quantile sketches over the PERSISTED histogram artifact: the
       // inline mm/bn CTEs are multi-referenced and Catalyst re-inlines
@@ -90,12 +105,12 @@ object SparkEntry {
       "sketch_quantiles" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_qhist", sparkGen.quantHistBuildSql)
-        s.sql(sparkGen.sketchQuantilesSql(Some("g_qhist")))
+        sqlOn(s, dir, sparkGen.sketchQuantilesSql(Some("g_qhist")))
       }),
       "sketch_quantile_curve" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_qhist_curve", sparkGen.quantCurveHistBuildSql)
-        s.sql(sparkGen.sketchQuantileCurveSql(Some("g_qhist_curve")))
+        sqlOn(s, dir, sparkGen.sketchQuantileCurveSql(Some("g_qhist_curve")))
       }),
       // per-type value quantiles over the PERSISTED per-group
       // histogram (the g_qhist split keyed per event type — r11
@@ -105,7 +120,7 @@ object SparkEntry {
       "events_value_quantiles" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_evqhist", sparkGen.evQuantHistBuildSql)
-        s.sql(sparkGen.eventsValueQuantilesSql(Some("g_evqhist")))
+        sqlOn(s, dir, sparkGen.eventsValueQuantilesSql(Some("g_evqhist")))
       }),
       // shingle-size curve over the PERSISTED (w, df, m) census: the
       // inline union chain's sh/df/dfc CTEs re-inline per reference
@@ -117,7 +132,7 @@ object SparkEntry {
       "dedup_shingle_curve" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_shcensus", sparkGen.shingleCensusBuildSql)
-        s.sql(sparkGen.dedupShingleCurveSql(Some("g_shcensus")))
+        sqlOn(s, dir, sparkGen.dedupShingleCurveSql(Some("g_shcensus")))
       }),
       // RESIDUAL IVFADC (true faiss IVF_PQ, §2 row 4d2): the product
       // codebooks train on x − centroid(cell(x)) — within a coarse
@@ -127,27 +142,24 @@ object SparkEntry {
       // views (build-once/serve-many); oracles inline the full chain.
       "vec_topk_ivfpq_res" -> ((s, dir) => {
         Tables.register(s, dir)
-        WmCache.ensure(s, dir)
         val gen = sparkGenFor(s, dir)
         Scratch.table(s, dir, "g_rpq_ct", gen.rpqTrainBuildSql)
         Scratch.table(s, dir, "g_rpq_codes", gen.rpqCodesBuildSql)
-        s.sql(gen.ivfPqResSql(Some(("g_rpq_ct", "g_rpq_codes"))))
+        sqlOn(s, dir, gen.ivfPqResSql(Some(("g_rpq_ct", "g_rpq_codes"))))
       }),
       "ann_recall_eval_ivfpq_res" -> ((s, dir) => {
         Tables.register(s, dir)
-        WmCache.ensure(s, dir)
         val gen = sparkGenFor(s, dir)
         Scratch.table(s, dir, "g_rpq_ct", gen.rpqTrainBuildSql)
         Scratch.table(s, dir, "g_rpq_codes", gen.rpqCodesBuildSql)
-        s.sql(gen.annRecallEvalIvfPqResSql(Some(("g_rpq_ct", "g_rpq_codes"))))
+        sqlOn(s, dir, gen.annRecallEvalIvfPqResSql(Some(("g_rpq_ct", "g_rpq_codes"))))
       }),
       "vec_ivfpq_res_distortion" -> ((s, dir) => {
         Tables.register(s, dir)
-        WmCache.ensure(s, dir)
         val gen = sparkGenFor(s, dir)
         Scratch.table(s, dir, "g_rpq_ct", gen.rpqTrainBuildSql)
         Scratch.table(s, dir, "g_rpq_codes", gen.rpqCodesBuildSql)
-        s.sql(gen.ivfPqResDistortionSql(Some(("g_rpq_ct", "g_rpq_codes"))))
+        sqlOn(s, dir, gen.ivfPqResDistortionSql(Some(("g_rpq_ct", "g_rpq_codes"))))
       }),
       // CDC maintenance of the HYBRID SCORE STACK (r11 verdict item
       // 5): the kept per-doc stats artifact (g_hyb_stats — integer
@@ -164,7 +176,7 @@ object SparkEntry {
           sparkGen.hybPostBuildSql("g_hyb_stats", "g_hyb_delta"))
         Scratch.table(s, dir, "g_hyb_scores_post",
           sparkGen.hybPostScoresBuildSql("g_hyb_post"))
-        s.sql(sparkGen.searchHybridUpsertSql(
+        sqlOn(s, dir, sparkGen.searchHybridUpsertSql(
           Some(("g_hyb_stats", "g_hyb_delta", "g_hyb_post", "g_hyb_scores_post"))))
       }),
       // CDC maintenance of the MINHASH index: the kept signature table
@@ -178,7 +190,7 @@ object SparkEntry {
         Scratch.table(s, dir, "g_mhsig", sparkGen.minhashSigBuildSql)
         Scratch.table(s, dir, "g_mhpairs",
           sparkGen.minhashPairsFromSigsSql("g_mhsig"))
-        s.sql(sparkGen.dedupUpsertMinhashSql(Some("g_mhsig"), Some("g_mhpairs")))
+        sqlOn(s, dir, sparkGen.dedupUpsertMinhashSql(Some("g_mhsig"), Some("g_mhpairs")))
       }),
       // deep NN witness over the PERSISTED quantized-logit table: the
       // depth-6 forward pass is a ~9k-literal expression tree whose
@@ -198,7 +210,7 @@ object SparkEntry {
         // any arithmetic change invalidates the artifact
         Scratch.tableDf(s, dir, "g_nn_deep_logits",
           sparkGen.nnDeepLogitsBuildSql)(graft.operators.NnDeep.logits(s, dir))
-        s.sql(sparkGen.nnDecodeDeepSql(Some("g_nn_deep_logits")))
+        sqlOn(s, dir, sparkGen.nnDecodeDeepSql(Some("g_nn_deep_logits")))
       }),
       // real WAV decode (synthesize → encode → chunk-walk parse → stats)
       "multimodal_wav_stats" -> ((s, dir) => graft.operators.Wav.wavStats(s, dir)),
@@ -232,31 +244,31 @@ object SparkEntry {
       // over it reuses the materialized rows.
       "dedup_components" -> ((s, dir) => {
         Tables.register(s, dir)
-        s.sql(sparkGen.dedupComponentsSql(Some(simCompViews(s, dir))))
+        sqlOn(s, dir, sparkGen.dedupComponentsSql(Some(simCompViews(s, dir))))
       }),
       // the deletion groups APPLIED: per-source kept/dropped report
       // over the same checkpointed pair chain
       "dedup_apply" -> ((s, dir) => {
         Tables.register(s, dir)
-        s.sql(sparkGen.dedupApplySql(Some(simCompViews(s, dir))))
+        sqlOn(s, dir, sparkGen.dedupApplySql(Some(simCompViews(s, dir))))
       }),
       // quality-aware canonical selection: best text_quality member
       // per near-dup component, over the same checkpointed pair chain
       "dedup_cluster_rep" -> ((s, dir) => {
         Tables.register(s, dir)
-        s.sql(sparkGen.dedupClusterRepSql(Some(simCompViews(s, dir))))
+        sqlOn(s, dir, sparkGen.dedupClusterRepSql(Some(simCompViews(s, dir))))
       }),
       // does keep-lowest-id cost quality vs keep-best? per-source
       // policy comparison over the same checkpointed pair chain
       "dedup_quality_impact" -> ((s, dir) => {
         Tables.register(s, dir)
-        s.sql(sparkGen.dedupQualityImpactSql(Some(simCompViews(s, dir))))
+        sqlOn(s, dir, sparkGen.dedupQualityImpactSql(Some(simCompViews(s, dir))))
       }),
       // which sources copy from each other: the syndication matrix
       // over the same checkpointed near-dup pair chain
       "dedup_cross_source" -> ((s, dir) => {
         Tables.register(s, dir)
-        s.sql(sparkGen.dedupCrossSourceSql(Some(simPairsView(s, dir))))
+        sqlOn(s, dir, sparkGen.dedupCrossSourceSql(Some(simPairsView(s, dir))))
       }),
       // rotated-BQ search over the PERSISTED packed rotated codes
       // (g_rbq — the rotated twin of the cached g_bq; inline, the
@@ -264,9 +276,8 @@ object SparkEntry {
       // Oracle inlines everything.
       "vec_bq_rotation" -> ((s, dir) => {
         Tables.register(s, dir)
-        WmCache.ensure(s, dir)
         Scratch.table(s, dir, "g_rbq", sparkGen.rbqBuildSql)
-        s.sql(sparkGen.vecBqRotationSql(Some("g_rbq")))
+        sqlOn(s, dir, sparkGen.vecBqRotationSql(Some("g_rbq")))
       }),
       // the L1 (Cauchy p-stable) LSH rung over the PERSISTED bucket
       // table (r13): inline, `bkt` was referenced twice (query filter
@@ -281,7 +292,7 @@ object SparkEntry {
         val j = graft.sqlgen.Wm.l1HashesFor(Tables.vectorCount(s, dir))
         val v = s"g_l1bkt_j$j"
         Scratch.table(s, dir, v, gen.l1BktBuildSql)
-        s.sql(gen.vecTopkL1LshSql(Some(v)))
+        sqlOn(s, dir, gen.vecTopkL1LshSql(Some(v)))
       }),
       "ann_recall_eval_l1" -> ((s, dir) => {
         Tables.register(s, dir)
@@ -289,7 +300,7 @@ object SparkEntry {
         val j = graft.sqlgen.Wm.l1HashesFor(Tables.vectorCount(s, dir))
         val v = s"g_l1bkt_j$j"
         Scratch.table(s, dir, v, gen.l1BktBuildSql)
-        s.sql(gen.annRecallEvalL1Sql(Some(v)))
+        sqlOn(s, dir, gen.annRecallEvalL1Sql(Some(v)))
       }),
       // winnowing pairs over the PERSISTED fingerprint index (the
       // kept artifact of a winnowing pipeline; inline, the word
@@ -298,7 +309,7 @@ object SparkEntry {
       "dedup_winnow" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_winnow", sparkGen.winnowFpBuildSql)
-        s.sql(sparkGen.dedupWinnowSql(Some("g_winnow")))
+        sqlOn(s, dir, sparkGen.dedupWinnowSql(Some("g_winnow")))
       }),
       // the banded SimHash pair pass over the PERSISTED signature
       // table (g_simsigs — the kept artifact the whole simpairs
@@ -309,7 +320,7 @@ object SparkEntry {
       "dedup_simhash_pairs" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_simsigs", sparkGen.simhashSigBuildSql)
-        s.sql(sparkGenFor(s, dir).simhashPairsFromSigsSql("g_simsigs"))
+        sqlOn(s, dir, sparkGenFor(s, dir).simhashPairsFromSigsSql("g_simsigs"))
       }),
       // CDC-upsert maintenance of the kept pair artifact (the
       // delete/update half of dedup_incremental): reads BOTH scratch
@@ -321,7 +332,7 @@ object SparkEntry {
       "dedup_upsert" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_simsigs", sparkGen.simhashSigBuildSql)
-        s.sql(sparkGenFor(s, dir).dedupUpsertSql(Some("g_simsigs"),
+        sqlOn(s, dir, sparkGenFor(s, dir).dedupUpsertSql(Some("g_simsigs"),
           Some(simPairsView(s, dir))))
       }),
       // overlap metrics over the materialized gram profile: the
@@ -333,12 +344,12 @@ object SparkEntry {
       "dedup_jaccard" -> ((s, dir) => {
         Tables.register(s, dir)
         jaccardPairsView(s, dir)
-        s.sql(sparkGen.dedupJaccardSql(Some("g_jpairs")))
+        sqlOn(s, dir, sparkGen.dedupJaccardSql(Some("g_jpairs")))
       }),
       "dedup_containment" -> ((s, dir) => {
         Tables.register(s, dir)
         jaccardPairsView(s, dir)
-        s.sql(sparkGen.dedupContainmentSql(Some("g_jpairs")))
+        sqlOn(s, dir, sparkGen.dedupContainmentSql(Some("g_jpairs")))
       }),
       // association rules over the checkpointed basket table (the
       // rule SQL references the basket five times; Catalyst would
@@ -346,7 +357,7 @@ object SparkEntry {
       "market_basket" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_basket", sparkGen.marketBasketBuildSql)
-        s.sql(sparkGen.marketBasketSql(Some("g_basket")))
+        sqlOn(s, dir, sparkGen.marketBasketSql(Some("g_basket")))
       }),
       // MMR re-rank: the corpus-sized pool build checkpoints to 30
       // rows; the unrolled selection rounds (each state CTE referenced
@@ -355,7 +366,7 @@ object SparkEntry {
       "vec_mmr" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_mmr_pool", sparkGen.mmrPoolSql)
-        s.sql(sparkGen.mmrSql(Some("g_mmr_pool")))
+        sqlOn(s, dir, sparkGen.mmrSql(Some("g_mmr_pool")))
       }),
       // decontamination over the materialized shingle index: the
       // lead()-window shingle pass (the expensive part of BOTH decont
@@ -366,12 +377,12 @@ object SparkEntry {
       "decontaminate" -> ((s, dir) => {
         Tables.register(s, dir)
         decontShinglesView(s, dir)
-        s.sql(sparkGen.decontaminateSql(Some(("g_dsh_ev", "g_dsh_tr"))))
+        sqlOn(s, dir, sparkGen.decontaminateSql(Some(("g_dsh_ev", "g_dsh_tr"))))
       }),
       "decontaminate_bloom" -> ((s, dir) => {
         Tables.register(s, dir)
         decontShinglesView(s, dir)
-        s.sql(sparkGen.decontaminateBloomSql(Some(("g_dsh_ev", "g_dsh_tr"))))
+        sqlOn(s, dir, sparkGen.decontaminateBloomSql(Some(("g_dsh_ev", "g_dsh_tr"))))
       }),
       // the per-source word-frequency family reads the PERSISTED
       // unigram-LM artifact (g_srcwf — inline, each key re-ran the
@@ -380,22 +391,22 @@ object SparkEntry {
       "text_js_divergence" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_srcwf", sparkGen.srcWordFreqBuildSql)
-        s.sql(sparkGen.textJsDivergenceSql(Some("g_srcwf")))
+        sqlOn(s, dir, sparkGen.textJsDivergenceSql(Some("g_srcwf")))
       }),
       "text_kl_divergence" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_srcwf", sparkGen.srcWordFreqBuildSql)
-        s.sql(sparkGen.textKlDivergenceSql(Some("g_srcwf")))
+        sqlOn(s, dir, sparkGen.textKlDivergenceSql(Some("g_srcwf")))
       }),
       "text_keywords_llr" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_srcwf", sparkGen.srcWordFreqBuildSql)
-        s.sql(sparkGen.textKeywordsLlrSql(Some("g_srcwf")))
+        sqlOn(s, dir, sparkGen.textKeywordsLlrSql(Some("g_srcwf")))
       }),
       "text_simpson" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_srcwf", sparkGen.srcWordFreqBuildSql)
-        s.sql(sparkGen.textSimpsonSql(Some("g_srcwf")))
+        sqlOn(s, dir, sparkGen.textSimpsonSql(Some("g_srcwf")))
       }),
       // the KMV sketch family reads the SAME persisted unigram
       // artifact (r13 — g_srcwf's rows ARE the distinct (source, word)
@@ -406,12 +417,12 @@ object SparkEntry {
       "sketch_kmv" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_srcwf", sparkGen.srcWordFreqBuildSql)
-        s.sql(sparkGen.kmvSql(Seq(16, 64, 256), wfView = Some("g_srcwf")))
+        sqlOn(s, dir, sparkGen.kmvSql(Seq(16, 64, 256), wfView = Some("g_srcwf")))
       }),
       "sketch_kmv_overlap" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_srcwf", sparkGen.srcWordFreqBuildSql)
-        s.sql(sparkGen.kmvOverlapSql(Some("g_srcwf")))
+        sqlOn(s, dir, sparkGen.kmvOverlapSql(Some("g_srcwf")))
       }),
       // boilerplate coverage over the SAME persisted 3-shingle profile
       // the minhash verify legs read (g_mhshx — identical distinct
@@ -424,7 +435,7 @@ object SparkEntry {
       "text_boilerplate_share" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_mhshx", sparkGen.minhashShxBuildSql)
-        s.sql(sparkGen.textBoilerplateShareSql(Some("g_mhshx")))
+        sqlOn(s, dir, sparkGen.textBoilerplateShareSql(Some("g_mhshx")))
       }),
       // the Bloom sketch keys read the SAME kept shingle indexes the
       // decontamination family serves from (r12 — inline, evd/trd
@@ -433,12 +444,12 @@ object SparkEntry {
       "sketch_bloom" -> ((s, dir) => {
         Tables.register(s, dir)
         decontShinglesView(s, dir)
-        s.sql(sparkGen.sketchBloomSql(Some(("g_dsh_ev", "g_dsh_tr"))))
+        sqlOn(s, dir, sparkGen.sketchBloomSql(Some(("g_dsh_ev", "g_dsh_tr"))))
       }),
       "sketch_bloom_curve" -> ((s, dir) => {
         Tables.register(s, dir)
         decontShinglesView(s, dir)
-        s.sql(sparkGen.sketchBloomCurveSql(Some(("g_dsh_ev", "g_dsh_tr"))))
+        sqlOn(s, dir, sparkGen.sketchBloomCurveSql(Some(("g_dsh_ev", "g_dsh_tr"))))
       }),
       // removal-effect attribution: the journey pass (lag windows over
       // the events scan) is the only corpus-priced work and runs once
@@ -533,7 +544,7 @@ object SparkEntry {
       "search_hybrid_rrf" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_hybrid_scores", sparkGen.hybridScoresBuildSql)
-        s.sql(sparkGen.hybridRrfSql(Some("g_hybrid_scores")))
+        sqlOn(s, dir, sparkGen.hybridRrfSql(Some("g_hybrid_scores")))
       }),
       // dedup tier benchmark: exact-Jaccard truth on a PRF doc sample
       // vs the served MinHash/SimHash candidate sets (read from their
@@ -547,7 +558,7 @@ object SparkEntry {
         // pipeline 3x under Catalyst CTE re-inlining (tg is referenced
         // by gsz + both self-join sides). Oracle inlines the chain.
         Scratch.table(s, dir, "g_mhshx", sparkGen.minhashShxBuildSql)
-        s.sql(sparkGen.dedupTierEvalSql(
+        sqlOn(s, dir, sparkGen.dedupTierEvalSql(
           Some(("g_mhsig", simPairsView(s, dir), "g_mhshx"))))
       }),
       // second-stage rerank + Kendall-τ agreement ladder over the
@@ -555,7 +566,7 @@ object SparkEntry {
       "search_rerank_agreement" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_hybrid_scores", sparkGen.hybridScoresBuildSql)
-        s.sql(sparkGen.rerankAgreementSql(Some("g_hybrid_scores")))
+        sqlOn(s, dir, sparkGen.rerankAgreementSql(Some("g_hybrid_scores")))
       }),
       // the native TypedImperativeAggregate HLL (functions.HllAgg):
       // the aggregation buffer IS the register array, merged
@@ -564,7 +575,7 @@ object SparkEntry {
       // SQL rendering
       "sketch_distinct_native" -> ((s, dir) => {
         Tables.register(s, dir)
-        s.sql("""
+        sqlOn(s, dir, """
           |with sw as (select source, split(lower(text), '\\s+') as ws from documents),
           |swx as (select source, wd from sw lateral view explode(ws) _e as wd),
           |ag as (select source, graft_hll(wd) as hll, count(distinct wd) as nd from swx group by source)
@@ -582,7 +593,7 @@ object SparkEntry {
       "sketch_kmv_native" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_srcwf", sparkGen.srcWordFreqBuildSql)
-        s.sql(sparkGen.kmvSql(Seq(64), native = true, wfView = Some("g_srcwf")))
+        sqlOn(s, dir, sparkGen.kmvSql(Seq(64), native = true, wfView = Some("g_srcwf")))
       }),
       // the native TypedImperativeAggregate count-min sketch
       // (functions.CmsAgg): the aggregation buffer IS the 4x16 long
@@ -595,7 +606,7 @@ object SparkEntry {
           s"cast(conv(substr(md5(concat_ws(':', 'cms', '$r', wc.wd)), 1, 15), 16, 10) as bigint) % 16"
         def cell(r: Int) =
           s"element_at(g.grid, cast($r * 16 + ${prfCol(r)} + 1 as int)) as e$r"
-        s.sql(s"""
+        sqlOn(s, dir, s"""
           |with sw as (select split(lower(text), '\\\\s+') as ws from documents),
           |wx as (select wd from sw lateral view explode(ws) _e as wd),
           |g as (select graft_cms(wd) as grid from wx),
@@ -615,7 +626,7 @@ object SparkEntry {
       "text_bpe_merges" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_bpe_vocab", sparkGen.bpeVocabBuildSql)
-        s.sql(sparkGen.bpeMergesSql(Some("g_bpe_vocab")))
+        sqlOn(s, dir, sparkGen.bpeMergesSql(Some("g_bpe_vocab")))
       }),
       // the banded MinHash candidate family over the PERSISTED
       // signature table (g_mhsig — the kept LSH index every dedup
@@ -637,13 +648,13 @@ object SparkEntry {
         Scratch.table(s, dir, "g_mhsig", sparkGen.minhashSigBuildSql)
         Scratch.table(s, dir, "g_mhpairs",
           sparkGen.minhashPairsFromSigsSql("g_mhsig"))
-        s.sql(sparkGen.dedupMinhashSql(Some(("g_mhsig", None)),
+        sqlOn(s, dir, sparkGen.dedupMinhashSql(Some(("g_mhsig", None)),
           pairsFrom = Some("g_mhpairs")))
       }),
       "dedup_incremental" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_mhsig", sparkGen.minhashSigBuildSql)
-        s.sql(sparkGen.dedupIncrementalSql(Some(("g_mhsig", None))))
+        sqlOn(s, dir, sparkGen.dedupIncrementalSql(Some(("g_mhsig", None))))
       }),
       "dedup_minhash_verify" -> ((s, dir) => {
         Tables.register(s, dir)
@@ -651,7 +662,7 @@ object SparkEntry {
         Scratch.table(s, dir, "g_mhshx", sparkGen.minhashShxBuildSql)
         Scratch.table(s, dir, "g_mhpairs",
           sparkGen.minhashPairsFromSigsSql("g_mhsig"))
-        s.sql(sparkGen.dedupMinhashVerifySql(Some(("g_mhsig", Some("g_mhshx"))),
+        sqlOn(s, dir, sparkGen.dedupMinhashVerifySql(Some(("g_mhsig", Some("g_mhshx"))),
           pairsFrom = Some("g_mhpairs")))
       }),
       "dedup_threshold_curve" -> ((s, dir) => {
@@ -660,7 +671,7 @@ object SparkEntry {
         Scratch.table(s, dir, "g_mhshx", sparkGen.minhashShxBuildSql)
         Scratch.table(s, dir, "g_mhpairs",
           sparkGen.minhashPairsFromSigsSql("g_mhsig"))
-        s.sql(sparkGen.dedupThresholdCurveSql(Some(("g_mhsig", Some("g_mhshx"))),
+        sqlOn(s, dir, sparkGen.dedupThresholdCurveSql(Some(("g_mhsig", Some("g_mhshx"))),
           pairsFrom = Some("g_mhpairs")))
       }),
       "dedup_minhash_calibration" -> ((s, dir) => {
@@ -669,7 +680,7 @@ object SparkEntry {
         Scratch.table(s, dir, "g_mhshx", sparkGen.minhashShxBuildSql)
         Scratch.table(s, dir, "g_mhpairs",
           sparkGen.minhashPairsFromSigsSql("g_mhsig"))
-        s.sql(sparkGen.dedupMinhashCalibrationSql(Some(("g_mhsig", Some("g_mhshx"))),
+        sqlOn(s, dir, sparkGen.dedupMinhashCalibrationSql(Some(("g_mhsig", Some("g_mhshx"))),
           pairsFrom = Some("g_mhpairs")))
       }),
       // band-geometry tuning curve over the checkpointed minhash
@@ -680,7 +691,7 @@ object SparkEntry {
       "minhash_band_curve" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_mhsig", sparkGen.minhashSigBuildSql)
-        s.sql(sparkGen.minhashCurveSql(Some("g_mhsig")))
+        sqlOn(s, dir, sparkGen.minhashCurveSql(Some("g_mhsig")))
       }),
       // modularity over the checkpointed LPA labels: the readout
       // references the label table three times (Catalyst re-inlines
@@ -690,9 +701,8 @@ object SparkEntry {
       // is a kept artifact, every quality readout joins it
       "graph_modularity" -> ((s, dir) => {
         Tables.register(s, dir)
-        WmCache.ensure(s, dir)
         Scratch.table(s, dir, "g_lpa", sparkGen.lpaBuildSql)
-        s.sql(sparkGen.graphModularitySql(Some("g_lpa")))
+        sqlOn(s, dir, sparkGen.graphModularitySql(Some("g_lpa")))
       }),
       // the LPA convergence curve over the checkpointed 3-round label
       // table + the betweenness-shared symmetrized edge scratch (r10):
@@ -702,21 +712,19 @@ object SparkEntry {
       // that amplified ambient load into a 3× bench reading)
       "graph_lpa_curve" -> ((s, dir) => {
         Tables.register(s, dir)
-        WmCache.ensure(s, dir)
         val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
         val v = s"g_edges_sym_p$planes"
         Scratch.table(s, dir, v,
           "select src, dst from g_knn union select dst, src from g_knn")
         Scratch.table(s, dir, "g_lpa_rounds", sparkGen.lpaRoundsBuildSql)
-        s.sql(sparkGenFor(s, dir).graphLpaCurveSql(Some(("g_lpa_rounds", v))))
+        sqlOn(s, dir, sparkGenFor(s, dir).graphLpaCurveSql(Some(("g_lpa_rounds", v))))
       }),
       // per-community conductance over the same checkpointed LPA
       // labels (the kept community assignment) + the served kNN edges
       "graph_conductance" -> ((s, dir) => {
         Tables.register(s, dir)
-        WmCache.ensure(s, dir)
         Scratch.table(s, dir, "g_lpa", sparkGen.lpaBuildSql)
-        s.sql(sparkGen.graphConductanceSql(Some("g_lpa")))
+        sqlOn(s, dir, sparkGen.graphConductanceSql(Some("g_lpa")))
       }),
       // native bounded-state per-group top-k (functions.TopKAgg):
       // map-side partials keep ≤ k pairs per group, so the exchange
@@ -724,7 +732,7 @@ object SparkEntry {
       // the full candidate stream
       "vec_topk_grouped" -> ((s, dir) => {
         Tables.register(s, dir)
-        s.sql(sparkGen.groupedTopkSql())
+        sqlOn(s, dir, sparkGen.groupedTopkSql())
       }),
       // watermark repair over a PERSISTED damage snapshot: the σ=0.04
       // attacked-stego table is scratch-materialized once (the repair
@@ -741,7 +749,7 @@ object SparkEntry {
       "text_centroid_classify" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_docwords", sparkGen.docWordsBuildSql)
-        s.sql(sparkGen.textCentroidClassifySql(Some("g_docwords")))
+        sqlOn(s, dir, sparkGen.textCentroidClassifySql(Some("g_docwords")))
       }),
       // Burrows' Delta over the PERSISTED (source, word, z) table:
       // the inline plan re-derived the corpus word census per `pre`/
@@ -751,7 +759,7 @@ object SparkEntry {
       "text_burrows_delta" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_bdz", sparkGen.bdzBuildSql)
-        s.sql(sparkGen.textBurrowsDeltaSql(Some("g_bdz")))
+        sqlOn(s, dir, sparkGen.textBurrowsDeltaSql(Some("g_bdz")))
       }),
       // sampled-audit curve over the PERSISTED per-id decode-stats
       // table: the corpus-priced per-id projection aggregation (axa)
@@ -760,12 +768,11 @@ object SparkEntry {
       // at build; serving folds from O(N)-row scans. Oracle inlines.
       "wm_audit_curve" -> ((s, dir) => {
         Tables.register(s, dir)
-        WmCache.ensure(s, dir)
         val gen = sparkGenFor(s, dir)
         val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
         val v = s"g_audit_dec_p$planes"
         Scratch.table(s, dir, v, gen.auditDecodeBuildSql)
-        s.sql(gen.wmAuditCurveSql(Some(v)))
+        sqlOn(s, dir, gen.wmAuditCurveSql(Some(v)))
       }),
       // RFM segmentation over the PERSISTED per-user feature table
       // (the kept artifact of a production segmentation): inline, the
@@ -775,7 +782,7 @@ object SparkEntry {
       "events_rfm" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_rfm_user", sparkGen.rfmUserBuildSql)
-        s.sql(sparkGen.eventsRfmSql(Some("g_rfm_user")))
+        sqlOn(s, dir, sparkGen.eventsRfmSql(Some("g_rfm_user")))
       }),
       // multi-tenant watermarking over a PERSISTED tenant-B stego
       // overlay: the carrier re-selection windows + B-key QIM embed
@@ -785,14 +792,13 @@ object SparkEntry {
       // overlay + the two extraction chains). Oracle inlines it all.
       "wm_multi_tenant" -> ((s, dir) => {
         Tables.register(s, dir)
-        WmCache.ensure(s, dir)
         val gen = sparkGenFor(s, dir)
         // plane count in the scratch name: the build reads g_indeg /
         // exn whose ROWS depend on the bucket geometry
         val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
         val v = s"g_mtb_stego_p$planes"
         Scratch.table(s, dir, v, gen.mtbStegoBuildSql)
-        s.sql(gen.wmMultiTenantSql(Some(v)))
+        sqlOn(s, dir, gen.wmMultiTenantSql(Some(v)))
       }),
       // overwriting attack over a PERSISTED pirate-overwritten stego
       // table (the wm_multi_tenant overlay treatment — r12: planning
@@ -802,24 +808,22 @@ object SparkEntry {
       // inlines the full chain.
       "wm_overwrite" -> ((s, dir) => {
         Tables.register(s, dir)
-        WmCache.ensure(s, dir)
         val gen = sparkGenFor(s, dir)
         val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
         val v = s"g_ow_stego_p$planes"
         Scratch.table(s, dir, v, gen.owStegoBuildSql)
-        s.sql(gen.wmOverwriteSql(Some(v)))
+        sqlOn(s, dir, gen.wmOverwriteSql(Some(v)))
       }),
       // collusion attack over a PERSISTED colluder-averaged table
       // (same overlay treatment; serving = ONE extraction chain over
       // the parquet artifact). Oracle inlines the full chain.
       "wm_collusion" -> ((s, dir) => {
         Tables.register(s, dir)
-        WmCache.ensure(s, dir)
         val gen = sparkGenFor(s, dir)
         val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
         val v = s"g_coll_stego_p$planes"
         Scratch.table(s, dir, v, gen.collStegoBuildSql)
-        s.sql(gen.wmCollusionSql(Some(v)))
+        sqlOn(s, dir, gen.wmCollusionSql(Some(v)))
       }),
       // Δ tuning curve over the PERSISTED rung-shift state + the
       // rung-tagged attacked ladder (the overlay treatment again —
@@ -827,18 +831,16 @@ object SparkEntry {
       // tiny folds). Oracle inlines the full chain.
       "wm_delta_curve" -> ((s, dir) => {
         Tables.register(s, dir)
-        WmCache.ensure(s, dir)
         val gen = sparkGenFor(s, dir)
         val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
         val shiftV = s"g_dc_shift_p$planes"
         val attV = s"g_dc_att_p$planes"
         Scratch.table(s, dir, shiftV, gen.dcShiftBuildSql)
         Scratch.table(s, dir, attV, gen.dcAttBuildSql(shiftV))
-        s.sql(gen.wmDeltaCurveSql(Some((shiftV, attV))))
+        sqlOn(s, dir, gen.wmDeltaCurveSql(Some((shiftV, attV))))
       }),
       "wm_repair" -> ((s, dir) => {
         Tables.register(s, dir)
-        WmCache.ensure(s, dir)
         val gen = sparkGenFor(s, dir)
         // plane count in the scratch name: the build SQL's TEXT doesn't
         // change with the bucket geometry (it reads the g_stego view),
@@ -855,7 +857,7 @@ object SparkEntry {
         Scratch.table(s, dir, v, gen.wmAttackBuildSql)
         Scratch.table(s, dir, predecV, gen.wmPredecBuildSql(v))
         Scratch.table(s, dir, fixedV, gen.wmFixedBuildSql(v, predecV))
-        s.sql(gen.wmRepairServeSql(predecV, fixedV))
+        sqlOn(s, dir, gen.wmRepairServeSql(predecV, fixedV))
       }),
       // sampled betweenness over a PERSISTED symmetrized edge table:
       // the BFS levels and the Brandes successor join reference the
@@ -864,12 +866,11 @@ object SparkEntry {
       // well under 1 s); the oracle inlines it, DuckDB-materialized.
       "graph_betweenness" -> ((s, dir) => {
         Tables.register(s, dir)
-        WmCache.ensure(s, dir)
         val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
         val v = s"g_edges_sym_p$planes"
         Scratch.table(s, dir, v,
           "select src, dst from g_knn union select dst, src from g_knn")
-        s.sql(sparkGenFor(s, dir).graphBetweennessSql(Some(v)))
+        sqlOn(s, dir, sparkGenFor(s, dir).graphBetweennessSql(Some(v)))
       }),
       // the degree-correlation curve references the edge set ~5×
       // (deg/ed2 unions + two joins) — scratch-backed those are five
@@ -877,12 +878,11 @@ object SparkEntry {
       // build per reference: 36.5 s vs 4-5 s at the 30× decade)
       "graph_knn_degree_curve" -> ((s, dir) => {
         Tables.register(s, dir)
-        WmCache.ensure(s, dir)
         val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
         val v = s"g_edges_sym_p$planes"
         Scratch.table(s, dir, v,
           "select src, dst from g_knn union select dst, src from g_knn")
-        s.sql(sparkGenFor(s, dir).graphKnnDegreeCurveSql(Some(v)))
+        sqlOn(s, dir, sparkGenFor(s, dir).graphKnnDegreeCurveSql(Some(v)))
       }),
       // sampled harmonic closeness shares the SAME persisted
       // symmetrized edge table (the hop chain references the edge set
@@ -890,12 +890,11 @@ object SparkEntry {
       // inline it would re-derive the union-distinct per reference).
       "graph_closeness" -> ((s, dir) => {
         Tables.register(s, dir)
-        WmCache.ensure(s, dir)
         val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
         val v = s"g_edges_sym_p$planes"
         Scratch.table(s, dir, v,
           "select src, dst from g_knn union select dst, src from g_knn")
-        s.sql(sparkGenFor(s, dir).graphClosenessSql(Some(v)))
+        sqlOn(s, dir, sparkGenFor(s, dir).graphClosenessSql(Some(v)))
       }),
       // 21g registry-path extraction: the carrier-id list persists as
       // a cross-session parquet scratch artifact (the reference's
@@ -905,9 +904,8 @@ object SparkEntry {
       // same id list from the chain (Queries.wmExtractIdsSql).
       "wm_extract_ids" -> ((s, dir) => {
         Tables.register(s, dir)
-        WmCache.ensure(s, dir)
         Scratch.table(s, dir, "g_carrier_ids", "select vec_id, blk from g_carriers")
-        s.sql(sparkGenFor(s, dir).wmExtractIdsSql(Some("g_carrier_ids")))
+        sqlOn(s, dir, sparkGenFor(s, dir).wmExtractIdsSql(Some("g_carrier_ids")))
       }),
       // row 11's SQL half made hash-gated (r8 verdict item 4): the
       // registry-path RECOVER — same persisted id list, same attack,
@@ -916,9 +914,8 @@ object SparkEntry {
       // output, so only the AES call itself stays spec-only.
       "wm_recover_registry" -> ((s, dir) => {
         Tables.register(s, dir)
-        WmCache.ensure(s, dir)
         Scratch.table(s, dir, "g_carrier_ids", "select vec_id, blk from g_carriers")
-        s.sql(sparkGenFor(s, dir).wmRecoverRegistrySql(Some("g_carrier_ids")))
+        sqlOn(s, dir, sparkGenFor(s, dir).wmRecoverRegistrySql(Some("g_carrier_ids")))
       }),
       // the in-SQL power-iteration eigensolve mirrored in the JVM
       // (operators.PcaSolve — the bounded-driver-math convention of
@@ -962,7 +959,7 @@ object SparkEntry {
           m1 += e.mu(i) * e.ev(i) * sg1
           m2 += e.mu(i) * e.v2(i) * sg2
         }
-        s.sql(sparkGen.pcaProjectSql(w1, w2, m1, m2))
+        sqlOn(s, dir, sparkGen.pcaProjectSql(w1, w2, m1, m2))
       }),
       // same solve again; the residual pass is a MAP-ONLY corpus scan
       // with the solved means/axes as exact double literals + one
@@ -975,7 +972,7 @@ object SparkEntry {
         val e = pcaEig(s, dir)
         val sg1 = if (e.ev(0) < 0) -1.0 else 1.0
         val sg2 = if (e.v2(0) < 0) -1.0 else 1.0
-        s.sql(sparkGen.pcaResidualLiteralSql(e.mu.toSeq,
+        sqlOn(s, dir, sparkGen.pcaResidualLiteralSql(e.mu.toSeq,
           e.ev.toSeq.map(_ * sg1), e.v2.toSeq.map(_ * sg2)))
       }),
       // landmark-MDS 2-D layout (§2 row 21i), the JVM-mirror half of
@@ -987,7 +984,7 @@ object SparkEntry {
       // corpus map-only with the solved axes as exact double literals.
       "vec_mds2d" -> ((s, dir) => {
         Tables.register(s, dir)
-        val rows = s.sql(sparkGen.mdsLandmarksSql).collect()
+        val rows = sqlOn(s, dir, sparkGen.mdsLandmarksSql).collect()
         require(rows.length == graft.sqlgen.Wm.MdsLandmarks,
           s"need ${graft.sqlgen.Wm.MdsLandmarks} landmarks, got ${rows.length}")
         val xs = rows.map(_.getSeq[Double](1).toArray)
@@ -1011,7 +1008,7 @@ object SparkEntry {
           m1 += e.mu(i) * e.ev(i) * sg1
           m2 += e.mu(i) * e.v2(i) * sg2
         }
-        s.sql(sparkGen.mdsProjectSql(w1, w2, m1, m2))
+        sqlOn(s, dir, sparkGen.mdsProjectSql(w1, w2, m1, m2))
       }),
       // the learned merges APPLIED: distinct words encode once against
       // the same checkpointed vocabulary (the tokenizer's shipped
@@ -1019,7 +1016,7 @@ object SparkEntry {
       "text_bpe_encode" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_bpe_vocab", sparkGen.bpeVocabBuildSql)
-        s.sql(sparkGen.bpeEncodeSql(Some("g_bpe_vocab")))
+        sqlOn(s, dir, sparkGen.bpeEncodeSql(Some("g_bpe_vocab")))
       }),
       // per-language tokenizer fertility over the same checkpointed
       // vocabulary (the multilingual-equity readout of the shipped
@@ -1027,12 +1024,12 @@ object SparkEntry {
       "text_bpe_fertility" -> ((s, dir) => {
         Tables.register(s, dir)
         Scratch.table(s, dir, "g_bpe_vocab", sparkGen.bpeVocabBuildSql)
-        s.sql(sparkGen.bpeFertilitySql(Some("g_bpe_vocab")))
+        sqlOn(s, dir, sparkGen.bpeFertilitySql(Some("g_bpe_vocab")))
       }))
 
   /** Collect the one st0 moment row and run the JVM eigensolve. */
   private def pcaEig(s: SparkSession, dir: String): PcaSolve.Eig = {
-    val row = s.sql(sparkGen.pcaMomentsSql).collect()(0)
+    val row = sqlOn(s, dir, sparkGen.pcaMomentsSql).collect()(0)
     val a = Array.tabulate(PcaSolve.Dim)(i => row.getAs[Double](s"a${i + 1}"))
     PcaSolve.solve(a, (i, j) => row.getAs[Double](s"m${i + 1}_${j + 1}"))
   }
@@ -1111,7 +1108,7 @@ object SparkEntry {
     .mapValues(graft.sqlgen.DuckHints.materialize).toMap
 
   private def rawOracleSql: Map[String, String] =
-    duckGen.sqls.map { case (k, _) => k -> duckGen.sql(k) } ++
+    duckGen.keys.map(k => k -> duckGen.sql(k)).toMap ++
       Map("multimodal_wav_stats" -> graft.operators.Wav.wavStatsOracleSql,
         "multimodal_wav_features" -> graft.operators.Wav.wavFeaturesOracleSql,
         "multimodal_bmp_stats" -> graft.operators.Bmp.bmpStatsOracleSql,

@@ -1,8 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import graft.sqlgen.{Gen, SparkDialect, Wm}
 
-/** Dev tool: time each WmCache chain stage individually (parquet write
+/** Dev tool: time each WmCache artifact stage individually (parquet write
   * included — the real build cost). Usage: runMain graft.StageProf [sfDir] */
 object StageProf {
   def main(args: Array[String]): Unit = {
@@ -12,8 +11,7 @@ object StageProf {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Tables.register(spark, dir)
-    val planes = Wm.lshPlanesFor(Tables.vectorCount(spark, dir))
-    val stages = new Gen(SparkDialect, lshPlanes = planes).cacheStages
+    val stages = SparkEntry.sparkGenFor(spark, dir).cacheStages
     stages.foreach { case (view, sql) =>
       val t0 = System.nanoTime()
       val p = s"/tmp/stageprof/$view"

@@ -40,6 +40,19 @@ object Verify {
   private val smokeKeys =
     Seq("q1_pricing", "dedup_exact", "text_tokens", "vec_topk", "events_sessions")
 
+  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    * — a tab or CR in the SQL text would otherwise make a strict JSON
+    * reader (Python's json.load) reject the whole file. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** Fingerprint of the compiled code. Any code change invalidates
     * every incremental dump. sbt runMain repackages the classes into a
     * FRESH bg-jobs jar every invocation, so the fingerprint must be
@@ -93,18 +106,6 @@ object Verify {
     // ---- oracle JSON first: no Spark work needed, and it is what the
     // driver's compare reads — with it on disk, any prefix of dumps
     // grades instead of the whole round reporting {}.
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // dev-only key filter (--keys=a,b,c): dump + oracle a subset while
     // iterating on new operators. The driver never passes it.
     val onlyKeys: Option[Set[String]] = args.collectFirst {
@@ -112,7 +113,7 @@ object Verify {
     }
     def dumpJson(path: String, m: Map[String, String]): Unit =
       Files.writeString(Paths.get(path),
-        m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")): Unit
+        m.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")): Unit
     // oracle_sql.json always carries the FULL key map (a --keys run
     // previously truncated it, so a later full pass or any tool
     // reading the dump from that outDir saw a subset — r9 ADVICE);
@@ -153,11 +154,11 @@ object Verify {
     def sigOf(name: String): String = graft.functions.Prf.md5hex(
       sigBase + "|" + SparkEntry.oracleSql.getOrElse(name, "")).take(16)
 
-    // shared stages once, on the main thread — after this every
-    // per-key Tables.register / WmCache.ensure / Scratch.table call is
-    // an idempotent cache hit, safe under the pool
+    // every shared artifact once, on the main thread — after this every
+    // per-key Tables.register / WmCache artifact ensure is an idempotent
+    // cache hit, safe under the pool
     Tables.register(spark, sfDir)
-    if (!smoke) try WmCache.ensure(spark, sfDir)
+    if (!smoke) try WmCache.ensureAll(spark, sfDir)
       catch { case e: Throwable => System.err.println(s"[verify] chain build failed: ${e.getMessage}") }
 
     val t0 = System.nanoTime()

@@ -27,7 +27,7 @@ final class Graft(spark: SparkSession, dir: String,
   private lazy val customGen = new Gen(SparkDialect, useViews = false, params)
   private def q(name: String): DataFrame =
     if (isDefault) SparkEntry.queries(name)(spark, dir)
-    else if (customGen.sqls.contains(name)) {
+    else if (customGen.keys.contains(name)) {
       Tables.register(spark, dir)
       spark.sql(customGen.sql(name))
     } else

@@ -31,10 +31,15 @@ object Backup {
     * whole bucket→kNN→in-degree→selection chain. ~rate·N rows. */
   def saveCarrierIds(spark: SparkSession, sfDir: String, path: String): Long = {
     SparkEntry.queries("wm_carriers")(spark, sfDir)
-      .select(col("vec_id"), col("blk"))
+      .select(col("vec_id").cast("bigint").as("vec_id"), col("blk").cast("bigint").as("blk"))
       .write.mode("overwrite").parquet(path)
-    spark.read.parquet(path).count()
+    spark.read.schema(IdsSchema).parquet(path).count()
   }
+
+  /** The registry's schema, as [[saveCarrierIds]] writes it: a read
+    * that declares it skips parquet schema inference, a Spark job of
+    * its own on every recover. */
+  private val IdsSchema = "vec_id bigint, blk bigint"
 
   /** Blind extraction from a PERSISTED id list — the reference's
     * extract_watermark(..., ids_file=...) flow (pg_func.py:723): filter
@@ -52,7 +57,7 @@ object Backup {
                      params: WmParams = WmParams.Default): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    val ids = spark.read.parquet(idsPath).select("vec_id")
+    val ids = spark.read.schema(IdsSchema).parquet(idsPath).select("vec_id")
     vectors
       .join(broadcast(ids), "vec_id")
       .select(col("embedding").cast("array<double>"))

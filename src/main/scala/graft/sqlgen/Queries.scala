@@ -1079,10 +1079,11 @@ final class Gen(d: Dialect, useViews: Boolean = false,
   private def wmChain(upTo: String): String =
     if (views) cachedChain(upTo) else fullChain(upTo)
 
-  /** SQL to materialize each cached chain stage, in order; each stage
-    * builds on the views registered before it, so the whole chain is
-    * computed exactly once per (session, sf dir). Spark-dialect only. */
-  def cacheStages: Seq[(String, String)] = Seq(
+  /** SQL to materialize each cached artifact (graft.WmCache), in
+    * order: the watermark chain, then the ANN indexes. A stage reads
+    * only the g_* views it names, so WmCache derives each stage's
+    * inputs from this text. Spark-dialect only. */
+  lazy val cacheStages: Seq[(String, String)] = Seq(
     // r13: one corpus scan + stack instead of the L-scan union (rows
     // identical — lshBucketStackBuildSql; serving queries and the
     // oracle's inline bkt CTE are untouched)
@@ -4143,14 +4144,26 @@ final class Gen(d: Dialect, useViews: Boolean = false,
   private def inList(c: String, ws: Seq[String]) =
     s"case when $c in (${ws.map("'" + _ + "'").mkString(", ")}) then 1 else 0 end"
 
-  /** The full query corpus. Built from four sub-maps purely to stay
-    * under the JVM's 64 KB bytecode-per-method limit — one logical
-    * map, split at arbitrary entry boundaries. */
-  val sqls: Map[String, String] = sqls1 ++ sqls2 ++ sqls3 ++ sqls4
+  /** `"key" renders sql`: a corpus entry whose SQL text is built only
+    * when [[sql]] first asks for that key. */
+  private implicit final class Renders(key: String) {
+    def renders(body: => String): (String, () => String) = key -> (() => body)
+  }
 
-  private lazy val sqls1: Map[String, String] = Map(
+  /** The full query corpus, unrendered. Built from four sub-maps purely
+    * to stay under the JVM's 64 KB bytecode-per-method limit — one
+    * logical map, split at arbitrary entry boundaries. */
+  private lazy val renderers: Map[String, () => String] =
+    sqls1 ++ sqls2 ++ sqls3 ++ sqls4
+
+  /** Every query key this generator renders. */
+  lazy val keys: Set[String] = renderers.keySet
+
+  private lazy val rendered = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  private lazy val sqls1: Map[String, () => String] = Map(
     // ---------------- relational breadth ----------------
-    "q1_pricing" ->
+    "q1_pricing" renders
       s"""select l_returnflag, l_linestatus,
          |  round(cast(sum(cast(l_quantity as decimal(18,2))) as double), 2) as sum_qty,
          |  round(cast(sum(cast(l_extendedprice as decimal(18,2))) as double), 2) as sum_base,
@@ -4167,7 +4180,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // trivially small aggregation instead of a one-partition sort).
     // Identical output to row_number() over (order by rev desc, key):
     // (rev, key) is unique, so rank = 1 + #strictly-greater rows.
-    "q3_revenue" ->
+    "q3_revenue" renders
       s"""with r as (
          |  select o.o_orderkey, sum(cast(l.l_extendedprice as decimal(18,4)) * cast(1 - l.l_discount as decimal(18,4))) as rev
          |  from customer c join orders o on c.c_custkey = o.o_custkey
@@ -4186,7 +4199,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |select ${bigint("o_orderkey")} as o_orderkey, round(cast(rev as double), 2) as revenue, ${bigint("rn")} as rn
          |from rk where rn <= 10""".stripMargin,
 
-    "q5_nation_rev" ->
+    "q5_nation_rev" renders
       s"""select n.n_name,
          |  round(cast(sum(cast(l.l_extendedprice as decimal(18,4)) * cast(1 - l.l_discount as decimal(18,4))) as double), 2) as revenue,
          |  ${bigint("count(*)")} as n_items
@@ -4204,7 +4217,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // join — each order row flows through once, no duplicate
     // explosion from multi-match lineitems; the date filter prunes the
     // probe side at the scan.
-    "q4_priority" ->
+    "q4_priority" renders
       s"""select o_orderpriority, ${bigint("count(*)")} as n_orders
          |from orders o
          |where o.o_orderdate >= timestamp '1997-01-01 00:00:00'
@@ -4217,7 +4230,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // priority — the LeftAnti shape (and the validation query behind
     // referential audits). One anti hash join + a tiny agg; the
     // returnflag filter shrinks the build side at the scan.
-    "q_no_returns" ->
+    "q_no_returns" renders
       s"""select o.o_orderpriority, ${bigint("count(*)")} as n_orders
          |from orders o
          |where not exists (select 1 from lineitem l
@@ -4233,7 +4246,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // instead of silently merging into the per-day 'ALL' level
     // (r3 ADVICE #1); both engines implement the SQL-standard
     // grouping() flag.
-    "events_rollup" ->
+    "events_rollup" renders
       s"""with e as (select event_type, ${d.idiv(evSec("ts"), "86400")} as day, value from events)
          |select case when grouping(event_type) = 1 then 'ALL' else event_type end as event_type,
          |  ${bigint("case when grouping(day) = 1 then -1 else day end")} as day,
@@ -4246,7 +4259,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // tagged via grouping() (never value sentinels on the key itself,
     // so a genuine NULL key cannot collide with a cube row). Same
     // map-side grouping-set expansion + one shuffle as rollup.
-    "events_cube" ->
+    "events_cube" renders
       s"""with e as (select event_type, ${d.idiv(evSec("ts"), "86400")} as day, value from events)
          |select case when grouping(event_type) = 1 then 'ALL' else event_type end as event_type,
          |  ${bigint("case when grouping(day) = 1 then -1 else day end")} as day,
@@ -4262,7 +4275,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // on the key itself), counts + decimal-exact value sums, one
     // map-side grouping-set expansion + one shuffle. Domain-bounded
     // output (≤ 5·7 + 5·24 + 7 + 24 rows).
-    "events_grouping_sets" ->
+    "events_grouping_sets" renders
       s"""with e as (select event_type, (${d.idiv(evSec("ts"), "86400")} + 4) % 7 as dow,
          |             ${d.idiv("(" + evSec("ts") + " % 86400)", "3600")} as hod, value from events)
          |select case when grouping(event_type) = 1 then 'ALL' else event_type end as event_type,
@@ -4272,14 +4285,14 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |  round(cast(sum(cast(value as decimal(18,4))) as double), 2) as sum_value
          |from e group by grouping sets ((event_type, dow), (event_type, hod), (dow), (hod))""".stripMargin,
 
-    "q_window_topn" ->
+    "q_window_topn" renders
       s"""select n_name, ${bigint("c_custkey")} as c_custkey, round(c_acctbal, 2) as acctbal, ${bigint("rn")} as rn
          |from (select n.n_name, c.c_custkey, c.c_acctbal,
          |        row_number() over (partition by n.n_name order by c.c_acctbal desc, c.c_custkey) as rn
          |      from customer c join nation n on c.c_nationkey = n.n_nationkey) _t
          |where rn <= 3""".stripMargin,
 
-    "events_sessions" ->
+    "events_sessions" renders
       s"""with e as (select user_id, event_id, ${evSec("ts")} as sec, ts from events),
          |m as (select user_id, event_id, sec,
          |        case when lag(sec) over (partition by user_id order by ts, event_id) is null
@@ -4293,7 +4306,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |       ${bigint("count(*)")} as n_events, ${bigint("max(sec) - min(sec)")} as dur_s
          |from s group by user_id, sid""".stripMargin,
 
-    "events_windowed" ->
+    "events_windowed" renders
       s"""select ${evHourEpoch("ts")} as hour_epoch, event_type,
          |  ${bigint("count(*)")} as n,
          |  round(cast(sum(cast(value as decimal(18,4))) as double), 2) as sum_value
@@ -4312,7 +4325,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // per-rung re-pass). Events-per-session and mean duration are
     // single divisions. The 30-min rung is definitionally the served
     // events_sessions key (spec pins census equality). 3-row output.
-    "events_sessions_curve" -> {
+    "events_sessions_curve" renders {
       def nSess(w: Int) = s"(max(u.n_users) + sum(case when g.gap > $w then 1 else 0 end))"
       def actDur(w: Int) = s"(max(u.span_sum) - sum(case when g.gap > $w then g.gap else 0 end))"
       def rung(w: Int) =
@@ -4351,7 +4364,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // threshold policy). Per (rung, source): kept docs/tokens, the
     // source's share of the rung, and the rung's realized corpus
     // token share (≥ the nominal budget by at most one bucket).
-    "data_budget_curve" -> {
+    "data_budget_curve" renders {
       val quality = s"round((case when n_words >= 20 and n_words <= 80 then 1.0 else 0.5 end) * (n_alpha / n_chars), 4)"
       s"""with q0 as (select doc_id, source, length(text) as n_chars,
          |              ${d.arrLen(splitWs("text"))} as n_words,
@@ -4379,13 +4392,13 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     },
 
     // ---------------- text analysis ----------------
-    "text_tokens" ->
+    "text_tokens" renders
       s"""select ${bigint("doc_id")} as doc_id,
          |  ${bigint(d.arrLen(splitWs("text")))} as ws_tokens,
          |  ${bigint(regexpCountBpe)} as bpe_tokens
          |from documents""".stripMargin,
 
-    "text_quality" ->
+    "text_quality" renders
       s"""with q as (select doc_id, length(text) as n_chars, ${d.arrLen(splitWs("text"))} as n_words,
          |  length(${regexReplaceAll("text", "[^a-zA-Z]", "")}) as n_alpha,
          |  length(${regexReplaceAll("text", "[^0-9]", "")}) as n_digit
@@ -4397,7 +4410,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |  round((case when n_words >= 20 and n_words <= 80 then 1.0 else 0.5 end) * (n_alpha / n_chars), 4) as quality
          |from q""".stripMargin,
 
-    "text_fingerprint" ->
+    "text_fingerprint" renders
       s"""select ${bigint("doc_id")} as doc_id,
          |  md5(trim(${regexReplaceAll(regexReplaceAll("lower(text)", "[^a-z0-9 ]", ""), " +", " ")})) as fp
          |from documents""".stripMargin,
@@ -4418,7 +4431,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // CONTROL proving no code-switching, exactly what running it on a
     // real crawl would refute. One window-census groupBy + one lag
     // window over ≤ windows-per-doc rows; corpus-linear.
-    "text_lang_mix" -> {
+    "text_lang_mix" renders {
       val hitCols = Seq("en", "de", "fr", "es").map(l =>
         s"sum(${inList("wd", stop(l))}) as ${l}_hits").mkString(",\n|           ")
       s"""with $wordCtes,
@@ -4455,7 +4468,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |left join maj j on j.doc_id = b.doc_id""".stripMargin
     },
 
-    "text_langid" ->
+    "text_langid" renders
       s"""with $wordCtes,
          |hits as (select doc_id,
          |    sum(${inList("wd", stop("en"))}) as en_hits,
@@ -4472,7 +4485,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |from hits""".stripMargin,
 
     // ---------------- dedup suite ----------------
-    "dedup_exact" ->
+    "dedup_exact" renders
       s"""select ${bigint("count(*)")} as dup_groups, ${bigint("coalesce(sum(c - 1), 0)")} as extra_docs
          |from (select md5(text) as h, count(*) as c, min(doc_id) as first_doc
          |      from documents group by md5(text) having count(*) > 1) _g""".stripMargin,
@@ -4484,7 +4497,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // Jaccard estimate) needs NO second pass over the shingle sets —
     // the expensive text scan runs exactly once. The wordCtes→bands
     // chain is shared with dedup_incremental (minhashBandsCtes).
-    "dedup_minhash" -> dedupMinhashSql(None),
+    "dedup_minhash" renders dedupMinhashSql(None),
 
     // INCREMENTAL dedup — the production shape after the corpus is
     // already deduped: a new delta batch (doc_id % 10 = 0 stands in
@@ -4497,9 +4510,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // the delta computes fresh signatures. Per new doc the best corpus
     // match comes from one max(struct) aggregation (no window); is_dup
     // applies the standard 0.5 MinHash-Jaccard dedup threshold.
-    "dedup_incremental" -> dedupIncrementalSql(None),
+    "dedup_incremental" renders dedupIncrementalSql(None),
 
-    "dedup_simhash" ->
+    "dedup_simhash" renders
       s"""with $wordCtes,
          |wh as (select doc_id, wd, count(*) as cnt, ${d.hex2int("substr(md5(wd), 1, 15)")} as h from wx group by doc_id, wd),
          |sbw as (select doc_id, ${simhashSums} from wh group by doc_id)
@@ -4517,13 +4530,13 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // default so the dumped oracle SQL is scale-independent. The 60
     // bit-sums are masked aggregation columns in ONE groupBy (a 60x
     // cross-join row expansion costs more than it saves).
-    "dedup_simhash_pairs" ->
+    "dedup_simhash_pairs" renders
       s"""with $simhashCandCtes
          |select ${bigint("da")} as doc_a, ${bigint("db")} as doc_b,
          |  ${bigint("hamming")} as hamming
          |from cand""".stripMargin,
 
-    "dedup_embedding" -> {
+    "dedup_embedding" renders {
       // Spark side salts the bucket self-join (left side keyed id % S,
       // right side replicated to all S salts): a hot LSH bucket fans
       // out over S reducers instead of one straggler — the SkewSalt
@@ -4562,7 +4575,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // id, so pairs need no distinct, and the dot runs once behind the
     // same groupBy barrier. Oracle renders the inline train+assign
     // chain.
-    "dedup_semantic" -> {
+    "dedup_semantic" renders {
       val chain =
         if (views) viewAlias("asgF", "g_ivf_asg")
         else Seq(exnCte, ivfTrainCtes, ivfAssignCtes).mkString(",\n")
@@ -4590,7 +4603,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // doc_id) → per-source corpus stats. One pass over documents for
     // the row-level signals, one word explode for language, one
     // fingerprint groupBy for dedup.
-    "pipeline_curate" ->
+    "pipeline_curate" renders
       s"""with $wordCtes,
          |hits as (select doc_id,
          |    sum(${inList("wd", stop("en"))}) as en_hits,
@@ -4615,19 +4628,19 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |from kept group by source""".stripMargin,
 
     // ---------------- vector / watermark core ----------------
-    "vec_stats" ->
+    "vec_stats" renders
       s"""with $nvCtes
          |select ${bigint("count(*)")} as n_vectors, ${bigint(s"max(${d.arrLen("v")})")} as dim,
          |  ${bigint("count(distinct label)")} as n_labels,
          |  round(avg(nrm), 4) as avg_norm, round(min(nrm), 6) as min_norm, round(max(nrm), 6) as max_norm
          |from nv""".stripMargin,
 
-    "vec_normalize" ->
+    "vec_normalize" renders
       s"""with $nvCtes, $exnCte
          |select ${bigint("id")} as vec_id, ${bigint("pos")} as pos, round(val / nrm, 6) as nval
          |from exn""".stripMargin,
 
-    "vec_topk" ->
+    "vec_topk" renders
       s"""with $nvCtes,
          |q as (select id as qid, n as qn from nn where id in ($qIdLit)),
          |p as (select q.qid, nn.id as cid, round(${d.dot("q.qn", "nn.n")}, 6) as sim from q join nn on nn.id <> q.qid)
@@ -4635,7 +4648,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |from (select qid, cid, sim, row_number() over (partition by qid order by sim desc, cid) as rn from p) _t
          |where rn <= 10""".stripMargin,
 
-    "vec_topk_lsh" ->
+    "vec_topk_lsh" renders
       s"""${wmChain("lsh")},
          |cnd as (select distinct a.id as qid, b.id as cid from bkt a join bkt b on a.t = b.t and a.b = b.b and a.id <> b.id
          |        where a.id in ($qIdLit)),
@@ -4665,7 +4678,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // doubles), Lloyd refinement on 8√N sampled rows, ONE broadcast-
     // join assignment pass over the corpus, per-cell candidate work
     // only.
-    "vec_topk_ivf" ->
+    "vec_topk_ivf" renders
       s"""with $nvCtes, $exnCte,
          |${ivfChain(needAssign = true)},
          |cnd as (select qp.qid, a.id as cid from qpr qp join asgF a on a.cell = qp.cell and a.id <> qp.qid),
@@ -4685,7 +4698,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // state is codes (32× smaller), with the |Q|·M·K lookup table the
     // only query-side join input. Exact re-ranking of the ADC winners
     // (the standard refine step) is what `vec_topk_ivf` provides.
-    "vec_topk_ivf_pq" -> {
+    "vec_topk_ivf_pq" renders {
       val ones = d.castDoubleArray(arrLit(Seq.fill(8)("1.0")))
       s"""with $nvCtes, $exnCte,
          |${ivfChain(needAssign = true)},
@@ -4718,7 +4731,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // centroid components rounded to 6 after the averaging shuffle,
     // every assignment a max(struct(score, -cell)) aggregation
     // (argmin L2 = argmax dot(x,c) - |c|²/2, order-independent).
-    "vec_topk_pq" -> {
+    "vec_topk_pq" renders {
       val ones = d.castDoubleArray(arrLit(Seq.fill(8)("1.0")))
       s"""with $nvCtes,
          |$pqChain,
@@ -4741,7 +4754,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // semi-join of 50·|Q| ids against the vector table — the pattern
     // that keeps exact scoring O(refine·|Q|) while the corpus-wide
     // work stays in code space.
-    "vec_topk_ivf_pq_rerank" -> {
+    "vec_topk_ivf_pq_rerank" renders {
       val ones = d.castDoubleArray(arrLit(Seq.fill(8)("1.0")))
       s"""with $nvCtes, $exnCte,
          |${ivfChain(needAssign = true)},
@@ -4772,7 +4785,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // speed at sf0.1); squared norms compute once per side. Both
     // dialects evaluate the same expression tree in the same order, so
     // the rounded distances stay engine-identical.
-    "vec_topk_l2" ->
+    "vec_topk_l2" renders
       s"""with ev as (select vec_id as id, ${d.castDoubleArray("embedding")} as v from embeddings),
          |c2 as (select id, v, ${d.dot("v", "v")} as s2 from ev),
          |q as (select id, v, s2 from c2 where id in ($qIdLit)),
@@ -4785,7 +4798,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
 
     // semi-structured: extract a field from the JSON props column and
     // aggregate — get_json_object pushdown-friendly scan + one shuffle.
-    "events_props" -> {
+    "events_props" renders {
       val k =
         if (d.name == "spark") "cast(get_json_object(props, '$.k') as bigint)"
         else "cast(json_extract_string(props, '$.k') as bigint)"
@@ -4811,7 +4824,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // sum-order risk); within-class sims quantized then decimal-
     // averaged; the |labels|² centroid-pair matrix is tiny. One corpus
     // explode + one corpus-sized dot join is all the heavy work.
-    "vec_label_separation" ->
+    "vec_label_separation" renders
       s"""with $nvCtes,
          |lab as (select * from ${d.explodeFrom("nn", "n", "pos", "val", Seq("label"))} _lb),
          |ctq as (select label, pos, ${roundAway(d)("avg(val)", 6)} as cv from lab group by label, pos),
@@ -4833,7 +4846,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |  round(ws.within_sim - bn.between_sim, 4) as separation_margin
          |from ws join bn on bn.label = ws.label""".stripMargin,
 
-    "vec_centroids" ->
+    "vec_centroids" renders
       s"""with $nvCtes,
          |lab as (select * from ${d.explodeFrom("nv", "v", "pos", "val", Seq("label"))} _lb)
          |select ${bigint("label")} as label, ${bigint("pos")} as pos,
@@ -4847,7 +4860,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // cumulative histogram, and the p-th quantile is the smallest
     // length whose cumulative count reaches rank ⌈cnt·p⌉ — identical
     // to ranking every row, at O(distinct lengths) post-shuffle cost.
-    "text_length_quantiles" ->
+    "text_length_quantiles" renders
       s"""with lc as (select n_chars, count(*) as c from documents group by n_chars),
          |cum as (select a.n_chars, sum(b.c) as cum from lc a join lc b on b.n_chars <= a.n_chars group by a.n_chars),
          |tot as (select count(*) as cnt from documents)
@@ -4857,7 +4870,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |  ${bigint("min(n_chars)")} as min_len, ${bigint("max(n_chars)")} as max_len
          |from cum cross join tot""".stripMargin,
 
-    "vec_project2d" ->
+    "vec_project2d" renders
       s"""with $nvCtes,
          |ax as (select ${d.arrTransform(d.intSeq("1", Dim.toString), "dd", s"(2.0 * ${prfMod(d)(2, "'ax0'", "dd")} - 1.0) / sqrt(cast($Dim as double))")} as a0,
          |              ${d.arrTransform(d.intSeq("1", Dim.toString), "dd", s"(2.0 * ${prfMod(d)(2, "'ax1'", "dd")} - 1.0) / sqrt(cast($Dim as double))")} as a1)
@@ -4865,7 +4878,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |  round(${d.dot("nn.n", "ax.a0")}, 5) as x, round(${d.dot("nn.n", "ax.a1")}, 5) as y
          |from nn cross join ax""".stripMargin,
 
-    "pca_covariance" ->
+    "pca_covariance" renders
       // one scan, 36 partially-aggregated groups — no explode, no
       // self-join; the Gram accumulation pattern that scales to d x d
       // on 100 TB (driver-side eigen-decomposition of the d x d result)
@@ -4876,7 +4889,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |from nv cross join ij
          |group by ij.i, ij.j""".stripMargin,
 
-    "wm_knn_edges" ->
+    "wm_knn_edges" renders
       s"""${wmChain("knn")}
          |select ${bigint("src")} as src, ${bigint("dst")} as dst, ${bigint("rn")} as rn, sim from knn""".stripMargin,
 
@@ -4891,7 +4904,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // neither form can emit a duplicate). The salted form is what the
     // shared chain actually ships (knnCtes): a hot LSH bucket's pair
     // expansion fans over 4 reducers instead of straggling one task.
-    "knn_edges_salted" ->
+    "knn_edges_salted" renders
       s"""${wmChain("lsh")},
          |sa as (select t, b, id, id % 4 as s from bkt),
          |sb as (select t, b, id, sx as s from bkt cross join ${rangeTable("kx", "sx", 0, 3)}),
@@ -4912,48 +4925,48 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |from pc left join sc on sc.t = pc.t and sc.b = pc.b
          |        left join mc on mc.t = pc.t and mc.b = pc.b""".stripMargin,
 
-    "wm_in_degree" ->
+    "wm_in_degree" renders
       s"""${wmChain("knn")}
          |select ${bigint("vec_id")} as vec_id, ${bigint("in_degree")} as in_degree from indeg""".stripMargin,
 
-    "wm_carriers" ->
+    "wm_carriers" renders
       s"""${wmChain("carriers")}
          |select ${bigint("vec_id")} as vec_id, ${bigint("in_degree")} as in_degree,
          |       ${bigint("sel_rank")} as sel_rank, ${bigint("blk")} as blk from carriers""".stripMargin,
 
-    "wm_msg_bits" ->
+    "wm_msg_bits" renders
       s"""with $msgbitsCte
          |select ${bigint("blk")} as blk, ${bigint("j")} as bit_idx, ${bigint("bit")} as bit from msgbits""".stripMargin,
 
-    "wm_embed" ->
+    "wm_embed" renders
       s"""${wmChain("stego")}
          |select ${bigint("id")} as vec_id, ${bigint("pos")} as pos, round(sval, 6) as stego_val from stego""".stripMargin,
 
-    "wm_extract" ->
+    "wm_extract" renders
       s"""${wmChain("extract")}
          |select ${bigint("blk")} as blk, ${bigint("bit_idx")} as bit_idx,
          |  ${bigint("case when vote > 0 then 1 else 0 end")} as bit, ${bigint("n")} as votes
          |from votes""".stripMargin,
 
     // ---------------- attacks (reference: attack/*.py) ----------------
-    "attack_gaussian" ->
+    "attack_gaussian" renders
       s"""with $nvCtes, $exnCte
          |select ${bigint("id")} as vec_id, ${bigint("pos")} as pos,
          |  ${roundAway(d)(s"val + 0.1 * ${prfGauss(d)("'ga'", "id", "pos")}", 5)} as noisy_val
          |from exn where ${prfMod(d)(10, "'gpick'", "id")} < 3""".stripMargin,
 
-    "attack_mean" ->
+    "attack_mean" renders
       s"""with $nvCtes, $exnCte,
          |mu as (select pos, avg(val) as mval from exn group by pos)
          |select ${bigint("x.id")} as vec_id, ${bigint("x.pos")} as pos, round(mu.mval, 6) as new_val
          |from exn x join mu on mu.pos = x.pos
          |where ${prfMod(d)(10, "'mpick'", "x.id")} < 1""".stripMargin,
 
-    "attack_subset" ->
+    "attack_subset" renders
       s"""with $nvCtes
          |select ${bigint("id")} as vec_id from nv where ${prfMod(d)(10, "'keep'", "id")} < 9""".stripMargin,
 
-    "attack_truncate" ->
+    "attack_truncate" renders
       s"""with $nvCtes, $exnCte
          |select ${bigint("id")} as vec_id, ${bigint("pos")} as pos,
          |  round(case when pos <= ${Dim * 7 / 10} then val else 0.0 end, 6) as trunc_val
@@ -4975,7 +4988,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // expansions; |Q| is the fixed literal query list. This is the
     // retrieval stack a 100 TB deployment would actually serve,
     // measured on itself.
-    "wm_recall_impact" ->
+    "wm_recall_impact" renders
       s"""${wmChain("stego")},
          |cfv as (select id, ${d.arrAggOrdered("sval", "pos")} as v from stego group by id),
          |cfn as (select id, ${d.arrTransform("v", "x", s"x / sqrt(${d.dot("v", "v")})")} as n from cfv),
@@ -5018,7 +5031,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // 0 errors, wrong ≈ nothing). Two extract aggregation chains over
     // the cached stego view — no corpus work, all key constants are
     // plan-time literals.
-    "wm_key_mismatch" -> {
+    "wm_key_mismatch" renders {
       val keyW = "not-the-key"
       val kcW = WmConst.keyed(keyW)
       def wWLitOf(g: Int) = weightLit((1 to Dim).map(p =>
@@ -5055,7 +5068,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |${legSel("wrong_key", "w_")}""".stripMargin
     },
 
-    "wm_ber" ->
+    "wm_ber" renders
       s"""${wmChain("stego")},
          |atk as (select id, pos,
          |          case when ${prfMod(d)(10, "'bw'", "id")} < 3
@@ -5086,11 +5099,11 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // the hash pins). Extraction itself is the shared extractCtes
     // aggregation — one partial-agg pass over the rate·N matched
     // rows + the tiny vote aggregation.
-    "wm_extract_ids" -> wmExtractIdsSql(None),
+    "wm_extract_ids" renders wmExtractIdsSql(None),
 
     // robustness matrix, continued: BER after subset deletion (10% of
     // rows dropped — surviving carriers still majority-vote correctly)
-    "wm_ber_subset" ->
+    "wm_ber_subset" renders
       s"""${wmChain("stego")},
          |atk as (select id, pos, sval from stego where ${prfMod(d)(10, "'bkeep'", "id")} < 9),
          |${extractCtes("atk")}
@@ -5102,7 +5115,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // ...and after dimension truncation (30% of dims zeroed): the keyed
     // groups lose members and BER degrades — the honest failure mode the
     // reference's robustness eval also shows for aggressive truncation.
-    "wm_ber_truncate" ->
+    "wm_ber_truncate" renders
       s"""${wmChain("stego")},
          |atk as (select id, pos, case when pos <= ${Dim * 7 / 10} then sval else 0.0 end as sval from stego),
          |${extractCtes("atk")}
@@ -5126,7 +5139,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // no window. (The former 64-row row_number() ranking was the only
     // WindowExec-without-partition in the whole suite — bounded at 64
     // rows but needless.)
-    "wm_ber_permute" -> {
+    "wm_ber_permute" renders {
       // topos(frompos) = rank of prf('perm', frompos) by (prf, frompos)
       // — the same (pr, frompos) ordering the SQL ranking used; JVM md5
       // is byte-identical to both engines' md5(concat_ws(':', ...)).
@@ -5154,7 +5167,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // ≤ (mx−mn)/512 per cell, far inside the QIM decision margin
     // (delta/2 = 0.075 per ~2.6-dim group projection), so BER must
     // stay 0. Two tiny stats aggs + a map — no new shuffle shape.
-    "wm_ber_quantize" ->
+    "wm_ber_quantize" renders
       s"""${wmChain("stego")},
          |sst as (select pos, min(sval) as mn, max(sval) as mx from stego group by pos),
          |atk as (select s.id, s.pos,
@@ -5171,7 +5184,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // 10% subset deletion — the robustness matrix's composite cell
     // (attacks compose in the reference's eval harness too). Same
     // extract/vote machinery, one more filter + map.
-    "wm_ber_combo" ->
+    "wm_ber_combo" renders
       s"""${wmChain("stego")},
          |atk as (select id, pos,
          |          case when ${prfMod(d)(10, "'cbw'", "id")} < 3
@@ -5189,7 +5202,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // share of duplicated word 3-grams and the hottest gram's count.
     // One explode + lead() pairing + two combinable shuffles (gram
     // counts, then per-doc rollup).
-    "text_repetition" ->
+    "text_repetition" renders
       s"""with $wordCtes,
          |g3 as (select doc_id, concat_ws(' ', wd, w2, w3) as g
          |       from (${adjWordsFrom(3)}) _g where w3 is not null),
@@ -5212,7 +5225,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // ~2⁻⁴⁰ collision odds per pair, and a collision hashes
     // identically in both engines): the dominant shuffle/broadcast
     // carries 8-byte keys instead of 32-char strings.
-    "decontaminate" -> decontaminateSql(None),
+    "decontaminate" renders decontaminateSql(None),
 
     // N-GRAM LENGTH TUNING CURVE for decontamination (30m's knob —
     // the published standards disagree: GPT-3's eval decontamination
@@ -5227,7 +5240,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // contaminated pairs / flagged train docs / flagged eval docs /
     // total shared shingles per n, zero-filled from the rung spine
     // so the curve shape is always complete.
-    "decontaminate_ngram_curve" -> {
+    "decontaminate_ngram_curve" renders {
       val ns = Seq(5, 8, 13)
       def gOf(n: Int) = {
         val words = "wd" +: (2 to n).map(k => s"w$k")
@@ -5268,7 +5281,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // count(*) over (partition by wd) IS the document frequency; the
     // inline join form re-ran the corpus explode under tf, dfq, and
     // both `scored` references (4 explodes). Values identical.
-    "text_tfidf" ->
+    "text_tfidf" renders
       s"""with $wordCtes,
          |tf as (select doc_id, wd, count(*) as tf from wx group by doc_id, wd),
          |nd as (select cast(count(*) as double) as n from documents),
@@ -5287,7 +5300,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // training jobs; one scan, 4 aggregate groups via union of
     // single-row aggregations (each is its own partial-agg pass over
     // the same cached scan; Spark reuses the exchange).
-    "table_profile" -> {
+    "table_profile" renders {
       def num(colName: String) =
         s"""select '$colName' as col, ${bigint("count(*)")} as n_rows,
            |  ${bigint(s"count(distinct $colName)")} as n_distinct,
@@ -5302,7 +5315,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // as-of join: each click event ↦ the user's latest purchase at or
     // before it. One shuffle on user_id + an ordered window — the
     // scalable merge-asof shape (no range join blowup).
-    "events_asof" -> {
+    "events_asof" renders {
       val w = "partition by user_id order by tns, k, event_id rows between unbounded preceding and current row"
       s"""with e as (select event_id, user_id, ${evSec("ts")} as sec,
          |             ${if (d.name == "spark") "ts" else "epoch_ns(ts)"} as tns,
@@ -5327,7 +5340,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // band, never a time-range cross join. (The streaming form bounds
     // the SAME state with its two-sided watermarks; StreamingSpec pins
     // pair-set equality on floor-second inputs.)
-    "events_attribution" ->
+    "events_attribution" renders
       s"""with c as (select event_id as click_id, user_id, ${evSec("ts")} as csec
          |           from events where event_type = 'click'),
          |p as (select event_id as purchase_id, user_id, ${evSec("ts")} as psec
@@ -5350,7 +5363,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // purchases, distinct credited clicks, and the share of ALL
     // purchases credited — the coverage-vs-precision frontier.
     // Integer counts, two divisions per rung. 4-row output.
-    "events_attribution_curve" ->
+    "events_attribution_curve" renders
       s"""with c as (select event_id as click_id, user_id, ${evSec("ts")} as csec
          |           from events where event_type = 'click'),
          |p as (select event_id as purchase_id, user_id, ${evSec("ts")} as psec
@@ -5374,7 +5387,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // table — only ~1/16 of vectors pass the CRC gate by chance and no
     // coherent blocks emerge (the no-false-positive property of the
     // reference's keyed detector).
-    "wm_extract_null" ->
+    "wm_extract_null" renders
       s"""with $nvCtes, $exnCte,
          |orig as (select id, pos, val as sval from exn),
          |${extractCtes("orig")}
@@ -5384,7 +5397,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
 
     // the table update_vectors writes back: stego values for carriers,
     // originals elsewhere (reference: pg_func.py:389-395).
-    "vec_writeback" ->
+    "vec_writeback" renders
       s"""${wmChain("stego")},
          |$fullCte
          |select ${bigint("id")} as vec_id, ${bigint("pos")} as pos, round(val, 6) as val
@@ -5397,7 +5410,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // One carrier-only join + two tiny aggregations; the std uses the
     // population identity sqrt(E[x²] − E[x]²) computed identically in
     // both engines (no engine stddev variants).
-    "wm_drift" ->
+    "wm_drift" renders
       s"""${wmChain("stego")},
          |drift as (select x.id,
          |            round(sum(x.val * s.sval) / (max(x.nrm) * sqrt(sum(s.sval * s.sval))), 6) as cos_sim
@@ -5424,7 +5437,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // per-cell displacement is ≤ delta/2 in a unit-norm space, so a
     // healthy embed shows KS ≈ bucket width and mean_shift ≈ 0 —
     // drift beyond that is the steganalysis alarm.
-    "wm_steganalysis" ->
+    "wm_steganalysis" renders
       s"""${wmChain("stego")},
          |pair as (select x.val / x.nrm as ov, s.sval / x.nrm as sv
          |         from exn x join stego s on s.id = x.id and s.pos = x.pos),
@@ -5455,7 +5468,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // the reference's backup_vectors stores before embedding so the
     // attack suite can roll back (reference: pg_func.py:441,
     // attack/clear.py). ~rate·N·d rows; one broadcastable join.
-    "wm_backup" ->
+    "wm_backup" renders
       s"""${wmChain("backup")}
          |select ${bigint("c.vec_id")} as vec_id, ${bigint("x.pos")} as pos,
          |  round(x.val, 6) as val
@@ -5466,7 +5479,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // bit-for-bit and (b) blind extraction on the restored table decays
     // to the no-watermark chance floor (same CRC-pass count as the
     // wm_extract_null control) — the reference's clear.py semantics.
-    "wm_restore" ->
+    "wm_restore" renders
       s"""${wmChain("restore")},
          |$fullCte,
          |bk as (select c.vec_id as id, x.pos, x.val from carriers c join exn x on x.id = c.vec_id),
@@ -5483,7 +5496,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |  ${bigint("(select count(*) from valid)")} as n_crc_pass
          |from diff d""".stripMargin,
 
-    "vec_dim" ->
+    "vec_dim" renders
       s"""select 'embeddings' as tbl, ${bigint("(select count(*) from embeddings)")} as n_rows,
          |  ${bigint(s"(select max(${d.arrLen("embedding")}) from embeddings)")} as vec_dim
          |union all
@@ -5494,7 +5507,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // 80/10/10 per source, so the split is reproducible, stable under
     // re-runs, and needs NO shuffle beyond the final stats aggregation
     // (the assignment itself is pure map-side arithmetic).
-    "sample_stratified" ->
+    "sample_stratified" renders
       s"""with s as (select doc_id, source, ${prfMod(d)(100, "'split'", "doc_id")} as h from documents)
          |select source,
          |  case when h < 80 then 'train' when h < 90 then 'val' else 'test' end as split,
@@ -5518,7 +5531,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // (doc_id, wpos) on the exploded array IS the adjacent element,
     // and the case guard is the `w2 is not null` bound. The DuckDB
     // oracle keeps the window rendering.
-    "text_ngram_freq" -> {
+    "text_ngram_freq" renders {
       if (d.name == "spark")
         s"""with w as (select doc_id, ${splitWs("lower(text)")} as ws from documents),
            |bg as (select concat_ws(' ', wd, w2) as bigram from (
@@ -5536,7 +5549,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
 
     // token-length histogram per source (sequence-length planning for
     // training batches): one pass, group on (source, bucket).
-    "doc_token_hist" ->
+    "doc_token_hist" renders
       s"""with t as (select source, ${d.arrLen(splitWs("text"))} as n from documents)
          |select source, ${bigint(d.idiv("n", "10"))} as bucket,
          |  ${bigint("count(*)")} as n_docs,
@@ -5550,7 +5563,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // sort); the three stage tables are narrow (one row per user) and
     // the final counts are three tiny scalar aggs. At 100 TB: three
     // map-side-combinable shuffles on user_id, nothing else.
-    "events_funnel" -> {
+    "events_funnel" renders {
       val e = s"select user_id, event_type, ${evSec("ts")} as sec from events where event_type in ('view', 'click', 'purchase')"
       s"""with fv as (select user_id, min(sec) as v0 from ($e) _e where event_type = 'view' group by user_id),
          |fc as (select e.user_id, min(e.sec) as c0
@@ -5577,7 +5590,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // the two engines' hash aggregates visit groups differently);
     // collisions at 2⁻⁶⁰ hash identically anyway. One explode + one
     // (doc, word) groupBy + one per-doc fold.
-    "text_entropy" -> {
+    "text_entropy" renders {
       val zs = d.arrAggOrdered("c * ln(cast(c as double))", "hw")
       s"""with $wordCtes,
          |wc as (select doc_id, wd, ${prf(d)("'ent'", "wd")} % 1048576 as hw, count(*) as c
@@ -5606,7 +5619,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // pattern): bucket by a fixed score grid, broadcast cumulative
     // offsets, rank within buckets — no single-partition window; at
     // 100 TB the grid is the RangePartitioner-bounds analog.
-    "sample_weighted" ->
+    "sample_weighted" renders
       s"""with sc as (select doc_id, source, n_chars,
          |              (-ln(${prfUniform(d)("'smp'", "doc_id")})) / cast(n_chars as double) as score
          |            from documents),
@@ -5639,7 +5652,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // each term is one ln() of an exact integer ratio, folded in
     // keyed-hash order with a value tie-break (the text_entropy
     // pattern), rounded once at the end.
-    "text_lm_score" -> {
+    "text_lm_score" renders {
       val ts = d.arrAggOrdered(
         "c * (ln(cast(c12 as double)) - ln(cast(c1 as double)))", "hb")
       val ones = d.arrTransform("ts", "x", "cast(1 as double)")
@@ -5674,7 +5687,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // ln 2/(−slope). Censoring honesty: day-k retention only counts
     // cohorts OLD enough to have a day k (d0 + k ≤ last corpus day) —
     // the denominator shrinks with k instead of diluting the tail.
-    "events_retention_halflife" ->
+    "events_retention_halflife" renders
       s"""with e as (select user_id, ${d.idiv(evSec("ts"), "86400")} as day from events),
          |f as (select user_id, min(day) as d0 from e group by user_id),
          |mxd as (select ${bigint("max(day)")} as md from e),
@@ -5700,7 +5713,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |       else cast(null as double) end as halflife_days
          |from rk cross join mo""".stripMargin,
 
-    "events_retention" ->
+    "events_retention" renders
       s"""with e as (select user_id, ${d.idiv(evSec("ts"), "86400")} as day from events),
          |f as (select user_id, min(day) as d0 from e group by user_id),
          |r as (select f.user_id, f.d0,
@@ -5717,7 +5730,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // l_orderkey is deliberately included as a non-unique candidate
     // (it's half of a composite key) so the check is visibly computed,
     // not declared. One count-distinct aggregation per table.
-    "catalog_pk" -> {
+    "catalog_pk" renders {
       def row(tbl: String, key: String) =
         s"""select '$tbl' as tbl, '$key' as key_col, ${bigint("count(*)")} as n_rows,
            |  ${bigint(s"count(distinct $key)")} as n_distinct,
@@ -5736,7 +5749,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // candidate side BEFORE the similarity join, so the pairwise work is
     // |Q|·|filtered|, and at 100 TB the predicate pushes down to the
     // parquet scan alongside the column pruning.
-    "vec_topk_filtered" ->
+    "vec_topk_filtered" renders
       s"""with $nvCtes,
          |q as (select id as qid, label as qlab, n as qn from nn where id in ($qIdLit)),
          |p as (select q.qid, q.qlab, nn.id as cid, round(${d.dot("q.qn", "nn.n")}, 6) as sim
@@ -5755,7 +5768,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // O(|Q|·|filtered|) where |filtered| grows with N; this path is
     // O(Σ bucket ∩ filter), independent of the unfiltered corpus
     // size. Exact similarity runs only on the surviving candidates.
-    "vec_topk_filtered_lsh" ->
+    "vec_topk_filtered_lsh" renders
       s"""${wmChain("lsh")},
          |q as (select id as qid, label as qlab, n as qn from nn where id in ($qIdLit)),
          |cnd as (select distinct q.qid, q.qlab, b.id as cid
@@ -5774,7 +5787,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // half of the ANN serving surface. Candidates come from the shared
     // LSH buckets (one bucket join, never |Q|·N), exact similarity only
     // on candidates; the radius keeps the output bounded.
-    "vec_range_search" ->
+    "vec_range_search" renders
       s"""${wmChain("lsh")},
          |cnd as (select distinct a.id as qid, b.id as cid from bkt a join bkt b on a.t = b.t and a.b = b.b and a.id <> b.id
          |        where a.id in ($qIdLit)),
@@ -5802,7 +5815,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // graph — no windows, no sorts, corpus-linear. 1-row output read
     // next to graph_degree_hist (the bucketed view of the same
     // distribution) and vec_lid (the other ANN-hardness census).
-    "graph_hubness" -> {
+    "graph_hubness" renders {
       val mean = "(cast(s1 as double) / n)"
       val vr = s"(cast(s2 as double) / n - $mean * $mean)"
       val m3 = s"(cast(s3 as double) / n - 3 * $mean * cast(s2 as double) / n + 2 * $mean * $mean * $mean)"
@@ -5843,11 +5856,11 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // guard, stated). Corpus work: the one word explode + a
     // vocabulary groupBy; everything after is ≤ 600 grid rows.
     // 190-row output (unordered source pairs).
-    "text_burrows_delta" -> textBurrowsDeltaSql(None),
+    "text_burrows_delta" renders textBurrowsDeltaSql(None),
 
   )
 
-  private lazy val sqls2: Map[String, String] = Map(
+  private lazy val sqls2: Map[String, () => String] = Map(
     // int8 scalar quantization + reconstruction-error report — the SQ
     // index/storage variant every vector DB ships (4x memory cut). Per
     // dim: min/max over one exploded pass (tiny d-row broadcast back),
@@ -5859,7 +5872,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // NaN — silently breaking oracle parity on that input (r3 ADVICE
     // #2). Scale: stats pass + map-side quantize; the codes
     // themselves never shuffle.
-    "vec_quantize" ->
+    "vec_quantize" renders
       s"""with $nvCtes, $exnCte,
          |st as (select pos, min(val) as mn, max(val) as mx from exn group by pos),
          |qz as (select x.pos, s.mn, s.mx,
@@ -5887,7 +5900,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // Same bounded query list and rank determinism as the other ANN
     // legs; the agreement metric vs exact search is rank overlap
     // (NewOpsSpec asserts the quantization error stays one-bin).
-    "vec_topk_sq" ->
+    "vec_topk_sq" renders
       s"""with $nvCtes, $exnCte,
          |st as (select pos, min(val) as mn, max(val) as mx from exn group by pos),
          |qz as (select x.id, x.pos,
@@ -5911,7 +5924,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // scan is its correctness baseline, as vec_topk is for the float
     // legs). Candidates from the shared buckets, cosine between the
     // exact query and the midpoint-dequantized candidate.
-    "vec_topk_sq_lsh" ->
+    "vec_topk_sq_lsh" renders
       s"""${wmChain("lsh")},
          |sst as (select pos, min(val) as mn, max(val) as mx from exn group by pos),
          |sqz as (select x.id, x.pos,
@@ -5948,7 +5961,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // order-independent in both engines, so the result hashes
     // identically at any scale. The deterministic mass leak from
     // flooring (< N·100 pico) is part of the operator's contract.
-    "graph_pagerank" -> {
+    "graph_pagerank" renders {
       val matKw = if (d.name == "duckdb") "materialized " else ""
       def step(prev: String, next: String) =
         s"""$next as (select n.id, nd.base + ${d.idiv(s"85 * coalesce(inc.s, 0)", "100")} as r
@@ -5978,7 +5991,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // story: counting distinct tokens/urls/users needs O(m) state per
     // group instead of a count(distinct) shuffle of the raw values;
     // the exact count runs alongside here only to report the error.
-    "sketch_distinct" -> {
+    "sketch_distinct" renders {
       val m = 64
       // rho = 1 + leading zeros of the 54-bit remainder (w < 2^54)
       val rho = (1 to 54).map(r =>
@@ -6018,7 +6031,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // hash, unrolled integer rho over the 52-bit remainder, ordered
     // register fold, canonical LC gate (v0 > 0 AND raw <= 2.5m). The
     // exact per-source count runs alongside only to report rel_err.
-    "sketch_distinct_by_source" ->
+    "sketch_distinct_by_source" renders
       s"""with $hll256Ctes,
          |za as (select source,
          |              ${hllZsV0("allr")}
@@ -6039,7 +6052,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // |sources|²·m tiny integer rows — the raw corpora are never
     // re-read, never joined. Same deterministic toolkit as the other
     // HLL keys; per-pair estimates reuse the shared chain.
-    "sketch_source_overlap" ->
+    "sketch_source_overlap" renders
       s"""with $hll256Ctes,
          |pr as (select a.source as src_a, b.source as src_b, a.j, greatest(a.mr, b.mr) as mr
          |       from allr a join allr b on b.j = a.j and a.source < b.source),
@@ -6067,7 +6080,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // bounded by fill^k (measured vs expected reported side by side).
     // All integer arithmetic (PRF positions, set-bit array, contains)
     // → bit-identical engines.
-    "sketch_bloom" -> sketchBloomSql(None),
+    "sketch_bloom" renders sketchBloomSql(None),
 
     // BLOOM m-BITS TUNING CURVE — the bits-per-key frontier that sizes
     // every production Bloom deployment (next to sketch_hll_curve and
@@ -6081,7 +6094,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // positions present in the level's distinct-position set (value-
     // identical to the packed-bitset test, and the join stays
     // per-(m, pos) bounded). Integer counts until the final divisions.
-    "sketch_bloom_curve" -> sketchBloomCurveSql(None),
+    "sketch_bloom_curve" renders sketchBloomCurveSql(None),
 
     // the Bloom prefilter COMPOSED with the exact decontamination join
     // — output IDENTICAL to `decontaminate` (Bloom admits no false
@@ -6091,7 +6104,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // to every executor, the training corpus streams through a
     // map-side membership test, and ONLY the hits (true overlaps +
     // fill^k false positives) reach the exact hash join's shuffle.
-    "decontaminate_bloom" -> decontaminateBloomSql(None),
+    "decontaminate_bloom" renders decontaminateBloomSql(None),
 
     // rolling distinct-user engagement — per-day DAU, trailing-7-day
     // WAU, and the DAU/WAU stickiness ratio. Rolling DISTINCT does not
@@ -6100,7 +6113,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // predicate — the grid side broadcasts (days, not events), the
     // distinct runs as ONE combinable groupBy per grid day. Integer
     // counts + one rounded ratio → deterministic.
-    "events_rolling_dau" -> {
+    "events_rolling_dau" renders {
       val day = bigint(d.idiv(evSec("ts"), "86400"))
       val matKw = if (d.name == "duckdb") "materialized " else ""
       s"""with du as $matKw(select distinct $day as day, user_id from events),
@@ -6125,7 +6138,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // regime is actually exercised (production sizing is w ≈ ⌈e/ε⌉
     // columns for ε-relative error — the sketch stays KB-sized while
     // the domain grows unbounded). Integer-only → bit-identical.
-    "sketch_cms" -> {
+    "sketch_cms" renders {
       val (rows, w) = (4, 16)
       val matKw = if (d.name == "duckdb") "materialized " else ""
       s"""with $wordCtes,
@@ -6150,7 +6163,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // integer, so the profile hashes identically in both engines. The
     // 100 TB read: the grid is 32 KB mergeable state over an unbounded
     // key domain; the error histogram is what you'd monitor to size w.
-    "sketch_cms_err" -> {
+    "sketch_cms_err" renders {
       val (rows, w) = (4, 1024)
       val matKw = if (d.name == "duckdb") "materialized " else ""
       s"""with $wordCtes,
@@ -6180,7 +6193,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // global sort anywhere), the same two-pass trick as the carrier
     // rank. rel_err reported per quantile; integer ranks + IEEE bin
     // arithmetic → bit-identical engines.
-    "sketch_quantiles" -> sketchQuantilesSql(None),
+    "sketch_quantiles" renders sketchQuantilesSql(None),
 
     // PER-GROUP quantiles — the grouped form of sketch_quantiles (what
     // sketch_distinct_by_source is to sketch_distinct): p50/p95 of the
@@ -6190,7 +6203,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // anywhere — the shuffle keys are (type) for stats/bins and
     // (type, bin) for the selection window; both scale with group
     // count, not row count.
-    "events_value_quantiles" -> eventsValueQuantilesSql(None),
+    "events_value_quantiles" renders eventsValueQuantilesSql(None),
 
     // triangle count / transitivity over the kNN proximity graph — the
     // graph-quality metric next to in-degree and PageRank. The count
@@ -6202,7 +6215,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // rewrite; a naive id-ordered join would square the hottest hub's
     // in-degree). Work = one distinct, one degree agg, one
     // wedge join + one closing semi-join — all integer keys.
-    "graph_triangles" -> {
+    "graph_triangles" renders {
       val matKw = if (d.name == "duckdb") "materialized " else ""
       s"""${wmChain("knn")},
          |und as $matKw(select distinct least(src, dst) as a, greatest(src, dst) as b from knn),
@@ -6233,7 +6246,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // O(k) on non-degenerate corpora), so work is O(N·k²), the same
     // envelope as the graph build itself. The NOT EXISTS closes as an
     // anti hash join on the (a, b) pair key.
-    "graph_link_predict" -> {
+    "graph_link_predict" renders {
       val matKw = if (d.name == "duckdb") "materialized " else ""
       s"""${wmChain("knn")},
          |und as $matKw(select distinct least(src, dst) as a, greatest(src, dst) as b from knn),
@@ -6260,7 +6273,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // rolling avg would be fold-order-dependent). One groupBy + one
     // partitioned window; at 100 TB the partition key (event_type) is
     // the stream key and each partition's frame state is O(24).
-    "events_anomaly" -> {
+    "events_anomaly" renders {
       val fr = "partition by event_type order by hr rows between 24 preceding and 1 preceding"
       s"""with hc as (select event_type, ${evHourEpoch("ts")} as hr, ${bigint("count(*)")} as c
          |       from events group by event_type, ${evHourEpoch("ts")}),
@@ -6285,7 +6298,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // 1998, minus heavy-failure accounts (≥ 8 'F' orders). Each leg is
     // a distinct over an integer key; set ops hash on the key — the
     // shape Catalyst plans as aggregations + hash joins, no sorts.
-    "q_set_ops" ->
+    "q_set_ops" renders
       s"""with a as (select distinct o_custkey as custkey from orders where o_orderdate < timestamp '1998-01-01 00:00:00'),
          |b as (select distinct o_custkey as custkey from orders where o_orderdate >= timestamp '1998-01-01 00:00:00'),
          |r as (select o_custkey as custkey from orders where o_orderstatus = 'F' group by o_custkey having count(*) >= 8)
@@ -6296,7 +6309,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // event counts spread into one column per type. One groupBy, all
     // integer counts; the conditional-sum form is what PIVOT desugars
     // to and stays map-side combinable at any scale.
-    "events_pivot" -> {
+    "events_pivot" renders {
       def cnt(t: String) = bigint(s"sum(case when event_type = '$t' then 1 else 0 end)")
       s"""select ${bigint(d.idiv(evSec("ts"), "86400"))} as day,
          |  ${cnt("view")} as n_view, ${cnt("click")} as n_click,
@@ -6311,7 +6324,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // broadcast back; the decimal-exact sum/count avg keeps the
     // comparison deterministic in both engines (a float avg's fold
     // order would not be).
-    "q_corr_subquery" ->
+    "q_corr_subquery" renders
       s"""select ${bigint("p_partkey")} as partkey, p_brand, price, brand_avg from
          |  (select p_partkey, p_brand, cast(p_retailprice as double) as price,
          |     (select ${roundAway(d)("cast(sum(cast(p2.p_retailprice as decimal(18,2))) as double) / count(*)", 2)}
@@ -6326,7 +6339,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // ONE groupBy (doc, chunk) builds the chunk fingerprint from the
     // in-order token stream and counts tokens. No windows, no joins;
     // at 100 TB this is a single explode + one combinable shuffle.
-    "text_chunk" -> {
+    "text_chunk" renders {
       val (size, stride) = (64, 48)
       // word at wpos (1-based) belongs to chunks k with
       // 48k+1 <= wpos <= 48k+64: k in [ceil((wpos-64)/48), floor((wpos-1)/48)]
@@ -6347,7 +6360,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // deployment watches: per-table bucket occupancy, skew ratio
     // (max/avg bucket), and singleton share (vectors LSH cannot pair).
     // One tiny aggregation over the shared chain's bucket rows.
-    "lsh_bucket_stats" ->
+    "lsh_bucket_stats" renders
       s"""${wmChain("lsh")},
          |bc as (select t, b, count(*) as c from bkt group by t, b)
          |select ${bigint("t")} as tbl_id, ${bigint("count(*)")} as n_buckets,
@@ -6363,7 +6376,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // digit-masked text (the redacted artifact). Pure per-row regex
     // map, no shuffle; at 100 TB this pass fuses into any other
     // per-document map stage.
-    "pii_redact" ->
+    "pii_redact" renders
       s"""select ${bigint("doc_id")} as doc_id,
          |  ${bigint(d.regexpCount("text", "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+"))} as n_emails,
          |  ${bigint(d.regexpCount("text", "[0-9]{4,}"))} as n_digit_runs,
@@ -6385,7 +6398,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // ≤ 8-row tables; the projection is map-only against one
     // broadcast row. (The full-d64 variant with a driver-side Jacobi
     // solve is operators.Pca; this corner is its oracle witness.)
-    "pca_project2d" -> pcaProject2dSql,
+    "pca_project2d" renders pcaProject2dSql,
 
     // LANDMARK-MDS 2-D LAYOUT — the deterministic stand-in for the
     // reference's stochastic t-SNE viz branch (pg_func.py:921),
@@ -6400,7 +6413,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // Spark entry mirrors the m² solve in the JVM (PcaSolve) and
     // projects with literal axes, so the serving path is ONE corpus
     // pass at any scale.
-    "vec_mds2d" -> mdsProject2dSql,
+    "vec_mds2d" renders mdsProject2dSql,
 
     // fuzzy entity resolution over the NAME DOMAIN — the
     // blocking-then-verify shape every record-linkage pipeline uses
@@ -6412,7 +6425,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // blocked self-join is broadcast-trivial no matter how many
     // billions of part rows sit behind it — each name carries its row
     // count instead. levenshtein() is integer-exact in both engines.
-    "text_fuzzy_match" ->
+    "text_fuzzy_match" renders
       s"""with nm as (select p_name, split_part(p_name, ' ', 2) as blk,
          |              count(*) as n_rows from part group by p_name),
          |m as (select a.p_name as name_a, b.p_name as name_b,
@@ -6433,7 +6446,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // (part is vocabulary-sized next to lineitem). Counts are
     // integers; the three ratios are one-shot rounds of exact integer
     // quotients. 25 brands → ≤ 300 output rows at any scale.
-    "market_basket" -> marketBasketSql(None),
+    "market_basket" renders marketBasketSql(None),
 
     // first-order Markov transition matrix over per-user event
     // streams — the behavioral model product analytics fits on raw
@@ -6443,7 +6456,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // for a total order. Transition probability is a one-shot round of
     // an integer quotient per (src, dst) — 25 cells here, |types|²
     // in general, independent of corpus size.
-    "events_transitions" ->
+    "events_transitions" renders
       s"""with e as (select user_id, event_id, event_type, ${evSec("ts")} as sec from events),
          |s as (select event_type as src,
          |        lead(event_type) over (partition by user_id order by sec, event_id) as dst
@@ -6466,7 +6479,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // bit-identical doubles in both engines. At 100 TB this is the
     // same shape as text_tfidf: two combinable shuffles, map-side
     // scoring, no joins wider than a 1-row broadcast.
-    "text_bm25" ->
+    "text_bm25" renders
       s"""with $wordCtes,
          |$bm25Ctes
          |select ${bigint("dt.doc_id")} as doc_id,
@@ -6490,14 +6503,14 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // broadcast offsets + bucket-local row_number — no
     // single-partition window); the fused top-10 reuses the q3
     // bucketed-candidates + pairwise-rank pattern over ≤ 160 rows.
-    "search_hybrid_rrf" -> hybridRrfSql(None),
+    "search_hybrid_rrf" renders hybridRrfSql(None),
 
     // CDC-UPSERT MAINTENANCE OF THE HYBRID SCORE STACK — see
     // searchHybridUpsertSql (r11 verdict item 5: the two-leg score
     // artifact's maintenance path; per-doc integer stats kept, 5%
     // delta re-tokenized, global BM25 stats refolded, full RRF top-10
     // re-served from stats alone).
-    "search_hybrid_upsert" -> searchHybridUpsertSql(None),
+    "search_hybrid_upsert" renders searchHybridUpsertSql(None),
 
     // BPE tokenizer training — the merge-learning loop every LLM data
     // pipeline runs before tokenization, trained (as real BPE trainers
@@ -6515,7 +6528,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // is one max(struct(count, pair)) aggregation with a
     // lexicographic tie-break, and 3 unrolled rounds emit
     // (round, lhs, rhs, merged, n_pairs, n_tokens_after).
-    "text_bpe_merges" -> bpeMergesSql(None),
+    "text_bpe_merges" renders bpeMergesSql(None),
 
     // cross-document duplicated-substring detection (the
     // suffix-array substring dedup of Lee et al. 2022, re-expressed
@@ -6556,7 +6569,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // "w1 w2 ... w8 " the ordered string-agg built, and the per-doc
     // paragraph count np = len div 8 = the old count(*) window. The
     // DuckDB oracle keeps the group-by rendering.
-    "dedup_paragraph" -> {
+    "dedup_paragraph" renders {
       val paraTok = 8
       val dfCap = 20
       val head =
@@ -6591,7 +6604,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |from pairs p""".stripMargin
     },
 
-    "dedup_substring" -> {
+    "dedup_substring" renders {
       s"""with $wordCtes,
          |w8 as (select doc_id, wpos, ${d.hex2int("substr(md5(concat_ws(' ', wd, w2, w3, w4, w5, w6, w7, w8)), 1, 15)")} as h
          |       from (${adjWordsFrom(8, withPos = true)}) _w where w8 is not null),
@@ -6621,7 +6634,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // (g_stego) and the cached index (g_ivf_ct / g_ivf_asg); the
     // oracle inlines both chains. Stego vectors rebuild via the
     // ordered (pos) array fold, so every dot is deterministic.
-    "vec_ivf_reindex" -> {
+    "vec_ivf_reindex" renders {
       val ivfPart =
         if (views) Seq(viewAlias("ct2", "g_ivf_ct"), viewAlias("asgF", "g_ivf_asg")).mkString(",\n")
         else Seq(ivfTrainCtes, ivfAssignCtes).mkString(",\n")
@@ -6653,7 +6666,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // skewed delete feed hollows out specific cells — the signal that
     // schedules a retrain). Tombstones = the PRF tenth vec_delete
     // uses, so the two keys describe the same maintenance event.
-    "vec_ivf_reindex_delete" -> {
+    "vec_ivf_reindex_delete" renders {
       val ivfPart =
         if (views) viewAlias("asgF", "g_ivf_asg")
         else Seq(exnCte, ivfTrainCtes, ivfAssignCtes).mkString(",\n")
@@ -6680,7 +6693,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // md5-bucket order via the ordered-array dot — no float-sum
     // aggregation order to diverge. Expected epoch count at a fixed
     // token budget shows the oversampling factor per source.
-    "data_mix_weights" -> {
+    "data_mix_weights" renders {
       val ordExpr = d.hex2int("substr(md5(source), 1, 7)")
       s"""with $wordCtes,
          |tk as (select doc_id, count(*) as ntok from wx group by doc_id),
@@ -6701,7 +6714,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // relational suite didn't yet exercise). One shuffle per side on
     // the hour key; the full-outer hash join carries unmatched rows
     // from BOTH sides, statused via which key is null.
-    "events_reconcile" ->
+    "events_reconcile" renders
       s"""with e as (select ${d.idiv(evSec("ts"), "3600")} as hr, event_type from events),
          |c as (select hr, count(*) as n from e where event_type = 'click' group by hr),
          |p as (select hr, count(*) as n from e where event_type = 'purchase' group by hr)
@@ -6719,7 +6732,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // integer cents (the one float step is the final /100 display
     // division); the window partitions per user, so sorts are
     // per-user-partition and fully parallel.
-    "events_user_rolling" ->
+    "events_user_rolling" renders
       s"""with e as (select user_id, event_id, ${evSec("ts")} as sec,
          |            ${bigint("case when value >= 0 then floor(value * 100 + 0.5) else -floor(-value * 100 + 0.5) end")} as cents
          |          from events where event_type = 'purchase'),
@@ -6740,7 +6753,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // single divisions of exact integers — no float accumulation
     // order anywhere, and the stats are one map-side-combinable
     // groupBy + a second one-row aggregation at any corpus size.
-    "events_trend" ->
+    "events_trend" renders
       s"""with e as (select ${d.idiv(evSec("ts"), "86400")} as day from events where event_type = 'click'),
          |dc as (select day, count(*) as n from e group by day),
          |b as (select min(day) as d0 from dc),
@@ -6760,7 +6773,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // decimal-exact arithmetic, and the result is one row regardless
     // of corpus size. The discount band uses epsilon-widened literals
     // so the double comparison is unambiguous in both engines.
-    "q6_forecast" ->
+    "q6_forecast" renders
       s"""select
          |  ${roundAway(d)("cast(sum(cast(l_extendedprice as decimal(18,4)) * cast(l_discount as decimal(18,4))) as double)", 2)} as revenue,
          |  ${bigint("count(*)")} as n_items
@@ -6781,7 +6794,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // code table is 8 bytes/vector; the scan is codegen'd bit math,
     // no floats anywhere). Rank determinism: hamming asc with cid
     // tie-break (integer keys — no rounding concerns at all).
-    "vec_topk_binary" -> {
+    "vec_topk_binary" renders {
       val (xh, xl) = if (d.name == "spark") ("(q.qhi ^ b.hi)", "(q.qlo ^ b.lo)")
                      else ("xor(q.qhi, b.hi)", "xor(q.qlo, b.lo)")
       s"""with $nvCtes,
@@ -6800,7 +6813,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // the survivors — corpus-wide work stays in bit space, float work
     // is O(refine·|Q|). The same shape as vec_topk_ivf_pq_rerank with
     // a 512× (not 32×) compressed first stage.
-    "vec_topk_binary_rerank" -> {
+    "vec_topk_binary_rerank" renders {
       val (xh, xl) = if (d.name == "spark") ("(q.qhi ^ b.hi)", "(q.qlo ^ b.lo)")
                      else ("xor(q.qhi, b.hi)", "xor(q.qlo, b.lo)")
       s"""with $nvCtes,
@@ -6825,7 +6838,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // bytes. Both index products (g_ivf_asg cells, g_bq codes) are
     // cached chain stages, so query time is the |Q|·k probe + a
     // bit-math scan of ~nprobe/√N of the code table.
-    "vec_topk_ivf_bq" -> {
+    "vec_topk_ivf_bq" renders {
       val (xh, xl) = if (d.name == "spark") ("(q.qhi ^ b.hi)", "(q.qlo ^ b.lo)")
                      else ("xor(q.qhi, b.hi)", "xor(q.qlo, b.lo)")
       s"""with $nvCtes,
@@ -6848,7 +6861,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // the label test rides the candidate join, so the per-query work
     // is O(bucket ∩ other-label). Top-5 by similarity: the hardest
     // negatives are the most similar wrong-label vectors.
-    "vec_hard_negatives" ->
+    "vec_hard_negatives" renders
       s"""${wmChain("lsh")},
          |cnd as (select distinct a.id as qid, b.id as cid from bkt a join bkt b on a.t = b.t and a.b = b.b and a.id <> b.id
          |        where a.id in ($qIdLit)),
@@ -6869,9 +6882,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // bought at — recall/cost is THE index-tuning tradeoff curve.
     // recall receipts for the residual-IVFADC serving rung — see
     // annRecallEvalIvfPqResSql (r11 verdict item 6).
-    "ann_recall_eval_ivfpq_res" -> annRecallEvalIvfPqResSql(None),
+    "ann_recall_eval_ivfpq_res" renders annRecallEvalIvfPqResSql(None),
 
-    "ann_recall_eval" ->
+    "ann_recall_eval" renders
       s"""${wmChain("lsh")},
          |q as (select id as qid, n as qn from nn where id in ($qIdLit)),
          |bp as (select q.qid, nn.id as cid, round(${d.dot("q.qn", "nn.n")}, 6) as sim from q join nn on nn.id <> q.qid),
@@ -6903,7 +6916,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // divisions, and a doc straddling a cut point is a boundary doc
     // (truncation/continuation candidate — the stat packing jobs
     // monitor, since boundary splits hurt sample quality).
-    "pack_sequences" ->
+    "pack_sequences" renders
       s"""with tok as (select doc_id, source, ${bigint(d.arrLen(splitWs("lower(text)")))} as ntok from documents),
          |cum as (select source, doc_id, ntok, ${bigint("sum(ntok) over (partition by source order by doc_id)")} as cume from tok),
          |asg as (select source, ntok, ${d.idiv("cume - ntok", "256")} as seq_first, ${d.idiv("cume - 1", "256")} as seq_last from cum)
@@ -6928,7 +6941,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // totals ride the same window node as unbounded frames, so the
     // fact join is evaluated exactly ONCE. Mean from an exact integer
     // sum.
-    "q_ship_latency" -> {
+    "q_ship_latency" renders {
       def ep(c: String) =
         if (d.name == "spark") s"unix_seconds(cast($c as timestamp_ltz))"
         else s"cast(epoch($c) as bigint)"
@@ -6960,7 +6973,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // division over the same cume column (cross join with the 3-row
     // level table, no second window). Integers until the fill-rate
     // division.
-    "pack_efficiency_curve" ->
+    "pack_efficiency_curve" renders
       s"""with tok as (select doc_id, source, ${bigint(d.arrLen(splitWs("lower(text)")))} as ntok from documents),
          |cum as (select source, doc_id, ntok, ${bigint("sum(ntok) over (partition by source order by doc_id)")} as cume from tok),
          |lens as (select ${bigint("128")} as len union all select ${bigint("256")} union all select ${bigint("512")}),
@@ -6983,7 +6996,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // customer joins run on the survivor set (broadcast-sized at any
     // SF), never on the fact table. l_quantity is integer-valued, so
     // the double sum is order-free exact.
-    "q18_big_orders" ->
+    "q18_big_orders" renders
       s"""with big as (select l_orderkey, sum(l_quantity) as sum_qty
          |             from lineitem group by l_orderkey having sum(l_quantity) > 250)
          |select ${bigint("o.o_orderkey")} as o_orderkey, c.c_name as c_name,
@@ -7000,7 +7013,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // the z arithmetic is a single fixed expression tree over 4
     // integers — no float aggregation anywhere, so both engines
     // evaluate it bit-identically. |z| >= 1.96 = the 95% gate.
-    "events_ab_test" -> {
+    "events_ab_test" renders {
       // proportion = clicks / (clicks + views): a true [0,1] binomial
       // share (clicks and views are independent event streams here, so
       // clicks/views alone can exceed 1 — not a valid proportion)
@@ -7033,7 +7046,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // inline train+assign chain. Per-row sims round to 6dp FIRST,
     // then sum exactly as decimals (order-free), then one double
     // division — no float-fold nondeterminism.
-    "vec_cluster_stats" -> {
+    "vec_cluster_stats" renders {
       val chain =
         if (views) Seq(viewAlias("ct2", "g_ivf_ct"), viewAlias("asgF", "g_ivf_asg")).mkString(",\n")
         else Seq(exnCte, ivfTrainCtes, ivfAssignCtes).mkString(",\n")
@@ -7069,7 +7082,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // compute ONCE for the widest level's superset, inner levels are
     // filters), per-level top-10 vs the bounded O(|Q|·N) brute leg.
     // Integer counts until the final recall division.
-    "ann_multiprobe_curve" -> {
+    "ann_multiprobe_curve" renders {
       val P = lshPlanes
       def flip(j: Int) = {
         val pj = 1 << j
@@ -7105,7 +7118,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |  left join ht on ht.lvl = lv.lvl""".stripMargin
     },
 
-    "ann_nprobe_curve" -> {
+    "ann_nprobe_curve" renders {
       val chain =
         if (views) Seq(viewAlias("ct2", "g_ivf_ct"), viewAlias("asgF", "g_ivf_asg")).mkString(",\n")
         else Seq(exnCte, ivfTrainCtes, ivfAssignCtes).mkString(",\n")
@@ -7138,7 +7151,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // tolerates ⌊(r-1)/2⌋ corrupted carriers per block, so
     // min_redundancy IS the robustness floor the BER matrix measures
     // empirically. One groupBy over the cached carrier table.
-    "wm_capacity" ->
+    "wm_capacity" renders
       s"""${wmChain("carriers")},
          |blkc as (select blk, count(*) as n_carriers from carriers group by blk),
          |tot as (select sum(n_carriers) as nc, min(n_carriers) as mn from blkc)
@@ -7150,7 +7163,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
 
     // HNSW-style graph-navigable search over the served kNN graph —
     // see graphTopkSql for the full design + scale commentary.
-    "vec_topk_graph" -> graphTopkSql(3),
+    "vec_topk_graph" renders graphTopkSql(3),
 
     // FILTERED GRAPH SEARCH — the filtered-HNSW serving shape
     // (pgvector HNSW + WHERE / Milvus filtered search over a graph
@@ -7170,7 +7183,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // selectivity on the 0-9 labels). R9bOpsSpec pins: every result
     // passes the predicate, results ⊆ visited set, and per-query
     // ranking equals the JVM re-rank of the visited-set mirror.
-    "vec_topk_graph_filtered" -> {
+    "vec_topk_graph_filtered" renders {
       val beam = 16
       val matKw = if (d.name == "duckdb") "materialized " else ""
       def hop(prev: String, next: String): String =
@@ -7224,7 +7237,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // post-filter recall@10 vs the pre-filter truth, and the
     // pre-filter leg's score-row cost — the two axes of the
     // crossover decision, measured.
-    "ann_filter_strategy_curve" ->
+    "ann_filter_strategy_curve" renders
       s"""${wmChain("lsh")},
          |sg as (select 1 as maxlab, cast(0.1 as double) as sel
          |       union all select 3 as maxlab, cast(0.3 as double) as sel
@@ -7270,7 +7283,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // a DATA-DERIVED report instead of prose. Spark reads the six
     // cached index views (this is pure monitoring — six metadata-cheap
     // aggregations, no rebuild); the oracle inlines every build chain.
-    "index_catalog" -> {
+    "index_catalog" renders {
       val chain =
         if (views) Seq(viewAlias("bkt", "g_bkt"), viewAlias("knn", "g_knn"),
           viewAlias("ct2", "g_ivf_ct"), viewAlias("asgF", "g_ivf_asg"),
@@ -7309,7 +7322,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // Centroid/codebook choice is the same max(struct) argmax as the
     // build side, so an appended copy of an existing vector would land
     // in exactly its cell.
-    "vec_append" -> {
+    "vec_append" renders {
       val chain =
         if (views) Seq(viewAlias("ct2", "g_ivf_ct"), viewAlias("pct1", "g_pq_ct")).mkString(",\n")
         else Seq(exnCte, ivfTrainCtes, pqBaseCtes, pqTrainCtes).mkString(",\n")
@@ -7350,7 +7363,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // broadcast dim; the global top-20 uses the q3 bucketed pre-rank
     // (16-way partitioned window, then exact pairwise ranks over ≤320
     // survivors — no single-partition sort at any scale).
-    "q10_returns" ->
+    "q10_returns" renders
       s"""with r as (
          |  select c.c_custkey, c.c_name, n.n_name, round(c.c_acctbal, 2) as acctbal,
          |    sum(cast(l.l_extendedprice as decimal(18,4)) * cast(1 - l.l_discount as decimal(18,4))) as rev
@@ -7377,7 +7390,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // month-pruned lineitem (the date range reaches the parquet scan),
     // part broadcast, both sums decimal-exact with a single double
     // division at the end.
-    "q14_promo" ->
+    "q14_promo" renders
       s"""select
          |  round(cast(sum(case when p.p_type = 'PROMO'
          |          then cast(l.l_extendedprice as decimal(18,4)) * cast(1 - l.l_discount as decimal(18,4))
@@ -7395,7 +7408,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // the lineitem scan) so each scan prunes before the join, then the
     // full disjunction re-applies on the joined row. One broadcast
     // join + one scalar aggregate.
-    "q19_disjunctive" ->
+    "q19_disjunctive" renders
       s"""select ${bigint("count(*)")} as n_items,
          |  round(cast(sum(cast(l.l_extendedprice as decimal(18,4)) * cast(1 - l.l_discount as decimal(18,4))) as double), 2) as revenue
          |from lineitem l join part p on p.p_partkey = l.l_partkey
@@ -7413,7 +7426,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // double (Spark parses bare fractional literals as DECIMAL);
     // floor-arithmetic rounding (Prim.roundAway) keeps the two
     // engines' round() semantics out of the hash.
-    "text_readability" -> {
+    "text_readability" renders {
       val wps = "(cast(n_words as double) / cast(n_sent as double))"
       val spw = "(cast(n_syll as double) / cast(n_words as double))"
       val flesch = s"cast(206.835 as double) - cast(1.015 as double) * $wps - cast(84.6 as double) * $spw"
@@ -7446,7 +7459,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // join — the step that keeps shared-phrase hot keys from going
     // quadratic at 100 TB (same role as the simhash band cap);
     // the join itself is hash-partitioned on fingerprint value.
-    "dedup_winnow" -> dedupWinnowSql(None),
+    "dedup_winnow" renders dedupWinnowSql(None),
 
     // Embedding OUTLIER / OOD detection — the training-data filter
     // that surfaces vectors far from their own cluster (mislabeled,
@@ -7465,7 +7478,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // the flag agrees. Scale: two corpus passes (sim projection,
     // ranked filter) and a one-row broadcast — nothing quadratic,
     // nothing collected.
-    "vec_outliers" -> {
+    "vec_outliers" renders {
       val chain =
         if (views) Seq(viewAlias("ct2", "g_ivf_ct"), viewAlias("asgF", "g_ivf_asg")).mkString(",\n")
         else Seq(exnCte, ivfTrainCtes, ivfAssignCtes).mkString(",\n")
@@ -7503,7 +7516,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // error. Scale: the shingle table is the already-priced corpus
     // pass; the verify joins are candidate-bounded (the whole point
     // of LSH).
-    "dedup_minhash_verify" -> dedupMinhashVerifySql(None),
+    "dedup_minhash_verify" renders dedupMinhashVerifySql(None),
 
     // PER-DOC NOVELTY RATE — the marginal-content signal a streaming
     // curation pipeline scores every incoming doc with (Heaps' law
@@ -7515,7 +7528,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // combinable groupBy, novelty = share of the doc's distinct
     // shingles it first-saw. Docs under 5 words have no shingles and
     // are absent (stated). Exact integers until the final division.
-    "text_novelty_rate" ->
+    "text_novelty_rate" renders
       s"""with $wordCtes,
          |${shingleSideCte("shn", "1 = 1")},
          |dg as (select distinct doc_id, g from shn),
@@ -7537,7 +7550,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // count, distinct docs implicated (the union of both sides —
     // what a keep-one policy would touch), and the mean true jaccard
     // of survivors (6dp-quantized before the exact decimal mean).
-    "dedup_threshold_curve" -> dedupThresholdCurveSql(None),
+    "dedup_threshold_curve" renders dedupThresholdCurveSql(None),
 
     // Bigram PMI association mining — the collocation signal behind
     // phrase detection (word2vec's phrase pass, Mikolov et al. 2013:
@@ -7548,7 +7561,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // is corpus-sublinear); counts stay integer, ONE double expression
     // at the end (identical operand order in both engines). min-count
     // 20 keeps the output the analyst-sized collocation report.
-    "text_pmi" ->
+    "text_pmi" renders
       s"""with $wordCtes,
          |ug as (select wd, count(*) as c1 from wx group by wd),
          |nw as (select count(*) as t from wx),
@@ -7581,7 +7594,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // corpus, deterministic, no sampled-pair quadratic blowup), 20
     // similarity bins. Exact counts; 6dp-quantized sims summed as
     // decimals for the per-bin mean.
-    "vec_pairwise_dist_hist" -> {
+    "vec_pairwise_dist_hist" renders {
       val dks = (0 until 3).map(k => graft.functions.Prf.prf("pdh", k))
       s"""with $nvCtes,
          |nx as (select ${bigint("max(id) + 1")} as n from nn),
@@ -7610,7 +7623,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // exploded pass, then mean/pooled-std/standardized shift per
     // dimension — one corpus pass, 2·d aggregation rows, all float
     // work on identical operand orders in both engines.
-    "vec_data_drift" ->
+    "vec_data_drift" renders
       s"""with $nvCtes, $exnCte,
          |mx as (select ${bigint("max(id)")} as m from ev),
          |h as (select case when e.id * 2 <= mx.m then 0 else 1 end as half, e.pos,
@@ -7630,7 +7643,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |  round(abs(mu0 - mu1) / sqrt((v0 + v1) / 2 + 0.000001), 4) as z_shift
          |from j""".stripMargin,
 
-    "vec_dim_profile" ->
+    "vec_dim_profile" renders
       s"""with $nvCtes,
          |$exnCte,
          |xr as (select pos, round(val, 6) as v from exn),
@@ -7671,7 +7684,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // aggregation over the ≤ |days| daily census; 4-row output:
     // power, share of total candidate power, dominant flag (ties to
     // the smallest period).
-    "events_periodogram" -> {
+    "events_periodogram" renders {
       val periods = Seq(2, 3, 7, 14)
       def micro(f: Int => Double, pp: Int): String = arrLit((0 until pp).map(k =>
         Math.round(f(k) * 1e6)))
@@ -7712,7 +7725,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |from pw cross join ($spine) g""".stripMargin
     },
 
-    "events_seasonal" ->
+    "events_seasonal" renders
       s"""with daily as (select ${d.idiv(evSec("ts"), "86400")} as day, count(*) as n
          |              from events group by ${d.idiv(evSec("ts"), "86400")}),
          |prof as (select day % 7 as dow, count(*) as n_days,
@@ -7738,7 +7751,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // vectors through a broadcast-hinted shortlist join. The prefix
     // norm guard (zero-prefix vectors score 0) is deterministic in
     // both engines.
-    "vec_topk_matryoshka" ->
+    "vec_topk_matryoshka" renders
       s"""with $nvCtes,
          |pre as (select id, ${d.arrSlice("n", 1, 16)} as p16 from nn),
          |pn as (select id, p16, sqrt(${d.dot("p16", "p16")}) as pnrm from pre),
@@ -7765,7 +7778,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // beyond the candidate top-k. Integer votes and flags end to end —
     // nothing float-aggregated. Scale: candidates ride the same bucket
     // join as vec_topk_lsh; the vote aggregation touches |Q|·10 rows.
-    "vec_knn_classify" ->
+    "vec_knn_classify" renders
       s"""${wmChain("lsh")},
          |cnd as (select distinct a.id as qid, b.id as cid from bkt a join bkt b on a.t = b.t and a.b = b.b and a.id <> b.id
          |        where a.id in ($qIdLit)),
@@ -7788,7 +7801,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // silently drops). Two shuffles: the outer join/count groups on
     // c_custkey (combinable), the histogram groups on the tiny count
     // domain. All integer — hash-proof by construction.
-    "q13_custdist" ->
+    "q13_custdist" renders
       s"""with co as (select c.c_custkey, count(o.o_orderkey) as c_count
          |            from customer c left join orders o on o.o_custkey = c.c_custkey
          |            group by c.c_custkey)
@@ -7804,7 +7817,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // prunes part AT THE SCAN and broadcasts. Decimal-exact sums;
     // the threshold is one double division chain with identical
     // operand order in both engines.
-    "q17_small_qty" ->
+    "q17_small_qty" renders
       s"""with pa as (select l_partkey,
          |              cast(sum(cast(l_quantity as decimal(18,2))) as double) / cast(count(*) as double) / cast(5 as double) as thr
          |            from lineitem group by l_partkey)
@@ -7828,7 +7841,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // nothing is retrained. The kNN graph drops edges touching a
     // tombstone on EITHER side (the graph-repair trigger: sources
     // whose adjacency emptied need re-linking). All counts integer.
-    "vec_delete" -> {
+    "vec_delete" renders {
       val chain =
         if (views) Seq(viewAlias("bkt", "g_bkt"), viewAlias("knn", "g_knn"),
           viewAlias("asgF", "g_ivf_asg"), viewAlias("codes", "g_pq_codes"),
@@ -7880,7 +7893,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // a per-user-sized table. Per-user aggregation is one combinable
     // groupBy; segment assembly is three broadcast-able scalar joins.
     // Spend sums are decimal-exact; each mean is ONE double division.
-    "events_rfm" -> eventsRfmSql(None),
+    "events_rfm" renders eventsRfmSql(None),
 
     // MULTI-TENANT WATERMARKING — the COOPERATIVE complement of
     // wm_overwrite's adversarial cell (Sheppard, Safavi-Naini,
@@ -7902,7 +7915,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // plan-time literals; no corpus-wide work beyond the served
     // chain. 16-row output: per-block errors + valid-carrier counts
     // for both tenants.
-    "wm_multi_tenant" -> wmMultiTenantSql(None),
+    "wm_multi_tenant" renders wmMultiTenantSql(None),
 
     // WATERMARK REPAIR — the maintenance leg of the lifecycle
     // (backup/restore recovers the PRE-embed state; THIS recovers the
@@ -7926,7 +7939,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // honestly. Every pass is over rate·N carrier rows; no corpus
     // work. 16-row output: per-block pre/post errors + the repair
     // census.
-    "wm_repair" -> wmRepairSql(None),
+    "wm_repair" renders wmRepairSql(None),
 
     // RECALL@K CURVE of the served LSH route — the k knob of the
     // recall audit (4g fixes k=10; THIS measures how recall moves
@@ -7939,7 +7952,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // recall then averaged would put a 5-term float fold in the
     // output; the pooled ratio is one division). Brute leg bounded
     // O(|Q|·N) on the fixed evaluation sample. 4-row output.
-    "ann_recall_at_k_curve" ->
+    "ann_recall_at_k_curve" renders
       s"""${wmChain("lsh")},
          |q as (select id as qid, n as qn from nn where id in ($qIdLit)),
          |bp as (select q.qid, nn.id as cid, round(${d.dot("q.qn", "nn.n")}, 6) as sim from q join nn on nn.id <> q.qid),
@@ -7973,7 +7986,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // critical value 1.358·√((n1+n2)/(n1·n2)) (Smirnov; both sides
     // single-rounded IEEE). One census groupBy; windows partitioned
     // per pair over domain-bounded value rows. 10-row output.
-    "text_ks_length" ->
+    "text_ks_length" renders
       s"""with lc as (select lang, n_chars as v, ${bigint("count(*)")} as c
          |            from documents group by lang, n_chars),
          |lt as (select lang, ${bigint("sum(c)")} as n from lc group by lang),
@@ -8022,7 +8035,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // path, and wm_extract_null quantifies the same gate on clean
     // data. Errors fall monotonically as the scan widens: 123 → 56 →
     // 37 → 7.
-    "wm_audit_curve" -> wmAuditCurveSql(None),
+    "wm_audit_curve" renders wmAuditCurveSql(None),
 
     // EXPLAINED-VARIANCE LADDER — the dimensionality-budget readout
     // behind every compression choice in §2 (matryoshka prefix dims,
@@ -8039,7 +8052,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // quasi-degenerate, ratios 0.95-0.99, so shares are ≈ 1/8 each;
     // the MACHINERY is what transfers to real spectra, stated).
     // 3-row output (pc1, pc2, residual).
-    "pca_variance_explained" -> {
+    "pca_variance_explained" renders {
       val d8 = 8
       val iters = 10
       val idx = 1 to d8
@@ -8109,7 +8122,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
 
   )
 
-  private lazy val sqls3: Map[String, String] = Map(
+  private lazy val sqls3: Map[String, () => String] = Map(
     // TOP EVENT-TYPE PATHS — sequential-pattern mining lite (the
     // "what do users actually do" trigram report behind funnel design;
     // the order-3 extension of events_transitions' Markov pairs): per
@@ -8120,7 +8133,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // over ≤ 320 survivors) — no single-partition sort at any scale.
     // The lead() windows partition per user — bounded state, the
     // sessionization shape. Integer counts only.
-    "events_paths" ->
+    "events_paths" renders
       s"""with ev as (select user_id, ${evSec("ts")} as sec, event_id, event_type from events),
          |sq as (select user_id, event_type as e1,
          |         lead(event_type, 1) over (partition by user_id order by sec, event_id) as e2,
@@ -8144,7 +8157,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // customer dims broadcast; the two-year ship window prunes the
     // fact AT THE SCAN; one combinable aggregation. Decimal-exact
     // revenue, one rounded double at the end.
-    "q7_nation_volume" ->
+    "q7_nation_volume" renders
       s"""with vol as (
          |  select sn.n_name as supp_nation, cn.n_name as cust_nation,
          |    year(l.l_shipdate) as l_year,
@@ -8170,7 +8183,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // rides the same combinable aggregate as the total (ONE pass, no
     // second join tree); both sums decimal-exact, one double division
     // per year row.
-    "q8_market_share" ->
+    "q8_market_share" renders
       s"""with allrev as (
          |  select year(l.l_shipdate) as l_year,
          |    sum(case when sn.n_name = 'NATION_5'
@@ -8199,7 +8212,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // one-row broadcast and ties surface as extra rows, exactly the
     // TPC-H semantics). Revenue sums decimal-exact so the equality
     // against the max is EXACT, not a float ==.
-    "q15_top_supplier" ->
+    "q15_top_supplier" renders
       s"""with rev as (
          |  select l_suppkey, sum(cast(l_extendedprice as decimal(18,4)) * cast(1 - l_discount as decimal(18,4))) as total_rev
          |  from lineitem
@@ -8222,7 +8235,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // (a top-k-by-rank formulation would need one; thresholds give
     // the same curve shuffle-free). Integer counts until the final
     // share division.
-    "text_vocab_coverage" ->
+    "text_vocab_coverage" renders
       s"""with $wordCtes,
          |wc as (select wd, count(*) as c from wx group by wd),
          |tot as (select sum(c) as t, count(*) as types from wc),
@@ -8245,7 +8258,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // streak"). Windows partition per user (bounded state, the
     // sessionization shape); everything else is combinable groupBys.
     // Integer end to end.
-    "events_streaks" ->
+    "events_streaks" renders
       s"""with ud as (select distinct user_id, ${d.idiv(evSec("ts"), "86400")} as day from events),
          |isl as (select user_id, day,
          |          day - row_number() over (partition by user_id order by day) as grp
@@ -8262,7 +8275,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // prunes with the order-date filter pushed INTO the probe side,
     // nation broadcasts. Deterministic: balances compare against one
     // identically-computed double.
-    "q22_sales_opp" ->
+    "q22_sales_opp" renders
       s"""with avgb as (select cast(sum(cast(c_acctbal as decimal(18,2))) as double) / cast(count(*) as double) as ab
          |              from customer where c_acctbal > 0),
          |cand as (select c.c_custkey, c.c_nationkey, c.c_acctbal
@@ -8286,7 +8299,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // join-back; equality against the min is EXACT (both sides are the
     // same IEEE division, min is order-free). Two shuffles total, both
     // on l_partkey — AQE coalesces them at any scale.
-    "q2_min_cost_supp" ->
+    "q2_min_cost_supp" renders
       s"""with pc as (select l_partkey, l_suppkey, min(l_extendedprice / l_quantity) as cost
          |            from lineitem group by l_partkey, l_suppkey),
          |eu as (select s.s_suppkey, s.s_name, n.n_name
@@ -8312,7 +8325,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // sum is exact at scale 1 and the revenue sum exact at scale 8;
     // the 0.4 factor and the subtraction happen ONCE per output row in
     // double (identical IEEE ops both engines).
-    "q9_product_profit" ->
+    "q9_product_profit" renders
       s"""with pr as (select p_partkey, cast(p_retailprice as decimal(8,1)) as rp
          |            from part where p_name like '%widget%'),
          |pf as (select sn.n_name as nation, year(o.o_orderdate) as o_year,
@@ -8337,7 +8350,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // ONCE — identical IEEE values in both engines, so the boundary
     // comparison is deterministic. The region-filtered supplier dim
     // broadcasts into the scan-side join.
-    "q11_important_parts" ->
+    "q11_important_parts" renders
       s"""with pv as (select l.l_partkey, sum(cast(l.l_extendedprice as decimal(18,4))) as val
          |  from lineitem l
          |  join supplier s on s.s_suppkey = l.l_suppkey
@@ -8359,7 +8372,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // two-level combinable aggregate — the map-side-partial-friendly
     // form; the part dim filter prunes at its scan and broadcasts.
     // Integer-only end to end.
-    "q16_supplier_cnt" ->
+    "q16_supplier_cnt" renders
       s"""with ps as (select distinct p.p_brand, p.p_type, p.p_size, l.l_suppkey
          |  from lineitem l
          |  join part p on p.p_partkey = l.l_partkey
@@ -8378,7 +8391,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // broadcasts into the fact scan; the qualifying-supplier set is a
     // one-column broadcast semi-join against the supplier dim. One
     // fact shuffle total.
-    "q20_excess_ship" ->
+    "q20_excess_ship" renders
       s"""with fp as (select p_partkey from part where p_name like '%bolt%'),
          |sq as (select l.l_suppkey, l.l_partkey, sum(cast(l.l_quantity as decimal(10,0))) as qty
          |       from lineitem l
@@ -8404,7 +8417,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // (symmetric-window semantics); the global top-20 uses the
     // 16-bucket pre-rank + pairwise-rank pattern (no unpartitioned
     // window anywhere). Integer counts end to end.
-    "text_cooccur" ->
+    "text_cooccur" renders
       s"""with $wordCtes,
          |co as (${adjWordsFrom(4)}),
          |px as (select * from ${d.explodeFrom("co", arrLit(Seq("w2", "w3", "w4")), "dist", "cw", Seq("wd"))} _px),
@@ -8446,7 +8459,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // converge to connectivity classes, LPA finds DENSITY communities
     // inside one connected component — the cluster readout behind
     // corpus domain discovery. Integer end to end.
-    "graph_communities" ->
+    "graph_communities" renders
       s"""${wmChain("knn")},
          |$lpaCtes
          |select ${bigint("lab")} as community_id, ${bigint("count(*)")} as n_members
@@ -8467,7 +8480,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // travels 2^r edges worst-case only for path graphs; the spec
     // pins fixpoint on the served graph). Output: component id (its
     // minimum member id) → size.
-    "graph_component_sizes" -> {
+    "graph_component_sizes" renders {
       val matKw = if (d.name == "duckdb") "materialized " else ""
       def step(prev: String, t: Int) =
         s"""c$t as (select e.src as id, ${bigint("min(p.lab)")} as lab
@@ -8494,7 +8507,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // rank-vs-count division, same semantics); the rollup is one
     // combinable groupBy. Per-row qualities pre-round to 6dp and sum
     // as exact decimals (order-free); one double division at the end.
-    "data_curriculum" ->
+    "data_curriculum" renders
       s"""with q as (select doc_id, source, ${d.arrLen(splitWs("text"))} as n_words,
          |  length(text) as n_chars,
          |  length(${regexReplaceAll("text", "[^a-zA-Z]", "")}) as n_alpha
@@ -8520,7 +8533,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // aggregations (per-doc votes, then the |langs|² cell count) + a
     // vocabulary-sized join back for the row totals. Integer counts,
     // one division per cell.
-    "text_langid_eval" ->
+    "text_langid_eval" renders
       s"""with $wordCtes,
          |hits as (select doc_id,
          |    sum(${inList("wd", stop("en"))}) as en_hits,
@@ -8550,7 +8563,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // intended ratios. One map-side projection + one combinable
     // groupBy + a source-sized join for shares. Integer counts, one
     // division.
-    "data_split" ->
+    "data_split" renders
       s"""with sp as (select doc_id, source, ${d.arrLen(splitWs("text"))} as n_words,
          |  case when ${prfMod(d)(100, "'split'", "doc_id")} < 80 then 'train'
          |       when ${prfMod(d)(100, "'split'", "doc_id")} < 90 then 'val'
@@ -8584,7 +8597,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // month-grid cells; revenue sums stay decimal-exact until the
     // single rounded division per cell. Cohort-month arithmetic is
     // integer (year·12 + month), identical in both engines.
-    "q_cohort_revenue" ->
+    "q_cohort_revenue" renders
       s"""with o as (select o_custkey as cust, year(o_orderdate) * 12 + month(o_orderdate) as m,
          |            cast(o_totalprice as decimal(18, 2)) as rev from orders),
          |fc as (select cust, min(m) as m0 from o group by cust),
@@ -8598,7 +8611,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |  ${roundAway(d)("cast(m.revenue as double) / cast(cs.rev0 as double)", 4)} as revenue_ratio
          |from mx m join cs on cs.cohort_month = m.cohort_month""".stripMargin,
 
-    "events_cohort_matrix" ->
+    "events_cohort_matrix" renders
       s"""with ev as (select user_id, ${d.idiv(evSec("ts"), "604800")} as wk from events),
          |fc as (select user_id, min(wk) as w0 from ev group by user_id),
          |act as (select distinct e.user_id, fc.w0 as cohort_wk, e.wk - fc.w0 as age_wk
@@ -8621,7 +8634,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // moments and dow profile are exact bigint sums off ONE daily
     // rollup; the 7-row forecast grid joins them broadcast-trivially;
     // all float math happens once per output row from integer inputs.
-    "events_forecast" ->
+    "events_forecast" renders
       s"""with daily as (select ${d.idiv(evSec("ts"), "86400")} as day, ${bigint("count(*)")} as n
          |              from events group by ${d.idiv(evSec("ts"), "86400")}),
          |b as (select min(day) as d0, max(day) as dmax from daily),
@@ -8660,7 +8673,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // span; zero-gaps get their own -1 bucket via the left-join
     // fallthrough). Exact integer counts and sums; one division for
     // the per-bucket mean.
-    "events_inter_event_hist" ->
+    "events_inter_event_hist" renders
       s"""with e as (select user_id, event_id, ${evSec("ts")} as sec from events),
          |g as (select sec - lag(sec) over (partition by user_id order by sec, event_id) as gap from e),
          |gz as (select gap from g where gap is not null),
@@ -8674,7 +8687,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |  ${roundAway(d)("sum(gap) / cast(count(*) as double)", 2)} as mean_gap_s
          |from b group by bucket""".stripMargin,
 
-    "events_bot_detect" ->
+    "events_bot_detect" renders
       s"""with ev as (select user_id, ${evSec("ts")} as sec, event_id from events),
          |sq as (select user_id,
          |         sec - lag(sec) over (partition by user_id order by sec, event_id) as gap
@@ -8703,7 +8716,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // the corpus (the events_anomaly O(24)-state argument); everything
     // upstream is a combinable daily rollup. Before/after means via
     // one conditional re-aggregation against the broadcast changepoint.
-    "events_changepoint" ->
+    "events_changepoint" renders
       s"""with daily as (select ${d.idiv(evSec("ts"), "86400")} as day, ${bigint("count(*)")} as n
          |              from events group by ${d.idiv(evSec("ts"), "86400")}),
          |tot as (select ${bigint("count(*)")} as m, ${bigint("sum(n)")} as s from daily),
@@ -8737,7 +8750,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // literal membership test — no teleport-table join. Output: every
     // node the diffusion reaches, exact bigint picoranks (zero rows
     // never surface — the reachability frontier IS the result).
-    "graph_ppr" -> {
+    "graph_ppr" renders {
       def step(prev: String, next: String) =
         s"""$next as (select n.id,
            |      (case when n.id in ($qIdLit) then 30000000000 else 0 end)
@@ -8769,7 +8782,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // forward and is referenced exactly ONCE (the beam-carry trick —
     // no Catalyst CTE re-inlining blowup). Output: N rows × the full
     // path, all bigint.
-    "graph_walks" -> {
+    "graph_walks" renders {
       def step(prev: String, t: Int, cols: String) =
         s"""s$t as (select p.wid, $cols, -(${d.fieldOf("mx", "nd")}) as n$t from (
            |  select $prev.wid, ${(0 until t).map(i => s"$prev.n$i").mkString(", ")},
@@ -8795,7 +8808,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // on integer ids over the materialized graph — no similarity
     // recomputation. The summary row count / fraction rides a
     // downstream aggregate in the spec; the key serves the pairs.
-    "graph_mutual_knn" ->
+    "graph_mutual_knn" renders
       s"""${wmChain("knn")}
          |select ${bigint("a.src")} as id_a, ${bigint("a.dst")} as id_b,
          |  a.sim as sim_ab, b.sim as sim_ba,
@@ -8811,7 +8824,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // bound rides the stage join predicate, and the report is the
     // per-stage census + conversion rates. Three combinable user_id
     // shuffles; integers until the two final divisions.
-    "events_funnel_windowed" ->
+    "events_funnel_windowed" renders
       s"""with ev as (select user_id, event_type, ${evSec("ts")} as sec from events),
          |v as (select user_id, min(sec) as t_view from ev where event_type = 'view' group by user_id),
          |c as (select e.user_id, min(e.sec) as t_click
@@ -8849,7 +8862,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // (doc × matched-source) stream is ≤ |sources| × doc presence
     // rows, all map-side-combinable. Output: per-source census +
     // accuracy.
-    "text_centroid_classify" -> textCentroidClassifySql(None),
+    "text_centroid_classify" renders textCentroidClassifySql(None),
 
     // AMS F₂ SKETCH — the second-moment / SELF-JOIN-SIZE estimator
     // (Alon–Matias–Szegedy 1996): sixteen ±1-signed frequency sums
@@ -8865,7 +8878,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // computed alongside to report rel_err — the estimator's measured
     // accuracy (std err √(2/16) ≈ 35% per AMS; the mean-of-16 keeps
     // the demo honest rather than cherry-picked).
-    "sketch_f2_ams" -> {
+    "sketch_f2_ams" renders {
       val zsums = (0 until 16).map(t =>
         s"sum(c * (1 - 2 * ${prfMod(d)(2, s"'ams$t'", "wd")})) as z$t").mkString(",\n|          ")
       val estNum = (0 until 16).map(t => s"z$t * z$t").mkString(" + ")
@@ -8897,7 +8910,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // scale-equivariant up to the same factor) or coarsen the ln grid
     // to 1e-6, same escape hatch as the other bigint-grid keys
     // (events_autocorr, graph_assortativity, data_shard_manifest).
-    "text_keywords_llr" -> textKeywordsLlrSql(None),
+    "text_keywords_llr" renders textKeywordsLlrSql(None),
 
     // NEW vs RETURNING DAILY CENSUS — the simplest growth readout
     // every analytics deck opens with (and the events suite lacked):
@@ -8906,7 +8919,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // per-user min + one daily census; the cumulative acquired-user
     // curve rides a window over the ≤ n_days aggregated rows. Integer
     // end to end.
-    "events_new_vs_returning" ->
+    "events_new_vs_returning" renders
       s"""with ud as (select distinct user_id, ${d.idiv(evSec("ts"), "86400")} as day from events),
          |u0 as (select user_id, min(day) as d0 from ud group by user_id),
          |daily as (select ud.day,
@@ -8937,7 +8950,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // (tier was referenced twice); every events user has >= 1 uh row,
     // so the pivoted user set IS allu, and a user absent from a half
     // reads null -> 'absent' exactly like the old left joins.
-    "events_segment_migration" ->
+    "events_segment_migration" renders
       s"""with ev as (select user_id, ${d.idiv(evSec("ts"), "86400")} as day from events),
          |bounds as (select min(day) as d0 from ev),
          |uh as (select user_id, case when day < b.d0 + 15 then 0 else 1 end as half, ${bigint("count(*)")} as c
@@ -8968,7 +8981,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // 3-way union + one combinable groupBy, cc from exact integers
     // with one division per node. Zero new join shapes — the triangle
     // machinery re-emits vertices instead of a count.
-    "graph_clustering_coeff" -> {
+    "graph_clustering_coeff" renders {
       val matKw = if (d.name == "duckdb") "materialized " else ""
       s"""${wmChain("knn")},
          |und as $matKw(select distinct least(src, dst) as a, greatest(src, dst) as b from knn),
@@ -9004,7 +9017,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // assignment + ONE combinable groupBy; no ordering anywhere (a
     // global shuffle ORDER would be a corpus sort — sharding is the
     // scalable unit of training-data randomization).
-    "data_shard_manifest" ->
+    "data_shard_manifest" renders
       s"""with dt as (select doc_id, ${bigint(s"${d.arrLen(splitWs("lower(text)"))}")} as toks from documents),
          |sh as (select ee.epoch, ${prfMod(d)(8, "'shard'", "ee.epoch", "doc_id")} as shard,
          |              doc_id, toks
@@ -9025,7 +9038,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // exact distinct alongside for the measured rel_err. The hash
     // pass is the only corpus-scale work; every register table is m
     // rows.
-    "sketch_hll_curve" -> {
+    "sketch_hll_curve" renders {
       val matKw = if (d.name == "duckdb") "materialized " else ""
       def leg(m: Int): String = {
         val bits = 60 - (math.log(m) / math.log(2)).round.toInt
@@ -9076,7 +9089,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // edges); the level-union form referenced every f_k twice and
     // Catalyst re-inlined the whole expansion 2^k-fold. Counts
     // identical by the monotone-set identity.
-    "graph_hops_reach" -> {
+    "graph_hops_reach" renders {
       def hop(prev: String, next: String, k: Int) =
         s"""$next as (select qid, id, ${bigint("min(h)")} as h from (
            |  select f.qid, e.dst as id, case when e.iden = 1 then f.h else ${bigint(k.toString)} end as h
@@ -9108,7 +9121,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // their per-member average so the top-k shares are deterministic
     // under ties. One combinable customer groupBy is the only
     // corpus-scale pass.
-    "q_pareto_share" ->
+    "q_pareto_share" renders
       s"""with cr as (select o_custkey, sum(cast(o_totalprice as decimal(18,2))) as rev from orders group by o_custkey),
          |bk as (select ${bigint("floor(cast(rev as double) / 100)")} as g, ${bigint("count(*)")} as n, sum(rev) as s
          |       from cr group by ${bigint("floor(cast(rev as double) / 100)")}),
@@ -9146,7 +9159,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // micro-ints keep every OLS moment inside bigint), slope /
     // intercept / r² from the exact integer moments with float math
     // only in the final expressions.
-    "text_zipf_fit" -> {
+    "text_zipf_fit" renders {
       s"""with $wordCtes,
          |wc as (select wd, ${bigint("count(*)")} as c from wx group by wd),
          |pre as (select wd, c from (
@@ -9178,7 +9191,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // levels reconstruct every prefix's vocabulary. β from the OLS
     // fit over the 4 (ln N, ln V) points on the zipf 1e-6 integer ln
     // grid (exact bigint sums, one double division).
-    "text_heaps_law" -> {
+    "text_heaps_law" renders {
       s"""with $wordCtes,
          |nd as (select ${bigint("max(doc_id)")} as mx from documents),
          |dl as (select doc_id, case when doc_id * 8 <= mx then 1
@@ -9217,7 +9230,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // vocabulary appears exactly once — the Zipf tail mass) rides a
     // second vocabulary-sized groupBy, cross-joined as a constant
     // report column. Integers until the final divisions.
-    "text_lexical_diversity" ->
+    "text_lexical_diversity" renders
       s"""with $wordCtes,
          |dw as (select doc_id, wd, ${bigint("count(*)")} as c from wx group by doc_id, wd),
          |dt as (select doc_id, ${bigint("sum(c)")} as n_tokens, ${bigint("count(*)")} as n_types,
@@ -9246,7 +9259,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // cached code table against the subvector projection + codebook
     // (both broadcastable sides at any corpus size: codes is the 8
     // B/vector table, pct1 is KB-sized).
-    "vec_pq_distortion" -> {
+    "vec_pq_distortion" renders {
       val chain =
         if (views) Seq(pqBaseCtes, viewAlias("pct1", "g_pq_ct"),
           viewAlias("codes", "g_pq_codes")).mkString(",\n")
@@ -9276,7 +9289,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // (2M·Σ(j²+k²) − (Σj+k)²)), ONE double division at the end.
     // Bigint headroom: degree ≤ 2K, so the quartic term caps at
     // ~10⁹ edges — past that, pre-scale the moments (§4 ladder).
-    "graph_assortativity" ->
+    "graph_assortativity" renders
       s"""${wmChain("knn")},
          |und as (select least(src, dst) as a, greatest(src, dst) as b
          |        from knn where src <> dst group by least(src, dst), greatest(src, dst)),
@@ -9303,7 +9316,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // O(|Q|·N) brute leg as the recall reference. All candidate
     // tables are |Q|·beam-sized between hops — the corpus appears
     // only in the scored joins.
-    "graph_beam_curve" -> {
+    "graph_beam_curve" renders {
       def hopB(beam: Int)(prev: String, next: String): String =
         s"""$next as (select qid, cid, sim from (
            |  select s.qid, s.cid, s.sim, row_number() over (partition by s.qid order by s.sim desc, s.cid) as rn
@@ -9349,7 +9362,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // deterministic min(struct) argmin). Rides the cached extraction
     // votes — one tiny aggregation over the 16×16 vote table, no new
     // corpus work.
-    "wm_vote_margin" ->
+    "wm_vote_margin" renders
       s"""${wmChain("extract")},
          |mg as (select blk, bit_idx, n, ${roundAway(d)("abs(vote) / cast(n as double)", 6)} as margin from votes),
          |pb as (select blk, ${bigint("count(*)")} as n_bits, ${bigint("max(n)")} as n_carriers,
@@ -9373,7 +9386,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // (the extract shape: one aggregation + the tiny vote), per-level
     // total errors over all 16 blocks × 16 bits. Four bounded
     // carrier-row passes over the cached stego view — no corpus work.
-    "wm_ber_curve" -> {
+    "wm_ber_curve" renders {
       def exC(pfx: String, src: String) = {
         val qS = (0 until MsgLen).map(g =>
           s"sum(sval * ${d.arrIdx0(wLitOf(g), "pos - 1")}) as q$g").mkString(",\n|            ")
@@ -9449,7 +9462,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // extraction is one aggregation + the tiny vote; all pirate
     // constants (groups, signs, message bits) are plan-time literals
     // of the second key — no extra corpus pass anywhere.
-    "wm_overwrite" -> wmOverwriteSql(None),
+    "wm_overwrite" renders wmOverwriteSql(None),
 
     // LAG-k AUTOCORRELATION (ACF) — the seasonality/memory diagnostic
     // over the daily event-count series (Box–Jenkins 1970; the check
@@ -9465,7 +9478,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // combinable count shuffle. Bigint ceiling: x² caps daily counts
     // at ~3·10⁹/day; past that, aggregate the series at a coarser
     // count unit first (the §4 ladder move).
-    "events_autocorr" ->
+    "events_autocorr" renders
       s"""with daily as (select ${d.idiv(evSec("ts"), "86400")} as day, ${bigint("count(*)")} as x
          |               from events group by ${d.idiv(evSec("ts"), "86400")}),
          |idx as (select day, x, ${bigint("row_number() over (order by day)")} as rn from daily),
@@ -9494,7 +9507,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // cluster_stats rule: a rounded double sits ~1e-16 from its
     // decimal grid point, so the decimal cast is unambiguous in both
     // engines); per-cell folds are ordered array reductions.
-    "vec_kmeans_step" -> {
+    "vec_kmeans_step" renders {
       val chain =
         if (views) Seq(viewAlias("ct2", "g_ivf_ct"), viewAlias("asgF", "g_ivf_asg")).mkString(",\n")
         else Seq(exnCte, ivfTrainCtes, ivfAssignCtes).mkString(",\n")
@@ -9538,7 +9551,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // table. 8 unrolled rounds is the convergence-depth knob (the
     // pagerank convention); the spec peels to fixpoint in the JVM
     // and pins that 8 rounds reach it at this corpus.
-    "graph_kcore" -> {
+    "graph_kcore" renders {
       def peel(prev: String, next: String) =
         s"""$next as (select src, dst from (
            |  select src, dst, count(*) over (partition by src) as ds,
@@ -9583,7 +9596,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // arithmetic ((day + 4) % 7 — day 0 = 1970-01-01 was a Thursday;
     // 0 = Sunday), so no engine calendar/locale functions are
     // involved. Integer end to end; one rounded division per cell.
-    "events_heatmap" ->
+    "events_heatmap" renders
       s"""with ec as (select user_id,
          |              (${d.idiv(evSec("ts"), "86400")} + 4) % 7 as dow,
          |              ${d.idiv(s"${evSec("ts")} % 86400", "3600")} as hod
@@ -9610,7 +9623,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // via windows over the ≤ n_days aggregated daily rows — calendar-
     // bounded, never corpus windows. Null guard: a constant series
     // has MAD = 0 → z null, flag 0 (the degenerate-fit convention).
-    "events_anomaly_mad" ->
+    "events_anomaly_mad" renders
       s"""with daily as (select ${d.idiv(evSec("ts"), "86400")} as day, ${bigint("count(*)")} as x
          |               from events group by ${d.idiv(evSec("ts"), "86400")}),
          |mt as (select ${bigint("count(*)")} as m from daily),
@@ -9643,7 +9656,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // that pre-scale counts to thousands (F is scale-linear,
     // documented). Fano of a constant-zero type would be 0/0 — the
     // grid only carries types observed ≥ once, so mean > 0 always.
-    "events_fano" ->
+    "events_fano" renders
       s"""with ed as (select event_type, ${d.idiv(evSec("ts"), "86400")} as day from events),
          |days as (select distinct day from ed),
          |types as (select distinct event_type from ed),
@@ -9673,7 +9686,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // statistic with each of the 9 terms quantized onto a 1e-6
     // integer grid so the 9-term sum is EXACT (aggregation order
     // cannot differ). One combinable groupBy over the fact scan.
-    "q_benford" -> {
+    "q_benford" renders {
       val pCase = (1 to 9).map(dd =>
         s"when $dd then cast(${math.log10(1 + 1.0 / dd)} as double)")
         .mkString("case dg.dig ", " ", " end")
@@ -9713,7 +9726,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // ceiling — past that coarsen cents to whole units), so both
     // slopes are aggregation-order-proof. Robust-vs-LS gap is the
     // readout.
-    "q_theilsen" -> {
+    "q_theilsen" renders {
       val mrev = "cast(sum(cast(o_totalprice as decimal(18,2))) as double)"
       s"""with mon as (select (year(o_orderdate) * 12 + month(o_orderdate)) as t, $mrev as rev
          |             from orders group by year(o_orderdate) * 12 + month(o_orderdate)),
@@ -9757,7 +9770,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // is < 2^-39 — far below the 4dp output rounding). Forecast for
     // day t is S_{t-1} (the EWMA one-step-ahead identity); residuals
     // surface per day.
-    "events_ewma" ->
+    "events_ewma" renders
       s"""with daily as (select ${d.idiv(evSec("ts"), "86400")} as day, ${bigint("count(*)")} as x
          |               from events group by ${d.idiv(evSec("ts"), "86400")}),
          |idx as (select day, x, ${bigint("row_number() over (order by day)")} - 1 as i from daily),
@@ -9773,7 +9786,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |  ${roundAway(d)("x - lag(ewma) over (order by i)", 4)} as residual
          |from sm""".stripMargin,
 
-    "events_survival" ->
+    "events_survival" renders
       s"""with ed as (select user_id, event_type, value, ${d.idiv(evSec("ts"), "86400")} as day from events),
          |bounds as (select ${bigint("max(day)")} as last_day from ed),
          |u0 as (select user_id, ${bigint("min(day)")} as d0 from ed group by user_id),
@@ -9807,7 +9820,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |from km""".stripMargin,
 
     // see kmvSql for the full design note
-    "sketch_kmv" -> kmvSql(Seq(16, 64, 256)),
+    "sketch_kmv" renders kmvSql(Seq(16, 64, 256)),
 
     // KMV SET ALGEBRA — pairwise source overlap from the bottom-k
     // sketches (the estimator registers can't give at small k: the
@@ -9827,7 +9840,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // source lists are df-bounded) — the measured-error honesty rule
     // every sketch key follows. Small-set branch: nk < k ⇒ the union
     // sketch IS the union, estimates become exact counts.
-    "sketch_kmv_overlap" -> kmvOverlapSql(None),
+    "sketch_kmv_overlap" renders kmvOverlapSql(None),
 
     // PER-SOURCE KL DIVERGENCE from the corpus word distribution —
     // the drift/contamination readout between a slice and its parent
@@ -9845,7 +9858,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // 8.4·10¹⁰) caps n_s at ~10⁸ tokens/source on the 1e-9 grid —
     // past that coarsen to 1e-6 (ceiling ×1000), the LLR escape
     // hatch. exp only in the final perplexity-ratio column.
-    "text_kl_divergence" -> textKlDivergenceSql(None),
+    "text_kl_divergence" renders textKlDivergenceSql(None),
 
     // SIMPSON CONCENTRATION / DIVERSITY per source — the
     // repeat-probability readout (Simpson 1949: λ = Σ nᵢ(nᵢ−1) /
@@ -9861,7 +9874,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // tokens/source — far past any real slice; pre-scale counts past
     // it. Null guard: all-distinct sources (λ = 0) report null
     // effective vocabulary rather than ∞.
-    "text_simpson" -> textSimpsonSql(None),
+    "text_simpson" renders textSimpsonSql(None),
 
     // REPEAT-PURCHASE CADENCE — the inter-order-gap distribution
     // behind replenishment forecasting and churn thresholds ("a
@@ -9875,7 +9888,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // repeat orders collapse to one date (cadence is between DAYS
     // with orders). One distinct projection + one lag window + one
     // combinable census; everything after is domain-sized.
-    "q_order_gap" -> {
+    "q_order_gap" renders {
       def ep(c: String) =
         if (d.name == "spark") s"unix_seconds(cast($c as timestamp_ltz))"
         else s"cast(epoch($c) as bigint)"
@@ -9909,7 +9922,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // The |types|² output is type-domain-bounded; the per-user join
     // fan never exceeds the type count — no corpus self-join. The
     // exact twin of sketch_kmv_overlap's estimated source overlap.
-    "events_type_overlap" ->
+    "events_type_overlap" renders
       s"""with tu as (select distinct event_type, user_id from events),
          |nt as (select event_type, ${bigint("count(*)")} as n from tu group by event_type),
          |px as (select a.event_type as ta, b.event_type as tb, ${bigint("count(*)")} as nab
@@ -9938,7 +9951,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // Top-supplier share via max(c) on the same pass. Past the
     // ceiling pre-scale micro-units to cents — HHI is
     // share-scale-invariant.
-    "q_hhi_supplier" ->
+    "q_hhi_supplier" renders
       s"""with sr as (select s.s_nationkey as nk, l.l_suppkey as sk,
          |              ${bigint(s"sum(${bigint(roundAway(d)("l_extendedprice * (1 - l_discount) * 1000000", 0))})")} as c
          |            from lineitem l join supplier s on s.s_suppkey = l.l_suppkey
@@ -9967,7 +9980,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // that is bit-exact by spec) at the end. One combinable groupBy +
     // one 1-row moment fold. Σx²/Σy²/Σxy stay in bigint to ~10¹⁴
     // rows; past that pre-scale counts (r is scale-invariant).
-    "q_discount_elasticity" -> {
+    "q_discount_elasticity" renders {
       val xg = bigint(roundAway(d)("l_discount * 100", 0))
       val yg = bigint(roundAway(d)("l_quantity", 0))
       s"""with g as (select $xg as x, $yg as y from lineitem),
@@ -9994,7 +10007,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // and event shares, cumulative user share from a window over the
     // ≤ 40 bucket rows. One combinable per-user groupBy; everything
     // after is bucket-domain-sized at any corpus.
-    "events_activity_hist" -> {
+    "events_activity_hist" renders {
       // floor(log2(c)) for c in [1, 2^40) as a compare ladder
       val lad = (39 to 1 by -1).map(b =>
         s"when c >= ${1L << b} then $b").mkString("case ", " ", " else 0 end")
@@ -10021,7 +10034,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // honest cost of a sliding set-union; HLL registers could
     // approximate it mergeably, the exact form is the oracle), then
     // one distinct count per day. Integer end to end, one division.
-    "events_stickiness" ->
+    "events_stickiness" renders
       s"""with ud as (select distinct user_id, ${d.idiv(evSec("ts"), "86400")} as day from events),
          |days as (select distinct day from ud),
          |dau as (select day, ${bigint("count(*)")} as dau from ud group by day),
@@ -10048,7 +10061,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // nonlinearity readout. Three combinable groupBys (two marginal
     // censuses + one joint), two windows over ≤ 50 domain rows. 1-row
     // output.
-    "q_spearman" -> {
+    "q_spearman" renders {
       def census(col: String, name: String) =
         s"""$name as (select $col as v, ${bigint("count(*)")} as cnt from li group by $col),
            |${name}r as (select v, cnt,
@@ -10097,7 +10110,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // spend — the top-decile row IS the concentration readout
     // (q_pareto_share's Lorenz curve gives the continuous version).
     // Two groupBys + one bounded window family. 10-row output.
-    "q_customer_deciles" -> {
+    "q_customer_deciles" renders {
       val matKw = if (d.name == "duckdb") "materialized " else ""
       s"""with cs as (select o_custkey, ${bigint("sum(cast(o_totalprice as decimal(18,2)) * 100)")} as cents
          |            from orders group by o_custkey),
@@ -10143,11 +10156,11 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // only scalar shift math + one bounded extract aggregation over
     // rate·N carrier rows. 4-row output: the frontier a deployment
     // reads to pick its Δ.
-    "wm_delta_curve" -> wmDeltaCurveSql(None),
+    "wm_delta_curve" renders wmDeltaCurveSql(None),
 
   )
 
-  private lazy val sqls4: Map[String, String] = Map(
+  private lazy val sqls4: Map[String, () => String] = Map(
     // SEASONAL-ADJUSTED ROBUST ANOMALY — the production composition
     // of events_seasonal and events_anomaly_mad (a raw daily-count
     // detector fires every weekend; deseasonalizing FIRST is what
@@ -10159,7 +10172,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // (value, day) order. Day-of-week from pure epoch arithmetic.
     // Every window orders the ≤ |days| aggregated rows. Null guard:
     // MAD = 0 → z null, flag 0.
-    "events_anomaly_seasonal" ->
+    "events_anomaly_seasonal" renders
       s"""with daily as (select ${d.idiv(evSec("ts"), "86400")} as day, ${bigint("count(*)")} as x
          |               from events group by ${d.idiv(evSec("ts"), "86400")}),
          |dw as (select day, x, (day + 4) % 7 as dow from daily),
@@ -10195,7 +10208,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // epoch arithmetic; this corpus's synthetic shipdates include
     // negative latencies, which simply land in every compliance
     // bucket). Priority domain is 5 values; dims broadcast.
-    "q_priority_sla" -> {
+    "q_priority_sla" renders {
       def ep(c: String) =
         if (d.name == "spark") s"unix_seconds(cast($c as timestamp_ltz))"
         else s"cast(epoch($c) as bigint)"
@@ -10229,7 +10242,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // ~10⁶ vectors per run at err ≤ 1 — past that coarsen to 1e-9,
     // the documented rung). Spec pins mse strictly decreasing in
     // bits and the 64/bits compression arithmetic.
-    "sq_bits_curve" -> {
+    "sq_bits_curve" renders {
       val bitsLad =
         if (d.name == "spark") "(select explode(array(2, 4, 6, 8)) as bits)"
         else "(select unnest([2, 4, 6, 8]) as bits)"
@@ -10276,7 +10289,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // vector), so recall@10 = 1.0 there by construction — the
     // self-witnessing anchor the spec pins, along with monotone
     // recall in dm.
-    "matryoshka_dim_curve" -> {
+    "matryoshka_dim_curve" renders {
       val slices = Seq(8, 16, 32, 64).map(dm =>
         s"select $dm as dm, id, ${d.arrSlice("n", 1, dm)} as p from nn").mkString("\n         union all ")
       s"""with $nvCtes,
@@ -10315,7 +10328,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // output is ≤ 41 domain-bounded rows. Pairs with
     // graph_assortativity (mixing) and lsh_bucket_stats (the LSH
     // analog of the same health report).
-    "graph_degree_hist" -> {
+    "graph_degree_hist" renders {
       val lad = (39 to 1 by -1).map(b =>
         s"when c >= ${1L << b} then $b").mkString("case ", " ", " else 0 end")
       s"""${wmChain("knn")},
@@ -10346,7 +10359,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // ln|types| ≈ 1.8 → ≤ 8 bins). Two combinable aggregations, no
     // windows. Bigint ceiling: n·lnq(n) < 2^63 holds to ~10⁸ events
     // per user — far past any real per-user cap.
-    "events_user_entropy" -> {
+    "events_user_entropy" renders {
       def lnq(x: String) = bigint(roundAway(d)(s"ln(cast($x as double)) * 1000000000", 0))
       s"""with tc as (select user_id, event_type, ${bigint("count(*)")} as k from events
          |            group by user_id, event_type),
@@ -10385,7 +10398,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // (all k neighbors equidistant → Σt = 0; duplicate-vector d = 0
     // clamped at 1e-12, stated) are censused, not silently dropped.
     // Output ≤ 102 clamped unit bins + the exact-sum global mean.
-    "vec_lid" -> {
+    "vec_lid" renders {
       def lnq9(x: String) = bigint(roundAway(d)(s"ln($x) * 1000000000", 0))
       s"""${wmChain("knn")},
          |dk as (select src, max(rn) as kk from knn group by src),
@@ -10425,7 +10438,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // (domain-bounded: in-degree ≤ corpus K·fanout). Null guards:
     // all-dmin tail (Σ = 0) → α null. Bigint ceiling n·lnq(dmax)
     // < 2^63 to ~10⁸ tail nodes.
-    "graph_powerlaw_fit" -> {
+    "graph_powerlaw_fit" renders {
       def lnq9(x: String) = bigint(roundAway(d)(s"ln($x) * 1000000000", 0))
       s"""${wmChain("knn")},
          |tl as (select in_degree as c from indeg where in_degree >= 2),
@@ -10466,7 +10479,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // One lag window (user-partitioned) + two
     // combinable groupBys; 1-row output. Bigint ceiling n·lnq(n) <
     // 2^63 to ~10⁸ transitions (then pre-scale counts, §4 ladder).
-    "events_entropy_rate" -> {
+    "events_entropy_rate" renders {
       def lnq9(x: String) = bigint(roundAway(d)(s"ln(cast($x as double)) * 1000000000", 0))
       s"""with e as (select user_id, event_id, event_type, ${evSec("ts")} as sec from events),
          |s as (select event_type as src,
@@ -10498,7 +10511,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // rows; the word table joins each pair twice by equality (union
     // + two left joins — no OR-join BNLJ). Bigint ceiling c·N <
     // 2^63 to ~10⁹ tokens/source (then pre-scale counts, §4 ladder).
-    "text_js_divergence" -> textJsDivergenceSql(None),
+    "text_js_divergence" renders textJsDivergenceSql(None),
 
     // PEAK SESSION CONCURRENCY — the capacity-planning number behind
     // provisioning (max simultaneous sessions, per day and overall),
@@ -10514,7 +10527,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // Days with zero boundary activity carry constant concurrency
     // (visible in the next day's carry) — stated, not imputed.
     // Integer end to end.
-    "events_peak_concurrency" ->
+    "events_peak_concurrency" renders
       s"""with e as (select user_id, event_id, ${evSec("ts")} as sec, ts from events),
          |m as (select user_id, event_id, sec,
          |        case when lag(sec) over (partition by user_id order by ts, event_id) is null
@@ -10563,7 +10576,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // readout from census rows; this oracle rendering inlines the
     // full union chain. md5-prefix shingle ids as in the served
     // dedup chain (identical hashing both engines).
-    "dedup_shingle_curve" -> dedupShingleCurveSql(None),
+    "dedup_shingle_curve" renders dedupShingleCurveSql(None),
 
     // ANN ENSEMBLE (RRF FUSION) RECALL — do three cheap approximate
     // indexes beat each alone? The reciprocal-rank-fusion trick
@@ -10578,7 +10591,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // The measured claim: fusion recovers recall the single probes
     // miss — the zero-extra-index-state alternative to widening any
     // one knob (nprobe/multiprobe/beam curves).
-    "ann_ensemble_recall" -> {
+    "ann_ensemble_recall" renders {
       val (xh, xl) = if (d.name == "spark") ("(q.qhi ^ b.hi)", "(q.qlo ^ b.lo)")
                      else ("xor(q.qhi, b.hi)", "xor(q.qlo, b.lo)")
       s"""${wmChain("lsh")},
@@ -10675,7 +10688,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // (stated: the tail mass beyond the last occupied bucket is not
     // chi-tested — this is the monitored statistic, not a formal
     // test). Output ≤ 40 bucket rows + the cross-joined fit.
-    "events_exp_fit" -> {
+    "events_exp_fit" renders {
       val lad = (39 to 1 by -1).map(b =>
         s"when gap >= ${1L << b} then $b").mkString("case ", " ", " else 0 end")
       def qexp(x: String) = roundAway(d)(s"exp(-(l.lambda) * ($x))", 9)
@@ -10717,7 +10730,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // against the fitted exp(μ) and exp(μ+σ) — both ratios ≈ 1 iff
     // the lognormal holds at the center and one σ out. Zero-token
     // docs excluded and censused.
-    "text_length_lognormal" ->
+    "text_length_lognormal" renders
       s"""with tok as (select doc_id, ${bigint(d.arrLen(splitWs("lower(text)")))} as ntok from documents),
          |pos as (select ntok from tok where ntok >= 1),
          |zc as (select ${bigint("count(*)")} as n_zero from tok where ntok < 1),
@@ -10754,7 +10767,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // 1e-9-quantized exp(−λ)·λ^k/k! with k! from a LITERAL 0..20
     // ladder (no SQL factorial); chi terms 1e-6-grid bigints. One
     // combinable groupBy(orderkey) → a ≤ |k-domain| census.
-    "q_order_size_fit" -> {
+    "q_order_size_fit" renders {
       def fact(k: Int): Long = (1 to k).foldLeft(1L)(_ * _)
       val fk = (0 to 20).map(k => s"select $k as k, cast(${fact(k)} as bigint) as fk")
         .mkString("(", " union all ", ")")
@@ -10814,9 +10827,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // raw leg's exact shapes. At 100 TB the rotated code table is the
     // same 8 bytes/vector — the rotation costs one extra map pass at
     // index build, nothing at query time.
-    "vec_bq_rotation" -> vecBqRotationSql(None),
+    "vec_bq_rotation" renders vecBqRotationSql(None),
 
-    "vec_bq_bit_balance" ->
+    "vec_bq_bit_balance" renders
       s"""with $nvCtes, $exnCte,
          |pb as (select pos, ${bigint("count(*)")} as n,
          |         ${bigint("sum(case when val > 0 then 1 else 0 end)")} as ones
@@ -10845,7 +10858,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // dow profile coalesces the seasonal index to 1 (prediction =
     // trend); missing cutoff/lag-7 rows coalesce the baselines to
     // the train-mean level (stated). Output: 3 method rows.
-    "events_forecast_eval" ->
+    "events_forecast_eval" renders
       s"""with daily as (select ${d.idiv(evSec("ts"), "86400")} as day, ${bigint("count(*)")} as n
          |              from events group by ${d.idiv(evSec("ts"), "86400")}),
          |b as (select min(day) as d0, max(day) as dmax from daily),
@@ -10889,7 +10902,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // perplexity = exp(H) from the same exact ratio, quantized.
     // Output = |subspaces| rows. Dead codes come from the LEFT join
     // of the trained codebook onto usage — never dropped silently.
-    "vec_pq_codebook_balance" -> {
+    "vec_pq_codebook_balance" renders {
       def lnq9(x: String) = bigint(roundAway(d)(s"ln(cast($x as double)) * 1000000000", 0))
       val chain =
         if (views) Seq(viewAlias("pct1", "g_pq_ct"), viewAlias("codes", "g_pq_codes")).mkString(",\n")
@@ -10925,7 +10938,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // land on the 1e-4 round grid first, then sum as EXACT bigints —
     // each bin mean is one division. Pair work = the verify stage's
     // (banded candidates only, est ≥ 0.1 floor stated).
-    "dedup_minhash_calibration" -> dedupMinhashCalibrationSql(None),
+    "dedup_minhash_calibration" renders dedupMinhashCalibrationSql(None),
 
     // DAY-OVER-DAY MIX SHIFT — the drift alarm every ingestion
     // pipeline runs (did yesterday's event-type mix change?): exact
@@ -10938,7 +10951,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // up — exactly the event a drift alarm must not NaN on). One
     // (day, type) groupBy is the only corpus pass; the day-pair spine
     // and per-pair folds run on ≤ |days|·|types| rows.
-    "events_mix_shift" -> {
+    "events_mix_shift" renders {
       def lg(x: String): String =
         bigint(roundAway(d)(s"ln(cast($x as double)) * 1000000000", 0))
       s"""with dt as (select ${d.idiv(evSec("ts"), "86400")} as day, event_type, ${bigint("count(*)")} as c
@@ -10974,7 +10987,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // grid sums) and p90 by rank selection over the ≤ 101-value
     // percent DOMAIN. Docs under 3 words have no shingles and are
     // absent (stated). One shingle pass + vocabulary-sized joins.
-    "text_boilerplate_share" -> textBoilerplateShareSql(None),
+    "text_boilerplate_share" renders textBoilerplateShareSql(None),
 
     // INDEX STORAGE-vs-RECALL LADDER — SURVEY §4's memory ladder
     // (512 B raw → 128 B matryoshka-16 → 64 B SQ8 → 8 B PQ/BQ) as ONE
@@ -10987,7 +11000,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // the raw row IS the truth table (recall 1.0 by construction —
     // the self-witnessing anchor). Per-leg cost: one bounded
     // O(|Q|·N) scoring pass each over the CACHED code tables.
-    "index_recall_ladder" -> {
+    "index_recall_ladder" renders {
       val ones = d.castDoubleArray(arrLit(Seq.fill(8)("1.0")))
       val (xh, xl) = if (d.name == "spark") ("(q.qhi ^ b.hi)", "(q.qlo ^ b.lo)")
                      else ("xor(q.qhi, b.hi)", "xor(q.qlo, b.lo)")
@@ -11057,7 +11070,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // edge join touches club-sized rows; exact integers, one
     // division per level. Degenerate clubs (< 2 members) report null
     // φ rather than ∞.
-    "graph_rich_club" ->
+    "graph_rich_club" renders
       s"""${wmChain("knn")},
          |lv as (select k from ${rangeTable("kl", "k", 1, 4)}),
          |kv as (select cast(pow(cast(2 as double), k) as bigint) as k from lv),
@@ -11094,7 +11107,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // reference (~10 scans executed). Values identical: v0/c0/p0 are
     // the same conditional minima the join chain derived, and the
     // median/p90 selections fold from the same (stage, minute) rows.
-    "events_funnel_time" -> {
+    "events_funnel_time" renders {
       val e = s"select user_id, event_type, ${evSec("ts")} as sec from events where event_type in ('view', 'click', 'purchase')"
       s"""with w1 as (select user_id, event_type, sec,
          |        min(case when event_type = 'view' then sec end) over (partition by user_id) as v0
@@ -11142,7 +11155,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // synthetic-data artifact) cannot be "open" and are CENSUSED, not
     // silently dropped: the data-quality number rides every row.
     // Integer end to end.
-    "q_open_lines_backlog" -> {
+    "q_open_lines_backlog" renders {
       def ep(c: String) =
         if (d.name == "spark") s"unix_seconds(cast($c as timestamp_ltz))"
         else s"cast(epoch($c) as bigint)"
@@ -11177,7 +11190,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // cumulative window runs over the ≤ |weeks|² matrix rows. One
     // (cohort, age) groupBy after the per-user min — two combinable
     // corpus passes total.
-    "events_cohort_ltv" ->
+    "events_cohort_ltv" renders
       s"""with ev as (select user_id, ${d.idiv(evSec("ts"), "604800")} as wk, cast(value as decimal(18,6)) as v from events),
          |fc as (select user_id, min(wk) as w0 from ev group by user_id),
          |vx as (select fc.w0 as cohort_wk, e.wk - fc.w0 as age_wk, e.user_id, e.v
@@ -11207,7 +11220,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // divisions. Bigram table is vocabulary²-bounded in the worst
     // case but observed-pairs-sized in practice — the same envelope
     // as text_cooccur. Ceiling n·lnq(n) < 2^63 to ~10⁸ tokens.
-    "text_entropy_rate" -> {
+    "text_entropy_rate" renders {
       def lnq9(x: String) = bigint(roundAway(d)(s"ln(cast($x as double)) * 1000000000", 0))
       s"""with $wordCtes,
          |bg as (select wd as w1, w2 from (${adjWordsFrom(2)}) _bg),
@@ -11237,7 +11250,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // trick); the Hamming pass is the 8-byte corpus scan all BQ keys
     // share. Spec pins R = 10 ≡ raw Hamming ranking reranked and
     // monotone recall in R.
-    "ann_refine_curve" -> {
+    "ann_refine_curve" renders {
       val (xh, xl) = if (d.name == "spark") ("(q.qhi ^ b.hi)", "(q.qlo ^ b.lo)")
                      else ("xor(q.qhi, b.hi)", "xor(q.qlo, b.lo)")
       val rLad =
@@ -11284,7 +11297,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // r12: same first-hop carry as graph_hops_reach — the level
     // censuses fold from the final frontier (n at hop j = first_hop ≤
     // j rows), replacing the 2^k re-inline of the per-level unions.
-    "graph_path_length" -> {
+    "graph_path_length" renders {
       def hop(prev: String, next: String, k: Int) =
         s"""$next as (select qid, id, ${bigint("min(h)")} as h from (
            |  select f.qid, e.dst as id, case when e.iden = 1 then f.h else ${bigint(k.toString)} end as h
@@ -11327,7 +11340,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // quantized to the 1e-4 grid and summed as bigints over the
     // ≤ |types| rows — no float fold order anywhere. F and η² are two
     // final divisions; k = 1 or zero within-variance reports null F.
-    "events_value_anova" -> {
+    "events_value_anova" renders {
       val x = bigint(roundAway(d)("value * 100", 0))
       s"""with e as (select event_type, $x as x from events),
          |t as (select event_type, ${bigint("count(*)")} as n, ${bigint("sum(x)")} as s1, ${bigint("sum(x * x)")} as s2
@@ -11361,7 +11374,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // assignment; for two variants χ² reduces to (n_a − n_b)²/N —
     // folded from ONE conditional distinct-count scan (no CTE
     // re-reference, no second pass). 2-row output.
-    "events_ab_srm_check" -> {
+    "events_ab_srm_check" renders {
       val chi2 = "cast((na - nb) * (na - nb) as double) / (na + nb)"
       s"""with c as (select
          |  ${bigint("count(distinct case when user_id % 2 = 0 then user_id end)")} as na,
@@ -11390,7 +11403,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // with the BURST cut. Two combinable groupBys ((user, minute),
     // then user-max via one more) + a bucket-domain census; integer
     // end to end.
-    "events_rate_peaks" -> {
+    "events_rate_peaks" renders {
       val lad = (39 to 1 by -1).map(b =>
         s"when peak >= ${1L << b} then $b").mkString("case ", " ", " else 0 end")
       s"""with e as (select user_id, ${d.idiv(evSec("ts"), "60")} as mnt from events),
@@ -11430,7 +11443,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // bit-agreement so that structure is visible). Cost: one extra
     // embed chain + one extract over carrier rows — no new corpus
     // pass beyond the bounded rate·N carrier work.
-    "wm_collusion" -> wmCollusionSql(None),
+    "wm_collusion" renders wmCollusionSql(None),
 
     // WELCH'S t ON EVENT VALUE BY VARIANT — the continuous-metric
     // companion of events_ab_test's proportion z (the test an
@@ -11443,7 +11456,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // the bigint square would overflow first, stated), flagged at
     // |t| > 1.96. The variant key is the served user_id % 2
     // assignment. 2-row output.
-    "events_ab_value_ttest" -> {
+    "events_ab_value_ttest" renders {
       val x = bigint(roundAway(d)("value * 100", 0))
       def mean(p: String) = s"cast(${p}s1 as double) / ${p}n / 100"
       def vr(p: String) = s"((cast(${p}n as double) * ${p}s2 - cast(${p}s1 as double) * ${p}s1) / (cast(${p}n as double) * (${p}n - 1)) / 10000)"
@@ -11491,7 +11504,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // within-bin interpolation; the exact leg rank-selects INSIDE the
     // finest level's target bins only (the sketch_quantiles trick —
     // never a global sort). 9-row output.
-    "sketch_quantile_curve" -> sketchQuantileCurveSql(None),
+    "sketch_quantile_curve" renders sketchQuantileCurveSql(None),
 
     // SEMANTIC-DEDUP THRESHOLD CURVE — the cosine knob of embedding
     // dedup measured (the embedding-side twin of dedup_threshold_
@@ -11508,7 +11521,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // d = 64, so nothing reaches the 0.9+ band a real duplicated
     // corpus shows — the curve mechanism is what ships; on real data
     // the same key runs with the SemDeDup-range rungs). 4-row output.
-    "dedup_semantic_curve" -> {
+    "dedup_semantic_curve" renders {
       val salted =
         s"""pairs as (select distinct a.id as ida, b.id as idb
            |          from (select id, t, b, id % 4 as s from bkt) a
@@ -11547,7 +11560,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // censuses joined per level — exact integer counts, one double
     // division per round. 3-row output; the spec pins round-3
     // equality with the served graph_modularity report.
-    "graph_lpa_curve" -> graphLpaCurveSql(None),
+    "graph_lpa_curve" renders graphLpaCurveSql(None),
 
     // CHI-SQUARE INDEPENDENCE: event_type × day-of-week — "does WHAT
     // users do depend on WHEN they show up?" (the categorical
@@ -11562,7 +11575,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // [0,1]. Monitored statistic, not a formal test (stated). Work:
     // one combinable groupBy onto ≤ 7·|types| cells + tiny marginal
     // joins. |types|-row output.
-    "events_chi2" -> {
+    "events_chi2" renders {
       val e = "cast(r.rt as double) * c.ct / t.nt"
       s"""with ec as (select event_type, (${d.idiv(evSec("ts"), "86400")} + 4) % 7 as dow from events),
          |o as (select event_type, dow, ${bigint("count(*)")} as n from ec group by event_type, dow),
@@ -11597,7 +11610,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // groupBy + an 8-row lag range joined against the ≤|days| spine —
     // calendar-bounded throughout. 8-row output; degenerate lags
     // (zero variance, < 3 overlap days) yield null r (stated).
-    "events_xcorr" -> {
+    "events_xcorr" renders {
       val num = "cast(p.n * p.sxy - p.sx * p.sy as double)"
       val den = "sqrt(cast(p.n * p.sxx - p.sx * p.sx as double) * cast(p.n * p.syy - p.sy * p.sy as double))"
       s"""with ed as (select event_type, ${d.idiv(evSec("ts"), "86400")} as day from events),
@@ -11634,7 +11647,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // calendar-bounded — never over events); at multi-year horizons
     // the same statistic runs on weekly buckets (stated knob).
     // |types|-row output.
-    "events_mann_kendall" -> {
+    "events_mann_kendall" renders {
       val n0 = "(nn.nd * (nn.nd - 1) / 2)"
       s"""with ed as (select event_type, ${d.idiv(evSec("ts"), "86400")} as day from events),
          |spine as (select day from ed group by day),
@@ -11672,7 +11685,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // the ≤|years| aggregate (calendar-bounded — never over facts),
     // growth as one double division; the first year's growth is null
     // by construction (stated). |years|-row output.
-    "q_yoy_growth" ->
+    "q_yoy_growth" renders
       s"""with yr as (select year(l_shipdate) as yr0,
          |              sum(cast(l_extendedprice as decimal(18,4)) * cast(1 - l_discount as decimal(18,4))) as rev,
          |              ${bigint("count(*)")} as n
@@ -11707,7 +11720,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // aggregate buffers lose to the explode's single-column hash
     // aggregate with map-side partials. Kept as-is — the explode form
     // is the measured optimum here.
-    "vec_kmeans_elbow" -> {
+    "vec_kmeans_elbow" renders {
       val chain =
         if (views) viewAlias("asgF", "g_ivf_asg")
         else Seq(exnCte, ivfTrainCtes, ivfAssignCtes).mkString(",\n")
@@ -11752,7 +11765,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // and overall means are EXACT decimal sums. Degenerate vectors
     // with a = b = 0 yield null s (stated). Work: one explode for
     // centroids + one broadcast N × |labels| dot join.
-    "vec_silhouette" -> {
+    "vec_silhouette" renders {
       val silq = s"""${roundAway(d)("case when (case when 1 - sown > 1 - sother then 1 - sown else 1 - sother end) > 0 then ((1 - sother) - (1 - sown)) / (case when 1 - sown > 1 - sother then 1 - sown else 1 - sother end) else cast(null as double) end", 6)}"""
       s"""with $nvCtes,
          |lab as (select * from ${d.explodeFrom("nn", "n", "pos", "val", Seq("label"))} _lb),
@@ -11790,7 +11803,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // a 10⁶-in-degree hub reaches ~10¹⁸ at t=3; past that switch to
     // per-round ppm renormalization (the graph_ppr rung, §4 ladder).
     // Isolated/never-entered nodes read centrality 0 honestly.
-    "graph_eigen_centrality" -> {
+    "graph_eigen_centrality" renders {
       val matKw = if (d.name == "duckdb") "materialized " else ""
       def step(prev: String, next: String) =
         s"""$next as (select n.id, ${bigint("coalesce(inc.s, 0)")} as r
@@ -11825,7 +11838,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // window), surviving degrees from one rung-tagged edge pass, all
     // moments exact integers — four linear edge scans total, at any
     // corpus size.
-    "graph_percolation_curve" -> {
+    "graph_percolation_curve" renders {
       val matKw = if (d.name == "duckdb") "materialized " else ""
       s"""${wmChain("knn")},
          |und as $matKw(select least(src, dst) as a, greatest(src, dst) as b
@@ -11895,9 +11908,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // Spark side (frontiers are sample-sized), DuckDB-materialized in
     // the oracle. Output: per reached node, contributing source
     // terms + the sampled betweenness.
-    "graph_betweenness" -> graphBetweennessSql(None),
+    "graph_betweenness" renders graphBetweennessSql(None),
 
-    "graph_spectral" -> {
+    "graph_spectral" renders {
       val matKw = if (d.name == "duckdb") "materialized " else ""
       def step(prev: String, next: String) =
         s"""$next as (select n.id, ${bigint("coalesce(inc.s, 0)")} as r
@@ -11958,7 +11971,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // caps any one word at ~3·10⁹ total occurrences (§4: shard the
     // census by source past that). One (doc, word) groupBy + one
     // vocabulary-sized groupBy — vocabulary-bounded output.
-    "text_word_burstiness" -> {
+    "text_word_burstiness" renders {
       val vmr = "cast(nd.n * ws.s2 - ws.tot * ws.tot as double) / (cast(nd.n as double) * ws.tot)"
       s"""with $wordCtes,
          |tc as (select doc_id, wd, ${bigint("count(*)")} as c from wx where wd <> '' group by doc_id, wd),
@@ -11996,7 +12009,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // upward-closed — its min c IS the old p99.c99, and because
     // rows_at_or_above decreases in c, the max of rows_at_or_above
     // over that same set IS the old share.r99 (evaluated at c99).
-    "q_key_skew" -> {
+    "q_key_skew" renders {
       val kc =
         if (d.name == "spark")
           s"""kc as (select keycol, k from (
@@ -12038,7 +12051,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // after which the SAME keyed-hyperplane LSH routing applies — the
     // brute form here is the correctness baseline over the fixed
     // query set (O(|Q|·N), the house convention for exact baselines).
-    "vec_topk_ip" ->
+    "vec_topk_ip" renders
       s"""with ev as (select vec_id as id, ${d.castDoubleArray("embedding")} as v from embeddings),
          |q as (select id, v from ev where id in ($qIdLit)),
          |p as (select q.id as qid, c.id as cid, round(${d.dot("q.v", "c.v")}, 6) as ip
@@ -12058,7 +12071,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // Brute over the fixed query set = the correctness baseline; the
     // ANN rung for L1 is the same LSH machinery over the Cauchy
     // (p-stable, p=1) projection family (Datar et al. 2004, stated).
-    "vec_topk_l1" -> {
+    "vec_topk_l1" renders {
       val l1 = (1 to Dim).map(p0 => s"abs(${el("q.v", p0)} - ${el("c.v", p0)})").mkString(" + ")
       s"""with ev as (select vec_id as id, ${d.castDoubleArray("embedding")} as v from embeddings),
          |q as (select id, v from ev where id in ($qIdLit)),
@@ -12083,7 +12096,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // from (t, b) equality; exact inner product ranks only within
     // them (bounded-state under the graft_topk rewrite). Plane count
     // rides the SAME N-derived `lshPlanes` knob as the cosine family.
-    "vec_topk_ip_lsh" ->
+    "vec_topk_ip_lsh" renders
       s"""with $mipsLshCtes,
          |p as (select c.qid, c.cid, round(${d.dot("qa.v", "ca.v")}, 6) as ip
          |      from cnd c join ev qa on qa.id = c.qid join ev ca on ca.id = c.cid)
@@ -12096,7 +12109,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // inner-product top-10 (the vec_topk_ip baseline) vs the rung's
     // candidate-restricted top-10, per query: candidate count, hits,
     // recall@10.
-    "ann_recall_eval_ip" ->
+    "ann_recall_eval_ip" renders
       s"""with $mipsLshCtes,
          |bp as (select q.id as qid, c.id as cid, round(${d.dot("q.v", "c.v")}, 6) as ip
          |       from (select id, v from ev where id in ($qIdLit)) q join ev c on c.id <> q.id),
@@ -12127,13 +12140,13 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // lshPlanesFor convention; floors at 2 through the verify SFs,
     // arms 3 past ~45k vectors, 4 past ~135k).
     // Exact L1 re-rank only within candidates.
-    "vec_topk_l1_lsh" -> vecTopkL1LshSql(None),
+    "vec_topk_l1_lsh" renders vecTopkL1LshSql(None),
 
     // L1-rung index-quality monitoring: the ann_recall_eval protocol
     // applied to the Cauchy p-stable family — brute L1 top-10 (the
     // vec_topk_l1 baseline) vs the rung's candidate-restricted
     // top-10, per query.
-    "ann_recall_eval_l1" -> annRecallEvalL1Sql(None),
+    "ann_recall_eval_l1" renders annRecallEvalL1Sql(None),
 
     // EVENT-TYPE CORRELATION MATRIX — which daily metrics move
     // together (the contemporaneous all-pairs companion of
@@ -12145,7 +12158,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // pairwise join runs over the |types| × |days| CENSUS grid —
     // calendar/type-bounded, never events. Degenerate (zero-variance)
     // pairs null by the stated guard. C(|types|,2)-row output.
-    "events_corr_matrix" -> {
+    "events_corr_matrix" renders {
       val num = "cast(p.n * p.sxy - p.sx * p.sy as double)"
       val den = "sqrt(cast(p.n * p.sxx - p.sx * p.sx as double) * cast(p.n * p.syy - p.sy * p.sy as double))"
       s"""with ed as (select event_type, ${d.idiv(evSec("ts"), "86400")} as day from events),
@@ -12183,7 +12196,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // (uncovered blocks read redundancy 0 honestly), and the
     // majority-vote tolerance floor ⌊(min−1)/2⌋ — the number the BER
     // matrix measures empirically at the default rung. 4-row output.
-    "wm_rate_curve" -> {
+    "wm_rate_curve" renders {
       val esScore = s"(-ln(${prfUniform(d)("'sel'", P, "vec_id")})) / " +
         "(case when in_degree = 0 then 0.9 when in_degree = 1 then 0.7 when in_degree = 2 then 0.5 when in_degree = 3 then 0.4 else 0.3 end)"
       s"""${wmChain("knn")},
@@ -12239,7 +12252,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // correct readout (stated). Parallel-trends is assumed, not
     // tested (stated — the standard DiD caveat). 4-row output (one
     // per cell, estimate columns riding every row).
-    "q_promo_did" -> {
+    "q_promo_did" renders {
       def cell(t: String, post: String) =
         s"(select n, s1, s2, cast(s1 as double) / n / 100 as m from cells where treated = $t and post = $post)"
       val varOf = (a: String) => s"(cast($a.n * $a.s2 - $a.s1 * $a.s1 as double) / (cast($a.n as double) * $a.n * 10000))"
@@ -12276,7 +12289,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // one report. All inputs exact integers; sqrt/divisions at the
     // end; a zero observed difference degenerates the required-n to
     // null (stated). 1-row output.
-    "events_ab_power" -> {
+    "events_ab_power" renders {
       val pp = "((a.n_click + b.n_click) / cast(a.n + b.n as double))"
       val diff = "(a.n_click / cast(a.n as double) - b.n_click / cast(b.n as double))"
       val mde = s"(2.8016 * sqrt($pp * (1 - $pp) * (1.0 / a.n + 1.0 / b.n)))"
@@ -12319,7 +12332,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // corpus plants no correlation between halves, so the measured
     // reduction ≈ 0 IS the honest readout (stated — the machinery is
     // what's under test). 2-row output.
-    "events_ab_cuped" -> {
+    "events_ab_cuped" renders {
       val x = bigint(roundAway(d)("value * 100", 0))
       // per-variant prefixed moment getters over the wide 1-row table
       def m(p: String, c: String) = s"cast(${p}$c as double)"
@@ -12398,7 +12411,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // (mean, replica) order, and the bootstrap SE comes from exact
     // integer moments of the 1e-4-quantized replica means. Work:
     // one corpus scan + O(B) rows after it, at any corpus size.
-    "events_boot_ci" -> {
+    "events_boot_ci" renders {
       val B = 40
       def h(g: Int) = s"h$g"
       def chunk(rep: Int): String = {
@@ -12462,7 +12475,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // one division pair per window. Integer counts end to end;
     // per-hour output with both alert flags — the pageable moments
     // are the rows where page_alert = 1.
-    "events_slo_burn" -> {
+    "events_slo_burn" renders {
       def roll(c: String, w: Int) =
         s"${bigint(s"sum($c) over (order by hr range between ${w - 1} preceding and current row)")}"
       def burn(e: String, t: String) = s"(cast($e as double) / $t / 0.25)"
@@ -12499,7 +12512,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // from 1e-6-quantized exact sums. FULL OUTER join catches
     // orphans on BOTH sides. One rollup groupBy + one join + one
     // census. ≤ 7-row output.
-    "q_order_reconcile" -> {
+    "q_order_reconcile" renders {
       val rel = "(abs(cast(o4 - r4 as double)) / o4)"
       val bucket = s"""case when r4 is null then 'orphan_header'
          | when o4 is null then 'orphan_lines'
@@ -12543,7 +12556,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // activity bucket, user counts, churn rate, and exact-integer
     // mean recency/tenure/purchases — the monotone churn-vs-activity
     // gradient is the signal-exists gate. ≤ ~12-row output.
-    "events_churn_labels" -> {
+    "events_churn_labels" renders {
       val lad = (12 to 1 by -1).map(b =>
         s"when nb >= ${1L << b} then $b").mkString("case ", " ", " else 0 end")
       s"""with e as (select user_id, ${d.idiv(evSec("ts"), "86400")} as day, event_type from events),
@@ -12584,7 +12597,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // keep rate, and the PRF-order head checksum that pins the exact
     // selected SET (not just its size) across engines. ≤ |labels|
     // rows.
-    "sample_balanced" -> {
+    "sample_balanced" renders {
       val pr = prf(d)("'bal'", "vec_id")
       s"""with e as (select vec_id, ${bigint("label")} as label, $pr as h from embeddings),
          |lc as (select label, ${bigint("count(*)")} as n from e group by label),
@@ -12610,7 +12623,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // bigints (min(x, cap) map-side), raw-vs-capped mean/variance and
     // the variance-reduction receipt in one combinable aggregation +
     // one census window. 1-row output.
-    "events_metric_winsorize" ->
+    "events_metric_winsorize" renders
       s"""with v as (select ${bigint(roundAway(d)("value * 100", 0))} as x
          |           from events where event_type = 'purchase'),
          |cen as (select x, ${bigint("count(*)")} as c from v group by x),
@@ -12645,7 +12658,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // orders×lineitem hash join (date filter pushed to the lineitem
     // scan), conditional bimodal counts split on the priority class,
     // group by the mode dim. Output domain-bounded (2 rows).
-    "q12_shipmode" -> {
+    "q12_shipmode" renders {
       def ep(c: String) =
         if (d.name == "spark") s"unix_seconds(cast($c as timestamp_ltz))"
         else s"cast(epoch($c) as bigint)"
@@ -12678,7 +12691,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // identical to exists(other supp) ∧ ¬exists(other late supp), at
     // one fact pass instead of three. The supplier dim (|S| rows)
     // broadcasts into the final count.
-    "q21_waiting_supplier" -> {
+    "q21_waiting_supplier" renders {
       def ep(c: String) =
         if (d.name == "spark") s"unix_seconds(cast($c as timestamp_ltz))"
         else s"cast(epoch($c) as bigint)"
@@ -12710,7 +12723,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // (per-hop DISTINCT expansion, min(step) = distance, 1e-6
     // quantized 1/d folds); the Spark path shares the betweenness
     // scratch edge table, the oracle inlines it.
-    "graph_closeness" -> graphClosenessSql(None),
+    "graph_closeness" renders graphClosenessSql(None),
 
     // REVENUE GINI / LORENZ REPORT (33z2) — the single-number
     // inequality audit behind q_pareto_share's top-k cuts (how
@@ -12723,7 +12736,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // global per-customer sort), Lorenz receipts (bottom-half and
     // top-decile spend shares) off the same cumulative table. Exact
     // bigints until the final divisions. 1-row output.
-    "q_gini_revenue" ->
+    "q_gini_revenue" renders
       s"""with cs as (select o_custkey, ${d.idiv(bigint(s"sum(${bigint(roundAway(d)("o_totalprice * 100", 0))})"), "10000")} as spend_h
          |            from orders group by o_custkey),
          |cen as (select spend_h, ${bigint("count(*)")} as c from cs group by spend_h),
@@ -12760,7 +12773,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // one convention left: a qid whose own row is tombstoned drops
     // from the output entirely, because a deleted query has no alive
     // ground truth to score against (both routes filter it).
-    "ann_recall_after_delete" ->
+    "ann_recall_after_delete" renders
       s"""${wmChain("lsh")},
          |del as (select id from nn where ${prfMod(d)(1048576, "'vdel'", "id")} < 104858),
          |q as (select id as qid, n as qn from nn
@@ -12796,7 +12809,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // (scratch-materialized) and runs the identical integer iteration
     // as driver math (the events_attribution_markov convention); this
     // template is the oracle's in-SQL rendering.
-    "events_markov_stationary" -> markovStationarySql(None),
+    "events_markov_stationary" renders markovStationarySql(None),
 
     // DEGREE-CORRELATION PROFILE knn(d) (6u) — the assortativity
     // COEFFICIENT's underlying curve (Pastor-Satorras et al. 2001):
@@ -12811,7 +12824,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // folds. Same und/deg base as assortativity (bounded constant
     // re-derivation over the cached g_knn view); output bounded by
     // the degree domain.
-    "graph_knn_degree_curve" -> graphKnnDegreeCurveSql(None),
+    "graph_knn_degree_curve" renders graphKnnDegreeCurveSql(None),
 
     // A/B UPLIFT BY PRE-EXPOSURE DECILE (40d9) — the heterogeneous-
     // treatment-effect readout (the qini/uplift-decile table of uplift
@@ -12834,7 +12847,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // an empty (decile, variant) cell is self-describing: n = 0, mean
     // null. Two corpus scans total (per-user rollup is referenced by
     // the census and the final agg — bounded, stated).
-    "events_ab_uplift_deciles" ->
+    "events_ab_uplift_deciles" renders
       s"""with e as (select user_id, user_id % 2 as variant, ${d.idiv(evSec("ts"), "86400")} as day, event_type, value from events),
          |u as (select user_id, ${bigint("max(variant)")} as variant,
          |        ${bigint("sum(case when day < 19746 then 1 else 0 end)")} as pre_n,
@@ -12878,7 +12891,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // change. Scale: ONE corpus scan, ~1.4k multiply-adds per row
     // inside whole-stage codegen, one 49-column aggregation. Output:
     // 24 rows (bit position, ones count, ones rate, mean logit).
-    "wm_nn_decode" -> {
+    "wm_nn_decode" renders {
       import graft.functions.WmConst
       val hid = 1 to 16
       val out = 1 to 24
@@ -12914,7 +12927,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // serving path (SparkEntry.programmatic) aggregates the persisted
     // g_nn_deep_logits artifact instead of re-planning the ~9k-literal
     // forward-pass tree per action.
-    "wm_nn_decode_deep" -> nnDecodeDeepSql(None),
+    "wm_nn_decode_deep" renders nnDecodeDeepSql(None),
 
     // MULTI-VECTOR LATE-INTERACTION RETRIEVAL (21q) — the ColBERT
     // score shape (Khattab & Zaharia 2020, public): a query is a SET
@@ -12940,7 +12953,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // map-side partials keep ≤ 10 rows per query per partition, so
     // the exchange carries O(|Q|·10) and nothing sorts the |Q|·N
     // stream; MaxSimTopKSpec pins the rewrite in the executed plan.
-    "search_maxsim" -> {
+    "search_maxsim" renders {
       val nQ = Wm.MaxSimQueries.size
       val idx = 1 to Wm.MaxSimDim
       val terms = Wm.MaxSimQueries.flatMap { case (q, ts) =>
@@ -12993,7 +13006,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // Output per query: candidate count, top-10 overlap vs the
     // exhaustive ranking, recall@10, top-1 agreement — the
     // ann_recall_eval protocol applied to late interaction.
-    "search_maxsim_pruned" -> {
+    "search_maxsim_pruned" renders {
       val nQ = Wm.MaxSimQueries.size
       val idx = 1 to Wm.MaxSimDim
       val terms = Wm.MaxSimQueries.flatMap { case (q, ts) =>
@@ -13053,7 +13066,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // axes (the pca_project2d convention: map-only corpus scan + one
     // rollup); this oracle re-derives the axes in the 1-row eigensolve
     // chain. See pcaResidualBody for the shared arithmetic rendering.
-    "vec_pca_residual" ->
+    "vec_pca_residual" renders
       s"""with $nvCtes,
          |$pcaAxesChain,
          |${pcaResidualBody("nv cross join pr",
@@ -14659,5 +14672,14 @@ final class Gen(d: Dialect, useViews: Boolean = false,
           i => s"cast(${w1(i - 1)} as double)",
           i => s"cast(${w2(i - 1)} as double)")}""".stripMargin
 
-  def sql(name: String): String = sqls(name)
+  /** The SQL of query `name`, rendered on first request and kept: a
+    * caller pays only for the keys it runs, not the whole corpus. */
+  def sql(name: String): String = {
+    val hit = rendered.get(name)
+    if (hit != null) hit
+    else {
+      val text = renderers(name)()
+      Option(rendered.putIfAbsent(name, text)).getOrElse(text)
+    }
+  }
 }

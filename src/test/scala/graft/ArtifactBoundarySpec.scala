@@ -1,0 +1,80 @@
+package graft
+
+import java.io.File
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.{Backup, Writeback}
+
+/** The build boundary of a watermark job: `WmCache.ensure` builds the
+  * watermark chain and nothing else, an index is built by the first
+  * statement that reads it, and the write-back overlays stego values
+  * without changing a single written value. */
+class ArtifactBoundarySpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  private val chain = Set("g_bkt", "g_knn", "g_indeg", "g_carriers", "g_stego")
+
+  private def freshSession(): (SparkSession, File) = {
+    val root = java.nio.file.Files.createTempDirectory("graft_boundary").toFile
+    val s = spark.newSession()
+    s.conf.set("spark.graft.scratch", root.getAbsolutePath)
+    (s, root)
+  }
+
+  /** Artifacts whose build seconds grew while `body` ran. */
+  private def built(body: => Unit): Set[String] = {
+    val before = Scratch.buildSeconds
+    body
+    Scratch.buildSeconds.collect {
+      case (k, v) if v != before.getOrElse(k, 0.0) => k
+    }.toSet
+  }
+
+  /** Completed scratch directories under `root`, with the artifact
+    * directories each holds. */
+  private def listing(root: File): Map[String, Set[String]] =
+    root.listFiles().filter(d => d.isDirectory && new File(d, "_DONE").exists())
+      .map(d => d.getName -> d.listFiles().filter(_.isDirectory).map(_.getName).toSet)
+      .toMap
+
+  test("ensure on a fresh scratch root builds exactly the five chain artifacts") {
+    val (s, root) = freshSession()
+    assert(built(WmCache.ensure(s, TestSpark.Sf)) == chain)
+    assert(listing(root).values.toSeq == Seq(chain),
+      s"scratch holds more than the chain: ${listing(root)}")
+    for (v <- Seq("g_ivf_ct", "g_ivf_asg", "g_pq_ct", "g_pq_codes", "g_bq"))
+      assert(!s.catalog.tableExists(v), s"ensure registered index view $v")
+  }
+
+  test("a key reading g_ivf_asg builds g_ivf_ct and g_ivf_asg on first use, and nothing else") {
+    val (s, root) = freshSession()
+    val rows = built(SparkEntry.queries("vec_topk_ivf")(s, TestSpark.Sf).count(): Unit)
+    assert(rows == Set("g_ivf_ct", "g_ivf_asg"))
+    assert(listing(root).values.toSet == Set(Set("g_ivf_ct"), Set("g_ivf_asg")))
+    // served, not rebuilt, on the next use in the session
+    assert(built(SparkEntry.queries("vec_topk_ivf")(s, TestSpark.Sf).count(): Unit).isEmpty)
+  }
+
+  test("the carrier-id registry is written and read as (vec_id bigint, blk bigint)") {
+    val (s, _) = freshSession()
+    val ids = java.nio.file.Files.createTempDirectory("graft_ids").toString + "/ids"
+    assert(Backup.saveCarrierIds(s, TestSpark.Sf, ids) > 0)
+    assert(s.read.parquet(ids).schema.simpleString == "struct<vec_id:bigint,blk:bigint>")
+  }
+
+  test("stegoTable equals the exploded vec_writeback form and keeps its partitioning") {
+    val (s, _) = freshSession()
+    val dir = new File(TestSpark.Sf).getParent + "/sf0.01"
+    val overlay = Writeback.stegoTable(s, dir)
+    val exploded = SparkEntry.queries("vec_writeback")(s, dir)
+      .groupBy("vec_id")
+      .agg(array_sort(collect_list(struct(col("pos"), col("val")))).as("s"))
+      .select(col("vec_id"), expr("transform(s, e -> e.val)").as("embedding"))
+    // column types match; nullability may not, and a parquet write makes
+    // every column nullable either way
+    assert(overlay.schema.simpleString == exploded.schema.simpleString)
+    assert(overlay.count() == exploded.count())
+    assert(overlay.exceptAll(exploded).isEmpty && exploded.exceptAll(overlay).isEmpty)
+    assert(overlay.rdd.getNumPartitions == s.sessionState.conf.numShufflePartitions)
+  }
+}

@@ -79,7 +79,7 @@ class CurationOpsSpec extends AnyFunSuite {
 
   test("vec_outliers: exactly the bottom-25 sims, ranked, with consistent z-scores") {
     Tables.register(spark, TestSpark.Sf)
-    WmCache.ensure(spark, TestSpark.Sf)
+    WmCache.ensureAll(spark, TestSpark.Sf)
     val sims = spark.sql(
       """select a.id, round(graft_dot(nn.n, c.cv) / sqrt(graft_dot(c.cv, c.cv)), 6) as sim
         |from g_ivf_asg a

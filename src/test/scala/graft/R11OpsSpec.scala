@@ -170,7 +170,7 @@ class R11OpsSpec extends AnyFunSuite {
 
   test("vec_ivf_reindex_delete: exact per-cell census of the tombstone anti-join") {
     Tables.register(spark, TestSpark.Sf)
-    WmCache.ensure(spark, TestSpark.Sf)
+    WmCache.ensureAll(spark, TestSpark.Sf)
     val asg = spark.table("g_ivf_asg").collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[Long]("cell"))
     val del = asg.map(_._1).filter(id =>

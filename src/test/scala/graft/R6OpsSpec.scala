@@ -85,7 +85,7 @@ class R6OpsSpec extends AnyFunSuite {
 
   test("vec_append: existing assignments untouched, batch is the PRF set") {
     Tables.register(spark, TestSpark.Sf)
-    WmCache.ensure(spark, TestSpark.Sf)
+    WmCache.ensureAll(spark, TestSpark.Sf)
     val before = spark.table("g_ivf_asg").collect()
       .map(r => (r.getAs[Long]("id"), r.getAs[Long]("cell"))).toSet
     val out = run("vec_append").collect()
@@ -102,7 +102,7 @@ class R6OpsSpec extends AnyFunSuite {
 
   test("vec_append: every index record matches a JVM mirror of the served index") {
     Tables.register(spark, TestSpark.Sf)
-    WmCache.ensure(spark, TestSpark.Sf)
+    WmCache.ensureAll(spark, TestSpark.Sf)
     val cents = spark.table("g_ivf_ct").collect()
       .map(r => r.getAs[Long]("cell") ->
         r.getSeq[Double](r.fieldIndex("cv")).toArray).toMap

@@ -20,7 +20,7 @@ class StreamingIvfAssignSpec extends AnyFunSuite {
   test("streamed assignments equal the batch index view on the same vectors") {
     implicit val ctx = spark.sqlContext
     import spark.implicits._
-    WmCache.ensure(spark, TestSpark.Sf)
+    WmCache.ensureAll(spark, TestSpark.Sf)
     val centroids = spark.sql("select cell, cv from g_ivf_ct")
       .as[(Long, Seq[Double])].collect()
       .map { case (c, cv) => c -> cv.toArray }.toMap
