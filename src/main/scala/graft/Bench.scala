@@ -39,6 +39,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val tEntry = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - tEntry) / 1e9
+    // the published `builds` cover this run's dir only, whatever this
+    // JVM built before
+    Scratch.buildLog.clear()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // the target machine runs local[32] with 128 GiB; 32 shuffle
     // partitions sized to match (not the 200 default)

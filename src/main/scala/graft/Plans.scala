@@ -6,17 +6,18 @@ import java.nio.file.{Files, Paths}
 /** Dev tool: dump formatted physical plans of the headline queries to
   * PLANS.md — the .explain audit trail behind SURVEY §4's scale
   * claims. Two sections, matching what the bench ACTUALLY executes:
-  * the WmCache chain-stage builds (run once per session/scratch miss —
-  * this is where the salted self-join lives), then the steady-state
+  * the artifact builds (run once per session/scratch miss, each from
+  * the DataFrame WmCache builds it with — a chain kernel's plan plus
+  * its RDD lineage, or the stage SQL's plan), then the steady-state
   * query plans rendered with useViews (chain consumers read the g_*
   * views). Usage: runMain graft.Plans [sfDir] */
 object Plans {
   private val stageNotes = Map(
-    "g_bkt" -> "bucket ids are map-side literal arithmetic over the parquet scan; zero shuffles before the write",
-    "g_knn" -> "the SALTED bucket self-join: join keys are (t, b, id%4) vs (t, b, replica) — the salt sits in the join key, so when the corpus forces a shuffle join a hot bucket fans over 4 reducers; per-src top-K via partitioned window",
+    "g_bkt" -> "chain kernel (operators.ChainKernels.buckets): one map-only JVM pass over the embeddings scan normalizes each vector and computes its bucket id per table; no shuffle before the write",
+    "g_knn" -> "chain kernel (operators.ChainKernels.knn): one shuffle by (t, b) gives each bucket to one task, which computes each pair's dot product once into a bounded top-16 per member; a second shuffle by src merges the <= 2x16 candidates per vector. The salted SQL self-join is the stage's specification, not what runs",
     "g_indeg" -> "groupBy(dst) count + left join back — both map-side-combinable",
     "g_carriers" -> "distributed two-pass ranking: per-bucket counts + broadcast cumulative offsets + within-bucket windows; no single-partition sort",
-    "g_stego" -> "carrier rows only: one masked-sum aggregation (24 projections) + broadcast join back; renormalizer computed analytically",
+    "g_stego" -> "chain kernel (operators.ChainKernels.stego): g_carriers joined to the embeddings scan (broadcast carrier side), then WmEmbed once per carrier vector, map-side",
     "g_ivf_ct" -> "IVF train: integer-threshold PRF sample (E[8*sqrt(N)] rows), 2 Lloyd steps on the sample only — the corpus is scanned once for sampling, never for training",
     "g_ivf_asg" -> "IVF assign: the ONE full-corpus pass — broadcast centroids, map-side-combinable max(struct) argmax, no window",
     "g_pq_ct" -> "PQ train: 512-row PRF sample sliced into 8 subspaces, one Lloyd step per subspace over the sample",
@@ -86,7 +87,7 @@ object Plans {
     "q3_revenue" -> "global top-10 with NO unpartitioned window: bucketed partitioned pre-rank, then pairwise-count ranking over <=160 survivors",
     "dedup_embedding" -> "salted LSH bucket self-join over the g_bkt view (hot bucket fans over 4 reducers), dot product computed once behind the pair groupBy barrier",
     "wm_carriers" -> "steady state: one scan of the g_carriers parquet",
-    "wm_knn_edges" -> "steady state: one scan of the g_knn parquet — the salted exchange is in the g_knn BUILD plan above",
+    "wm_knn_edges" -> "steady state: one scan of the g_knn parquet — the graph is built once by the g_knn kernel above",
     "wm_recall_impact" -> "carrier-delta rebuild: only the rate*N stego vectors are reassembled/re-bucketed; the untouched corpus reuses nn + the g_bkt rows via anti-joins",
     "vec_topk_ivf" -> "sqrt(N) sampled cells, Lloyd steps train on an 8*sqrt(N) sample, ONE full-corpus assignment; every assignment is a map-side-combinable max(struct) hash aggregation over the broadcast centroid cross join — no N*k window sort anywhere",
     "pca_project2d" -> "one 44-aggregate covariance pass over the corpus; the power-iteration eigensolve runs as bounded driver math (operators.PcaSolve, hash-pinned to the oracle's SQL chain), and the projection is ONE map-only corpus scan with the solved axes as exact double literals — two corpus passes total, no 1-row aggregation chain",
@@ -310,9 +311,9 @@ object Plans {
     sb.append(s"Generated by `runMain graft.Plans` on `$sfDir` with\n")
     sb.append("`useViews = true` (the WmCache-backed renderings the bench\n")
     sb.append("actually executes) after `WmCache.ensureAll`. Section 1 audits\n")
-    sb.append("the one-off chain-stage BUILD plans (this is where the\n")
-    sb.append("salted self-join and the selection chain live); section 2\n")
-    sb.append("audits the steady-state query plans.\n")
+    sb.append("the one-off artifact BUILDS as WmCache runs them (the chain\n")
+    sb.append("kernels with their RDD lineage, the selection chain and the\n")
+    sb.append("index SQL); section 2 audits the steady-state query plans.\n")
     Tables.register(spark, sfDir)
     // build every artifact first so view-backed renderings resolve;
     // stage-build plans are explained against the registered views, as
@@ -320,9 +321,17 @@ object Plans {
     // and WmCache use for this dir
     WmCache.ensureAll(spark, sfDir)
     val genViews = SparkEntry.sparkGenFor(spark, sfDir)
-    sb.append("\n# Section 1 — chain stage builds (once per session / scratch miss)\n")
-    for ((view, sql) <- genViews.cacheStages) {
-      sb.append(s"\n## build $view\n\n${stageNotes(view)}\n\n```\n${fmt(spark.sql(sql))}\n```\n")
+    sb.append("\n# Section 1 — artifact builds (once per session / scratch miss)\n")
+    for ((view, _) <- genViews.cacheStages) {
+      // a kernel's plan is one scan of its output rows: its RDD lineage
+      // shows the passes and shuffles that compute them
+      val df = WmCache.stageFrame(spark, sfDir, view)
+      val lineage = df.queryExecution.logical match {
+        case r: org.apache.spark.sql.execution.LogicalRDD =>
+          s"\n\nRDD lineage:\n${r.rdd.toDebugString.replaceAll(" at (\\$anonfun\\S*|\\S+\\.(scala|java):\\d+)", "")}"
+        case _ => ""
+      }
+      sb.append(s"\n## build $view\n\n${stageNotes(view)}\n\n```\n${fmt(df)}$lineage\n```\n")
     }
     sb.append("\n# Section 2 — steady-state query plans (view-backed)\n")
     for ((name, note) <- notes.toSeq.sortBy(_._1)) {

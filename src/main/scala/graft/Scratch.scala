@@ -188,7 +188,7 @@ object Scratch {
     }
   }
 
-  private def deleteRec(f: File): Unit = {
+  private[graft] def deleteRec(f: File): Unit = {
     val kids = f.listFiles()
     if (kids != null) kids.foreach(deleteRec)
     f.delete(): Unit

@@ -12,10 +12,11 @@ object StageProf {
     spark.sparkContext.setLogLevel("ERROR")
     Tables.register(spark, dir)
     val stages = SparkEntry.sparkGenFor(spark, dir).cacheStages
-    stages.foreach { case (view, sql) =>
+    stages.foreach { case (view, _) =>
       val t0 = System.nanoTime()
       val p = s"/tmp/stageprof/$view"
-      spark.sql(sql).write.mode("overwrite").parquet(p)
+      // the build WmCache runs: a chain kernel or the stage SQL
+      WmCache.stageFrame(spark, dir, view).write.mode("overwrite").parquet(p)
       spark.read.parquet(p).createOrReplaceTempView(view)
       println(f"[stage] $view ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }

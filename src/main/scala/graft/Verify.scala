@@ -93,7 +93,17 @@ object Verify {
       s"$n:${f.length}:${f.lastModified}"
     }.mkString(",")
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    dump(args, SparkSession.builder()
+      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()).stop()
+
+  /** The dump itself, on `session` (opened once the oracle JSON is
+    * written); returns the session for the caller to stop. */
+  private[graft] def dump(args: Array[String], session: => SparkSession): SparkSession = {
     val deadlineAt = System.nanoTime() +
       (sys.env.getOrElse("SPARK_GRAFT_VERIFY_BUDGET", "1500").toDouble * 1e9).toLong
     val smoke = args.contains("--smoke")
@@ -102,6 +112,11 @@ object Verify {
     val incr = sys.env.getOrElse("SPARK_GRAFT_VERIFY_INCR", "on") != "off"
     val nThreads = sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "4").toInt
     new File(outDir).mkdirs()
+    // runs before the sibling `<outDir>_sigs` kept their signatures in
+    // `<outDir>/_sigs`, which an oracle comparison that reads every
+    // subdirectory as a query dump fails to read: a reused dump dir
+    // drops it
+    Scratch.deleteRec(new File(outDir, "_sigs"))
 
     // ---- oracle JSON first: no Spark work needed, and it is what the
     // driver's compare reads — with it on disk, any prefix of dumps
@@ -137,12 +152,7 @@ object Verify {
       case None => Files.deleteIfExists(subsetPath): Unit
     }
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = session
     spark.sparkContext.setLogLevel("WARN")
 
     val keys =
@@ -217,6 +227,6 @@ object Verify {
       f"[verify] ${done.get()}/${keys.length} dumped (${skipped.get()} served incremental)" +
         (if (undumped > 0) s", $undumped NOT dumped (budget)" else "") +
         f" in ${(System.nanoTime() - t0) / 1e9}%.0fs")
-    spark.stop()
+    spark
   }
 }

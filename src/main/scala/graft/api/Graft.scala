@@ -106,9 +106,9 @@ final class Graft(spark: SparkSession, dir: String,
   def embedded: DataFrame = q("wm_embed")
   /** The full watermarked table as (vec_id, embedding) — what the
     * reference's update_vectors writes back. */
-  def watermarkedTable: DataFrame = Writeback.stegoTable(spark, dir)
+  def watermarkedTable: DataFrame = Writeback.stegoTable(spark, dir, params)
   /** Write the watermarked table as parquet; returns rows written. */
-  def writeWatermarked(outPath: String): Long = Writeback.writeStego(spark, dir, outPath)
+  def writeWatermarked(outPath: String): Long = Writeback.writeStego(spark, dir, outPath, params)
   /** Blind per-block majority-vote bit extraction. */
   def extracted: DataFrame = q("wm_extract")
   def recallImpact: DataFrame = q("wm_recall_impact")

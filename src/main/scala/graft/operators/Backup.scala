@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.SparkEntry
+import graft.{SparkEntry, Tables, WmCache}
 import graft.functions.WmDecode
 import graft.sqlgen.WmParams
 
@@ -28,9 +28,12 @@ object Backup {
   /** Persist the carrier id list (vec_id, blk) as parquet — the
     * reference's save_low_degree_ids (pg_func.py:312-323): a later
     * extraction can consume the stored ids and skip rebuilding the
-    * whole bucket→kNN→in-degree→selection chain. ~rate·N rows. */
-  def saveCarrierIds(spark: SparkSession, sfDir: String, path: String): Long = {
-    SparkEntry.queries("wm_carriers")(spark, sfDir)
+    * whole bucket→kNN→in-degree→selection chain. ~rate·N rows. The
+    * carriers are those `params`' rate and key select. */
+  def saveCarrierIds(spark: SparkSession, sfDir: String, path: String,
+                     params: WmParams = WmParams.Default): Long = {
+    Tables.register(spark, sfDir)
+    WmCache.carriers(spark, sfDir, params)
       .select(col("vec_id").cast("bigint").as("vec_id"), col("blk").cast("bigint").as("blk"))
       .write.mode("overwrite").parquet(path)
     spark.read.schema(IdsSchema).parquet(path).count()

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Tables, WmCache}
+import graft.sqlgen.WmParams
 
 /** Distributed analog of the reference's vector UPDATE loop
   * (reference: database/pgvector/pg_func.py:389-395 — per-row UPDATE of
@@ -12,9 +13,9 @@ import graft.{Tables, WmCache}
   * partitions. */
 object Writeback {
 
-  /** The watermarked table as (vec_id, embedding array<double>): the
-    * `vec_writeback` cells, (vec_id, pos, round(stego or original
-    * value, 6)), as one array per vector in pos order.
+  /** The watermarked table as (vec_id, embedding array<double>) under
+    * `params`: the `vec_writeback` cells, (vec_id, pos, round(stego or
+    * original value, 6)), as one array per vector in pos order.
     *
     * Only carriers (~rate·N rows) change, so their stego values are
     * gathered into one array per carrier (a rate·N·d aggregation over
@@ -23,10 +24,10 @@ object Writeback {
     * N·d cells and regrouped. The rows are hash-partitioned on vec_id
     * into the session's shuffle partitions, the layout the regrouped
     * form had, so every written file is a slice of the corpus. */
-  def stegoTable(spark: SparkSession, sfDir: String): DataFrame = {
+  def stegoTable(spark: SparkSession, sfDir: String,
+                 params: WmParams = WmParams.Default): DataFrame = {
     Tables.register(spark, sfDir)
-    WmCache.ensure(spark, sfDir)
-    val stego = spark.table("g_stego")
+    val stego = WmCache.stego(spark, sfDir, params)
       .groupBy(col("id"))
       .agg(array_sort(collect_list(struct(col("pos"), col("sval")))).as("s"))
       .select(col("id"), expr("transform(s, e -> e.sval)").as("sv"))
@@ -45,8 +46,9 @@ object Writeback {
   }
 
   /** Write the watermarked table; returns the row count written. */
-  def writeStego(spark: SparkSession, sfDir: String, outPath: String): Long = {
-    val df = stegoTable(spark, sfDir)
+  def writeStego(spark: SparkSession, sfDir: String, outPath: String,
+                 params: WmParams = WmParams.Default): Long = {
+    val df = stegoTable(spark, sfDir, params)
     df.write.mode("overwrite").parquet(outPath)
     spark.read.parquet(outPath).count()
   }

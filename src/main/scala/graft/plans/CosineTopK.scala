@@ -72,23 +72,6 @@ case class CosineTopKExec(k: Int, queries: SparkPlan, corpus: SparkPlan,
   override def left: SparkPlan = queries
   override def right: SparkPlan = corpus
 
-  // (sim asc, cid desc) min-heap ordering: the ROOT is the WORST kept
-  // entry, so offer() evicts correctly; final ranking reverses it.
-  private type Entry = (Double, Long) // (rounded sim, cid)
-  private val heapOrd: Ordering[Entry] =
-    Ordering.by[Entry, (Double, Long)] { case (s, c) => (-s, c) }
-
-  private def offer(h: scala.collection.mutable.PriorityQueue[Entry],
-                    e: Entry): Unit = {
-    if (h.size < k) h.enqueue(e)
-    else {
-      val worst = h.head // via heapOrd: smallest sim, then largest cid
-      if (e._1 > worst._1 || (e._1 == worst._1 && e._2 < worst._2)) {
-        h.dequeue(); h.enqueue(e)
-      }
-    }
-  }
-
   private def normalize(v: Array[Double]): Array[Double] = {
     var ss = 0.0; var i = 0
     while (i < v.length) { ss += v(i) * v(i); i += 1 }
@@ -106,14 +89,13 @@ case class CosineTopKExec(k: Int, queries: SparkPlan, corpus: SparkPlan,
     val qRows: Array[(Long, Array[Double])] = queries.executeCollect()
       .map(r => (r.getLong(0), normalize(r.getArray(1).toDoubleArray())))
     val bc = sparkContext.broadcast(qRows)
-    val ord = heapOrd
+    val k = this.k
 
     // pass 1: per corpus partition, bounded heap per query
-    val partials: RDD[(Long, Array[Entry])] =
+    val partials: RDD[(Long, BoundedTopK)] =
       corpus.execute().mapPartitions { it =>
         val qs = bc.value
-        val heaps = qs.map(_ =>
-          new scala.collection.mutable.PriorityQueue[Entry]()(ord))
+        val heaps = qs.map(_ => new BoundedTopK(k))
         it.foreach { row =>
           val cid = row.getLong(0)
           val cvec = normalize(row.getArray(1).toDoubleArray())
@@ -124,41 +106,29 @@ case class CosineTopKExec(k: Int, queries: SparkPlan, corpus: SparkPlan,
               var s = 0.0; var i = 0
               val n = math.min(qvec.length, cvec.length)
               while (i < n) { s += qvec(i) * cvec(i); i += 1 }
-              // BigDecimal.valueOf (Double.toString canonical form), the
-              // same rounding path as Spark SQL's round() — exact parity
-              // with the declarative vec_topk formulation. NaN sims
-              // (NaN input elements) are skipped, not rounded.
-              if (!s.isNaN) {
-                val sim = java.math.BigDecimal.valueOf(s)
-                  .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-                offer(heaps(qi), (sim, cid))
-              }
+              // rounded as Spark SQL's round() — exact parity with the
+              // declarative vec_topk formulation. NaN sims (NaN input
+              // elements) are skipped, not ranked.
+              if (!s.isNaN) heaps(qi).offerRounded(s, cid)
             }
             qi += 1
           }
         }
-        qs.iterator.zipWithIndex.map { case ((qid, _), qi) =>
-          (qid, heaps(qi).toArray)
-        }
+        qs.iterator.zip(heaps.iterator).map { case ((qid, _), h) => (qid, h) }
       }
 
     // pass 2: merge partials per query (|partitions|·|Q|·k entries — the
     // bounded state a search API contracts for), rank, emit UnsafeRows
     val schema = output
-    partials.reduceByKey { (a, b) =>
-      val h = new scala.collection.mutable.PriorityQueue[Entry]()(ord)
-      a.foreach(offer(h, _)); b.foreach(offer(h, _))
-      h.toArray
-    }.mapPartitions { it =>
+    partials.reduceByKey(_ merge _).mapPartitions { it =>
       val proj = UnsafeProjection.create(schema.map(_.dataType).toArray)
       val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(4)
-      it.flatMap { case (qid, entries) =>
-        entries.sortBy { case (s, c) => (-s, c) }.iterator.zipWithIndex
-          .map { case ((sim, cid), i) =>
-            row.update(0, qid); row.update(1, cid)
-            row.update(2, sim); row.update(3, (i + 1).toLong)
-            proj.apply(row).copy().asInstanceOf[InternalRow]
-          }
+      it.flatMap { case (qid, h) =>
+        Iterator.tabulate(h.size) { i =>
+          row.update(0, qid); row.update(1, h.id(i))
+          row.update(2, h.score(i)); row.update(3, (i + 1).toLong)
+          proj.apply(row).copy().asInstanceOf[InternalRow]
+        }
       }
     }
   }

@@ -136,8 +136,8 @@ object WmParams {
 }
 
 final class Gen(d: Dialect, useViews: Boolean = false,
-                params: WmParams = WmParams.Default,
-                lshPlanes: Int = Wm.LshPlanes,
+                val params: WmParams = WmParams.Default,
+                val lshPlanes: Int = Wm.LshPlanes,
                 decontEvalMod: Int = Wm.DecontEvalMod,
                 simhashBands: Int = Wm.SimhashBands,
                 l1Hashes: Int = 2) {
@@ -245,12 +245,11 @@ final class Gen(d: Dialect, useViews: Boolean = false,
 
   private val lshCtes = "bkt as (" + lshBucketSql("nn") + ")"
 
-  /** Single-scan g_bkt BUILD (Spark-only, r13): all L bucket ids
-    * compute in ONE corpus pass and stack() out map-side — the
-    * union-all form scanned + normalized the corpus once per table.
-    * Rows identical to the inline bkt CTE (same bucket expressions,
-    * stack's first column is the same t literal), so every consumer —
-    * and the oracle's inline rendering — is unaffected. */
+  /** The g_bkt stage SQL (Spark-only): all L bucket ids compute in
+    * ONE corpus pass and stack() out map-side. Rows identical to the
+    * inline bkt CTE (same bucket expressions, stack's first column is
+    * the same t literal). It specifies the stage; the engine builds
+    * g_bkt with operators.ChainKernels.buckets. */
   def lshBucketStackBuildSql: String = {
     val cols = (0 until LshTables).map(t => s"${lshBucketExpr(t)} as b$t").mkString(",\n       |         ")
     val stackArgs = (0 until LshTables).map(t => s"$t, b$t").mkString(", ")
@@ -369,14 +368,15 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     * (reference: pg_func.py:104-122 build_hnsw_index/compute_in_degrees).
     * Work = sum of squared bucket sizes, not N².
     *
-    * The Spark side SALTS the bucket self-join (left side keyed
-    * id % 4, right side replicated to all 4 salts — the SkewSalt
-    * pattern, same rewrite as dedup_embedding): a hot LSH bucket's
-    * within-bucket pair expansion fans out over 4 reducers instead of
-    * straggling the whole shared chain on one task. AQE skew handling
-    * cannot split this (the expansion happens inside the join, not in
-    * its inputs). Pair set is identical; the oracle keeps the plain
-    * join. */
+    * This is the kNN graph's SPECIFICATION: the oracle's inline chain
+    * and the g_knn stage SQL, which the engine executes as the
+    * precompiled kernel operators.ChainKernels.knn (row-identical —
+    * ChainKernelSpec). The Spark side SALTS the bucket self-join (left
+    * side keyed id % 4, right side replicated to all 4 salts — the
+    * SkewSalt pattern, same rewrite as dedup_embedding), so that a
+    * Spark-SQL rendering of the chain spreads a hot bucket's pair
+    * expansion over 4 reducers. Pair set is identical; the oracle
+    * keeps the plain join. */
   private val knnCtes = {
     val salted =
       s"""cand as (select distinct a.id as src, b.id as dst
@@ -978,7 +978,15 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     * pure projection pipeline gets exponentially duplicated by
     * projection collapsing). The renormalizer comes analytically from
     * the projections: ||n+δ||² = 1 + Σ_g (2·sh_g·pj_g + sh_g²)/cnt_g —
-    * no second aggregation. One small shuffle (carrier rows only). */
+    * no second aggregation. One small shuffle (carrier rows only).
+    *
+    * The masked sums fold in the order the exploded rows reach the
+    * aggregation, so the Spark side pins it: carriers are the
+    * broadcast side of cex, and each vector's exn rows stream through
+    * in ascending pos — the fold WmEmbed (and the g_stego kernel)
+    * mirrors. Left to the planner, a small corpus broadcast exn
+    * instead, whose hashed relation returns a key's rows newest-first:
+    * the sums ran in descending pos and differed in the last bit. */
   private val stegoCtes = {
     val pSums = (0 until MsgLen).map(g =>
       s"sum(nval * ${d.arrIdx0(wLitOf(g), "pos - 1")}) as p$g").mkString(",\n|           ")
@@ -988,7 +996,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     }
     val pnSq = (0 until MsgLen).map(g =>
       s"(2 * sh$g * p$g + sh$g * sh$g) / ${kc.groupCnt(g)}").mkString(" + ")
-    s"""cex as (select c.vec_id as id, c.blk, x.pos, x.val / x.nrm as nval, x.nrm
+    val hint = if (d.name == "spark") "/*+ BROADCAST(c) */ " else ""
+    s"""cex as (select ${hint}c.vec_id as id, c.blk, x.pos, x.val / x.nrm as nval, x.nrm
        |        from carriers c join exn x on x.id = c.vec_id),
        |eagg as (select id, blk, max(nrm) as nrm,
        |           $pSums
@@ -1079,12 +1088,16 @@ final class Gen(d: Dialect, useViews: Boolean = false,
   private def wmChain(upTo: String): String =
     if (views) cachedChain(upTo) else fullChain(upTo)
 
-  /** SQL to materialize each cached artifact (graft.WmCache), in
-    * order: the watermark chain, then the ANN indexes. A stage reads
-    * only the g_* views it names, so WmCache derives each stage's
-    * inputs from this text. Spark-dialect only. */
+  /** The SQL that SPECIFIES each cached artifact (graft.WmCache), in
+    * build order: the watermark chain, then the ANN indexes. A stage
+    * reads only the g_* views it names, so WmCache derives each
+    * stage's inputs from this text, and the text keys its scratch.
+    * WmCache executes g_indeg, g_carriers and the indexes as this SQL;
+    * g_bkt, g_knn and g_stego run as the precompiled kernels of
+    * operators.ChainKernels, which ChainKernelSpec holds row-identical
+    * to it. Spark-dialect only. */
   lazy val cacheStages: Seq[(String, String)] = Seq(
-    // r13: one corpus scan + stack instead of the L-scan union (rows
+    // one corpus scan + stack instead of the L-scan union (rows
     // identical — lshBucketStackBuildSql; serving queries and the
     // oracle's inline bkt CTE are untouched)
     "g_bkt" -> lshBucketStackBuildSql,
@@ -4901,9 +4914,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // exactly one replica) run in the same query; per bucket the two
     // pair counts plus the intersection count witness set equality
     // (n_plain = n_salted = n_matched ⇔ identical pair sets, since
-    // neither form can emit a duplicate). The salted form is what the
-    // shared chain actually ships (knnCtes): a hot LSH bucket's pair
-    // expansion fans over 4 reducers instead of straggling one task.
+    // neither form can emit a duplicate). The salted form is the
+    // g_knn stage SQL (knnCtes), the specification the g_knn kernel
+    // is checked against.
     "knn_edges_salted" renders
       s"""${wmChain("lsh")},
          |sa as (select t, b, id, id % 4 as s from bkt),

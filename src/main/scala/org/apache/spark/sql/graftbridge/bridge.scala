@@ -1,6 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one internal hop a custom LogicalPlan needs: turn it into a
@@ -14,4 +17,12 @@ object DataFrameBridge {
 
   def logicalPlan(df: DataFrame): LogicalPlan =
     df.queryExecution.logical
+
+  /** `rows` (already in Catalyst's internal form, one field per column
+    * of `schema`) as a DataFrame over a lineage-free LogicalRDD — how a
+    * JVM kernel hands its output back to the SQL side without a
+    * Row-to-InternalRow conversion pass. */
+  def fromRows(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
 }

@@ -1,8 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.api.Graft
 import graft.operators.{Backup, Writeback}
-import graft.sqlgen.Wm
+import graft.sqlgen.{Wm, WmParams}
 
 /** Carrier-id persistence: embed + persist the id list, then a FRESH
   * session (no g_* chain views, no selection-chain rebuild) recovers
@@ -44,5 +45,18 @@ class CarrierIdsSpec extends AnyFunSuite {
     assert(thrown.isInstanceOf[javax.crypto.AEADBadTagException] ||
       thrown.isInstanceOf[IllegalArgumentException],
       s"unexpected failure mode: $thrown")
+  }
+
+  test("a table written with custom WmParams carries the custom watermark") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_custom_ids").toString
+    val sf = new java.io.File(TestSpark.Sf).getParent + "/sf0.01"
+    val p = WmParams(message = "CUSTOM MESSAGE!!", key = "another-key-77")
+    val g = new Graft(spark, sf, p)
+    assert(g.writeWatermarked(s"$dir/stego") > 0)
+    assert(Backup.saveCarrierIds(spark, sf, s"$dir/ids", p) > 0)
+    // not the default watermark: the custom key selects other carriers
+    assert(!g.watermarkedTable.exceptAll(Graft(spark, sf).watermarkedTable).isEmpty)
+    val vectors = spark.newSession().read.parquet(s"$dir/stego")
+    assert(g.recoverMessageFromIds(vectors, s"$dir/ids") == "CUSTOM MESSAGE!!")
   }
 }

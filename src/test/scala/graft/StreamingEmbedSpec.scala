@@ -6,9 +6,9 @@ import graft.streaming.Streams
 
 /** Stream-embedded vs batch-embedded: original vector cells fed as an
   * out-of-order stream through Streams.embedStream must produce
-  * BIT-IDENTICAL stego values to the batch `wm_embed` SQL chain (both
+  * BIT-IDENTICAL stego values to the batch chain's g_stego cells (both
   * paths implement the same QIM math; WmEmbed mirrors the generated
-  * SQL's fold order exactly). */
+  * SQL's fold order and decimal lattice exactly). */
 class StreamingEmbedSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -47,15 +47,13 @@ class StreamingEmbedSpec extends AnyFunSuite {
         .map(c => (c.vecId, c.pos.toLong) -> c.sval).toMap
       assert(mid < streamed.size, "second batch completed more vectors")
 
-      // batch chain emits round(sval, 6); compare at that precision —
-      // the underlying doubles are produced by the same fold order, so
-      // rounding both sides to 6 must agree EXACTLY
-      val batch = SparkEntry.queries("wm_embed")(spark, TestSpark.Sf)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      // the batch chain's raw stego cells: every streamed cell must be
+      // the same double
+      val batch = WmCache.stego(spark, TestSpark.Sf)
+        .collect().map(r => (r.getLong(0), r.getInt(1).toLong) -> r.getDouble(2)).toMap
       assert(streamed.keySet == batch.keySet, "same carrier cells")
       for ((k, sv) <- streamed)
-        assert(BigDecimal(sv).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble == batch(k),
-          s"cell $k: stream=$sv batch=${batch(k)}")
+        assert(sv == batch(k), s"cell $k: stream=$sv batch=${batch(k)}")
     } finally q.stop()
   }
 }
