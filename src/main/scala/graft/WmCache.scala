@@ -44,9 +44,11 @@ import graft.sqlgen.{Gen, SparkDialect, WmParams}
   *    `spark.graft.scratch` conf / SPARK_GRAFT_SCRATCH env; "off"
   *    disables): its five stages are written once under a key derived
   *    from the sf dir, the DATA fingerprint (embeddings.parquet
-  *    size+mtime), and the md5 of the chain's stage SQL — so a testdata
-  *    refresh or any edit to a stage's specification auto-invalidates,
-  *    never serving stale rows. A later session registers plain parquet
+  *    size+mtime), and the md5 of the chain's stage SQL and of
+  *    ChainKernels.Revision — so a testdata refresh or an edit to a
+  *    stage's specification invalidates it by itself, and a change to
+  *    a kernel's output (ChainKernels, WmEmbed) invalidates it when it
+  *    bumps that revision. A later session registers plain parquet
   *    scans — chain build cost ≈ read cost. Writes go to a
   *    process-unique tmp dir renamed into place, so concurrent writers
   *    race safely. The cached stages are the SMALL derived artifacts
@@ -91,10 +93,15 @@ object WmCache {
     }
     val inChain: Set[String] = chain.map(_._1).toSet
 
-    /** What a build reading `name` depends on: the stage's build SQL
+    /** What keys a build of stage `name`: its SQL, and for a chain
+      * stage also the revision of the kernels that execute the chain. */
+    def keyText(name: String): String =
+      if (inChain(name)) s"${sqlOf(name)}|kernels=${ChainKernels.Revision}" else sqlOf(name)
+
+    /** What a build reading `name` depends on: the stage's key text
       * and, transitively, that of every stage it reads. */
     val lineage: Map[String, String] =
-      names.map(n => n -> closure(n).map(x => s"$x=${sqlOf(x)}").mkString(";")).toMap
+      names.map(n => n -> closure(n).map(x => s"$x=${keyText(x)}").mkString(";")).toMap
   }
 
   private val registries = new java.util.concurrent.ConcurrentHashMap[Gen, Registry]()
@@ -132,11 +139,12 @@ object WmCache {
     }
   }
 
-  /** Cache key: sf dir + data fingerprint + chain-SQL fingerprint. */
-  private def cacheKey(dir: String, stages: Seq[(String, String)]): String = {
+  /** Cache key: sf dir + data fingerprint + the chain's key texts
+    * (stage SQL and kernel revision). */
+  private def cacheKey(dir: String, reg: Registry): String = {
     val emb = new File(s"$dir/embeddings.parquet")
     val raw = Seq(dir, emb.length.toString, emb.lastModified.toString,
-      stages.map { case (vn, sq) => vn + "=" + sq }.mkString(";")).mkString("|")
+      reg.chain.map { case (vn, _) => vn + "=" + reg.keyText(vn) }.mkString(";")).mkString("|")
     graft.functions.Prf.md5hex(raw).take(16)
   }
 
@@ -153,9 +161,10 @@ object WmCache {
         // the g_* views and every query reading them agree on the
         // N-derived bucket layout (the stage-SQL md5 in the scratch key
         // invalidates any previously cached layout automatically)
-        val stages = registry(spark, dir).chain
+        val reg = registry(spark, dir)
+        val stages = reg.chain
         val viaScratch = scratchRoot(spark).exists { root =>
-          try { ensureScratch(spark, dir, root, stages); true }
+          try { ensureScratch(spark, dir, root, reg); true }
           catch { case e: Exception =>
             System.err.println(s"[wmcache] scratch failed (${e.getMessage}), " +
               "falling back to localCheckpoint"); false }
@@ -266,8 +275,9 @@ object WmCache {
   /** Build-or-reuse the parquet scratch for (dir, chain SQL), then
     * register every stage as a parquet-backed temp view. */
   private def ensureScratch(spark: SparkSession, dir: String, root: File,
-                            stages: Seq[(String, String)]): Unit = {
-    val base = new File(root, cacheKey(dir, stages))
+                            reg: Registry): Unit = {
+    val stages = reg.chain
+    val base = new File(root, cacheKey(dir, reg))
     val served = if (new File(base, "_DONE").exists()) base else {
       val tmp = new File(root,
         s"${base.getName}.tmp-${ProcessHandle.current().pid()}-${System.nanoTime()}")

@@ -24,7 +24,10 @@ final class Graft(spark: SparkSession, dir: String,
   // per-call embed_watermark(message, embed_rate, encryption_key)
   // arguments (pg_func.py:616)
   private val isDefault = params == WmParams.Default
-  private lazy val customGen = new Gen(SparkDialect, useViews = false, params)
+  // at the dir's N-derived plane count, like the chain its write-back
+  // (WmCache.carriers/stego) selects carriers from
+  private lazy val customGen = new Gen(SparkDialect, useViews = false, params,
+    lshPlanes = SparkEntry.sparkGenFor(spark, dir).lshPlanes)
   private def q(name: String): DataFrame =
     if (isDefault) SparkEntry.queries(name)(spark, dir)
     else if (customGen.keys.contains(name)) {

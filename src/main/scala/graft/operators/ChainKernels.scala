@@ -36,6 +36,11 @@ import graft.sqlgen.{Wm, WmParams}
   */
 object ChainKernels {
 
+  /** The kernels' revision, part of the chain's scratch key (WmCache):
+    * bump it with any change to what a kernel or WmEmbed computes, so
+    * no cached chain built by an older kernel is served. */
+  val Revision = 1
+
   private val BktSchema = StructType(Seq(
     StructField("id", LongType), StructField("t", IntegerType), StructField("b", LongType)))
   private val KnnSchema = StructType(Seq(
@@ -96,18 +101,19 @@ object ChainKernels {
     DataFrameBridge.fromRows(spark, rows, BktSchema)
   }
 
-  /** g_knn as (src, dst, sim, rn): each vector's k most similar
+  /** g_knn as (src, dst, sim, rn): each vector's Wm.K most similar
     * bucket-mates over all tables, ranked by (sim desc, dst asc).
     *
     * One shuffle by (t, b) brings each bucket's members to one task,
     * which computes each pair's dot product once and keeps a bounded
-    * top-k per member: m(m−1)/2 dot products and m heaps for a bucket
+    * top-K per member: m(m−1)/2 dot products and m heaps for a bucket
     * of m members (the largest bucket of the benchmark's 20,000-vector
-    * replica, at 10 planes, has 85). A bucket is never split: replicating vectors
-    * across tasks to split a hot one would multiply the vector
-    * shuffle. A second shuffle by src merges the ≤ tables·k candidates
-    * of each vector, dropping a dst that two tables both found. */
-  def knn(spark: SparkSession, planes: Int, k: Int = Wm.K): DataFrame = {
+    * replica, at 10 planes, has 85). A bucket is never split:
+    * replicating vectors across tasks to split a hot one would
+    * multiply the vector shuffle. A second shuffle by src merges the
+    * ≤ tables·K candidates of each vector, dropping a dst that two
+    * tables both found. */
+  def knn(spark: SparkSession, planes: Int): DataFrame = {
     val tables = planeTables(planes)
     val parts = spark.sessionState.conf.numShufflePartitions
     val members = vectors(spark).flatMap { case (id, v) =>
@@ -115,7 +121,7 @@ object ChainKernels {
       Iterator.tabulate(tables.length)(t => ((t, bucket(n, tables(t))), (id, n)))
     }
     val rows = members.groupByKey(parts)
-      .flatMap { case (_, ms) => bucketTopK(ms.toArray, k) }
+      .flatMap { case (_, ms) => bucketTopK(ms.toArray) }
       .reduceByKey(_ merge _, parts)
       .flatMap { case (src, top) =>
         Iterator.tabulate(top.size)(i => InternalRow(src, top.id(i), top.score(i), i + 1))
@@ -123,10 +129,10 @@ object ChainKernels {
     DataFrameBridge.fromRows(spark, rows, KnnSchema)
   }
 
-  /** Every member's bounded top-k among the other members of one
+  /** Every member's bounded top-K among the other members of one
     * bucket; members alone in the bucket yield nothing. */
-  private def bucketTopK(ms: Array[(Long, Array[Double])], k: Int): Iterator[(Long, BoundedTopK)] = {
-    val tops = Array.fill(ms.length)(new BoundedTopK(k))
+  private def bucketTopK(ms: Array[(Long, Array[Double])]): Iterator[(Long, BoundedTopK)] = {
+    val tops = Array.fill(ms.length)(new BoundedTopK(Wm.K))
     var i = 0
     while (i < ms.length) {
       var j = i + 1

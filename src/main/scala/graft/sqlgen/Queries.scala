@@ -245,21 +245,6 @@ final class Gen(d: Dialect, useViews: Boolean = false,
 
   private val lshCtes = "bkt as (" + lshBucketSql("nn") + ")"
 
-  /** The g_bkt stage SQL (Spark-only): all L bucket ids compute in
-    * ONE corpus pass and stack() out map-side. Rows identical to the
-    * inline bkt CTE (same bucket expressions, stack's first column is
-    * the same t literal). It specifies the stage; the engine builds
-    * g_bkt with operators.ChainKernels.buckets. */
-  def lshBucketStackBuildSql: String = {
-    val cols = (0 until LshTables).map(t => s"${lshBucketExpr(t)} as b$t").mkString(",\n       |         ")
-    val stackArgs = (0 until LshTables).map(t => s"$t, b$t").mkString(", ")
-    s"""with $nvCtes,
-       |bks as (select id,
-       |         $cols
-       |        from nn)
-       |select id, t, b from (select id, stack($LshTables, $stackArgs) as (t, b) from bks) _s""".stripMargin
-  }
-
   /** MIPS (norm-augmented) sign-LSH routing — ev/nv + the 1-row max
     * norm + augmented corpus buckets + un-augmented query buckets +
     * candidate pairs. Shared by vec_topk_ip_lsh and its recall eval.
@@ -1097,10 +1082,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     * operators.ChainKernels, which ChainKernelSpec holds row-identical
     * to it. Spark-dialect only. */
   lazy val cacheStages: Seq[(String, String)] = Seq(
-    // one corpus scan + stack instead of the L-scan union (rows
-    // identical — lshBucketStackBuildSql; serving queries and the
-    // oracle's inline bkt CTE are untouched)
-    "g_bkt" -> lshBucketStackBuildSql,
+    "g_bkt" -> s"with ${Seq(nvCtes, lshCtes).mkString(",\n")}\nselect id, t, b from bkt",
     "g_knn" -> s"with ${Seq(nvCtes, viewAlias("bkt", "g_bkt"), knnCtes).mkString(",\n")}\nselect src, dst, sim, rn from knn",
     "g_indeg" -> s"with ${Seq(nvCtes, viewAlias("knn", "g_knn"), indegCte).mkString(",\n")}\nselect vec_id, in_degree from indeg",
     "g_carriers" -> s"with ${Seq(nvCtes, viewAlias("indeg", "g_indeg"), carrierCtes).mkString(",\n")}\nselect vec_id, in_degree, sel_rank, blk from carriers",

@@ -89,18 +89,31 @@ class ChainKernelSpec extends AnyFunSuite {
     assert(lone.join(knn, lone("id") === knn("src")).isEmpty)
   }
 
-  test("kernels equal the stage SQL on a corpus scaled to lshPlanesFor = 10") {
-    // the sf0.1 vectors and 8 seeded perturbations of them: 18,000
-    // vectors, so the plane count grows past the static 6
+  /** The sf0.1 vectors and 8 seeded perturbations of them: 18,000
+    * vectors, so the plane count grows past the static 6 to 10. */
+  private lazy val scaled: String = {
     val sf01 = spark.read.parquet(new File(TestSpark.Sf).getParent + "/sf0.1/embeddings.parquet")
     val replicas = (0 until 9).map(r => sf01.selectExpr(
       s"vec_id + ${r * 100000} as vec_id",
       s"transform(embedding, (x, i) -> cast(x + ${r * 0.01} * sin(vec_id * 7 + i * 13 + $r) as float)) as embedding",
       "label")).reduce(_ union _)
-    val dir = corpus(replicas)
-    assert(Wm.lshPlanesFor(Tables.vectorCount(spark, dir)) == 10)
-    val s = checkChain(dir, 10)
+    corpus(replicas)
+  }
+
+  test("kernels equal the stage SQL on a corpus scaled to lshPlanesFor = 10") {
+    assert(Wm.lshPlanesFor(Tables.vectorCount(spark, scaled)) == 10)
+    val s = checkChain(scaled, 10)
     assert(singletonBuckets(s) > 0, "the corpus has a one-member bucket")
+  }
+
+  test("a custom-params Graft reports the carriers its write-back embeds, past the static plane count") {
+    val p = WmParams(message = "CUSTOM MESSAGE!!", key = "another-key-77")
+    val s = session(scaled)
+    val cols = Seq("vec_id", "in_degree", "sel_rank", "blk").map(c => s"cast($c as bigint) as $c")
+    val reported = new graft.api.Graft(s, scaled, p).carriers.selectExpr(cols: _*)
+    val written = WmCache.carriers(s, scaled, p).selectExpr(cols: _*)
+    assert(reported.count() > 0)
+    assert(reported.exceptAll(written).isEmpty && written.exceptAll(reported).isEmpty)
   }
 
   test("the g_stego kernel equals the stage SQL under non-default WmParams") {
