@@ -7,9 +7,9 @@ import graft.operators.PcaSolve
 /** Driver contract — see /root/repo/SURVEY.md §2 for the operator
   * inventory behind each query key. */
 object SparkEntry {
-  // Spark rendering reads the wm chain and the ANN indexes from
-  // WmCache's materialized g_* views; the DuckDB oracle always renders
-  // the full inline chain.
+  // Spark rendering reads the wm chain and the ANN indexes from their
+  // g_* artifact views (WmCache declares them, Scratch keeps them); the
+  // DuckDB oracle always renders the full inline chain.
   //
   // The Spark side derives its LSH plane count from the corpus size
   // (the §4 sizing formula, wired into the entrypoint): at the
@@ -47,8 +47,10 @@ object SparkEntry {
     graft.sqlgen.Wm.LshPlanes, graft.sqlgen.Wm.SimhashBands, 2)
   private lazy val duckGen  = new Gen(DuckDialect)
 
-  /** `sql` as a DataFrame, after ensuring every artifact it reads. */
+  /** `sql` as a DataFrame over `dir`'s tables, after ensuring every
+    * artifact it reads. */
   private def sqlOn(s: SparkSession, dir: String, sql: String): DataFrame = {
+    Tables.register(s, dir)
     WmCache.ensureReads(s, dir, sql)
     s.sql(sql)
   }
@@ -66,10 +68,7 @@ object SparkEntry {
     * others. */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     sparkGen.keys.map { name =>
-      name -> ((s: SparkSession, dir: String) => {
-        Tables.register(s, dir)
-        sqlOn(s, dir, sparkGenFor(s, dir).sql(name))
-      })
+      name -> ((s: SparkSession, dir: String) => sqlOn(s, dir, sparkGenFor(s, dir).sql(name)))
     }.toMap ++ programmatic
 
   /** Keys served by a PROGRAMMATIC entry (scratch tables, JVM driver
@@ -87,14 +86,10 @@ object SparkEntry {
       // whole cost of either readout, and the compact key was
       // re-running the append key's beam inline (53.7 s of its 100×
       // serving leg; r10 verdict item 3). Oracles inline the chain.
-      "vec_graph_append" -> ((s, dir) => {
-        Tables.register(s, dir)
-        sqlOn(s, dir, sparkGenFor(s, dir).graphAppendSql(Some(appendLinksView(s, dir))))
-      }),
-      "vec_graph_compact" -> ((s, dir) => {
-        Tables.register(s, dir)
-        sqlOn(s, dir, sparkGenFor(s, dir).graphCompactSql(Some(appendLinksView(s, dir))))
-      }),
+      "vec_graph_append" -> ((s, dir) =>
+        sqlOn(s, dir, sparkGenFor(s, dir).graphAppendSql(Some(appendLinksView(s, dir))))),
+      "vec_graph_compact" -> ((s, dir) =>
+        sqlOn(s, dir, sparkGenFor(s, dir).graphCompactSql(Some(appendLinksView(s, dir))))),
       // quantile sketches over the PERSISTED histogram artifact: the
       // inline mm/bn CTEs are multi-referenced and Catalyst re-inlines
       // per reference (~11 lineitem scans executed for the 128-bin
@@ -103,12 +98,10 @@ object SparkEntry {
       // pays ONE raw corpus scan (the exact in-bin selection pass)
       // plus ≤128-row view scans. Oracles inline everything.
       "sketch_quantiles" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_qhist", sparkGen.quantHistBuildSql)
         sqlOn(s, dir, sparkGen.sketchQuantilesSql(Some("g_qhist")))
       }),
       "sketch_quantile_curve" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_qhist_curve", sparkGen.quantCurveHistBuildSql)
         sqlOn(s, dir, sparkGen.sketchQuantileCurveSql(Some("g_qhist_curve")))
       }),
@@ -118,7 +111,6 @@ object SparkEntry {
       // scans via mm/bn CTE re-inlining). One raw events scan remains
       // (the exact in-bin selection); oracles inline everything.
       "events_value_quantiles" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_evqhist", sparkGen.evQuantHistBuildSql)
         sqlOn(s, dir, sparkGen.eventsValueQuantilesSql(Some("g_evqhist")))
       }),
@@ -130,7 +122,6 @@ object SparkEntry {
       // out map-side; every curve readout folds from census rows
       // (zero raw scans at serve time). Oracle inlines everything.
       "dedup_shingle_curve" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_shcensus", sparkGen.shingleCensusBuildSql)
         sqlOn(s, dir, sparkGen.dedupShingleCurveSql(Some("g_shcensus")))
       }),
@@ -141,21 +132,18 @@ object SparkEntry {
       // and codes persist as scratch artifacts over the cached IVF
       // views (build-once/serve-many); oracles inline the full chain.
       "vec_topk_ivfpq_res" -> ((s, dir) => {
-        Tables.register(s, dir)
         val gen = sparkGenFor(s, dir)
         Scratch.table(s, dir, "g_rpq_ct", gen.rpqTrainBuildSql)
         Scratch.table(s, dir, "g_rpq_codes", gen.rpqCodesBuildSql)
         sqlOn(s, dir, gen.ivfPqResSql(Some(("g_rpq_ct", "g_rpq_codes"))))
       }),
       "ann_recall_eval_ivfpq_res" -> ((s, dir) => {
-        Tables.register(s, dir)
         val gen = sparkGenFor(s, dir)
         Scratch.table(s, dir, "g_rpq_ct", gen.rpqTrainBuildSql)
         Scratch.table(s, dir, "g_rpq_codes", gen.rpqCodesBuildSql)
         sqlOn(s, dir, gen.annRecallEvalIvfPqResSql(Some(("g_rpq_ct", "g_rpq_codes"))))
       }),
       "vec_ivfpq_res_distortion" -> ((s, dir) => {
-        Tables.register(s, dir)
         val gen = sparkGenFor(s, dir)
         Scratch.table(s, dir, "g_rpq_ct", gen.rpqTrainBuildSql)
         Scratch.table(s, dir, "g_rpq_codes", gen.rpqCodesBuildSql)
@@ -169,7 +157,6 @@ object SparkEntry {
       // table, and the fused top-10 re-serves from stats alone.
       // Oracle inlines the stats build.
       "search_hybrid_upsert" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_hyb_stats", sparkGen.hybStatsBuildSql)
         Scratch.table(s, dir, "g_hyb_delta", sparkGen.hybDeltaBuildSql)
         Scratch.table(s, dir, "g_hyb_post",
@@ -186,7 +173,6 @@ object SparkEntry {
       // the post state (the dedup_upsert shape for the other signature
       // family; r10 verdict item 7). Oracle inlines both builds.
       "dedup_upsert_minhash" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_mhsig", sparkGen.minhashSigBuildSql)
         Scratch.table(s, dir, "g_mhpairs",
           sparkGen.minhashPairsFromSigsSql("g_mhsig"))
@@ -199,7 +185,6 @@ object SparkEntry {
       // and the census aggregates the parquet rows. Oracle inlines
       // the full chain.
       "wm_nn_decode_deep" -> ((s, dir) => {
-        Tables.register(s, dir)
         // the logits artifact builds as a mapPartitions JVM forward
         // pass (operators.NnDeep — Catalyst optimization ALONE on the
         // unrolled ~9k-literal SQL tree costs ~45 s per action, and
@@ -208,7 +193,7 @@ object SparkEntry {
         // constants + identical IEEE step order (NnDeepSpec pins it),
         // and the rendered build SQL text versions the cache key, so
         // any arithmetic change invalidates the artifact
-        Scratch.tableDf(s, dir, "g_nn_deep_logits",
+        Scratch.artifact(s, dir, "g_nn_deep_logits",
           sparkGen.nnDeepLogitsBuildSql)(graft.operators.NnDeep.logits(s, dir))
         sqlOn(s, dir, sparkGen.nnDecodeDeepSql(Some("g_nn_deep_logits")))
       }),
@@ -242,40 +227,29 @@ object SparkEntry {
       // analog of the WmCache scratch stages: a production pipeline
       // keeps its candidate-pair table, and every grouping/report
       // over it reuses the materialized rows.
-      "dedup_components" -> ((s, dir) => {
-        Tables.register(s, dir)
-        sqlOn(s, dir, sparkGen.dedupComponentsSql(Some(simCompViews(s, dir))))
-      }),
+      "dedup_components" -> ((s, dir) =>
+        sqlOn(s, dir, sparkGen.dedupComponentsSql(Some(simCompViews(s, dir))))),
       // the deletion groups APPLIED: per-source kept/dropped report
       // over the same checkpointed pair chain
-      "dedup_apply" -> ((s, dir) => {
-        Tables.register(s, dir)
-        sqlOn(s, dir, sparkGen.dedupApplySql(Some(simCompViews(s, dir))))
-      }),
+      "dedup_apply" -> ((s, dir) =>
+        sqlOn(s, dir, sparkGen.dedupApplySql(Some(simCompViews(s, dir))))),
       // quality-aware canonical selection: best text_quality member
       // per near-dup component, over the same checkpointed pair chain
-      "dedup_cluster_rep" -> ((s, dir) => {
-        Tables.register(s, dir)
-        sqlOn(s, dir, sparkGen.dedupClusterRepSql(Some(simCompViews(s, dir))))
-      }),
+      "dedup_cluster_rep" -> ((s, dir) =>
+        sqlOn(s, dir, sparkGen.dedupClusterRepSql(Some(simCompViews(s, dir))))),
       // does keep-lowest-id cost quality vs keep-best? per-source
       // policy comparison over the same checkpointed pair chain
-      "dedup_quality_impact" -> ((s, dir) => {
-        Tables.register(s, dir)
-        sqlOn(s, dir, sparkGen.dedupQualityImpactSql(Some(simCompViews(s, dir))))
-      }),
+      "dedup_quality_impact" -> ((s, dir) =>
+        sqlOn(s, dir, sparkGen.dedupQualityImpactSql(Some(simCompViews(s, dir))))),
       // which sources copy from each other: the syndication matrix
       // over the same checkpointed near-dup pair chain
-      "dedup_cross_source" -> ((s, dir) => {
-        Tables.register(s, dir)
-        sqlOn(s, dir, sparkGen.dedupCrossSourceSql(Some(simPairsView(s, dir))))
-      }),
+      "dedup_cross_source" -> ((s, dir) =>
+        sqlOn(s, dir, sparkGen.dedupCrossSourceSql(Some(simPairsView(s, dir))))),
       // rotated-BQ search over the PERSISTED packed rotated codes
       // (g_rbq — the rotated twin of the cached g_bq; inline, the
       // 64-sum rotation butterfly executed 3x via rbq re-inlines).
       // Oracle inlines everything.
       "vec_bq_rotation" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_rbq", sparkGen.rbqBuildSql)
         sqlOn(s, dir, sparkGen.vecBqRotationSql(Some("g_rbq")))
       }),
@@ -287,7 +261,6 @@ object SparkEntry {
       // live. The hash-count J keys the scratch name (the N-derived
       // geometry convention). Oracles inline the chain.
       "vec_topk_l1_lsh" -> ((s, dir) => {
-        Tables.register(s, dir)
         val gen = sparkGenFor(s, dir)
         val j = graft.sqlgen.Wm.l1HashesFor(Tables.vectorCount(s, dir))
         val v = s"g_l1bkt_j$j"
@@ -295,7 +268,6 @@ object SparkEntry {
         sqlOn(s, dir, gen.vecTopkL1LshSql(Some(v)))
       }),
       "ann_recall_eval_l1" -> ((s, dir) => {
-        Tables.register(s, dir)
         val gen = sparkGenFor(s, dir)
         val j = graft.sqlgen.Wm.l1HashesFor(Tables.vectorCount(s, dir))
         val v = s"g_l1bkt_j$j"
@@ -307,7 +279,6 @@ object SparkEntry {
       // pipeline + 3 window passes re-ran under both self-join
       // sides). Oracle inlines the chain.
       "dedup_winnow" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_winnow", sparkGen.winnowFpBuildSql)
         sqlOn(s, dir, sparkGen.dedupWinnowSql(Some("g_winnow")))
       }),
@@ -318,7 +289,6 @@ object SparkEntry {
       // band join + hamming verify stay live in the serving path;
       // the oracle inlines the full chain.
       "dedup_simhash_pairs" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_simsigs", sparkGen.simhashSigBuildSql)
         sqlOn(s, dir, sparkGenFor(s, dir).simhashPairsFromSigsSql("g_simsigs"))
       }),
@@ -330,7 +300,6 @@ object SparkEntry {
       // builds. Band geometry follows the serving-path sizing
       // (sparkGenFor) like every other banded key.
       "dedup_upsert" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_simsigs", sparkGen.simhashSigBuildSql)
         sqlOn(s, dir, sparkGenFor(s, dir).dedupUpsertSql(Some("g_simsigs"),
           Some(simPairsView(s, dir))))
@@ -342,12 +311,10 @@ object SparkEntry {
       // table a production dedup pipeline keeps. Oracle renders the
       // full inline chain.
       "dedup_jaccard" -> ((s, dir) => {
-        Tables.register(s, dir)
         jaccardPairsView(s, dir)
         sqlOn(s, dir, sparkGen.dedupJaccardSql(Some("g_jpairs")))
       }),
       "dedup_containment" -> ((s, dir) => {
-        Tables.register(s, dir)
         jaccardPairsView(s, dir)
         sqlOn(s, dir, sparkGen.dedupContainmentSql(Some("g_jpairs")))
       }),
@@ -355,7 +322,6 @@ object SparkEntry {
       // rule SQL references the basket five times; Catalyst would
       // re-evaluate the join+distinct each time)
       "market_basket" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_basket", sparkGen.marketBasketBuildSql)
         sqlOn(s, dir, sparkGen.marketBasketSql(Some("g_basket")))
       }),
@@ -364,7 +330,6 @@ object SparkEntry {
       // twice → 2^t Catalyst re-evaluations) then run over the
       // checkpoint, not the corpus chain.
       "vec_mmr" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_mmr_pool", sparkGen.mmrPoolSql)
         sqlOn(s, dir, sparkGen.mmrSql(Some("g_mmr_pool")))
       }),
@@ -375,12 +340,10 @@ object SparkEntry {
       // A production pipeline keeps its eval-shingle index and screens
       // every training batch against it.
       "decontaminate" -> ((s, dir) => {
-        Tables.register(s, dir)
         decontShinglesView(s, dir)
         sqlOn(s, dir, sparkGen.decontaminateSql(Some(("g_dsh_ev", "g_dsh_tr"))))
       }),
       "decontaminate_bloom" -> ((s, dir) => {
-        Tables.register(s, dir)
         decontShinglesView(s, dir)
         sqlOn(s, dir, sparkGen.decontaminateBloomSql(Some(("g_dsh_ev", "g_dsh_tr"))))
       }),
@@ -389,22 +352,18 @@ object SparkEntry {
       // corpus explode once per wf reference: 4-5 passes each).
       // Oracles inline the chain.
       "text_js_divergence" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_srcwf", sparkGen.srcWordFreqBuildSql)
         sqlOn(s, dir, sparkGen.textJsDivergenceSql(Some("g_srcwf")))
       }),
       "text_kl_divergence" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_srcwf", sparkGen.srcWordFreqBuildSql)
         sqlOn(s, dir, sparkGen.textKlDivergenceSql(Some("g_srcwf")))
       }),
       "text_keywords_llr" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_srcwf", sparkGen.srcWordFreqBuildSql)
         sqlOn(s, dir, sparkGen.textKeywordsLlrSql(Some("g_srcwf")))
       }),
       "text_simpson" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_srcwf", sparkGen.srcWordFreqBuildSql)
         sqlOn(s, dir, sparkGen.textSimpsonSql(Some("g_srcwf")))
       }),
@@ -415,12 +374,10 @@ object SparkEntry {
       // curve, 4 for the overlap key's rank/census/exact-overlap
       // legs). Oracles inline the chain.
       "sketch_kmv" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_srcwf", sparkGen.srcWordFreqBuildSql)
         sqlOn(s, dir, sparkGen.kmvSql(Seq(16, 64, 256), wfView = Some("g_srcwf")))
       }),
       "sketch_kmv_overlap" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_srcwf", sparkGen.srcWordFreqBuildSql)
         sqlOn(s, dir, sparkGen.kmvOverlapSql(Some("g_srcwf")))
       }),
@@ -433,7 +390,6 @@ object SparkEntry {
       // folds from the profile too (docs with >= 3 words == docs with
       // >= 1 shingle). Oracle inlines the full chain.
       "text_boilerplate_share" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_mhshx", sparkGen.minhashShxBuildSql)
         sqlOn(s, dir, sparkGen.textBoilerplateShareSql(Some("g_mhshx")))
       }),
@@ -442,12 +398,10 @@ object SparkEntry {
       // re-ran the corpus shingle chain once per reference: 3-4
       // corpus passes each). Oracles inline the chain.
       "sketch_bloom" -> ((s, dir) => {
-        Tables.register(s, dir)
         decontShinglesView(s, dir)
         sqlOn(s, dir, sparkGen.sketchBloomSql(Some(("g_dsh_ev", "g_dsh_tr"))))
       }),
       "sketch_bloom_curve" -> ((s, dir) => {
-        Tables.register(s, dir)
         decontShinglesView(s, dir)
         sqlOn(s, dir, sparkGen.sketchBloomCurveSql(Some(("g_dsh_ev", "g_dsh_tr"))))
       }),
@@ -462,7 +416,6 @@ object SparkEntry {
       // iteration in pure SQL (markovAttributionSql), so the hash
       // match pins the driver math to the SQL rendering.
       "events_attribution_markov" -> ((s, dir) => {
-        Tables.register(s, dir)
         val tr = Scratch.table(s, dir, "g_markov_trans", sparkGen.markovTransBuildSql)
         val trans = tr.collect().map(r => (r.getAs[String]("src"),
           r.getAs[String]("dst"), r.getAs[Long]("c")))
@@ -510,7 +463,6 @@ object SparkEntry {
       // re-derives the identical ppm iteration in pure SQL
       // (markovStationarySql), pinning the driver math op for op.
       "events_markov_stationary" -> ((s, dir) => {
-        Tables.register(s, dir)
         val tr = Scratch.table(s, dir, "g_type_trans", sparkGen.typeTransBuildSql)
         val trans = tr.collect().map(r => (r.getAs[String]("src"),
           r.getAs[String]("dst"), r.getAs[Long]("c")))
@@ -542,7 +494,6 @@ object SparkEntry {
       // (which reference the score rows several times — Catalyst
       // re-inlines CTEs) run over candidate-sized materialized rows.
       "search_hybrid_rrf" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_hybrid_scores", sparkGen.hybridScoresBuildSql)
         sqlOn(s, dir, sparkGen.hybridRrfSql(Some("g_hybrid_scores")))
       }),
@@ -551,7 +502,6 @@ object SparkEntry {
       // scratch tables) — precision/recall/F1 per tier
       // (Queries.dedupTierEvalSql)
       "dedup_tier_eval" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_mhsig", sparkGen.minhashSigBuildSql)
         // r13: the exact-Jaccard truth leg reads the persisted 3-shingle
         // profile (g_mhshx) instead of re-running the corpus word
@@ -564,7 +514,6 @@ object SparkEntry {
       // second-stage rerank + Kendall-τ agreement ladder over the
       // same cached two-leg score table (Queries.rerankAgreementSql)
       "search_rerank_agreement" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_hybrid_scores", sparkGen.hybridScoresBuildSql)
         sqlOn(s, dir, sparkGen.rerankAgreementSql(Some("g_hybrid_scores")))
       }),
@@ -574,7 +523,6 @@ object SparkEntry {
       // SQL chain, so the oracle is sketch_distinct_by_source's pure
       // SQL rendering
       "sketch_distinct_native" -> ((s, dir) => {
-        Tables.register(s, dir)
         sqlOn(s, dir, """
           |with sw as (select source, split(lower(text), '\\s+') as ws from documents),
           |swx as (select source, wd from sw lateral view explode(ws) _e as wd),
@@ -591,7 +539,6 @@ object SparkEntry {
       // partitioning-invariant by construction; the oracle is the
       // pure-SQL k=64 window rendering (kmvSql)
       "sketch_kmv_native" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_srcwf", sparkGen.srcWordFreqBuildSql)
         sqlOn(s, dir, sparkGen.kmvSql(Seq(64), native = true, wfView = Some("g_srcwf")))
       }),
@@ -601,7 +548,6 @@ object SparkEntry {
       // native grid are bit-identical integer math to the SQL grid,
       // so the oracle is sketch_cms's pure SQL rendering
       "sketch_cms_native" -> ((s, dir) => {
-        Tables.register(s, dir)
         def prfCol(r: Int) =
           s"cast(conv(substr(md5(concat_ws(':', 'cms', '$r', wc.wd)), 1, 15), 16, 10) as bigint) % 16"
         def cell(r: Int) =
@@ -624,7 +570,6 @@ object SparkEntry {
       // round AND the output union — multiplicative under CTE
       // re-inlining) run over the vocabulary-sized checkpoint.
       "text_bpe_merges" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_bpe_vocab", sparkGen.bpeVocabBuildSql)
         sqlOn(s, dir, sparkGen.bpeMergesSql(Some("g_bpe_vocab")))
       }),
@@ -644,7 +589,6 @@ object SparkEntry {
       // exact-verify legs (shingle joins) stay live; oracles inline
       // the full chain.
       "dedup_minhash" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_mhsig", sparkGen.minhashSigBuildSql)
         Scratch.table(s, dir, "g_mhpairs",
           sparkGen.minhashPairsFromSigsSql("g_mhsig"))
@@ -652,12 +596,10 @@ object SparkEntry {
           pairsFrom = Some("g_mhpairs")))
       }),
       "dedup_incremental" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_mhsig", sparkGen.minhashSigBuildSql)
         sqlOn(s, dir, sparkGen.dedupIncrementalSql(Some(("g_mhsig", None))))
       }),
       "dedup_minhash_verify" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_mhsig", sparkGen.minhashSigBuildSql)
         Scratch.table(s, dir, "g_mhshx", sparkGen.minhashShxBuildSql)
         Scratch.table(s, dir, "g_mhpairs",
@@ -666,7 +608,6 @@ object SparkEntry {
           pairsFrom = Some("g_mhpairs")))
       }),
       "dedup_threshold_curve" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_mhsig", sparkGen.minhashSigBuildSql)
         Scratch.table(s, dir, "g_mhshx", sparkGen.minhashShxBuildSql)
         Scratch.table(s, dir, "g_mhpairs",
@@ -675,7 +616,6 @@ object SparkEntry {
           pairsFrom = Some("g_mhpairs")))
       }),
       "dedup_minhash_calibration" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_mhsig", sparkGen.minhashSigBuildSql)
         Scratch.table(s, dir, "g_mhshx", sparkGen.minhashShxBuildSql)
         Scratch.table(s, dir, "g_mhpairs",
@@ -689,7 +629,6 @@ object SparkEntry {
       // corpus chain materializes ONCE per session/dir; the production
       // scratch every LSH dedup pipeline persists anyway)
       "minhash_band_curve" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_mhsig", sparkGen.minhashSigBuildSql)
         sqlOn(s, dir, sparkGen.minhashCurveSql(Some("g_mhsig")))
       }),
@@ -700,7 +639,6 @@ object SparkEntry {
       // (session, dir), the production shape — a community assignment
       // is a kept artifact, every quality readout joins it
       "graph_modularity" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_lpa", sparkGen.lpaBuildSql)
         sqlOn(s, dir, sparkGen.graphModularitySql(Some("g_lpa")))
       }),
@@ -711,7 +649,6 @@ object SparkEntry {
       // rounds and the edge dedup per reference (the stage-heavy shape
       // that amplified ambient load into a 3× bench reading)
       "graph_lpa_curve" -> ((s, dir) => {
-        Tables.register(s, dir)
         val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
         val v = s"g_edges_sym_p$planes"
         Scratch.table(s, dir, v,
@@ -722,7 +659,6 @@ object SparkEntry {
       // per-community conductance over the same checkpointed LPA
       // labels (the kept community assignment) + the served kNN edges
       "graph_conductance" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_lpa", sparkGen.lpaBuildSql)
         sqlOn(s, dir, sparkGen.graphConductanceSql(Some("g_lpa")))
       }),
@@ -730,10 +666,7 @@ object SparkEntry {
       // map-side partials keep ≤ k pairs per group, so the exchange
       // carries O(groups·k) rows where the oracle's window form sorts
       // the full candidate stream
-      "vec_topk_grouped" -> ((s, dir) => {
-        Tables.register(s, dir)
-        sqlOn(s, dir, sparkGen.groupedTopkSql())
-      }),
+      "vec_topk_grouped" -> ((s, dir) => sqlOn(s, dir, sparkGen.groupedTopkSql())),
       // watermark repair over a PERSISTED damage snapshot: the σ=0.04
       // attacked-stego table is scratch-materialized once (the repair
       // job's kept input — Catalyst re-inlines a 4×-referenced CTE, so
@@ -747,7 +680,6 @@ object SparkEntry {
       // regression cluster). Build once; serving joins parquet scans
       // with the vocabulary-bounded sides broadcast. Oracle inlines.
       "text_centroid_classify" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_docwords", sparkGen.docWordsBuildSql)
         sqlOn(s, dir, sparkGen.textCentroidClassifySql(Some("g_docwords")))
       }),
@@ -757,7 +689,6 @@ object SparkEntry {
       // the artifact is |sources|·30 rows and the serving readout is
       // one self-join over it. Oracle inlines the full chain.
       "text_burrows_delta" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_bdz", sparkGen.bdzBuildSql)
         sqlOn(s, dir, sparkGen.textBurrowsDeltaSql(Some("g_bdz")))
       }),
@@ -767,7 +698,6 @@ object SparkEntry {
       // + vote ladder — the r11 regression cluster). One corpus pass
       // at build; serving folds from O(N)-row scans. Oracle inlines.
       "wm_audit_curve" -> ((s, dir) => {
-        Tables.register(s, dir)
         val gen = sparkGenFor(s, dir)
         val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
         val v = s"g_audit_dec_p$planes"
@@ -780,7 +710,6 @@ object SparkEntry {
       // median censuses + count + segment join = the r11 plan's 20
       // events scans. Oracle inlines everything.
       "events_rfm" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_rfm_user", sparkGen.rfmUserBuildSql)
         sqlOn(s, dir, sparkGen.eventsRfmSql(Some("g_rfm_user")))
       }),
@@ -791,7 +720,6 @@ object SparkEntry {
       // scans / 30 BNLJs from Catalyst CTE re-inlining of the
       // overlay + the two extraction chains). Oracle inlines it all.
       "wm_multi_tenant" -> ((s, dir) => {
-        Tables.register(s, dir)
         val gen = sparkGenFor(s, dir)
         // plane count in the scratch name: the build reads g_indeg /
         // exn whose ROWS depend on the bucket geometry
@@ -807,7 +735,6 @@ object SparkEntry {
       // the artifact holds exactly the inline ostego rows). Oracle
       // inlines the full chain.
       "wm_overwrite" -> ((s, dir) => {
-        Tables.register(s, dir)
         val gen = sparkGenFor(s, dir)
         val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
         val v = s"g_ow_stego_p$planes"
@@ -818,7 +745,6 @@ object SparkEntry {
       // (same overlay treatment; serving = ONE extraction chain over
       // the parquet artifact). Oracle inlines the full chain.
       "wm_collusion" -> ((s, dir) => {
-        Tables.register(s, dir)
         val gen = sparkGenFor(s, dir)
         val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
         val v = s"g_coll_stego_p$planes"
@@ -830,7 +756,6 @@ object SparkEntry {
       // serving is one extraction chain over a parquet scan + two
       // tiny folds). Oracle inlines the full chain.
       "wm_delta_curve" -> ((s, dir) => {
-        Tables.register(s, dir)
         val gen = sparkGenFor(s, dir)
         val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
         val shiftV = s"g_dc_shift_p$planes"
@@ -840,7 +765,6 @@ object SparkEntry {
         sqlOn(s, dir, gen.wmDeltaCurveSql(Some((shiftV, attV))))
       }),
       "wm_repair" -> ((s, dir) => {
-        Tables.register(s, dir)
         val gen = sparkGenFor(s, dir)
         // plane count in the scratch name: the build SQL's TEXT doesn't
         // change with the bucket geometry (it reads the g_stego view),
@@ -865,7 +789,6 @@ object SparkEntry {
       // per reference — measured 5.1 s inline at sf0.01, scratch-backed
       // well under 1 s); the oracle inlines it, DuckDB-materialized.
       "graph_betweenness" -> ((s, dir) => {
-        Tables.register(s, dir)
         val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
         val v = s"g_edges_sym_p$planes"
         Scratch.table(s, dir, v,
@@ -877,7 +800,6 @@ object SparkEntry {
       // scans of one materialized parquet (inline re-derived the kNN
       // build per reference: 36.5 s vs 4-5 s at the 30× decade)
       "graph_knn_degree_curve" -> ((s, dir) => {
-        Tables.register(s, dir)
         val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
         val v = s"g_edges_sym_p$planes"
         Scratch.table(s, dir, v,
@@ -889,7 +811,6 @@ object SparkEntry {
       // 3×; scratch-backed it's three scans of a materialized parquet,
       // inline it would re-derive the union-distinct per reference).
       "graph_closeness" -> ((s, dir) => {
-        Tables.register(s, dir)
         val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
         val v = s"g_edges_sym_p$planes"
         Scratch.table(s, dir, v,
@@ -903,7 +824,6 @@ object SparkEntry {
       // aggregation, NO selection-chain rebuild. Oracle inlines the
       // same id list from the chain (Queries.wmExtractIdsSql).
       "wm_extract_ids" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_carrier_ids", "select vec_id, blk from g_carriers")
         sqlOn(s, dir, sparkGenFor(s, dir).wmExtractIdsSql(Some("g_carrier_ids")))
       }),
@@ -913,7 +833,6 @@ object SparkEntry {
       // decrypt consumes; WatermarkEndToEndSpec decrypts this key's
       // output, so only the AES call itself stays spec-only.
       "wm_recover_registry" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_carrier_ids", "select vec_id, blk from g_carriers")
         sqlOn(s, dir, sparkGenFor(s, dir).wmRecoverRegistrySql(Some("g_carrier_ids")))
       }),
@@ -927,7 +846,6 @@ object SparkEntry {
       // op for op. Replaces the two slowest gate keys' 1-row
       // HashAggregate chains (pure exchange latency, 4.9 s + 3.1 s).
       "pca_variance_explained" -> ((s, dir) => {
-        Tables.register(s, dir)
         val e = pcaEig(s, dir)
         def r6(x: Double) = PcaSolve.roundAway(x, 6)
         def r4(x: Double) = PcaSolve.roundAway(x, 4)
@@ -945,7 +863,6 @@ object SparkEntry {
       // round-trips bit-exactly through cast-as-double) — identical
       // per-row arithmetic to the generated SQL's final select
       "pca_project2d" -> ((s, dir) => {
-        Tables.register(s, dir)
         val e = pcaEig(s, dir)
         // sign convention: first component of each axis made positive;
         // ±1 multiplies are exact, but the m1/m2 term order follows
@@ -968,7 +885,6 @@ object SparkEntry {
       // Sign fix matches pca_project2d (residual² is sign-invariant,
       // but the rendered text must match the oracle's op for op).
       "vec_pca_residual" -> ((s, dir) => {
-        Tables.register(s, dir)
         val e = pcaEig(s, dir)
         val sg1 = if (e.ev(0) < 0) -1.0 else 1.0
         val sg2 = if (e.v2(0) < 0) -1.0 else 1.0
@@ -983,7 +899,6 @@ object SparkEntry {
       // the landmark set — mdsSt0Cte's derivation), and project the
       // corpus map-only with the solved axes as exact double literals.
       "vec_mds2d" -> ((s, dir) => {
-        Tables.register(s, dir)
         val rows = sqlOn(s, dir, sparkGen.mdsLandmarksSql).collect()
         require(rows.length == graft.sqlgen.Wm.MdsLandmarks,
           s"need ${graft.sqlgen.Wm.MdsLandmarks} landmarks, got ${rows.length}")
@@ -1014,7 +929,6 @@ object SparkEntry {
       // the same checkpointed vocabulary (the tokenizer's shipped
       // lookup table), docs join token lengths back
       "text_bpe_encode" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_bpe_vocab", sparkGen.bpeVocabBuildSql)
         sqlOn(s, dir, sparkGen.bpeEncodeSql(Some("g_bpe_vocab")))
       }),
@@ -1022,7 +936,6 @@ object SparkEntry {
       // vocabulary (the multilingual-equity readout of the shipped
       // tokenizer artifact)
       "text_bpe_fertility" -> ((s, dir) => {
-        Tables.register(s, dir)
         Scratch.table(s, dir, "g_bpe_vocab", sparkGen.bpeVocabBuildSql)
         sqlOn(s, dir, sparkGen.bpeFertilitySql(Some("g_bpe_vocab")))
       }))
@@ -1034,8 +947,7 @@ object SparkEntry {
     PcaSolve.solve(a, (i, j) => row.getAs[Double](s"m${i + 1}_${j + 1}"))
   }
 
-  // every doc-side session table goes through the cross-session
-  // parquet scratch (graft.Scratch — the WmCache pattern): a fresh
+  // every doc-side session table is a graft.Scratch artifact: a fresh
   // session READS the kept artifact instead of re-paying the
   // corpus-priced build; scratch off / write failure falls back to
   // the in-session localCheckpoint, value-identical

@@ -16,8 +16,8 @@ import java.nio.file.{Files, Paths}
   *  - keys dump CHEAPEST-FIRST (last round's bench costs), so that
   *    prefix is maximal;
   *  - dumps run on a small thread pool (Spark job submission is
-  *    thread-safe; shared chain/scratch stages are built once on the
-  *    main thread first, and Scratch.table memoizes via
+  *    thread-safe; the WmCache artifacts are built once on the main
+  *    thread first, and Scratch.artifact memoizes every artifact via
   *    computeIfAbsent) — wall time ≈ single-threaded / pool size;
   *  - INCREMENTAL re-runs: each key gets a signature file under the
   *    SIBLING metadata dir `<outDir>_sigs/<key>` (outside the dump

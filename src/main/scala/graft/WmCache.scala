@@ -1,15 +1,15 @@
 package graft
 
-import java.io.File
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.ChainKernels
 import graft.sqlgen.{Gen, SparkDialect, WmParams}
 
-/** The engine's precomputed artifacts per (session, sf dir): each one
-  * is a g_* temp view that the Spark-dialect renderings (Gen with
-  * useViews) read in place of an inline CTE chain, while the DuckDB
-  * oracle keeps the full inline chain — every view holds exactly the
-  * rows of the chain it stands for, so results are identical.
+/** The registry of the engine's precomputed artifacts per (session,
+  * sf dir): which stages exist, what each reads, and what builds it.
+  * Each artifact is a g_* temp view that the Spark-dialect renderings
+  * (Gen with useViews) read in place of an inline CTE chain, while the
+  * DuckDB oracle keeps the full inline chain — every view holds exactly
+  * the rows of the chain it stands for, so results are identical.
   *
   * The artifacts are the stages of `Gen.cacheStages`, in two groups:
   *
@@ -38,35 +38,10 @@ import graft.sqlgen.{Gen, SparkDialect, WmParams}
   * more to compile than to run. g_indeg, g_carriers and the indexes
   * run their SQL.
   *
-  * Materialization:
-  *
-  *  - the chain is one CROSS-SESSION parquet scratch unit (default on,
-  *    `spark.graft.scratch` conf / SPARK_GRAFT_SCRATCH env; "off"
-  *    disables): its five stages are written once under a key derived
-  *    from the sf dir, the DATA fingerprint (embeddings.parquet
-  *    size+mtime), and the md5 of the chain's stage SQL and of
-  *    ChainKernels.Revision — so a testdata refresh or an edit to a
-  *    stage's specification invalidates it by itself, and a change to
-  *    a kernel's output (ChainKernels, WmEmbed) invalidates it when it
-  *    bumps that revision. A later session registers plain parquet
-  *    scans — chain build cost ≈ read cost. Writes go to a
-  *    process-unique tmp dir renamed into place, so concurrent writers
-  *    race safely. The cached stages are the SMALL derived artifacts
-  *    (O(N) ids/edges and rate·N·d stego cells), never the raw exploded
-  *    vectors.
-  *  - each index is a graft.Scratch table (the same tmp+rename publish,
-  *    per artifact), keyed by its own build SQL and the build SQL of
-  *    every artifact it reads.
-  *  - both fall back to an in-session localCheckpoint (scratch off or
-  *    write failure). localCheckpoint (not persist) on purpose: it
-  *    SEVERS the logical lineage, so each registered view is a plain
-  *    LogicalRDD — a lazily persisted view would carry its full WithCTE
-  *    plan into every consumer; nesting those inside the consumers' own
-  *    CTEs trips Catalyst's PushdownPredicatesAndPruneColumnsForCTEDef
-  *    on CTE-id bookkeeping (observed: "key not found" crashes and,
-  *    worse, a mis-resolved CTE ref that silently built stego rows from
-  *    the wrong carrier set). Parquet-backed views are equally
-  *    lineage-free, which is why the scratch layers need no checkpoint.
+  * Every stage is an ordinary graft.Scratch artifact, specified by
+  * its key text ([[Registry.keyText]]) and built by [[stageFrame]]:
+  * Scratch keys, publishes and registers it (see its header for the
+  * rails).
   */
 object WmCache {
 
@@ -123,65 +98,17 @@ object WmCache {
     def excl(key: String): Set[String] = iterator.toSet - key
   }
 
-  private case class Entry(dir: String, dfs: Seq[DataFrame])
-  private val state = new java.util.concurrent.ConcurrentHashMap[SparkSession, Entry]()
-
-  /** Scratch root, or None when disabled (shared with the doc-side
-    * Scratch layer so one conf governs both). */
-  private[graft] def scratchRoot(spark: SparkSession): Option[File] = {
-    val conf = try spark.conf.get("spark.graft.scratch") catch {
-      case _: Exception =>
-        sys.env.getOrElse("SPARK_GRAFT_SCRATCH", new File(".graft-scratch").getAbsolutePath)
-    }
-    conf match {
-      case "" | "off" | "false" => None
-      case p => Some(new File(p))
-    }
-  }
-
-  /** Cache key: sf dir + data fingerprint + the chain's key texts
-    * (stage SQL and kernel revision). */
-  private def cacheKey(dir: String, reg: Registry): String = {
-    val emb = new File(s"$dir/embeddings.parquet")
-    val raw = Seq(dir, emb.length.toString, emb.lastModified.toString,
-      reg.chain.map { case (vn, _) => vn + "=" + reg.keyText(vn) }.mkString(";")).mkString("|")
-    graft.functions.Prf.md5hex(raw).take(16)
-  }
-
   /** Idempotently build + register the watermark chain views for
-    * (spark, dir) — and nothing else. */
+    * (spark, dir), in order — and nothing else. */
   def ensure(spark: SparkSession, dir: String): Unit = {
-    val seen = state.get(spark)
-    if (seen == null || seen.dir != dir) state.synchronized {
-      val cur = state.get(spark)
-      if (cur == null || cur.dir != dir) {
-        if (cur != null) cur.dfs.foreach(_.unpersist(blocking = false))
-        Tables.register(spark, dir)
-        // the generator every consumer rendering of this dir comes from:
-        // the g_* views and every query reading them agree on the
-        // N-derived bucket layout (the stage-SQL md5 in the scratch key
-        // invalidates any previously cached layout automatically)
-        val reg = registry(spark, dir)
-        val stages = reg.chain
-        val viaScratch = scratchRoot(spark).exists { root =>
-          try { ensureScratch(spark, dir, root, reg); true }
-          catch { case e: Exception =>
-            System.err.println(s"[wmcache] scratch failed (${e.getMessage}), " +
-              "falling back to localCheckpoint"); false }
-        }
-        val dfs = if (viaScratch) Nil else stages.map { case (view, _) =>
-          // eager: computes the stage NOW (against the views registered
-          // so far) and registers a lineage-free LogicalRDD view
-          val t0 = System.nanoTime()
-          val df = stageFrame(spark, dir, view).localCheckpoint()
-          Scratch.logBuild(view, (System.nanoTime() - t0) / 1e9)
-          df.createOrReplaceTempView(view)
-          df
-        }
-        state.put(spark, Entry(dir, dfs))
-      }
-    }
+    val reg = registry(spark, dir)
+    reg.chain.foreach { case (name, _) => stage(spark, dir, reg, name) }
   }
+
+  /** Stage `name` of (spark, dir)'s registry, as a Scratch artifact. */
+  private def stage(spark: SparkSession, dir: String, reg: Registry,
+                    name: String): DataFrame =
+    Scratch.artifact(spark, dir, name, reg.keyText(name))(stageFrame(spark, dir, name))
 
   /** The DataFrame that builds stage `view` of (spark, dir)'s
     * generator, reading the stage views it depends on: the chain
@@ -204,9 +131,12 @@ object WmCache {
     * cached g_indeg, which no watermark parameter changes. */
   def carriers(spark: SparkSession, dir: String,
                params: WmParams = WmParams.Default): DataFrame = {
-    ensure(spark, dir)
-    if (params == WmParams.Default) spark.table("g_carriers")
-    else spark.sql(customGen(spark, dir, params).cacheStages.toMap.apply("g_carriers"))
+    if (params == WmParams.Default) stage(spark, dir, registry(spark, dir), "g_carriers")
+    else {
+      val sql = customGen(spark, dir, params).cacheStages.toMap.apply("g_carriers")
+      ensureReads(spark, dir, sql)
+      spark.sql(sql)
+    }
   }
 
   /** The stego cells (id, pos, sval) of a watermark under `params`:
@@ -215,8 +145,7 @@ object WmCache {
     * demand and register no view. */
   def stego(spark: SparkSession, dir: String,
             params: WmParams = WmParams.Default): DataFrame = {
-    ensure(spark, dir)
-    if (params == WmParams.Default) spark.table("g_stego")
+    if (params == WmParams.Default) stage(spark, dir, registry(spark, dir), "g_stego")
     else ChainKernels.stego(spark, carriers(spark, dir, params), params)
   }
 
@@ -233,16 +162,8 @@ object WmCache {
   private[graft] def ensureReads(spark: SparkSession, dir: String, sql: String): String = {
     val reg = registry(spark, dir)
     val read = reg.reads(sql)
-    if (read.nonEmpty) Tables.register(spark, dir)
-    if (read.exists(reg.inChain)) ensure(spark, dir)
-    // Scratch.table ensures each index's own inputs from its build SQL
-    read.filterNot(reg.inChain).foreach(ensureIndex(spark, dir, reg, _))
+    read.foreach(stage(spark, dir, reg, _))
     read.map(reg.lineage).mkString(";")
-  }
-
-  private def ensureIndex(spark: SparkSession, dir: String, reg: Registry,
-                          name: String): Unit = {
-    Scratch.table(spark, dir, name, reg.sqlOf(name)): Unit
   }
 
   /** Builds and registers EVERY artifact for (spark, dir): the chain
@@ -252,13 +173,12 @@ object WmCache {
     * not the sum). For tools that report on every artifact; a query
     * needs only [[ensureReads]]. */
   def ensureAll(spark: SparkSession, dir: String): Unit = {
-    Tables.register(spark, dir)
     val reg = registry(spark, dir)
     // an index whose input another thread is building waits on
     // Scratch's per-artifact memo instead of building it twice
     val tasks: Seq[() => Unit] = (() => ensure(spark, dir)) +:
       reg.stages.map(_._1).filterNot(reg.inChain).map(name =>
-        () => ensureIndex(spark, dir, reg, name))
+        () => stage(spark, dir, reg, name): Unit)
     val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val threads = tasks.map { task =>
       val t = new Thread(() =>
@@ -269,42 +189,6 @@ object WmCache {
     if (err.get() != null) throw err.get() match {
       case e: Exception => e
       case e => new RuntimeException(e)
-    }
-  }
-
-  /** Build-or-reuse the parquet scratch for (dir, chain SQL), then
-    * register every stage as a parquet-backed temp view. */
-  private def ensureScratch(spark: SparkSession, dir: String, root: File,
-                            reg: Registry): Unit = {
-    val stages = reg.chain
-    val base = new File(root, cacheKey(dir, reg))
-    val served = if (new File(base, "_DONE").exists()) base else {
-      val tmp = new File(root,
-        s"${base.getName}.tmp-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-      tmp.mkdirs()
-      // size the write to the data: every stage is O(N)-to-O(N·d) rows,
-      // so ~1 output file per 200k vectors (capped at the session's
-      // parallelism) — a 5k-vector corpus writes 1 file per stage
-      // instead of 32 near-empty tasks + commit rounds, a 100 TB corpus
-      // still fans out. repartition (not coalesce): coalesce would
-      // narrow the whole upstream computation to `parts` tasks; the
-      // extra exchange is tiny exactly when parts is small
-      val parts = math.max(1L, math.min(
-        spark.sessionState.conf.numShufflePartitions.toLong,
-        Tables.vectorCount(spark, dir) / 200000L)).toInt
-      stages.foreach { case (view, _) =>
-        val p = new File(tmp, view).getAbsolutePath
-        val t0 = System.nanoTime()
-        stageFrame(spark, dir, view).repartition(parts).write.mode("overwrite").parquet(p)
-        Scratch.logBuild(view, (System.nanoTime() - t0) / 1e9)
-        // downstream stages read the materialized rows, not the plan
-        spark.read.parquet(p).createOrReplaceTempView(view)
-      }
-      Scratch.publish(tmp, base, "the watermark chain")
-    }
-    stages.foreach { case (view, _) =>
-      spark.read.parquet(new File(served, view).getAbsolutePath)
-        .createOrReplaceTempView(view)
     }
   }
 }

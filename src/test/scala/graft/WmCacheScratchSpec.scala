@@ -2,9 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Cross-session chain scratch: the first ensure() writes the g_*
-  * stages as parquet under a (data, SQL)-fingerprinted key; a second
-  * session reuses them (chain build ≈ parquet read) and serves
+/** Cross-session chain scratch: the first ensure() writes each g_*
+  * stage as parquet under its own (data, SQL)-fingerprinted key; a
+  * second session reuses them (chain build ≈ parquet read) and serves
   * IDENTICAL rows. */
 class WmCacheScratchSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -17,11 +17,17 @@ class WmCacheScratchSpec extends AnyFunSuite {
     WmCache.ensure(s1, TestSpark.Sf)
     val done = new java.io.File(root).listFiles()
       .filter(f => f.isDirectory && new java.io.File(f, "_DONE").exists())
-    assert(done.length == 1, s"expected one completed scratch key, got ${done.length}")
+    val stages = Seq("g_bkt", "g_knn", "g_indeg", "g_carriers", "g_stego")
+    assert(done.length == 5, s"expected five completed scratch keys, got ${done.length}")
+    // one stage per key
+    val stageDir = stages.map(v =>
+      v -> done.filter(d => new java.io.File(d, v).isDirectory).toSeq).toMap
+    assert(stageDir.values.forall(_.length == 1), s"stage per key: $stageDir")
+    def stamps = stages.map(v => new java.io.File(stageDir(v).head, v).lastModified())
     val carriers1 = s1.table("g_carriers").collect()
       .map(r => (r.getLong(0), r.getLong(3))).sorted
     assert(carriers1.nonEmpty)
-    val stamp = new java.io.File(done(0), "g_stego").lastModified()
+    val stamp = stamps
 
     // fresh session: views must come from the scratch parquet, not a
     // rebuild (the stage files are not rewritten)
@@ -31,8 +37,7 @@ class WmCacheScratchSpec extends AnyFunSuite {
     val carriers2 = s2.table("g_carriers").collect()
       .map(r => (r.getLong(0), r.getLong(3))).sorted
     assert(carriers2.toSeq == carriers1.toSeq)
-    assert(new java.io.File(done(0), "g_stego").lastModified() == stamp,
-      "scratch was rebuilt instead of reused")
+    assert(stamps == stamp, "scratch was rebuilt instead of reused")
 
     // and the scratch-served chain agrees with the oracle-checked
     // inline rendering (scratch off → localCheckpoint path)
