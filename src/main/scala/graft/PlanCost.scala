@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: split a key's warm cost into PLANNING (parse → analyze →
   * optimize → physical plan, forced via executedPlan on a fresh
@@ -14,10 +13,7 @@ object PlanCost {
     }
     val keys = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession()
     for (k <- keys) {
       SparkEntry.queries(k)(spark, sfDir).count() // warmup + scratch builds
       def once(): (Double, Double) = {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: write `.explain("formatted")` output for the given query
@@ -17,10 +16,7 @@ object PlanDump {
     val tag = args(1)
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 3) args(3) else "plans/r12"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession()
     Files.createDirectories(Paths.get(outDir))
     for (k <- keys) {
       val df = SparkEntry.queries(k)(spark, sfDir)

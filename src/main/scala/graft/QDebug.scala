@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: time one query and optionally print its formatted plan.
   * Usage: runMain graft.QDebug <name> [sfDir] [explain] [dump]
@@ -15,11 +14,7 @@ object QDebug {
     }
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     if (name == "__nnbuild__") {
-      val cpus0 = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-      val s = SparkSession.builder().master(s"local[$cpus0]")
-        .config("spark.sql.shuffle.partitions", cpus0)
-        .config("spark.ui.enabled", "false").getOrCreate()
-      s.sparkContext.setLogLevel("ERROR")
+      val s = DevSession()
       Tables.register(s, sfDir)
       val df = s.sql(new graft.sqlgen.Gen(graft.sqlgen.SparkDialect).nnDeepLogitsBuildSql)
       println(df.queryExecution.executedPlan.toString.linesIterator
@@ -27,11 +22,7 @@ object QDebug {
         .map(_.take(120)).mkString("\n"))
       s.stop(); return
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession()
     // comma-separated names share one warm JVM/session — the shape a
     // targeted drift adjudication needs (three timed counts per key,
     // the first is the cold/codegen touch)

@@ -4,12 +4,8 @@ import java.io.File
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The engine's one artifact store. Every g_* artifact is built, kept
-  * and registered by [[artifact]]: the watermark chain's five stages
-  * and the ANN indexes (WmCache declares what builds each and what it
-  * reads), and every table the entrypoint keeps (g_simpairs, g_jpairs,
-  * g_mhsig, g_hybrid_scores, g_bpe_vocab, g_lpa, the markov transition
-  * census, the decont shingle indexes, the basket table, the MMR pool,
-  * the deep-NN logits).
+  * and registered by [[artifact]]; WmCache declares which exist, what
+  * each reads and what builds it.
   *
   * These are exactly the "kept production artifacts" of a curation
   * pipeline: a carrier set, a candidate-pair table, a signature table,
@@ -22,12 +18,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   *  - key = md5(sf dir | fingerprint of ALL source parquet files
   *    (length + mtime each) | name = spec + the lineage of every
-  *    WmCache artifact the spec names). The spec is the build SQL, or
-  *    for a programmatic build the text that specifies it: a chain
-  *    stage's SQL plus ChainKernels.Revision, the deep-NN logits'
-  *    equivalent SQL. A testdata refresh, an edit to a spec or to the
-  *    spec of anything it reads, or a kernel revision bump lands under
-  *    a new key — stale rows are unservable by construction;
+  *    artifact the spec names). The spec is the build SQL, or for a
+  *    kernel build the SQL it executes plus ChainKernels.Revision. The
+  *    lineage is the spec of each artifact read, transitively: every
+  *    artifact is declared in the one registry (Gen.artifactNames), so
+  *    a reader's key covers the spec of everything it reads. A testdata refresh, an
+  *    edit to a spec or to the spec of anything it reads, or a kernel
+  *    revision bump lands under a new key — stale rows are unservable
+  *    by construction;
   *  - a build is written to a process-unique tmp dir and renamed into
   *    place with a `_DONE` marker ([[publish]]), so concurrent builders
   *    race safely (either winner's files serve) and a dead writer's
@@ -106,13 +104,6 @@ object Scratch {
       views.put((spark, name), dir)
     }
     df
-  }
-
-  /** [[artifact]] built by its spec, the SQL `sql`. */
-  def table(spark: SparkSession, dir: String, name: String,
-            sql: => String): DataFrame = {
-    lazy val text = sql
-    artifact(spark, dir, name, text)(spark.sql(text))
   }
 
   private def timed[T](name: String)(body: => T): T = {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import graft.sqlgen.{Gen, SparkDialect, Wm}
 
 /** Dev tool: split the simhash near-dup pair chain into its two
@@ -13,10 +12,7 @@ import graft.sqlgen.{Gen, SparkDialect, Wm}
 object SimProf {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft-sfbig100")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession()
     Tables.register(spark, dir)
     val bands = Wm.simhashBandsFor(Tables.docCount(spark, dir))
     val gen = new Gen(SparkDialect, simhashBands = bands)

@@ -7,9 +7,9 @@ import graft.operators.PcaSolve
 /** Driver contract — see /root/repo/SURVEY.md §2 for the operator
   * inventory behind each query key. */
 object SparkEntry {
-  // Spark rendering reads the wm chain and the ANN indexes from their
-  // g_* artifact views (WmCache declares them, Scratch keeps them); the
-  // DuckDB oracle always renders the full inline chain.
+  // Spark rendering reads every kept g_* artifact from its view (Gen
+  // declares them, WmCache builds what a statement names, Scratch keeps
+  // them); the DuckDB oracle always renders the full inline chain.
   //
   // The Spark side derives its LSH plane count from the corpus size
   // (the §4 sizing formula, wired into the entrypoint): at the
@@ -61,142 +61,18 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("wm_recall_impact")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. The
-    * programmatic (non-SQL-generated) entries run typed Dataset
-    * pipelines; their oracle SQL lives next to the operator. Every
-    * entry ensures the g_* artifacts its statements read, and no
-    * others. */
+  /** One entry per implemented operator from SURVEY.md §2: the
+    * generated Spark rendering of every key, except the few whose
+    * Spark side runs JVM code (decoders, driver math); their oracle SQL
+    * lives next to the operator or in the generator. Every entry
+    * ensures the g_* artifacts its statements read, and no others. */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     sparkGen.keys.map { name =>
       name -> ((s: SparkSession, dir: String) => sqlOn(s, dir, sparkGenFor(s, dir).sql(name)))
     }.toMap ++ programmatic
 
-  /** Keys served by a PROGRAMMATIC entry (scratch tables, JVM driver
-    * math, mapPartitions codecs) rather than the generated rendering —
-    * tools (Plans) must go through `queries` for these even when a
-    * generated template of the same name exists (e.g. wm_extract_ids'
-    * generated text is the ORACLE shape; its Spark path substitutes
-    * the scratch-persisted registry view). */
-  def programmaticKeys: Set[String] = programmatic.keySet
-
   private lazy val programmatic: Map[String, (SparkSession, String) => DataFrame] =
     Map[String, (SparkSession, String) => DataFrame](
-      // HNSW maintenance pair: BOTH keys read the one scratch-persisted
-      // beam-search product (appendLinksView) — the 3-hop beam is the
-      // whole cost of either readout, and the compact key was
-      // re-running the append key's beam inline (53.7 s of its 100×
-      // serving leg; r10 verdict item 3). Oracles inline the chain.
-      "vec_graph_append" -> ((s, dir) =>
-        sqlOn(s, dir, sparkGenFor(s, dir).graphAppendSql(Some(appendLinksView(s, dir))))),
-      "vec_graph_compact" -> ((s, dir) =>
-        sqlOn(s, dir, sparkGenFor(s, dir).graphCompactSql(Some(appendLinksView(s, dir))))),
-      // quantile sketches over the PERSISTED histogram artifact: the
-      // inline mm/bn CTEs are multi-referenced and Catalyst re-inlines
-      // per reference (~11 lineitem scans executed for the 128-bin
-      // key — the r10 warm-gate drift's one real plan cause); the
-      // artifact carries (bin, c, mn, mx, n) so the serving readout
-      // pays ONE raw corpus scan (the exact in-bin selection pass)
-      // plus ≤128-row view scans. Oracles inline everything.
-      "sketch_quantiles" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_qhist", sparkGen.quantHistBuildSql)
-        sqlOn(s, dir, sparkGen.sketchQuantilesSql(Some("g_qhist")))
-      }),
-      "sketch_quantile_curve" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_qhist_curve", sparkGen.quantCurveHistBuildSql)
-        sqlOn(s, dir, sparkGen.sketchQuantileCurveSql(Some("g_qhist_curve")))
-      }),
-      // per-type value quantiles over the PERSISTED per-group
-      // histogram (the g_qhist split keyed per event type — r11
-      // verdict item 3: the inline per-group plan executed 30 parquet
-      // scans via mm/bn CTE re-inlining). One raw events scan remains
-      // (the exact in-bin selection); oracles inline everything.
-      "events_value_quantiles" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_evqhist", sparkGen.evQuantHistBuildSql)
-        sqlOn(s, dir, sparkGen.eventsValueQuantilesSql(Some("g_evqhist")))
-      }),
-      // shingle-size curve over the PERSISTED (w, df, m) census: the
-      // inline union chain's sh/df/dfc CTEs re-inline per reference
-      // under Catalyst (the executed r11 plan ran 13 Window nodes /
-      // 12 corpus scans — the heaviest text pass ~12×). The census
-      // build is ONE 8-lead window pass with the 4 widths stack()ed
-      // out map-side; every curve readout folds from census rows
-      // (zero raw scans at serve time). Oracle inlines everything.
-      "dedup_shingle_curve" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_shcensus", sparkGen.shingleCensusBuildSql)
-        sqlOn(s, dir, sparkGen.dedupShingleCurveSql(Some("g_shcensus")))
-      }),
-      // RESIDUAL IVFADC (true faiss IVF_PQ, §2 row 4d2): the product
-      // codebooks train on x − centroid(cell(x)) — within a coarse
-      // cell the residuals occupy a far smaller ball, so the same
-      // 8×16 budget buys a finer quantization. The residual codebook
-      // and codes persist as scratch artifacts over the cached IVF
-      // views (build-once/serve-many); oracles inline the full chain.
-      "vec_topk_ivfpq_res" -> ((s, dir) => {
-        val gen = sparkGenFor(s, dir)
-        Scratch.table(s, dir, "g_rpq_ct", gen.rpqTrainBuildSql)
-        Scratch.table(s, dir, "g_rpq_codes", gen.rpqCodesBuildSql)
-        sqlOn(s, dir, gen.ivfPqResSql(Some(("g_rpq_ct", "g_rpq_codes"))))
-      }),
-      "ann_recall_eval_ivfpq_res" -> ((s, dir) => {
-        val gen = sparkGenFor(s, dir)
-        Scratch.table(s, dir, "g_rpq_ct", gen.rpqTrainBuildSql)
-        Scratch.table(s, dir, "g_rpq_codes", gen.rpqCodesBuildSql)
-        sqlOn(s, dir, gen.annRecallEvalIvfPqResSql(Some(("g_rpq_ct", "g_rpq_codes"))))
-      }),
-      "vec_ivfpq_res_distortion" -> ((s, dir) => {
-        val gen = sparkGenFor(s, dir)
-        Scratch.table(s, dir, "g_rpq_ct", gen.rpqTrainBuildSql)
-        Scratch.table(s, dir, "g_rpq_codes", gen.rpqCodesBuildSql)
-        sqlOn(s, dir, gen.ivfPqResDistortionSql(Some(("g_rpq_ct", "g_rpq_codes"))))
-      }),
-      // CDC maintenance of the HYBRID SCORE STACK (r11 verdict item
-      // 5): the kept per-doc stats artifact (g_hyb_stats — integer
-      // BM25 inputs + feature-hash sums) maintained under the
-      // deterministic delete/update feed; only the 5% delta is
-      // re-tokenized, the global BM25 stats refold from the post
-      // table, and the fused top-10 re-serves from stats alone.
-      // Oracle inlines the stats build.
-      "search_hybrid_upsert" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_hyb_stats", sparkGen.hybStatsBuildSql)
-        Scratch.table(s, dir, "g_hyb_delta", sparkGen.hybDeltaBuildSql)
-        Scratch.table(s, dir, "g_hyb_post",
-          sparkGen.hybPostBuildSql("g_hyb_stats", "g_hyb_delta"))
-        Scratch.table(s, dir, "g_hyb_scores_post",
-          sparkGen.hybPostScoresBuildSql("g_hyb_post"))
-        sqlOn(s, dir, sparkGen.searchHybridUpsertSql(
-          Some(("g_hyb_stats", "g_hyb_delta", "g_hyb_post", "g_hyb_scores_post"))))
-      }),
-      // CDC maintenance of the MINHASH index: the kept signature table
-      // (g_mhsig) and its banded pair artifact (g_mhpairs) maintained
-      // under the deterministic delete/update feed — stale pairs
-      // filtered, only the 5% delta re-signed and band-joined against
-      // the post state (the dedup_upsert shape for the other signature
-      // family; r10 verdict item 7). Oracle inlines both builds.
-      "dedup_upsert_minhash" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_mhsig", sparkGen.minhashSigBuildSql)
-        Scratch.table(s, dir, "g_mhpairs",
-          sparkGen.minhashPairsFromSigsSql("g_mhsig"))
-        sqlOn(s, dir, sparkGen.dedupUpsertMinhashSql(Some("g_mhsig"), Some("g_mhpairs")))
-      }),
-      // deep NN witness over the PERSISTED quantized-logit table: the
-      // depth-6 forward pass is a ~9k-literal expression tree whose
-      // Catalyst optimization alone costs seconds per action
-      // (data-independent), so the logits build once per session/dir
-      // and the census aggregates the parquet rows. Oracle inlines
-      // the full chain.
-      "wm_nn_decode_deep" -> ((s, dir) => {
-        // the logits artifact builds as a mapPartitions JVM forward
-        // pass (operators.NnDeep — Catalyst optimization ALONE on the
-        // unrolled ~9k-literal SQL tree costs ~45 s per action, and
-        // its fused codegen units overflow janino's 64 KB method cap);
-        // arithmetic is bit-identical to the generated chain by shared
-        // constants + identical IEEE step order (NnDeepSpec pins it),
-        // and the rendered build SQL text versions the cache key, so
-        // any arithmetic change invalidates the artifact
-        Scratch.artifact(s, dir, "g_nn_deep_logits",
-          sparkGen.nnDeepLogitsBuildSql)(graft.operators.NnDeep.logits(s, dir))
-        sqlOn(s, dir, sparkGen.nnDecodeDeepSql(Some("g_nn_deep_logits")))
-      }),
       // real WAV decode (synthesize → encode → chunk-walk parse → stats)
       "multimodal_wav_stats" -> ((s, dir) => graft.operators.Wav.wavStats(s, dir)),
       // real audio FEATURE extraction over the decoded PCM payload
@@ -219,192 +95,6 @@ object SparkEntry {
       // perceptual AUDIO-FINGERPRINT dedup over the decoded PCM
       // (frame-energy delta bits → exact collision census)
       "multimodal_audio_fp" -> ((s, dir) => graft.operators.Wav.audioFingerprint(s, dir)),
-      // near-dup pairs → deletion groups: checkpoint the pair chain
-      // once, then 6 unrolled min-label rounds over the materialized
-      // rows (Catalyst re-inlines multi-referenced CTEs, so the pure
-      // SQL form would re-run the simhash chain every round). The
-      // checkpointed pairs memoize per (session, dir) — the doc-side
-      // analog of the WmCache scratch stages: a production pipeline
-      // keeps its candidate-pair table, and every grouping/report
-      // over it reuses the materialized rows.
-      "dedup_components" -> ((s, dir) =>
-        sqlOn(s, dir, sparkGen.dedupComponentsSql(Some(simCompViews(s, dir))))),
-      // the deletion groups APPLIED: per-source kept/dropped report
-      // over the same checkpointed pair chain
-      "dedup_apply" -> ((s, dir) =>
-        sqlOn(s, dir, sparkGen.dedupApplySql(Some(simCompViews(s, dir))))),
-      // quality-aware canonical selection: best text_quality member
-      // per near-dup component, over the same checkpointed pair chain
-      "dedup_cluster_rep" -> ((s, dir) =>
-        sqlOn(s, dir, sparkGen.dedupClusterRepSql(Some(simCompViews(s, dir))))),
-      // does keep-lowest-id cost quality vs keep-best? per-source
-      // policy comparison over the same checkpointed pair chain
-      "dedup_quality_impact" -> ((s, dir) =>
-        sqlOn(s, dir, sparkGen.dedupQualityImpactSql(Some(simCompViews(s, dir))))),
-      // which sources copy from each other: the syndication matrix
-      // over the same checkpointed near-dup pair chain
-      "dedup_cross_source" -> ((s, dir) =>
-        sqlOn(s, dir, sparkGen.dedupCrossSourceSql(Some(simPairsView(s, dir))))),
-      // rotated-BQ search over the PERSISTED packed rotated codes
-      // (g_rbq — the rotated twin of the cached g_bq; inline, the
-      // 64-sum rotation butterfly executed 3x via rbq re-inlines).
-      // Oracle inlines everything.
-      "vec_bq_rotation" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_rbq", sparkGen.rbqBuildSql)
-        sqlOn(s, dir, sparkGen.vecBqRotationSql(Some("g_rbq")))
-      }),
-      // the L1 (Cauchy p-stable) LSH rung over the PERSISTED bucket
-      // table (r13): inline, `bkt` was referenced twice (query filter
-      // + candidate join) and Catalyst re-ran the J×L unrolled 64-term
-      // hash projections over the corpus per reference; the artifact
-      // is the kept L1 index, the candidate join + exact re-rank stay
-      // live. The hash-count J keys the scratch name (the N-derived
-      // geometry convention). Oracles inline the chain.
-      "vec_topk_l1_lsh" -> ((s, dir) => {
-        val gen = sparkGenFor(s, dir)
-        val j = graft.sqlgen.Wm.l1HashesFor(Tables.vectorCount(s, dir))
-        val v = s"g_l1bkt_j$j"
-        Scratch.table(s, dir, v, gen.l1BktBuildSql)
-        sqlOn(s, dir, gen.vecTopkL1LshSql(Some(v)))
-      }),
-      "ann_recall_eval_l1" -> ((s, dir) => {
-        val gen = sparkGenFor(s, dir)
-        val j = graft.sqlgen.Wm.l1HashesFor(Tables.vectorCount(s, dir))
-        val v = s"g_l1bkt_j$j"
-        Scratch.table(s, dir, v, gen.l1BktBuildSql)
-        sqlOn(s, dir, gen.annRecallEvalL1Sql(Some(v)))
-      }),
-      // winnowing pairs over the PERSISTED fingerprint index (the
-      // kept artifact of a winnowing pipeline; inline, the word
-      // pipeline + 3 window passes re-ran under both self-join
-      // sides). Oracle inlines the chain.
-      "dedup_winnow" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_winnow", sparkGen.winnowFpBuildSql)
-        sqlOn(s, dir, sparkGen.dedupWinnowSql(Some("g_winnow")))
-      }),
-      // the banded SimHash pair pass over the PERSISTED signature
-      // table (g_simsigs — the kept artifact the whole simpairs
-      // family stages through; the inline chain re-ran the corpus
-      // word pipeline under both sides of the band self-join). The
-      // band join + hamming verify stay live in the serving path;
-      // the oracle inlines the full chain.
-      "dedup_simhash_pairs" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_simsigs", sparkGen.simhashSigBuildSql)
-        sqlOn(s, dir, sparkGenFor(s, dir).simhashPairsFromSigsSql("g_simsigs"))
-      }),
-      // CDC-upsert maintenance of the kept pair artifact (the
-      // delete/update half of dedup_incremental): reads BOTH scratch
-      // artifacts a production pipeline maintains — the signature
-      // table (g_simsigs, band-independent) and the pair table — and
-      // runs the delta-vs-post band join; the oracle inlines both
-      // builds. Band geometry follows the serving-path sizing
-      // (sparkGenFor) like every other banded key.
-      "dedup_upsert" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_simsigs", sparkGen.simhashSigBuildSql)
-        sqlOn(s, dir, sparkGenFor(s, dir).dedupUpsertSql(Some("g_simsigs"),
-          Some(simPairsView(s, dir))))
-      }),
-      // overlap metrics over the materialized gram profile: the
-      // 5-gram explode (the heaviest text pass) runs ONCE per
-      // session/dir; jaccard and containment are per-row divisions
-      // over the checkpointed (pair, i, na, nb) rows — the profile
-      // table a production dedup pipeline keeps. Oracle renders the
-      // full inline chain.
-      "dedup_jaccard" -> ((s, dir) => {
-        jaccardPairsView(s, dir)
-        sqlOn(s, dir, sparkGen.dedupJaccardSql(Some("g_jpairs")))
-      }),
-      "dedup_containment" -> ((s, dir) => {
-        jaccardPairsView(s, dir)
-        sqlOn(s, dir, sparkGen.dedupContainmentSql(Some("g_jpairs")))
-      }),
-      // association rules over the checkpointed basket table (the
-      // rule SQL references the basket five times; Catalyst would
-      // re-evaluate the join+distinct each time)
-      "market_basket" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_basket", sparkGen.marketBasketBuildSql)
-        sqlOn(s, dir, sparkGen.marketBasketSql(Some("g_basket")))
-      }),
-      // MMR re-rank: the corpus-sized pool build checkpoints to 30
-      // rows; the unrolled selection rounds (each state CTE referenced
-      // twice → 2^t Catalyst re-evaluations) then run over the
-      // checkpoint, not the corpus chain.
-      "vec_mmr" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_mmr_pool", sparkGen.mmrPoolSql)
-        sqlOn(s, dir, sparkGen.mmrSql(Some("g_mmr_pool")))
-      }),
-      // decontamination over the materialized shingle index: the
-      // lead()-window shingle pass (the expensive part of BOTH decont
-      // queries) runs once per session/dir per side; exact and
-      // Bloom-prefiltered variants then join the checkpointed rows.
-      // A production pipeline keeps its eval-shingle index and screens
-      // every training batch against it.
-      "decontaminate" -> ((s, dir) => {
-        decontShinglesView(s, dir)
-        sqlOn(s, dir, sparkGen.decontaminateSql(Some(("g_dsh_ev", "g_dsh_tr"))))
-      }),
-      "decontaminate_bloom" -> ((s, dir) => {
-        decontShinglesView(s, dir)
-        sqlOn(s, dir, sparkGen.decontaminateBloomSql(Some(("g_dsh_ev", "g_dsh_tr"))))
-      }),
-      // the per-source word-frequency family reads the PERSISTED
-      // unigram-LM artifact (g_srcwf — inline, each key re-ran the
-      // corpus explode once per wf reference: 4-5 passes each).
-      // Oracles inline the chain.
-      "text_js_divergence" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_srcwf", sparkGen.srcWordFreqBuildSql)
-        sqlOn(s, dir, sparkGen.textJsDivergenceSql(Some("g_srcwf")))
-      }),
-      "text_kl_divergence" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_srcwf", sparkGen.srcWordFreqBuildSql)
-        sqlOn(s, dir, sparkGen.textKlDivergenceSql(Some("g_srcwf")))
-      }),
-      "text_keywords_llr" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_srcwf", sparkGen.srcWordFreqBuildSql)
-        sqlOn(s, dir, sparkGen.textKeywordsLlrSql(Some("g_srcwf")))
-      }),
-      "text_simpson" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_srcwf", sparkGen.srcWordFreqBuildSql)
-        sqlOn(s, dir, sparkGen.textSimpsonSql(Some("g_srcwf")))
-      }),
-      // the KMV sketch family reads the SAME persisted unigram
-      // artifact (r13 — g_srcwf's rows ARE the distinct (source, word)
-      // pairs the bottom-k hash sets derive from; inline, each wh
-      // reference re-ran the corpus explode + distinct: 2 for the
-      // curve, 4 for the overlap key's rank/census/exact-overlap
-      // legs). Oracles inline the chain.
-      "sketch_kmv" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_srcwf", sparkGen.srcWordFreqBuildSql)
-        sqlOn(s, dir, sparkGen.kmvSql(Seq(16, 64, 256), wfView = Some("g_srcwf")))
-      }),
-      "sketch_kmv_overlap" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_srcwf", sparkGen.srcWordFreqBuildSql)
-        sqlOn(s, dir, sparkGen.kmvOverlapSql(Some("g_srcwf")))
-      }),
-      // boilerplate coverage over the SAME persisted 3-shingle profile
-      // the minhash verify legs read (g_mhshx — identical distinct
-      // (doc_id, sh) definition): shx is referenced twice (df census +
-      // per-doc coverage join) and Catalyst re-inlines per reference,
-      // so the inline form ran the corpus shingle window chain twice
-      // (the #1 gate key, r12 verdict item 3). The doc-count threshold
-      // folds from the profile too (docs with >= 3 words == docs with
-      // >= 1 shingle). Oracle inlines the full chain.
-      "text_boilerplate_share" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_mhshx", sparkGen.minhashShxBuildSql)
-        sqlOn(s, dir, sparkGen.textBoilerplateShareSql(Some("g_mhshx")))
-      }),
-      // the Bloom sketch keys read the SAME kept shingle indexes the
-      // decontamination family serves from (r12 — inline, evd/trd
-      // re-ran the corpus shingle chain once per reference: 3-4
-      // corpus passes each). Oracles inline the chain.
-      "sketch_bloom" -> ((s, dir) => {
-        decontShinglesView(s, dir)
-        sqlOn(s, dir, sparkGen.sketchBloomSql(Some(("g_dsh_ev", "g_dsh_tr"))))
-      }),
-      "sketch_bloom_curve" -> ((s, dir) => {
-        decontShinglesView(s, dir)
-        sqlOn(s, dir, sparkGen.sketchBloomCurveSql(Some(("g_dsh_ev", "g_dsh_tr"))))
-      }),
       // removal-effect attribution: the journey pass (lag windows over
       // the events scan) is the only corpus-priced work and runs once
       // per session/dir; the 8-step × 5-variant power iteration is
@@ -416,7 +106,7 @@ object SparkEntry {
       // iteration in pure SQL (markovAttributionSql), so the hash
       // match pins the driver math to the SQL rendering.
       "events_attribution_markov" -> ((s, dir) => {
-        val tr = Scratch.table(s, dir, "g_markov_trans", sparkGen.markovTransBuildSql)
+        val tr = WmCache.artifact(s, dir, "g_markov_trans")
         val trans = tr.collect().map(r => (r.getAs[String]("src"),
           r.getAs[String]("dst"), r.getAs[Long]("c")))
         val outc = trans.groupBy(_._1).map { case (k, xs) => k -> xs.map(_._3).sum }
@@ -463,7 +153,7 @@ object SparkEntry {
       // re-derives the identical ppm iteration in pure SQL
       // (markovStationarySql), pinning the driver math op for op.
       "events_markov_stationary" -> ((s, dir) => {
-        val tr = Scratch.table(s, dir, "g_type_trans", sparkGen.typeTransBuildSql)
+        val tr = WmCache.artifact(s, dir, "g_type_trans")
         val trans = tr.collect().map(r => (r.getAs[String]("src"),
           r.getAs[String]("dst"), r.getAs[Long]("c")))
         val outc = trans.groupBy(_._1).map { case (k, xs) => k -> xs.map(_._3).sum }
@@ -487,354 +177,6 @@ object SparkEntry {
             r6(math.abs(st.getOrElse(state, 0L) - prev.getOrElse(state, 0L)) / 1e12))
         }.toDF("state", "n_out_transitions", "occupancy",
           "pi_stationary", "pi_prev_step", "step_delta")
-      }),
-      // hybrid RRF over the checkpointed two-leg score table: the
-      // corpus-priced passes (word explode → BM25 + feature-hash
-      // aggs) run once per session/dir; the rank/fusion rounds
-      // (which reference the score rows several times — Catalyst
-      // re-inlines CTEs) run over candidate-sized materialized rows.
-      "search_hybrid_rrf" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_hybrid_scores", sparkGen.hybridScoresBuildSql)
-        sqlOn(s, dir, sparkGen.hybridRrfSql(Some("g_hybrid_scores")))
-      }),
-      // dedup tier benchmark: exact-Jaccard truth on a PRF doc sample
-      // vs the served MinHash/SimHash candidate sets (read from their
-      // scratch tables) — precision/recall/F1 per tier
-      // (Queries.dedupTierEvalSql)
-      "dedup_tier_eval" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_mhsig", sparkGen.minhashSigBuildSql)
-        // r13: the exact-Jaccard truth leg reads the persisted 3-shingle
-        // profile (g_mhshx) instead of re-running the corpus word
-        // pipeline 3x under Catalyst CTE re-inlining (tg is referenced
-        // by gsz + both self-join sides). Oracle inlines the chain.
-        Scratch.table(s, dir, "g_mhshx", sparkGen.minhashShxBuildSql)
-        sqlOn(s, dir, sparkGen.dedupTierEvalSql(
-          Some(("g_mhsig", simPairsView(s, dir), "g_mhshx"))))
-      }),
-      // second-stage rerank + Kendall-τ agreement ladder over the
-      // same cached two-leg score table (Queries.rerankAgreementSql)
-      "search_rerank_agreement" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_hybrid_scores", sparkGen.hybridScoresBuildSql)
-        sqlOn(s, dir, sparkGen.rerankAgreementSql(Some("g_hybrid_scores")))
-      }),
-      // the native TypedImperativeAggregate HLL (functions.HllAgg):
-      // the aggregation buffer IS the register array, merged
-      // register-wise across partitions — bit-identical math to the
-      // SQL chain, so the oracle is sketch_distinct_by_source's pure
-      // SQL rendering
-      "sketch_distinct_native" -> ((s, dir) => {
-        sqlOn(s, dir, """
-          |with sw as (select source, split(lower(text), '\\s+') as ws from documents),
-          |swx as (select source, wd from sw lateral view explode(ws) _e as wd),
-          |ag as (select source, graft_hll(wd) as hll, count(distinct wd) as nd from swx group by source)
-          |select source, cast(nd as bigint) as n_exact, hll as hll_est,
-          |  round(abs(hll - nd) / nd, 4) as rel_err
-          |from ag""".stripMargin)
-      }),
-      // the native TypedImperativeAggregate KMV bottom-k sketch
-      // (functions.KmvAgg): the aggregation buffer IS the k-bounded
-      // distinct-min hash set — O(k) state per group where the SQL
-      // window rendering ranks the full per-source hash stream. The
-      // buffer is a pure function of the input SET, so the result is
-      // partitioning-invariant by construction; the oracle is the
-      // pure-SQL k=64 window rendering (kmvSql)
-      "sketch_kmv_native" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_srcwf", sparkGen.srcWordFreqBuildSql)
-        sqlOn(s, dir, sparkGen.kmvSql(Seq(64), native = true, wfView = Some("g_srcwf")))
-      }),
-      // the native TypedImperativeAggregate count-min sketch
-      // (functions.CmsAgg): the aggregation buffer IS the 4x16 long
-      // grid, merged by elementwise addition — point queries over the
-      // native grid are bit-identical integer math to the SQL grid,
-      // so the oracle is sketch_cms's pure SQL rendering
-      "sketch_cms_native" -> ((s, dir) => {
-        def prfCol(r: Int) =
-          s"cast(conv(substr(md5(concat_ws(':', 'cms', '$r', wc.wd)), 1, 15), 16, 10) as bigint) % 16"
-        def cell(r: Int) =
-          s"element_at(g.grid, cast($r * 16 + ${prfCol(r)} + 1 as int)) as e$r"
-        sqlOn(s, dir, s"""
-          |with sw as (select split(lower(text), '\\\\s+') as ws from documents),
-          |wx as (select wd from sw lateral view explode(ws) _e as wd),
-          |g as (select graft_cms(wd) as grid from wx),
-          |wc as (select wd, count(*) as c from wx group by wd),
-          |sel as (select wd, c, least(e0, e1, e2, e3) as est from (
-          |  select wc.wd, wc.c, ${(0 until 4).map(cell).mkString(", ")}
-          |  from wc cross join g) _x)
-          |select wd as word, cast(c as bigint) as n_exact,
-          |  cast(est as bigint) as cms_est, cast(est - c as bigint) as overestimate
-          |from sel""".stripMargin)
-      }),
-      // BPE merge rounds over the checkpointed vocabulary: the one
-      // corpus pass (word counts + char-split) materializes once;
-      // the unrolled merge rounds (each state referenced by the next
-      // round AND the output union — multiplicative under CTE
-      // re-inlining) run over the vocabulary-sized checkpoint.
-      "text_bpe_merges" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_bpe_vocab", sparkGen.bpeVocabBuildSql)
-        sqlOn(s, dir, sparkGen.bpeMergesSql(Some("g_bpe_vocab")))
-      }),
-      // the banded MinHash candidate family over the PERSISTED
-      // signature table (g_mhsig — the kept LSH index every dedup
-      // pipeline persists; the r11 inline plans re-ran the corpus
-      // word pipeline once per `bands`/`shx` reference: 2x for the
-      // pair pass, 5x for the exact-verify legs) and, for the
-      // verify/tuning legs, the PERSISTED shingle profile (g_mhshx —
-      // the decont-shingle-index pattern). Oracles inline the chain.
-      // r13: the minhash candidate family serves from the kept banded
-      // PAIR artifact (g_mhpairs — already maintained for the CDC
-      // upsert key; its mm >= 2 filter IS the est >= 0.1 cut for
-      // integer mm), so the band self-join runs once at build time
-      // instead of once per serving reference (calibration referenced
-      // `cand` twice — the band join re-inlined per reference). The
-      // exact-verify legs (shingle joins) stay live; oracles inline
-      // the full chain.
-      "dedup_minhash" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_mhsig", sparkGen.minhashSigBuildSql)
-        Scratch.table(s, dir, "g_mhpairs",
-          sparkGen.minhashPairsFromSigsSql("g_mhsig"))
-        sqlOn(s, dir, sparkGen.dedupMinhashSql(Some(("g_mhsig", None)),
-          pairsFrom = Some("g_mhpairs")))
-      }),
-      "dedup_incremental" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_mhsig", sparkGen.minhashSigBuildSql)
-        sqlOn(s, dir, sparkGen.dedupIncrementalSql(Some(("g_mhsig", None))))
-      }),
-      "dedup_minhash_verify" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_mhsig", sparkGen.minhashSigBuildSql)
-        Scratch.table(s, dir, "g_mhshx", sparkGen.minhashShxBuildSql)
-        Scratch.table(s, dir, "g_mhpairs",
-          sparkGen.minhashPairsFromSigsSql("g_mhsig"))
-        sqlOn(s, dir, sparkGen.dedupMinhashVerifySql(Some(("g_mhsig", Some("g_mhshx"))),
-          pairsFrom = Some("g_mhpairs")))
-      }),
-      "dedup_threshold_curve" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_mhsig", sparkGen.minhashSigBuildSql)
-        Scratch.table(s, dir, "g_mhshx", sparkGen.minhashShxBuildSql)
-        Scratch.table(s, dir, "g_mhpairs",
-          sparkGen.minhashPairsFromSigsSql("g_mhsig"))
-        sqlOn(s, dir, sparkGen.dedupThresholdCurveSql(Some(("g_mhsig", Some("g_mhshx"))),
-          pairsFrom = Some("g_mhpairs")))
-      }),
-      "dedup_minhash_calibration" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_mhsig", sparkGen.minhashSigBuildSql)
-        Scratch.table(s, dir, "g_mhshx", sparkGen.minhashShxBuildSql)
-        Scratch.table(s, dir, "g_mhpairs",
-          sparkGen.minhashPairsFromSigsSql("g_mhsig"))
-        sqlOn(s, dir, sparkGen.dedupMinhashCalibrationSql(Some(("g_mhsig", Some("g_mhshx"))),
-          pairsFrom = Some("g_mhpairs")))
-      }),
-      // band-geometry tuning curve over the checkpointed minhash
-      // signature table (the curve SQL references the signatures 17
-      // times — Catalyst re-inlines multi-referenced CTEs, so the
-      // corpus chain materializes ONCE per session/dir; the production
-      // scratch every LSH dedup pipeline persists anyway)
-      "minhash_band_curve" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_mhsig", sparkGen.minhashSigBuildSql)
-        sqlOn(s, dir, sparkGen.minhashCurveSql(Some("g_mhsig")))
-      }),
-      // modularity over the checkpointed LPA labels: the readout
-      // references the label table three times (Catalyst re-inlines
-      // multi-referenced CTEs — inline it would re-run the 3 LPA
-      // rounds per reference); the labels checkpoint once per
-      // (session, dir), the production shape — a community assignment
-      // is a kept artifact, every quality readout joins it
-      "graph_modularity" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_lpa", sparkGen.lpaBuildSql)
-        sqlOn(s, dir, sparkGen.graphModularitySql(Some("g_lpa")))
-      }),
-      // the LPA convergence curve over the checkpointed 3-round label
-      // table + the betweenness-shared symmetrized edge scratch (r10):
-      // the curve references labels ×3 and edges ×3 — view-backed
-      // those are six cheap parquet scans; inline they re-ran the LPA
-      // rounds and the edge dedup per reference (the stage-heavy shape
-      // that amplified ambient load into a 3× bench reading)
-      "graph_lpa_curve" -> ((s, dir) => {
-        val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
-        val v = s"g_edges_sym_p$planes"
-        Scratch.table(s, dir, v,
-          "select src, dst from g_knn union select dst, src from g_knn")
-        Scratch.table(s, dir, "g_lpa_rounds", sparkGen.lpaRoundsBuildSql)
-        sqlOn(s, dir, sparkGenFor(s, dir).graphLpaCurveSql(Some(("g_lpa_rounds", v))))
-      }),
-      // per-community conductance over the same checkpointed LPA
-      // labels (the kept community assignment) + the served kNN edges
-      "graph_conductance" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_lpa", sparkGen.lpaBuildSql)
-        sqlOn(s, dir, sparkGen.graphConductanceSql(Some("g_lpa")))
-      }),
-      // native bounded-state per-group top-k (functions.TopKAgg):
-      // map-side partials keep ≤ k pairs per group, so the exchange
-      // carries O(groups·k) rows where the oracle's window form sorts
-      // the full candidate stream
-      "vec_topk_grouped" -> ((s, dir) => sqlOn(s, dir, sparkGen.groupedTopkSql())),
-      // watermark repair over a PERSISTED damage snapshot: the σ=0.04
-      // attacked-stego table is scratch-materialized once (the repair
-      // job's kept input — Catalyst re-inlines a 4×-referenced CTE, so
-      // the pure SQL form re-derived the attack per reference; r8
-      // verdict item 7), then the pre-decode / re-embed / post-decode
-      // passes all read the materialized rows. Oracle inlines the att
-      // CTE (DuckHints materializes it there).
-      // Rocchio classifier over the PERSISTED (doc, word) presence
-      // table: the r11 plan re-ran the corpus explode per reference
-      // (3x — doc sizes, centroids, scoring join; the 4-rep-stable
-      // regression cluster). Build once; serving joins parquet scans
-      // with the vocabulary-bounded sides broadcast. Oracle inlines.
-      "text_centroid_classify" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_docwords", sparkGen.docWordsBuildSql)
-        sqlOn(s, dir, sparkGen.textCentroidClassifySql(Some("g_docwords")))
-      }),
-      // Burrows' Delta over the PERSISTED (source, word, z) table:
-      // the inline plan re-derived the corpus word census per `pre`/
-      // `z` reference (710 nodes / 48 scans — r11 verdict item 7);
-      // the artifact is |sources|·30 rows and the serving readout is
-      // one self-join over it. Oracle inlines the full chain.
-      "text_burrows_delta" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_bdz", sparkGen.bdzBuildSql)
-        sqlOn(s, dir, sparkGen.textBurrowsDeltaSql(Some("g_bdz")))
-      }),
-      // sampled-audit curve over the PERSISTED per-id decode-stats
-      // table: the corpus-priced per-id projection aggregation (axa)
-      // was re-derived per downstream reference inline (tier censuses
-      // + vote ladder — the r11 regression cluster). One corpus pass
-      // at build; serving folds from O(N)-row scans. Oracle inlines.
-      "wm_audit_curve" -> ((s, dir) => {
-        val gen = sparkGenFor(s, dir)
-        val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
-        val v = s"g_audit_dec_p$planes"
-        Scratch.table(s, dir, v, gen.auditDecodeBuildSql)
-        sqlOn(s, dir, gen.wmAuditCurveSql(Some(v)))
-      }),
-      // RFM segmentation over the PERSISTED per-user feature table
-      // (the kept artifact of a production segmentation): inline, the
-      // per-user events aggregation re-inlined per reference — 3
-      // median censuses + count + segment join = the r11 plan's 20
-      // events scans. Oracle inlines everything.
-      "events_rfm" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_rfm_user", sparkGen.rfmUserBuildSql)
-        sqlOn(s, dir, sparkGen.eventsRfmSql(Some("g_rfm_user")))
-      }),
-      // multi-tenant watermarking over a PERSISTED tenant-B stego
-      // overlay: the carrier re-selection windows + B-key QIM embed
-      // are a build-once artifact (the wm_repair damage-snapshot
-      // treatment — r11's inline plan was a 615-node tree with 58
-      // scans / 30 BNLJs from Catalyst CTE re-inlining of the
-      // overlay + the two extraction chains). Oracle inlines it all.
-      "wm_multi_tenant" -> ((s, dir) => {
-        val gen = sparkGenFor(s, dir)
-        // plane count in the scratch name: the build reads g_indeg /
-        // exn whose ROWS depend on the bucket geometry
-        val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
-        val v = s"g_mtb_stego_p$planes"
-        Scratch.table(s, dir, v, gen.mtbStegoBuildSql)
-        sqlOn(s, dir, gen.wmMultiTenantSql(Some(v)))
-      }),
-      // overwriting attack over a PERSISTED pirate-overwritten stego
-      // table (the wm_multi_tenant overlay treatment — r12: planning
-      // ALONE on the inline tree cost ~1.5 s per action because the
-      // pirate embed chain re-inlined under both extraction legs;
-      // the artifact holds exactly the inline ostego rows). Oracle
-      // inlines the full chain.
-      "wm_overwrite" -> ((s, dir) => {
-        val gen = sparkGenFor(s, dir)
-        val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
-        val v = s"g_ow_stego_p$planes"
-        Scratch.table(s, dir, v, gen.owStegoBuildSql)
-        sqlOn(s, dir, gen.wmOverwriteSql(Some(v)))
-      }),
-      // collusion attack over a PERSISTED colluder-averaged table
-      // (same overlay treatment; serving = ONE extraction chain over
-      // the parquet artifact). Oracle inlines the full chain.
-      "wm_collusion" -> ((s, dir) => {
-        val gen = sparkGenFor(s, dir)
-        val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
-        val v = s"g_coll_stego_p$planes"
-        Scratch.table(s, dir, v, gen.collStegoBuildSql)
-        sqlOn(s, dir, gen.wmCollusionSql(Some(v)))
-      }),
-      // Δ tuning curve over the PERSISTED rung-shift state + the
-      // rung-tagged attacked ladder (the overlay treatment again —
-      // serving is one extraction chain over a parquet scan + two
-      // tiny folds). Oracle inlines the full chain.
-      "wm_delta_curve" -> ((s, dir) => {
-        val gen = sparkGenFor(s, dir)
-        val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
-        val shiftV = s"g_dc_shift_p$planes"
-        val attV = s"g_dc_att_p$planes"
-        Scratch.table(s, dir, shiftV, gen.dcShiftBuildSql)
-        Scratch.table(s, dir, attV, gen.dcAttBuildSql(shiftV))
-        sqlOn(s, dir, gen.wmDeltaCurveSql(Some((shiftV, attV))))
-      }),
-      "wm_repair" -> ((s, dir) => {
-        val gen = sparkGenFor(s, dir)
-        // plane count in the scratch name: the build SQL's TEXT doesn't
-        // change with the bucket geometry (it reads the g_stego view),
-        // but its ROWS do — the name keys the cache to the layout.
-        // r12 serving split: the damage snapshot (att), the pre-decode
-        // validity table (predec) and the REPAIRED table (fixed) are
-        // the repair job's kept artifacts; serving runs ONE extraction
-        // chain (post-decode) instead of three (the inline plan's
-        // planning alone cost ~1.9 s per action). Oracle inlines all.
-        val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
-        val v = s"g_wm_att_p$planes"
-        val predecV = s"g_wm_predec_p$planes"
-        val fixedV = s"g_wm_fixed_p$planes"
-        Scratch.table(s, dir, v, gen.wmAttackBuildSql)
-        Scratch.table(s, dir, predecV, gen.wmPredecBuildSql(v))
-        Scratch.table(s, dir, fixedV, gen.wmFixedBuildSql(v, predecV))
-        sqlOn(s, dir, gen.wmRepairServeSql(predecV, fixedV))
-      }),
-      // sampled betweenness over a PERSISTED symmetrized edge table:
-      // the BFS levels and the Brandes successor join reference the
-      // edge set repeatedly (Catalyst re-inlines the union-distinct
-      // per reference — measured 5.1 s inline at sf0.01, scratch-backed
-      // well under 1 s); the oracle inlines it, DuckDB-materialized.
-      "graph_betweenness" -> ((s, dir) => {
-        val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
-        val v = s"g_edges_sym_p$planes"
-        Scratch.table(s, dir, v,
-          "select src, dst from g_knn union select dst, src from g_knn")
-        sqlOn(s, dir, sparkGenFor(s, dir).graphBetweennessSql(Some(v)))
-      }),
-      // the degree-correlation curve references the edge set ~5×
-      // (deg/ed2 unions + two joins) — scratch-backed those are five
-      // scans of one materialized parquet (inline re-derived the kNN
-      // build per reference: 36.5 s vs 4-5 s at the 30× decade)
-      "graph_knn_degree_curve" -> ((s, dir) => {
-        val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
-        val v = s"g_edges_sym_p$planes"
-        Scratch.table(s, dir, v,
-          "select src, dst from g_knn union select dst, src from g_knn")
-        sqlOn(s, dir, sparkGenFor(s, dir).graphKnnDegreeCurveSql(Some(v)))
-      }),
-      // sampled harmonic closeness shares the SAME persisted
-      // symmetrized edge table (the hop chain references the edge set
-      // 3×; scratch-backed it's three scans of a materialized parquet,
-      // inline it would re-derive the union-distinct per reference).
-      "graph_closeness" -> ((s, dir) => {
-        val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
-        val v = s"g_edges_sym_p$planes"
-        Scratch.table(s, dir, v,
-          "select src, dst from g_knn union select dst, src from g_knn")
-        sqlOn(s, dir, sparkGenFor(s, dir).graphClosenessSql(Some(v)))
-      }),
-      // 21g registry-path extraction: the carrier-id list persists as
-      // a cross-session parquet scratch artifact (the reference's
-      // save_low_degree_ids file), and extraction joins the attacked
-      // corpus against it — broadcast semi-join + the shared decode
-      // aggregation, NO selection-chain rebuild. Oracle inlines the
-      // same id list from the chain (Queries.wmExtractIdsSql).
-      "wm_extract_ids" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_carrier_ids", "select vec_id, blk from g_carriers")
-        sqlOn(s, dir, sparkGenFor(s, dir).wmExtractIdsSql(Some("g_carrier_ids")))
-      }),
-      // row 11's SQL half made hash-gated (r8 verdict item 4): the
-      // registry-path RECOVER — same persisted id list, same attack,
-      // votes reassembled into the ciphertext characters the AES-GCM
-      // decrypt consumes; WatermarkEndToEndSpec decrypts this key's
-      // output, so only the AES call itself stays spec-only.
-      "wm_recover_registry" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_carrier_ids", "select vec_id, blk from g_carriers")
-        sqlOn(s, dir, sparkGenFor(s, dir).wmRecoverRegistrySql(Some("g_carrier_ids")))
       }),
       // the in-SQL power-iteration eigensolve mirrored in the JVM
       // (operators.PcaSolve — the bounded-driver-math convention of
@@ -924,20 +266,6 @@ object SparkEntry {
           m2 += e.mu(i) * e.v2(i) * sg2
         }
         sqlOn(s, dir, sparkGen.mdsProjectSql(w1, w2, m1, m2))
-      }),
-      // the learned merges APPLIED: distinct words encode once against
-      // the same checkpointed vocabulary (the tokenizer's shipped
-      // lookup table), docs join token lengths back
-      "text_bpe_encode" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_bpe_vocab", sparkGen.bpeVocabBuildSql)
-        sqlOn(s, dir, sparkGen.bpeEncodeSql(Some("g_bpe_vocab")))
-      }),
-      // per-language tokenizer fertility over the same checkpointed
-      // vocabulary (the multilingual-equity readout of the shipped
-      // tokenizer artifact)
-      "text_bpe_fertility" -> ((s, dir) => {
-        Scratch.table(s, dir, "g_bpe_vocab", sparkGen.bpeVocabBuildSql)
-        sqlOn(s, dir, sparkGen.bpeFertilitySql(Some("g_bpe_vocab")))
       }))
 
   /** Collect the one st0 moment row and run the JVM eigensolve. */
@@ -945,71 +273,6 @@ object SparkEntry {
     val row = sqlOn(s, dir, sparkGen.pcaMomentsSql).collect()(0)
     val a = Array.tabulate(PcaSolve.Dim)(i => row.getAs[Double](s"a${i + 1}"))
     PcaSolve.solve(a, (i, j) => row.getAs[Double](s"m${i + 1}_${j + 1}"))
-  }
-
-  // every doc-side session table is a graft.Scratch artifact: a fresh
-  // session READS the kept artifact instead of re-paying the
-  // corpus-priced build; scratch off / write failure falls back to
-  // the in-session localCheckpoint, value-identical
-  private def simPairsView(s: SparkSession, dir: String): String = {
-    // band geometry derived from the doc count (simhashBandsFor —
-    // floors at the static 5×12 below ~82k docs, so the verify-scale
-    // scratch name and rows are unchanged); the geometry keys the
-    // scratch name because the pair ROWS change with the band split.
-    // The build STAGES through the persisted signature table (r10):
-    // signatures are band-INDEPENDENT, so g_simsigs is shared by every
-    // geometry and by dedup_upsert's maintenance path, and a re-arm of
-    // the band ladder re-pays only the banded join, never the
-    // corpus-priced word pipeline. Pair rows are value-identical to
-    // the inline chain (re-verified by hash across the family).
-    val bands = graft.sqlgen.Wm.simhashBandsFor(Tables.docCount(s, dir))
-    val v = if (bands == graft.sqlgen.Wm.SimhashBands) "g_simpairs"
-            else s"g_simpairs_b$bands"
-    Scratch.table(s, dir, "g_simsigs", sparkGen.simhashSigBuildSql)
-    Scratch.table(s, dir, v,
-      sparkGenFor(s, dir).simhashPairsFromSigsSql("g_simsigs"))
-    v
-  }
-
-  /** The CONTRACTED component-graph artifacts on top of the pair
-    * scratch (equal-signature contraction — componentsCtes documents
-    * the equivalence): g_simreps (doc → its sig group's min-doc rep +
-    * group size) and g_simrpairs (distinct rep pairs). Materialized
-    * as parquet because the 6 propagation rounds reference the graph
-    * 6× and Catalyst re-inlines per reference — view-backed those are
-    * 6 cheap scans; inline they re-ran the contraction joins per
-    * round (measured 75 s vs ~1 s at sf0.01). Returns the rep-pairs
-    * view name (the componentsCtes Some(...) convention). */
-  private def simCompViews(s: SparkSession, dir: String): String = {
-    val pairs = simPairsView(s, dir)
-    Scratch.table(s, dir, "g_simreps", sparkGen.simRepsBuildSql("g_simsigs"))
-    Scratch.table(s, dir, "g_simrpairs",
-      sparkGen.simRepPairsBuildSql(pairs, "g_simreps"))
-    Scratch.table(s, dir, "g_simnodes",
-      sparkGen.simNodesBuildSql("g_simreps", "g_simrpairs"))
-    Scratch.table(s, dir, "g_simsym",
-      sparkGen.simSymBuildSql("g_simrpairs", "g_simnodes"))
-    "g_simrpairs"
-  }
-
-  /** The append batch's beam-search forward links (qid, cid, sim, rn),
-    * scratch-persisted once per (session, dir, planes) — the shared
-    * input of vec_graph_append and vec_graph_compact (r10 verdict
-    * item 3). The plane count keys the name because the beam runs over
-    * the served graph geometry (the wm_repair convention). */
-  private def appendLinksView(s: SparkSession, dir: String): String = {
-    val planes = graft.sqlgen.Wm.lshPlanesFor(Tables.vectorCount(s, dir))
-    val v = s"g_applinks_p$planes"
-    Scratch.table(s, dir, v, sparkGenFor(s, dir).graphAppendLinksSql)
-    v
-  }
-
-  private def jaccardPairsView(s: SparkSession, dir: String): Unit =
-    Scratch.table(s, dir, "g_jpairs", sparkGen.jaccardPairsBuildSql): Unit
-
-  private def decontShinglesView(s: SparkSession, dir: String): Unit = {
-    Scratch.table(s, dir, "g_dsh_ev", sparkGen.decontShinglesBuildSql("ev"))
-    Scratch.table(s, dir, "g_dsh_tr", sparkGen.decontShinglesBuildSql("tr")): Unit
   }
 
   /** DuckDB-runnable oracle SQL, generated from the same templates.
@@ -1028,41 +291,5 @@ object SparkEntry {
         "multimodal_bmp_resize" -> graft.operators.Bmp.bmpResizeOracleSql,
         "multimodal_png_stats" -> graft.operators.Png.pngStatsOracleSql,
         "multimodal_image_dhash" -> graft.operators.Bmp.imageDhashOracleSql,
-        "multimodal_audio_fp" -> graft.operators.Wav.audioFingerprintOracleSql,
-        "wm_recover_registry" -> duckGen.wmRecoverRegistrySql(None),
-        "vec_graph_append" -> duckGen.graphAppendSql(None),
-        "vec_graph_compact" -> duckGen.graphCompactSql(None),
-        "vec_topk_ivfpq_res" -> duckGen.ivfPqResSql(None),
-        "vec_ivfpq_res_distortion" -> duckGen.ivfPqResDistortionSql(None),
-        "dedup_components" -> duckGen.dedupComponentsSql(None),
-        "dedup_apply" -> duckGen.dedupApplySql(None),
-        "dedup_cluster_rep" -> duckGen.dedupClusterRepSql(None),
-        "dedup_quality_impact" -> duckGen.dedupQualityImpactSql(None),
-        "dedup_cross_source" -> duckGen.dedupCrossSourceSql(None),
-        "dedup_upsert" -> duckGen.dedupUpsertSql(None, None),
-        "dedup_upsert_minhash" -> duckGen.dedupUpsertMinhashSql(None, None),
-        "dedup_jaccard" -> duckGen.dedupJaccardSql(None),
-        "dedup_containment" -> duckGen.dedupContainmentSql(None),
-        "vec_mmr" -> duckGen.mmrSql(None),
-        // the native aggregate must reproduce the SQL sketch exactly,
-        // so its oracle IS the by-source SQL rendering
-        "sketch_distinct_native" -> duckGen.sql("sketch_distinct_by_source"),
-        // the native CMS grid must reproduce the SQL grid exactly
-        // (integer counts, same PRF rows), so its oracle IS the SQL
-        // point-query rendering
-        "sketch_cms_native" -> duckGen.sql("sketch_cms"),
-        // the native bottom-k set must reproduce the SQL k-min
-        // shortlist exactly, so its oracle is the k=64 window rendering
-        "sketch_kmv_native" -> duckGen.kmvSql(Seq(64)),
-        // the native aggregate must reproduce the window ranking
-        // exactly, so its oracle is the window rendering
-        "vec_topk_grouped" -> duckGen.groupedTopkSql(),
-        "graph_modularity" -> duckGen.graphModularitySql(None),
-        "graph_conductance" -> duckGen.graphConductanceSql(None),
-        "events_attribution_markov" -> duckGen.markovAttributionSql(None),
-        "text_bpe_encode" -> duckGen.bpeEncodeSql(None),
-        "text_bpe_fertility" -> duckGen.bpeFertilitySql(None),
-        "minhash_band_curve" -> duckGen.minhashCurveSql(None),
-        "search_rerank_agreement" -> duckGen.rerankAgreementSql(None),
-        "dedup_tier_eval" -> duckGen.dedupTierEvalSql(None))
+        "multimodal_audio_fp" -> graft.operators.Wav.audioFingerprintOracleSql)
 }

@@ -1,9 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: warm per-key timing of a comma-separated key list with
-  * the bench's exact methodology (count() action, local[32], 32
-  * shuffle partitions; one untimed warmup rep then N timed reps).
+  * the bench's exact methodology (count() action, DevSession's cores
+  * and shuffle partitions; one untimed warmup rep then N timed reps).
   * Usage: runMain graft.TimeOne <key,key,...> [sfDir] [reps]
   */
 object TimeOne {
@@ -15,10 +14,7 @@ object TimeOne {
     val keys = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession()
     def t(k: String): Double = {
       val t0 = System.nanoTime()
       SparkEntry.queries(k)(spark, sfDir).count()

@@ -16,9 +16,9 @@ import java.nio.file.{Files, Paths}
   *  - keys dump CHEAPEST-FIRST (last round's bench costs), so that
   *    prefix is maximal;
   *  - dumps run on a small thread pool (Spark job submission is
-  *    thread-safe; the WmCache artifacts are built once on the main
-  *    thread first, and Scratch.artifact memoizes every artifact via
-  *    computeIfAbsent) — wall time ≈ single-threaded / pool size;
+  *    thread-safe; every WmCache artifact is built once first, and
+  *    Scratch.artifact memoizes every artifact via computeIfAbsent) —
+  *    wall time ≈ single-threaded / pool size;
   *  - INCREMENTAL re-runs: each key gets a signature file under the
   *    SIBLING metadata dir `<outDir>_sigs/<key>` (outside the dump
   *    dir entirely — r13: the driver's comparator globs outDir's
@@ -164,12 +164,12 @@ object Verify {
     def sigOf(name: String): String = graft.functions.Prf.md5hex(
       sigBase + "|" + SparkEntry.oracleSql.getOrElse(name, "")).take(16)
 
-    // every shared artifact once, on the main thread — after this every
-    // per-key Tables.register / WmCache artifact ensure is an idempotent
-    // cache hit, safe under the pool
+    // every declared artifact once, before the key pool starts — after
+    // this every per-key Tables.register / WmCache artifact ensure is an
+    // idempotent cache hit
     Tables.register(spark, sfDir)
     if (!smoke) try WmCache.ensureAll(spark, sfDir)
-      catch { case e: Throwable => System.err.println(s"[verify] chain build failed: ${e.getMessage}") }
+      catch { case e: Throwable => System.err.println(s"[verify] artifact build failed: ${e.getMessage}") }
 
     val t0 = System.nanoTime()
     def remainingSec = (deadlineAt - System.nanoTime()) / 1e9

@@ -13,7 +13,7 @@ import graft.sqlgen.{Wm, WmParams}
   * that ship compiled in the jar: g_bkt (LSH bucket ids), g_knn (the
   * approximate kNN graph) and g_stego (the QIM embed of the carriers).
   *
-  * Their SQL in `Gen.cacheStages` SPECIFIES each stage — it is the
+  * Their SQL in `Gen.artifactSql` SPECIFIES each stage — it is the
   * DuckDB oracle's semantics, the reference of the parity spec
   * (ChainKernelSpec) and the stage's scratch key — and these kernels
   * EXECUTE it. On a cold JVM the generated SQL cost more to compile

@@ -700,7 +700,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |          from qrsub v join rct1 c on c.m = v.m)""".stripMargin
 
   /** The residual index chain: cached artifact views on the Spark
-    * side (built once per session/dir by SparkEntry), the full inline
+    * side (built once per session/dir from [[artifacts]]), the full inline
     * train+encode for the oracle. */
   private def rpqChain(idx: Option[(String, String)]): String = idx match {
     case Some((ctV, cdV)) =>
@@ -1073,31 +1073,125 @@ final class Gen(d: Dialect, useViews: Boolean = false,
   private def wmChain(upTo: String): String =
     if (views) cachedChain(upTo) else fullChain(upTo)
 
-  /** The SQL that SPECIFIES each cached artifact (graft.WmCache), in
-    * build order: the watermark chain, then the ANN indexes. A stage
-    * reads only the g_* views it names, so WmCache derives each
-    * stage's inputs from this text, and the text keys its scratch.
-    * WmCache executes g_indeg, g_carriers and the indexes as this SQL;
-    * g_bkt, g_knn and g_stego run as the precompiled kernels of
-    * operators.ChainKernels, which ChainKernelSpec holds row-identical
-    * to it. Spark-dialect only. */
-  lazy val cacheStages: Seq[(String, String)] = Seq(
-    "g_bkt" -> s"with ${Seq(nvCtes, lshCtes).mkString(",\n")}\nselect id, t, b from bkt",
-    "g_knn" -> s"with ${Seq(nvCtes, viewAlias("bkt", "g_bkt"), knnCtes).mkString(",\n")}\nselect src, dst, sim, rn from knn",
-    "g_indeg" -> s"with ${Seq(nvCtes, viewAlias("knn", "g_knn"), indegCte).mkString(",\n")}\nselect vec_id, in_degree from indeg",
-    "g_carriers" -> s"with ${Seq(nvCtes, viewAlias("indeg", "g_indeg"), carrierCtes).mkString(",\n")}\nselect vec_id, in_degree, sel_rank, blk from carriers",
-    "g_stego" -> s"with ${Seq(nvCtes, exnCte, viewAlias("carriers", "g_carriers"), stegoCtes).mkString(",\n")}\nselect id, pos, sval from stego",
+  /** `v` where this rendering reads the kept g_* artifact views, None
+    * where it inlines the chains they hold (the DuckDB oracle, and any
+    * rendering without views). */
+  private def view[T](v: T): Option[T] = if (views) Some(v) else None
+
+  // artifact names that carry the geometry their rows depend on
+  private val edgesSymView = s"g_edges_sym_p$lshPlanes"
+  private val appLinksView = s"g_applinks_p$lshPlanes"
+  private val l1BktView = s"g_l1bkt_j$l1Hashes"
+  private val simPairsView =
+    if (simhashBands == Wm.SimhashBands) "g_simpairs" else s"g_simpairs_b$simhashBands"
+  private val dcShiftView = s"g_dc_shift_p$lshPlanes"
+  private val dcAttView = s"g_dc_att_p$lshPlanes"
+  private val wmAttView = s"g_wm_att_p$lshPlanes"
+  private val wmPredecView = s"g_wm_predec_p$lshPlanes"
+  private val wmFixedView = s"g_wm_fixed_p$lshPlanes"
+  private val rpqViews = ("g_rpq_ct", "g_rpq_codes")
+  private val dshViews = ("g_dsh_ev", "g_dsh_tr")
+  private val mhVerifyViews = ("g_mhsig", Some("g_mhshx"))
+
+  /** Every kept artifact (graft.WmCache), unrendered, in build order:
+    * the watermark chain, the ANN indexes, then every table a query
+    * reads in place of an inline chain. The SQL SPECIFIES the artifact:
+    * a build reads only the g_* views its SQL names, so WmCache derives
+    * each artifact's inputs from this text, and the text keys its
+    * scratch. WmCache executes the SQL, except for g_bkt, g_knn and
+    * g_stego (the precompiled kernels of operators.ChainKernels, which
+    * ChainKernelSpec holds row-identical to it) and g_nn_deep_logits
+    * (the JVM forward pass operators.NnDeep, which NnDeepSpec holds
+    * bit-identical to it). Spark-dialect only. */
+  private lazy val artifacts: Seq[(String, () => String)] = Seq(
+    "g_bkt" renders s"with ${Seq(nvCtes, lshCtes).mkString(",\n")}\nselect id, t, b from bkt",
+    "g_knn" renders s"with ${Seq(nvCtes, viewAlias("bkt", "g_bkt"), knnCtes).mkString(",\n")}\nselect src, dst, sim, rn from knn",
+    "g_indeg" renders s"with ${Seq(nvCtes, viewAlias("knn", "g_knn"), indegCte).mkString(",\n")}\nselect vec_id, in_degree from indeg",
+    "g_carriers" renders s"with ${Seq(nvCtes, viewAlias("indeg", "g_indeg"), carrierCtes).mkString(",\n")}\nselect vec_id, in_degree, sel_rank, blk from carriers",
+    "g_stego" renders s"with ${Seq(nvCtes, exnCte, viewAlias("carriers", "g_carriers"), stegoCtes).mkString(",\n")}\nselect id, pos, sval from stego",
     // ANN index build — centroids, assignments, codebooks, codes:
     // the build-once/serve-many split every production vector index
     // makes (faiss/Milvus train+add vs search). Each stage reads the
     // views before it, so train runs on the sample once, and the two
     // full-corpus passes (IVF assignment, PQ encoding) happen exactly
     // once per session/scratch lifetime.
-    "g_ivf_ct" -> s"with ${Seq(nvCtes, exnCte, ivfTrainCtes).mkString(",\n")}\nselect cell, cv from ct2",
-    "g_ivf_asg" -> s"with ${Seq(nvCtes, viewAlias("ct2", "g_ivf_ct"), ivfAssignCtes).mkString(",\n")}\nselect id, cell from asgF",
-    "g_pq_ct" -> s"with ${Seq(nvCtes, pqBaseCtes, pqTrainCtes).mkString(",\n")}\nselect m, cell, cv from pct1",
-    "g_pq_codes" -> s"with ${Seq(nvCtes, pqBaseCtes, viewAlias("pct1", "g_pq_ct"), pqEncodeCtes).mkString(",\n")}\nselect id, m, cell from codes",
-    "g_bq" -> s"with ${Seq(nvCtes, exnCte, bqCte).mkString(",\n")}\nselect id, hi, lo from bq")
+    "g_ivf_ct" renders s"with ${Seq(nvCtes, exnCte, ivfTrainCtes).mkString(",\n")}\nselect cell, cv from ct2",
+    "g_ivf_asg" renders s"with ${Seq(nvCtes, viewAlias("ct2", "g_ivf_ct"), ivfAssignCtes).mkString(",\n")}\nselect id, cell from asgF",
+    "g_pq_ct" renders s"with ${Seq(nvCtes, pqBaseCtes, pqTrainCtes).mkString(",\n")}\nselect m, cell, cv from pct1",
+    "g_pq_codes" renders s"with ${Seq(nvCtes, pqBaseCtes, viewAlias("pct1", "g_pq_ct"), pqEncodeCtes).mkString(",\n")}\nselect id, m, cell from codes",
+    "g_bq" renders s"with ${Seq(nvCtes, exnCte, bqCte).mkString(",\n")}\nselect id, hi, lo from bq",
+    // the residual-PQ codebook and codes, over the IVF index
+    "g_rpq_ct" renders rpqTrainBuildSql,
+    "g_rpq_codes" renders rpqCodesBuildSql,
+    // value histograms of the quantile sketches, the shingle census
+    "g_qhist" renders quantHistBuildSql,
+    "g_qhist_curve" renders quantCurveHistBuildSql,
+    "g_evqhist" renders evQuantHistBuildSql,
+    "g_shcensus" renders shingleCensusBuildSql,
+    // the hybrid score stack under its CDC feed
+    "g_hyb_stats" renders hybStatsBuildSql,
+    "g_hyb_delta" renders hybDeltaBuildSql,
+    "g_hyb_post" renders hybPostBuildSql("g_hyb_stats", "g_hyb_delta"),
+    "g_hyb_scores_post" renders hybPostScoresBuildSql("g_hyb_post"),
+    "g_hybrid_scores" renders hybridScoresBuildSql,
+    // MinHash signatures, 3-shingle profile and banded pairs
+    "g_mhsig" renders minhashSigBuildSql,
+    "g_mhshx" renders minhashShxBuildSql,
+    "g_mhpairs" renders minhashPairsFromSigsSql("g_mhsig"),
+    // the deep-NN witness's quantized logits
+    "g_nn_deep_logits" renders nnDeepLogitsBuildSql,
+    // SimHash signatures, banded pairs (band geometry in the name),
+    // and the contracted component graph over them
+    "g_simsigs" renders simhashSigBuildSql,
+    simPairsView renders simhashPairsFromSigsSql("g_simsigs"),
+    "g_simreps" renders simRepsBuildSql("g_simsigs"),
+    "g_simrpairs" renders simRepPairsBuildSql(simPairsView, "g_simreps"),
+    "g_simnodes" renders simNodesBuildSql("g_simreps", "g_simrpairs"),
+    "g_simsym" renders simSymBuildSql("g_simrpairs", "g_simnodes"),
+    "g_rbq" renders rbqBuildSql,
+    l1BktView renders l1BktBuildSql,
+    "g_winnow" renders winnowFpBuildSql,
+    "g_jpairs" renders jaccardPairsBuildSql,
+    "g_basket" renders marketBasketBuildSql,
+    "g_mmr_pool" renders mmrPoolSql,
+    "g_dsh_ev" renders decontShinglesBuildSql("ev"),
+    "g_dsh_tr" renders decontShinglesBuildSql("tr"),
+    "g_srcwf" renders srcWordFreqBuildSql,
+    "g_markov_trans" renders markovTransBuildSql,
+    "g_type_trans" renders typeTransBuildSql,
+    "g_bpe_vocab" renders bpeVocabBuildSql,
+    "g_lpa" renders lpaBuildSql,
+    // the kNN graph symmetrized (plane count in the name: its rows
+    // follow the bucket geometry)
+    edgesSymView renders "select src, dst from g_knn union select dst, src from g_knn",
+    "g_lpa_rounds" renders lpaRoundsBuildSql,
+    "g_docwords" renders docWordsBuildSql,
+    "g_bdz" renders bdzBuildSql,
+    s"g_audit_dec_p$lshPlanes" renders auditDecodeBuildSql,
+    "g_rfm_user" renders rfmUserBuildSql,
+    // watermark overlays over the chain (plane count in the name)
+    s"g_mtb_stego_p$lshPlanes" renders mtbStegoBuildSql,
+    s"g_ow_stego_p$lshPlanes" renders owStegoBuildSql,
+    s"g_coll_stego_p$lshPlanes" renders collStegoBuildSql,
+    dcShiftView renders dcShiftBuildSql,
+    dcAttView renders dcAttBuildSql(dcShiftView),
+    wmAttView renders wmAttackBuildSql,
+    wmPredecView renders wmPredecBuildSql(wmAttView),
+    wmFixedView renders wmFixedBuildSql(wmAttView, wmPredecView),
+    // the persisted carrier-id registry (the reference's
+    // save_low_degree_ids file)
+    "g_carrier_ids" renders "select vec_id, blk from g_carriers",
+    // the append batch's beam-search forward links
+    appLinksView renders graphAppendLinksSql)
+
+  private lazy val artifactRenderers: Map[String, () => String] = artifacts.toMap
+  /** Every artifact name, in build order; renders no SQL. */
+  lazy val artifactNames: Seq[String] = artifacts.map(_._1)
+  private val renderedArtifacts = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The SQL that specifies artifact `name`, rendered on first request
+    * and kept. */
+  def artifactSql(name: String): String =
+    memo(renderedArtifacts, name, artifactRenderers(name))
 
   /** Watermarked full table, exploded: carriers get stego values, the
     * rest keep originals (reference: pg_func.py update_vectors writes
@@ -2565,7 +2659,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
 
   /** The σ=0.04 gaussian-damaged stego rows — wm_repair's attack
     * input, shared between the inline rendering and the scratch-table
-    * build (graft.SparkEntry persists it as the repair job's kept
+    * build (the g_wm_att artifact persists it as the repair job's kept
     * "damage snapshot" artifact). */
   private def wmAttCte: String =
     s"""att as (select id, pos, sval + 0.04 * ${prfGauss(d)("'rep'", "id", "pos")} as sval from stego)"""
@@ -3017,7 +3111,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
   /** The per-doc 60-bit signature build alone (wordCtes → per-word
     * hash/count → 60 masked sign-sums → sig) — the corpus-priced half
     * of the pair chain, split out so the Spark serving path can
-    * scratch-persist it (SparkEntry.simPairsView) and so SimProf can
+    * scratch-persist it (the g_simsigs artifact) and so SimProf can
     * time it against the band join. The word hash is a pure function
     * of the WORD, so it computes once per DISTINCT word (vh —
     * Heaps-law-bounded vocabulary) and joins back broadcast, instead
@@ -3059,7 +3153,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     s"""$simhashSigCtes,
        |${simhashPairCtes("sh")}""".stripMargin
 
-  /** Dev/serving split points (graft.SimProf, SparkEntry.simPairsView):
+  /** Dev/serving split points (graft.SimProf, the g_simsigs/g_simpairs artifacts):
     * the signature table build, and the pair chain reading a persisted
     * (doc_id, sig) view. */
   def simhashSigBuildSql: String =
@@ -3297,7 +3391,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     val prefix = pairsFrom match {
       case Some(_) =>
         // the CONTRACTED artifacts are prebuilt parquet scratch views
-        // (SparkEntry.simCompViews: g_simreps = doc → min-doc_id rep of
+        // ([[artifacts]]: g_simreps = doc → min-doc_id rep of
         // its sig group + group size, g_simsym = the symmetrized
         // self-looped rep edges, g_simnodes = the rep node set) —
         // Catalyst re-inlines every multi-referenced CTE, so the 6
@@ -4139,8 +4233,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
   private def inList(c: String, ws: Seq[String]) =
     s"case when $c in (${ws.map("'" + _ + "'").mkString(", ")}) then 1 else 0 end"
 
-  /** `"key" renders sql`: a corpus entry whose SQL text is built only
-    * when [[sql]] first asks for that key. */
+  /** `"key" renders sql`: a corpus or artifact entry whose SQL text is
+    * built only when [[sql]] or [[artifactSql]] first asks for it. */
   private implicit final class Renders(key: String) {
     def renders(body: => String): (String, () => String) = key -> (() => body)
   }
@@ -4149,7 +4243,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     * to stay under the JVM's 64 KB bytecode-per-method limit — one
     * logical map, split at arbitrary entry boundaries. */
   private lazy val renderers: Map[String, () => String] =
-    sqls1 ++ sqls2 ++ sqls3 ++ sqls4
+    sqls1 ++ sqls2 ++ sqls3 ++ sqls4 ++ sqls5
 
   /** Every query key this generator renders. */
   lazy val keys: Set[String] = renderers.keySet
@@ -4492,7 +4586,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // Jaccard estimate) needs NO second pass over the shingle sets —
     // the expensive text scan runs exactly once. The wordCtes→bands
     // chain is shared with dedup_incremental (minhashBandsCtes).
-    "dedup_minhash" renders dedupMinhashSql(None),
+    "dedup_minhash" renders dedupMinhashSql(view(("g_mhsig", None)),
+      pairsFrom = view("g_mhpairs")),
 
     // INCREMENTAL dedup — the production shape after the corpus is
     // already deduped: a new delta batch (doc_id % 10 = 0 stands in
@@ -4505,7 +4600,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // the delta computes fresh signatures. Per new doc the best corpus
     // match comes from one max(struct) aggregation (no window); is_dup
     // applies the standard 0.5 MinHash-Jaccard dedup threshold.
-    "dedup_incremental" renders dedupIncrementalSql(None),
+    "dedup_incremental" renders dedupIncrementalSql(view(("g_mhsig", None))),
 
     "dedup_simhash" renders
       s"""with $wordCtes,
@@ -4525,11 +4620,11 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // default so the dumped oracle SQL is scale-independent. The 60
     // bit-sums are masked aggregation columns in ONE groupBy (a 60x
     // cross-join row expansion costs more than it saves).
-    "dedup_simhash_pairs" renders
+    "dedup_simhash_pairs" renders (if (views) simhashPairsFromSigsSql("g_simsigs") else
       s"""with $simhashCandCtes
          |select ${bigint("da")} as doc_a, ${bigint("db")} as doc_b,
          |  ${bigint("hamming")} as hamming
-         |from cand""".stripMargin,
+         |from cand""".stripMargin),
 
     "dedup_embedding" renders {
       // Spark side salts the bucket self-join (left side keyed id % S,
@@ -5094,7 +5189,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // the hash pins). Extraction itself is the shared extractCtes
     // aggregation — one partial-agg pass over the rate·N matched
     // rows + the tiny vote aggregation.
-    "wm_extract_ids" renders wmExtractIdsSql(None),
+    "wm_extract_ids" renders wmExtractIdsSql(view("g_carrier_ids")),
 
     // robustness matrix, continued: BER after subset deletion (10% of
     // rows dropped — surviving carriers still majority-vote correctly)
@@ -5220,7 +5315,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // ~2⁻⁴⁰ collision odds per pair, and a collision hashes
     // identically in both engines): the dominant shuffle/broadcast
     // carries 8-byte keys instead of 32-char strings.
-    "decontaminate" renders decontaminateSql(None),
+    "decontaminate" renders decontaminateSql(view(dshViews)),
 
     // N-GRAM LENGTH TUNING CURVE for decontamination (30m's knob —
     // the published standards disagree: GPT-3's eval decontamination
@@ -5851,7 +5946,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // guard, stated). Corpus work: the one word explode + a
     // vocabulary groupBy; everything after is ≤ 600 grid rows.
     // 190-row output (unordered source pairs).
-    "text_burrows_delta" renders textBurrowsDeltaSql(None),
+    "text_burrows_delta" renders textBurrowsDeltaSql(view("g_bdz")),
 
   )
 
@@ -6075,7 +6170,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // bounded by fill^k (measured vs expected reported side by side).
     // All integer arithmetic (PRF positions, set-bit array, contains)
     // → bit-identical engines.
-    "sketch_bloom" renders sketchBloomSql(None),
+    "sketch_bloom" renders sketchBloomSql(view(dshViews)),
 
     // BLOOM m-BITS TUNING CURVE — the bits-per-key frontier that sizes
     // every production Bloom deployment (next to sketch_hll_curve and
@@ -6089,7 +6184,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // positions present in the level's distinct-position set (value-
     // identical to the packed-bitset test, and the join stays
     // per-(m, pos) bounded). Integer counts until the final divisions.
-    "sketch_bloom_curve" renders sketchBloomCurveSql(None),
+    "sketch_bloom_curve" renders sketchBloomCurveSql(view(dshViews)),
 
     // the Bloom prefilter COMPOSED with the exact decontamination join
     // — output IDENTICAL to `decontaminate` (Bloom admits no false
@@ -6099,7 +6194,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // to every executor, the training corpus streams through a
     // map-side membership test, and ONLY the hits (true overlaps +
     // fill^k false positives) reach the exact hash join's shuffle.
-    "decontaminate_bloom" renders decontaminateBloomSql(None),
+    "decontaminate_bloom" renders decontaminateBloomSql(view(dshViews)),
 
     // rolling distinct-user engagement — per-day DAU, trailing-7-day
     // WAU, and the DAU/WAU stickiness ratio. Rolling DISTINCT does not
@@ -6188,7 +6283,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // global sort anywhere), the same two-pass trick as the carrier
     // rank. rel_err reported per quantile; integer ranks + IEEE bin
     // arithmetic → bit-identical engines.
-    "sketch_quantiles" renders sketchQuantilesSql(None),
+    "sketch_quantiles" renders sketchQuantilesSql(view("g_qhist")),
 
     // PER-GROUP quantiles — the grouped form of sketch_quantiles (what
     // sketch_distinct_by_source is to sketch_distinct): p50/p95 of the
@@ -6198,7 +6293,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // anywhere — the shuffle keys are (type) for stats/bins and
     // (type, bin) for the selection window; both scale with group
     // count, not row count.
-    "events_value_quantiles" renders eventsValueQuantilesSql(None),
+    "events_value_quantiles" renders eventsValueQuantilesSql(view("g_evqhist")),
 
     // triangle count / transitivity over the kNN proximity graph — the
     // graph-quality metric next to in-degree and PageRank. The count
@@ -6441,7 +6536,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // (part is vocabulary-sized next to lineitem). Counts are
     // integers; the three ratios are one-shot rounds of exact integer
     // quotients. 25 brands → ≤ 300 output rows at any scale.
-    "market_basket" renders marketBasketSql(None),
+    "market_basket" renders marketBasketSql(view("g_basket")),
 
     // first-order Markov transition matrix over per-user event
     // streams — the behavioral model product analytics fits on raw
@@ -6498,14 +6593,15 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // broadcast offsets + bucket-local row_number — no
     // single-partition window); the fused top-10 reuses the q3
     // bucketed-candidates + pairwise-rank pattern over ≤ 160 rows.
-    "search_hybrid_rrf" renders hybridRrfSql(None),
+    "search_hybrid_rrf" renders hybridRrfSql(view("g_hybrid_scores")),
 
     // CDC-UPSERT MAINTENANCE OF THE HYBRID SCORE STACK — see
     // searchHybridUpsertSql (r11 verdict item 5: the two-leg score
     // artifact's maintenance path; per-doc integer stats kept, 5%
     // delta re-tokenized, global BM25 stats refolded, full RRF top-10
     // re-served from stats alone).
-    "search_hybrid_upsert" renders searchHybridUpsertSql(None),
+    "search_hybrid_upsert" renders searchHybridUpsertSql(
+      view(("g_hyb_stats", "g_hyb_delta", "g_hyb_post", "g_hyb_scores_post"))),
 
     // BPE tokenizer training — the merge-learning loop every LLM data
     // pipeline runs before tokenization, trained (as real BPE trainers
@@ -6523,7 +6619,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // is one max(struct(count, pair)) aggregation with a
     // lexicographic tie-break, and 3 unrolled rounds emit
     // (round, lhs, rhs, merged, n_pairs, n_tokens_after).
-    "text_bpe_merges" renders bpeMergesSql(None),
+    "text_bpe_merges" renders bpeMergesSql(view("g_bpe_vocab")),
 
     // cross-document duplicated-substring detection (the
     // suffix-array substring dedup of Lee et al. 2022, re-expressed
@@ -6877,7 +6973,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // bought at — recall/cost is THE index-tuning tradeoff curve.
     // recall receipts for the residual-IVFADC serving rung — see
     // annRecallEvalIvfPqResSql (r11 verdict item 6).
-    "ann_recall_eval_ivfpq_res" renders annRecallEvalIvfPqResSql(None),
+    "ann_recall_eval_ivfpq_res" renders annRecallEvalIvfPqResSql(view(rpqViews)),
 
     "ann_recall_eval" renders
       s"""${wmChain("lsh")},
@@ -7212,7 +7308,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // vec_graph_append / vec_graph_compact moved to Option[links]
     // methods (graphAppendSql / graphCompactSql) so both Spark serving
     // paths read the ONE scratch-persisted beam-search product
-    // (SparkEntry.appendLinksView) — r10 verdict item 3.
+    // (the g_applinks artifact) — r10 verdict item 3.
 
     // PRE-FILTER vs POST-FILTER STRATEGY CURVE — the query-planning
     // choice every filtered vector search makes (pgvector's
@@ -7454,7 +7550,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // join — the step that keeps shared-phrase hot keys from going
     // quadratic at 100 TB (same role as the simhash band cap);
     // the join itself is hash-partitioned on fingerprint value.
-    "dedup_winnow" renders dedupWinnowSql(None),
+    "dedup_winnow" renders dedupWinnowSql(view("g_winnow")),
 
     // Embedding OUTLIER / OOD detection — the training-data filter
     // that surfaces vectors far from their own cluster (mislabeled,
@@ -7511,7 +7607,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // error. Scale: the shingle table is the already-priced corpus
     // pass; the verify joins are candidate-bounded (the whole point
     // of LSH).
-    "dedup_minhash_verify" renders dedupMinhashVerifySql(None),
+    "dedup_minhash_verify" renders dedupMinhashVerifySql(view(mhVerifyViews),
+      pairsFrom = view("g_mhpairs")),
 
     // PER-DOC NOVELTY RATE — the marginal-content signal a streaming
     // curation pipeline scores every incoming doc with (Heaps' law
@@ -7545,7 +7642,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // count, distinct docs implicated (the union of both sides —
     // what a keep-one policy would touch), and the mean true jaccard
     // of survivors (6dp-quantized before the exact decimal mean).
-    "dedup_threshold_curve" renders dedupThresholdCurveSql(None),
+    "dedup_threshold_curve" renders dedupThresholdCurveSql(view(mhVerifyViews),
+      pairsFrom = view("g_mhpairs")),
 
     // Bigram PMI association mining — the collocation signal behind
     // phrase detection (word2vec's phrase pass, Mikolov et al. 2013:
@@ -7888,7 +7986,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // a per-user-sized table. Per-user aggregation is one combinable
     // groupBy; segment assembly is three broadcast-able scalar joins.
     // Spend sums are decimal-exact; each mean is ONE double division.
-    "events_rfm" renders eventsRfmSql(None),
+    "events_rfm" renders eventsRfmSql(view("g_rfm_user")),
 
     // MULTI-TENANT WATERMARKING — the COOPERATIVE complement of
     // wm_overwrite's adversarial cell (Sheppard, Safavi-Naini,
@@ -7910,7 +8008,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // plan-time literals; no corpus-wide work beyond the served
     // chain. 16-row output: per-block errors + valid-carrier counts
     // for both tenants.
-    "wm_multi_tenant" renders wmMultiTenantSql(None),
+    "wm_multi_tenant" renders wmMultiTenantSql(view(s"g_mtb_stego_p$lshPlanes")),
 
     // WATERMARK REPAIR — the maintenance leg of the lifecycle
     // (backup/restore recovers the PRE-embed state; THIS recovers the
@@ -7934,7 +8032,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // honestly. Every pass is over rate·N carrier rows; no corpus
     // work. 16-row output: per-block pre/post errors + the repair
     // census.
-    "wm_repair" renders wmRepairSql(None),
+    "wm_repair" renders (if (views) wmRepairServeSql(wmPredecView, wmFixedView)
+      else wmRepairSql(None)),
 
     // RECALL@K CURVE of the served LSH route — the k knob of the
     // recall audit (4g fixes k=10; THIS measures how recall moves
@@ -8030,7 +8129,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // path, and wm_extract_null quantifies the same gate on clean
     // data. Errors fall monotonically as the scan widens: 123 → 56 →
     // 37 → 7.
-    "wm_audit_curve" renders wmAuditCurveSql(None),
+    "wm_audit_curve" renders wmAuditCurveSql(view(s"g_audit_dec_p$lshPlanes")),
 
     // EXPLAINED-VARIANCE LADDER — the dimensionality-budget readout
     // behind every compression choice in §2 (matryoshka prefix dims,
@@ -8857,7 +8956,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // (doc × matched-source) stream is ≤ |sources| × doc presence
     // rows, all map-side-combinable. Output: per-source census +
     // accuracy.
-    "text_centroid_classify" renders textCentroidClassifySql(None),
+    "text_centroid_classify" renders textCentroidClassifySql(view("g_docwords")),
 
     // AMS F₂ SKETCH — the second-moment / SELF-JOIN-SIZE estimator
     // (Alon–Matias–Szegedy 1996): sixteen ±1-signed frequency sums
@@ -8905,7 +9004,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // scale-equivariant up to the same factor) or coarsen the ln grid
     // to 1e-6, same escape hatch as the other bigint-grid keys
     // (events_autocorr, graph_assortativity, data_shard_manifest).
-    "text_keywords_llr" renders textKeywordsLlrSql(None),
+    "text_keywords_llr" renders textKeywordsLlrSql(view("g_srcwf")),
 
     // NEW vs RETURNING DAILY CENSUS — the simplest growth readout
     // every analytics deck opens with (and the events suite lacked):
@@ -9457,7 +9556,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // extraction is one aggregation + the tiny vote; all pirate
     // constants (groups, signs, message bits) are plan-time literals
     // of the second key — no extra corpus pass anywhere.
-    "wm_overwrite" renders wmOverwriteSql(None),
+    "wm_overwrite" renders wmOverwriteSql(view(s"g_ow_stego_p$lshPlanes")),
 
     // LAG-k AUTOCORRELATION (ACF) — the seasonality/memory diagnostic
     // over the daily event-count series (Box–Jenkins 1970; the check
@@ -9815,7 +9914,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |from km""".stripMargin,
 
     // see kmvSql for the full design note
-    "sketch_kmv" renders kmvSql(Seq(16, 64, 256)),
+    "sketch_kmv" renders kmvSql(Seq(16, 64, 256), wfView = view("g_srcwf")),
 
     // KMV SET ALGEBRA — pairwise source overlap from the bottom-k
     // sketches (the estimator registers can't give at small k: the
@@ -9835,7 +9934,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // source lists are df-bounded) — the measured-error honesty rule
     // every sketch key follows. Small-set branch: nk < k ⇒ the union
     // sketch IS the union, estimates become exact counts.
-    "sketch_kmv_overlap" renders kmvOverlapSql(None),
+    "sketch_kmv_overlap" renders kmvOverlapSql(view("g_srcwf")),
 
     // PER-SOURCE KL DIVERGENCE from the corpus word distribution —
     // the drift/contamination readout between a slice and its parent
@@ -9853,7 +9952,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // 8.4·10¹⁰) caps n_s at ~10⁸ tokens/source on the 1e-9 grid —
     // past that coarsen to 1e-6 (ceiling ×1000), the LLR escape
     // hatch. exp only in the final perplexity-ratio column.
-    "text_kl_divergence" renders textKlDivergenceSql(None),
+    "text_kl_divergence" renders textKlDivergenceSql(view("g_srcwf")),
 
     // SIMPSON CONCENTRATION / DIVERSITY per source — the
     // repeat-probability readout (Simpson 1949: λ = Σ nᵢ(nᵢ−1) /
@@ -9869,7 +9968,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // tokens/source — far past any real slice; pre-scale counts past
     // it. Null guard: all-distinct sources (λ = 0) report null
     // effective vocabulary rather than ∞.
-    "text_simpson" renders textSimpsonSql(None),
+    "text_simpson" renders textSimpsonSql(view("g_srcwf")),
 
     // REPEAT-PURCHASE CADENCE — the inter-order-gap distribution
     // behind replenishment forecasting and churn thresholds ("a
@@ -10151,7 +10250,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // only scalar shift math + one bounded extract aggregation over
     // rate·N carrier rows. 4-row output: the frontier a deployment
     // reads to pick its Δ.
-    "wm_delta_curve" renders wmDeltaCurveSql(None),
+    "wm_delta_curve" renders wmDeltaCurveSql(view((dcShiftView, dcAttView))),
 
   )
 
@@ -10506,7 +10605,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // rows; the word table joins each pair twice by equality (union
     // + two left joins — no OR-join BNLJ). Bigint ceiling c·N <
     // 2^63 to ~10⁹ tokens/source (then pre-scale counts, §4 ladder).
-    "text_js_divergence" renders textJsDivergenceSql(None),
+    "text_js_divergence" renders textJsDivergenceSql(view("g_srcwf")),
 
     // PEAK SESSION CONCURRENCY — the capacity-planning number behind
     // provisioning (max simultaneous sessions, per day and overall),
@@ -10571,7 +10670,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // readout from census rows; this oracle rendering inlines the
     // full union chain. md5-prefix shingle ids as in the served
     // dedup chain (identical hashing both engines).
-    "dedup_shingle_curve" renders dedupShingleCurveSql(None),
+    "dedup_shingle_curve" renders dedupShingleCurveSql(view("g_shcensus")),
 
     // ANN ENSEMBLE (RRF FUSION) RECALL — do three cheap approximate
     // indexes beat each alone? The reciprocal-rank-fusion trick
@@ -10822,7 +10921,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // raw leg's exact shapes. At 100 TB the rotated code table is the
     // same 8 bytes/vector — the rotation costs one extra map pass at
     // index build, nothing at query time.
-    "vec_bq_rotation" renders vecBqRotationSql(None),
+    "vec_bq_rotation" renders vecBqRotationSql(view("g_rbq")),
 
     "vec_bq_bit_balance" renders
       s"""with $nvCtes, $exnCte,
@@ -10933,7 +11032,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // land on the 1e-4 round grid first, then sum as EXACT bigints —
     // each bin mean is one division. Pair work = the verify stage's
     // (banded candidates only, est ≥ 0.1 floor stated).
-    "dedup_minhash_calibration" renders dedupMinhashCalibrationSql(None),
+    "dedup_minhash_calibration" renders dedupMinhashCalibrationSql(view(mhVerifyViews),
+      pairsFrom = view("g_mhpairs")),
 
     // DAY-OVER-DAY MIX SHIFT — the drift alarm every ingestion
     // pipeline runs (did yesterday's event-type mix change?): exact
@@ -10982,7 +11082,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // grid sums) and p90 by rank selection over the ≤ 101-value
     // percent DOMAIN. Docs under 3 words have no shingles and are
     // absent (stated). One shingle pass + vocabulary-sized joins.
-    "text_boilerplate_share" renders textBoilerplateShareSql(None),
+    "text_boilerplate_share" renders textBoilerplateShareSql(view("g_mhshx")),
 
     // INDEX STORAGE-vs-RECALL LADDER — SURVEY §4's memory ladder
     // (512 B raw → 128 B matryoshka-16 → 64 B SQ8 → 8 B PQ/BQ) as ONE
@@ -11438,7 +11538,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // bit-agreement so that structure is visible). Cost: one extra
     // embed chain + one extract over carrier rows — no new corpus
     // pass beyond the bounded rate·N carrier work.
-    "wm_collusion" renders wmCollusionSql(None),
+    "wm_collusion" renders wmCollusionSql(view(s"g_coll_stego_p$lshPlanes")),
 
     // WELCH'S t ON EVENT VALUE BY VARIANT — the continuous-metric
     // companion of events_ab_test's proportion z (the test an
@@ -11499,7 +11599,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // within-bin interpolation; the exact leg rank-selects INSIDE the
     // finest level's target bins only (the sketch_quantiles trick —
     // never a global sort). 9-row output.
-    "sketch_quantile_curve" renders sketchQuantileCurveSql(None),
+    "sketch_quantile_curve" renders sketchQuantileCurveSql(view("g_qhist_curve")),
 
     // SEMANTIC-DEDUP THRESHOLD CURVE — the cosine knob of embedding
     // dedup measured (the embedding-side twin of dedup_threshold_
@@ -11555,7 +11655,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // censuses joined per level — exact integer counts, one double
     // division per round. 3-row output; the spec pins round-3
     // equality with the served graph_modularity report.
-    "graph_lpa_curve" renders graphLpaCurveSql(None),
+    "graph_lpa_curve" renders graphLpaCurveSql(view(("g_lpa_rounds", edgesSymView))),
 
     // CHI-SQUARE INDEPENDENCE: event_type × day-of-week — "does WHAT
     // users do depend on WHEN they show up?" (the categorical
@@ -11903,7 +12003,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // Spark side (frontiers are sample-sized), DuckDB-materialized in
     // the oracle. Output: per reached node, contributing source
     // terms + the sampled betweenness.
-    "graph_betweenness" renders graphBetweennessSql(None),
+    "graph_betweenness" renders graphBetweennessSql(view(edgesSymView)),
 
     "graph_spectral" renders {
       val matKw = if (d.name == "duckdb") "materialized " else ""
@@ -12135,13 +12235,13 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // lshPlanesFor convention; floors at 2 through the verify SFs,
     // arms 3 past ~45k vectors, 4 past ~135k).
     // Exact L1 re-rank only within candidates.
-    "vec_topk_l1_lsh" renders vecTopkL1LshSql(None),
+    "vec_topk_l1_lsh" renders vecTopkL1LshSql(view(l1BktView)),
 
     // L1-rung index-quality monitoring: the ann_recall_eval protocol
     // applied to the Cauchy p-stable family — brute L1 top-10 (the
     // vec_topk_l1 baseline) vs the rung's candidate-restricted
     // top-10, per query.
-    "ann_recall_eval_l1" renders annRecallEvalL1Sql(None),
+    "ann_recall_eval_l1" renders annRecallEvalL1Sql(view(l1BktView)),
 
     // EVENT-TYPE CORRELATION MATRIX — which daily metrics move
     // together (the contemporaneous all-pairs companion of
@@ -12718,7 +12818,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // (per-hop DISTINCT expansion, min(step) = distance, 1e-6
     // quantized 1/d folds); the Spark path shares the betweenness
     // scratch edge table, the oracle inlines it.
-    "graph_closeness" renders graphClosenessSql(None),
+    "graph_closeness" renders graphClosenessSql(view(edgesSymView)),
 
     // REVENUE GINI / LORENZ REPORT (33z2) — the single-number
     // inequality audit behind q_pareto_share's top-k cuts (how
@@ -12819,7 +12919,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // folds. Same und/deg base as assortativity (bounded constant
     // re-derivation over the cached g_knn view); output bounded by
     // the degree domain.
-    "graph_knn_degree_curve" renders graphKnnDegreeCurveSql(None),
+    "graph_knn_degree_curve" renders graphKnnDegreeCurveSql(view(edgesSymView)),
 
     // A/B UPLIFT BY PRE-EXPOSURE DECILE (40d9) — the heterogeneous-
     // treatment-effect readout (the qini/uplift-decile table of uplift
@@ -12919,10 +13019,10 @@ final class Gen(d: Dialect, useViews: Boolean = false,
 
     // NN-DECODER DEEP WITNESS (21r2, r10 verdict item 5) — see
     // nnDecodeDeepSql for the full design commentary; the Spark
-    // serving path (SparkEntry.programmatic) aggregates the persisted
+    // serving path aggregates the persisted
     // g_nn_deep_logits artifact instead of re-planning the ~9k-literal
     // forward-pass tree per action.
-    "wm_nn_decode_deep" renders nnDecodeDeepSql(None),
+    "wm_nn_decode_deep" renders nnDecodeDeepSql(view("g_nn_deep_logits")),
 
     // MULTI-VECTOR LATE-INTERACTION RETRIEVAL (21q) — the ColBERT
     // score shape (Khattab & Zaharia 2020, public): a query is a SET
@@ -13359,7 +13459,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
   /** The corpus minhash-signature table (doc_id, m0..m15) — the
     * production scratch every LSH dedup pipeline persists; the band
     * curve references it 17 times, so the Spark side checkpoints it
-    * once per session (SparkEntry) instead of letting Catalyst
+    * once per session (the g_mhsig artifact) instead of letting Catalyst
     * re-inline the corpus chain per reference. */
   def minhashSigBuildSql: String =
     s"""with $wordCtes,
@@ -13521,7 +13621,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     * (r10 verdict item 3): the 3-hop beam search is the whole cost of
     * both maintenance keys, so the Spark side scratch-persists this
     * product once per (session, dir, planes) and vec_graph_append AND
-    * vec_graph_compact read it (SparkEntry.appendLinksView) instead of
+    * vec_graph_compact read it (the g_applinks artifact) instead of
     * each re-running the beam. Also the GraphCompactSpec prune-mirror
     * input. rn rides along so the append readout (rank-1 / rank-M
     * rows) never re-derives the ranking. */
@@ -14667,14 +14767,113 @@ final class Gen(d: Dialect, useViews: Boolean = false,
           i => s"cast(${w1(i - 1)} as double)",
           i => s"cast(${w2(i - 1)} as double)")}""".stripMargin
 
+  /** Keys served from kept artifacts that have no inline-only form:
+    * the Spark rendering reads the views, the oracle inlines them. */
+  private lazy val sqls5: Map[String, () => String] = Map(
+    // HNSW maintenance pair: BOTH keys read the one kept beam-search
+    // product — the 3-hop beam is the whole cost of either readout
+    // (r10 verdict item 3)
+    "vec_graph_append" renders graphAppendSql(view(appLinksView)),
+    "vec_graph_compact" renders graphCompactSql(view(appLinksView)),
+    // RESIDUAL IVFADC (true faiss IVF_PQ, §2 row 4d2): the product
+    // codebooks train on x − centroid(cell(x)), kept over the IVF index
+    "vec_topk_ivfpq_res" renders ivfPqResSql(view(rpqViews)),
+    "vec_ivfpq_res_distortion" renders ivfPqResDistortionSql(view(rpqViews)),
+    // CDC maintenance of the kept MinHash signatures and banded pairs:
+    // stale pairs filtered, only the 5% delta re-signed and band-joined
+    // against the post state (r10 verdict item 7)
+    "dedup_upsert_minhash" renders dedupUpsertMinhashSql(view("g_mhsig"), view("g_mhpairs")),
+    // near-dup pairs → deletion groups over the contracted component
+    // graph: the 6 min-label rounds reference it 6×, and inline they
+    // re-ran the contraction joins per round (75 s vs ~1 s at sf0.01)
+    "dedup_components" renders dedupComponentsSql(view("g_simrpairs")),
+    // the deletion groups APPLIED: per-source kept/dropped report
+    "dedup_apply" renders dedupApplySql(view("g_simrpairs")),
+    // best text_quality member per near-dup component
+    "dedup_cluster_rep" renders dedupClusterRepSql(view("g_simrpairs")),
+    // keep-lowest-id vs keep-best, per source
+    "dedup_quality_impact" renders dedupQualityImpactSql(view("g_simrpairs")),
+    // the syndication matrix over the kept near-dup pairs
+    "dedup_cross_source" renders dedupCrossSourceSql(view(simPairsView)),
+    // CDC-upsert maintenance of the kept SimHash signatures and pairs
+    // (the delete/update half of dedup_incremental)
+    "dedup_upsert" renders dedupUpsertSql(view("g_simsigs"), view(simPairsView)),
+    // overlap metrics over the kept (pair, i, na, nb) gram profile: the
+    // 5-gram explode runs once, not per key
+    "dedup_jaccard" renders dedupJaccardSql(view("g_jpairs")),
+    "dedup_containment" renders dedupContainmentSql(view("g_jpairs")),
+    // MMR re-rank over the kept 30-row pool: each unrolled selection
+    // round references its state twice (2^t re-evaluations inline)
+    "vec_mmr" renders mmrSql(view("g_mmr_pool")),
+    // exact-Jaccard truth on a PRF doc sample vs the served
+    // MinHash/SimHash candidate sets, per tier
+    "dedup_tier_eval" renders dedupTierEvalSql(view(("g_mhsig", simPairsView, "g_mhshx"))),
+    // second-stage rerank + Kendall-τ ladder over the kept score table
+    "search_rerank_agreement" renders rerankAgreementSql(view("g_hybrid_scores")),
+    // band-geometry tuning curve: the SQL references the signatures 17×
+    "minhash_band_curve" renders minhashCurveSql(view("g_mhsig")),
+    // modularity / conductance over the kept LPA labels (referenced 3×)
+    "graph_modularity" renders graphModularitySql(view("g_lpa")),
+    "graph_conductance" renders graphConductanceSql(view("g_lpa")),
+    // the learned BPE merges applied, and per-language fertility, over
+    // the kept vocabulary
+    "text_bpe_encode" renders bpeEncodeSql(view("g_bpe_vocab")),
+    "text_bpe_fertility" renders bpeFertilitySql(view("g_bpe_vocab")),
+    // registry-path RECOVER over the kept carrier-id list: votes
+    // reassembled into the ciphertext the AES-GCM decrypt consumes
+    // (WatermarkEndToEndSpec decrypts this key's output)
+    "wm_recover_registry" renders wmRecoverRegistrySql(view("g_carrier_ids")),
+    // removal-effect attribution: Spark runs the power iteration as
+    // driver math over the kept transition census (graft.SparkEntry);
+    // this rendering is the oracle's pure-SQL iteration
+    "events_attribution_markov" renders markovAttributionSql(None),
+    // native bounded-state per-group top-k (functions.TopKAgg) on
+    // Spark; the oracle is the window form of the same ranking
+    "vec_topk_grouped" renders groupedTopkSql(),
+    // the native aggregates (functions.HllAgg, CmsAgg, KmvAgg) must
+    // reproduce their SQL sketches exactly, so each oracle IS the SQL
+    // rendering: sketch_distinct_by_source, sketch_cms, and the k=64
+    // window form of sketch_kmv
+    "sketch_distinct_native" renders (if (views)
+      s"""
+         |with sw as (select source, split(lower(text), '\\\\s+') as ws from documents),
+         |swx as (select source, wd from sw lateral view explode(ws) _e as wd),
+         |ag as (select source, graft_hll(wd) as hll, count(distinct wd) as nd from swx group by source)
+         |select source, cast(nd as bigint) as n_exact, hll as hll_est,
+         |  round(abs(hll - nd) / nd, 4) as rel_err
+         |from ag""".stripMargin
+      else sql("sketch_distinct_by_source")),
+    "sketch_cms_native" renders (if (views) {
+      def prfCol(r: Int) =
+        s"cast(conv(substr(md5(concat_ws(':', 'cms', '$r', wc.wd)), 1, 15), 16, 10) as bigint) % 16"
+      def cell(r: Int) =
+        s"element_at(g.grid, cast($r * 16 + ${prfCol(r)} + 1 as int)) as e$r"
+      s"""
+         |with sw as (select split(lower(text), '\\\\s+') as ws from documents),
+         |wx as (select wd from sw lateral view explode(ws) _e as wd),
+         |g as (select graft_cms(wd) as grid from wx),
+         |wc as (select wd, count(*) as c from wx group by wd),
+         |sel as (select wd, c, least(e0, e1, e2, e3) as est from (
+         |  select wc.wd, wc.c, ${(0 until 4).map(cell).mkString(", ")}
+         |  from wc cross join g) _x)
+         |select wd as word, cast(c as bigint) as n_exact,
+         |  cast(est as bigint) as cms_est, cast(est - c as bigint) as overestimate
+         |from sel""".stripMargin
+    } else sql("sketch_cms")),
+    "sketch_kmv_native" renders (if (views) kmvSql(Seq(64), native = true, wfView = Some("g_srcwf"))
+      else kmvSql(Seq(64))))
+
   /** The SQL of query `name`, rendered on first request and kept: a
     * caller pays only for the keys it runs, not the whole corpus. */
-  def sql(name: String): String = {
-    val hit = rendered.get(name)
+  def sql(name: String): String = memo(rendered, name, renderers(name))
+
+  private def memo(kept: java.util.concurrent.ConcurrentHashMap[String, String],
+                   name: String, render: () => String): String = {
+    val hit = kept.get(name)
     if (hit != null) hit
     else {
-      val text = renderers(name)()
-      Option(rendered.putIfAbsent(name, text)).getOrElse(text)
+      val text = render()
+      Option(kept.putIfAbsent(name, text)).getOrElse(text)
     }
   }
 }

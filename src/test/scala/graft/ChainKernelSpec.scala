@@ -9,7 +9,7 @@ import graft.sqlgen.{Gen, SparkDialect, Wm, WmParams}
 
 /** The chain kernels execute their stage SQL exactly: on every corpus,
   * the kernel-built g_bkt, g_knn and g_stego hold the rows of the
-  * executed `Gen.cacheStages` SQL (exceptAll both ways empty) with the
+  * executed `Gen.artifactSql` SQL (exceptAll both ways empty) with the
   * same column types. */
 class ChainKernelSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -40,9 +40,9 @@ class ChainKernelSpec extends AnyFunSuite {
     val s = session(dir)
     val gen = SparkEntry.sparkGenFor(s, dir)
     assert(gen.lshPlanes == planes)
-    val sqlOf = gen.cacheStages.toMap
     for (view <- kernelStages)
-      assert(assertSame(WmCache.stageFrame(s, dir, view), s.sql(sqlOf(view)), s"$dir $view") > 0)
+      assert(assertSame(WmCache.stageFrame(s, dir, view), s.sql(gen.artifactSql(view)),
+        s"$dir $view") > 0)
     s
   }
 
@@ -126,7 +126,7 @@ class ChainKernelSpec extends AnyFunSuite {
       WmCache.carriers(s, TestSpark.Sf, p).localCheckpoint().createOrReplaceTempView("g_carriers")
       val gen = new Gen(SparkDialect, useViews = true, p)
       assert(assertSame(ChainKernels.stego(s, s.table("g_carriers"), p),
-        s.sql(gen.cacheStages.toMap.apply("g_stego")), s"g_stego $p") > 0)
+        s.sql(gen.artifactSql("g_stego")), s"g_stego $p") > 0)
     }
   }
 }

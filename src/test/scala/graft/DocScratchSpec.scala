@@ -10,6 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class DocScratchSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
+  /** An artifact built by its spec, the SQL `sql`. */
+  private def table(s: org.apache.spark.sql.SparkSession, name: String, sql: String) =
+    Scratch.artifact(s, TestSpark.Sf, name, sql)(s.sql(sql))
+
   test("fresh session reads the doc scratch instead of rebuilding; SQL change invalidates") {
     val root = java.nio.file.Files.createTempDirectory("graft_docscratch").toString
     val sql = "select doc_id, length(text) as len from documents where doc_id % 7 = 0"
@@ -17,7 +21,7 @@ class DocScratchSpec extends AnyFunSuite {
     val s1 = spark.newSession()
     s1.conf.set("spark.graft.scratch", root)
     Tables.register(s1, TestSpark.Sf)
-    val r1 = Scratch.table(s1, TestSpark.Sf, "g_sc_probe", sql)
+    val r1 = table(s1, "g_sc_probe", sql)
       .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
     assert(r1.nonEmpty)
     val done = new java.io.File(root).listFiles()
@@ -30,7 +34,7 @@ class DocScratchSpec extends AnyFunSuite {
     val s2 = spark.newSession()
     s2.conf.set("spark.graft.scratch", root)
     Tables.register(s2, TestSpark.Sf)
-    val r2 = Scratch.table(s2, TestSpark.Sf, "g_sc_probe", sql)
+    val r2 = table(s2, "g_sc_probe", sql)
       .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
     assert(r2 == r1)
     assert(new java.io.File(done(0), "g_sc_probe").lastModified() == stamp,
@@ -42,7 +46,7 @@ class DocScratchSpec extends AnyFunSuite {
     val s3 = spark.newSession()
     s3.conf.set("spark.graft.scratch", root)
     Tables.register(s3, TestSpark.Sf)
-    val r3 = Scratch.table(s3, TestSpark.Sf, "g_sc_probe",
+    val r3 = table(s3, "g_sc_probe",
       sql + " and doc_id % 14 = 0")
       .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
     assert(r3 == r1.filter(_._1 % 14 == 0))
@@ -55,7 +59,7 @@ class DocScratchSpec extends AnyFunSuite {
     val s4 = spark.newSession()
     s4.conf.set("spark.graft.scratch", "off")
     Tables.register(s4, TestSpark.Sf)
-    val r4 = Scratch.table(s4, TestSpark.Sf, "g_sc_probe", sql)
+    val r4 = table(s4, "g_sc_probe", sql)
       .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
     assert(r4 == r1)
   }
