@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark. Round-8 contract: the runner is WALL-CLOCK
   * BUDGETED and FAILS OPEN — whatever the harness's timeout is, the
@@ -43,17 +42,10 @@ object Bench {
     // JVM built before
     Scratch.buildLog.clear()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // the target machine runs local[32] with 128 GiB; 32 shuffle
-    // partitions sized to match (not the 200 default)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val budget = sys.env.getOrElse("SPARK_GRAFT_BUDGET", "570").toDouble
     val priorCosts = GateCosts.load()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = DevSession()
     spark.sparkContext.setLogLevel("WARN")
     // what failed, by step (key name, "warmup", "wm_chain_build"): a
     // failure must not read as a fast key, so each one lands in

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.api.Graft
 
 /** Executable documentation: the reference system's user story through
@@ -9,10 +8,7 @@ import graft.api.Graft
 object Demo {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]").config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession()
 
     val g = Graft(spark, dir)
     println("RECOVERED=" + g.recoverMessage())

@@ -2,10 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The session of the dev tools (Plans, TimeOne, PlanCost, PlanDump,
-  * SimProf, QDebug): local mode on SPARK_GRAFT_CPUS cores (default 32,
-  * as Bench and Verify) with as many shuffle partitions, UI off, log
-  * level ERROR. */
+/** The one session builder of the engine's mains (Bench, Verify,
+  * Smoke, Demo, ScaleCheck, Plans, Prof): local mode on
+  * SPARK_GRAFT_CPUS cores (default 32, the target machine's) with as
+  * many shuffle partitions (not the 200 default), UI off, log level
+  * ERROR. A main that needs another log level or conf sets it on the
+  * session it gets, before its first use. */
 object DevSession {
   def apply(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")

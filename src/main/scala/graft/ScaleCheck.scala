@@ -27,18 +27,13 @@ object ScaleCheck {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = if (args.length > 1) args(1).toInt else 10
     val dir = if (args.length > 2) args(2) else "/tmp/graft-sfbig"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // buildCorpus normalizes TIMESTAMP(US) events BEFORE
-      // Tables.register pins the session zone, so pin it here too —
-      // otherwise a non-UTC machine shifts every replica timestamp
-      // by the zone offset relative to the registered view
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = DevSession()
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // buildCorpus normalizes TIMESTAMP(US) events BEFORE
+    // Tables.register pins the session zone, so pin it here too —
+    // otherwise a non-UTC machine shifts every replica timestamp
+    // by the zone offset relative to the registered view
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.sparkContext.setLogLevel("WARN")
 
     if (!new File(s"$dir/_READY").exists()) buildCorpus(spark, src, factor, dir)

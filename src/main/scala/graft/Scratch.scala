@@ -116,7 +116,7 @@ object Scratch {
   /** Fingerprint of every source parquet file in `dir` — any table
     * refresh invalidates every scratch key (coarser than per-build
     * lineage, but always safe and one stat() per file). */
-  private def dataFingerprint(dir: String): String =
+  private[graft] def dataFingerprint(dir: String): String =
     Tables.names.map { n =>
       val f = new File(s"$dir/$n.parquet")
       s"$n:${f.length}:${f.lastModified}"

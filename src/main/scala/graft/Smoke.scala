@@ -1,14 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Local replica of the driver's smoke gate: SparkEntry.entry(spark)
   * must return rows > 0 on sf0.001. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]").config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DevSession()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     println(s"ENTRY_ROWS=$n schema=${df.schema.fieldNames.mkString(",")}")

@@ -131,10 +131,7 @@ object SparkEntry {
         val chans = Seq("view", "click", "signup", "error")
         val effs = chans.map(c => c -> (1.0 - conv(Some(c))._1.toDouble / fullP))
         val sEff = effs.map(_._2).sum
-        def r(x: Double, dec: Int) = {
-          val m = math.pow(10, dec)
-          (if (x >= 0) math.floor(x * m + 0.5) else -math.floor(-x * m + 0.5)) / m
-        }
+        def r(x: Double, dec: Int) = PcaSolve.roundAway(x, dec)
         import s.implicits._
         effs.map { case (c, eff) =>
           (c, r(fullP / 1e12, 6), r(conv(Some(c))._1 / 1e12, 6), r(eff, 6),

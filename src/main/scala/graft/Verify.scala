@@ -16,7 +16,7 @@ import java.nio.file.{Files, Paths}
   *  - keys dump CHEAPEST-FIRST (last round's bench costs), so that
   *    prefix is maximal;
   *  - dumps run on a small thread pool (Spark job submission is
-  *    thread-safe; every WmCache artifact is built once first, and
+  *    thread-safe; a full run builds every WmCache artifact once first, and
   *    Scratch.artifact memoizes every artifact via computeIfAbsent) —
   *    wall time ≈ single-threaded / pool size;
   *  - INCREMENTAL re-runs: each key gets a signature file under the
@@ -34,7 +34,9 @@ import java.nio.file.{Files, Paths}
   *    1500) cancels all Spark jobs at the deadline so the JVM exits
   *    cleanly with the prefix on disk;
   *  - `--smoke` dumps a fixed 5-key canary profile (< 60 s cold) to
-  *    the same JSON shape — the gate that can always finish.
+  *    the same JSON shape — the gate that can always finish;
+  *    `--keys=a,b` dumps only those keys. Neither builds an artifact up
+  *    front: each key's entry ensures what it reads.
   */
 object Verify {
   private val smokeKeys =
@@ -87,19 +89,13 @@ object Verify {
     graft.functions.Prf.md5hex(s).take(16)
   }
 
-  private def dataFingerprint(dir: String): String =
-    Tables.names.map { n =>
-      val f = new File(s"$dir/$n.parquet")
-      s"$n:${f.length}:${f.lastModified}"
-    }.mkString(",")
-
   def main(args: Array[String]): Unit =
-    dump(args, SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()).stop()
+    dump(args, {
+      val s = DevSession()
+      s.conf.set("spark.sql.session.timeZone", "UTC")
+      s.sparkContext.setLogLevel("WARN")
+      s
+    }).stop()
 
   /** The dump itself, on `session` (opened once the oracle JSON is
     * written); returns the session for the caller to stop. */
@@ -122,7 +118,8 @@ object Verify {
     // driver's compare reads — with it on disk, any prefix of dumps
     // grades instead of the whole round reporting {}.
     // dev-only key filter (--keys=a,b,c): dump + oracle a subset while
-    // iterating on new operators. The driver never passes it.
+    // iterating on new operators (one key: the quick oracle check). The
+    // driver never passes it.
     val onlyKeys: Option[Set[String]] = args.collectFirst {
       case a if a.startsWith("--keys=") => a.stripPrefix("--keys=").split(',').toSet
     }
@@ -153,22 +150,22 @@ object Verify {
     }
 
     val spark = session
-    spark.sparkContext.setLogLevel("WARN")
 
     val keys =
       if (smoke) smokeKeys.filter(SparkEntry.queries.contains)
       else GateCosts.cheapestFirst(
         onlyKeys.fold(SparkEntry.queries.keys)(ks =>
           SparkEntry.queries.keys.filter(ks)), GateCosts.load())
-    val sigBase = if (incr) codeFingerprint + "|" + dataFingerprint(sfDir) else ""
+    val sigBase = if (incr) codeFingerprint + "|" + Scratch.dataFingerprint(sfDir) else ""
     def sigOf(name: String): String = graft.functions.Prf.md5hex(
       sigBase + "|" + SparkEntry.oracleSql.getOrElse(name, "")).take(16)
 
-    // every declared artifact once, before the key pool starts — after
-    // this every per-key Tables.register / WmCache artifact ensure is an
-    // idempotent cache hit
+    // a full run builds every declared artifact once, before the key
+    // pool starts — after this every per-key Tables.register / WmCache
+    // artifact ensure is an idempotent cache hit. A subset run (--smoke,
+    // --keys) builds none up front: each key's entry ensures what it reads
     Tables.register(spark, sfDir)
-    if (!smoke) try WmCache.ensureAll(spark, sfDir)
+    if (subsetKeys.isEmpty) try WmCache.ensureAll(spark, sfDir)
       catch { case e: Throwable => System.err.println(s"[verify] artifact build failed: ${e.getMessage}") }
 
     val t0 = System.nanoTime()

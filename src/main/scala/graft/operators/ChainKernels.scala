@@ -28,7 +28,7 @@ import graft.sqlgen.{Wm, WmParams}
   *    dot(a, b) == dot(b, a) bit for bit and each unordered pair of a
   *    bucket is computed once;
   *  - bucket bit p of table t is set when dot(n, planesFor(t, p)) > 0;
-  *  - sim is Spark's round(dot, 6) (BoundedTopK.round6);
+  *  - sim is Spark's round(dot, 6) (PcaSolve.sparkRound);
   *  - the stego cells are WmEmbed's, which mirrors the stego CTEs.
   *
   * The input contract is the corpus's: unique vec_id and a non-null

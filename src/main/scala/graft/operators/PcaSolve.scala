@@ -24,12 +24,15 @@ object PcaSolve {
   private val nrm0 = math.sqrt((1 to Dim).map(y => y.toDouble * y).sum)
 
   /** Catalyst's round(x, dec) for DoubleType: BigDecimal.valueOf
-    * (shortest decimal repr) + HALF_UP — NOT the IEEE-binary round. */
+    * (shortest decimal repr) + HALF_UP — NOT the IEEE-binary round;
+    * NaN and infinities unchanged. The engine's one JVM copy. */
   def sparkRound(x: Double, dec: Int): Double =
-    java.math.BigDecimal.valueOf(x)
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
       .setScale(dec, java.math.RoundingMode.HALF_UP).doubleValue()
 
-  /** The house roundAway quantizer (Prim.roundAway's exact IEEE ops). */
+  /** The house roundAway quantizer (Prim.roundAway's exact IEEE ops,
+    * + 0.0 included: −0.0 comes out +0.0). The engine's one JVM copy. */
   def roundAway(x: Double, dec: Int): Double = {
     val m = math.pow(10, dec.toDouble)
     (if (x >= 0) math.floor(x * m + 0.5) else -math.floor(-x * m + 0.5)) / m + 0.0

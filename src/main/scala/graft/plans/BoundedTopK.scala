@@ -1,5 +1,7 @@
 package graft.plans
 
+import graft.operators.PcaSolve
+
 /** The k best (score, id) entries offered so far, best first: score
   * descending, then id ascending — the `order by sim desc, id` of the
   * SQL rankings, under Spark's double ordering (NaN above every
@@ -33,7 +35,7 @@ final class BoundedTopK(val k: Int) extends Serializable {
     * 1e-6 below its worst, which no half-up rounding to 6 places can
     * lift to the worst. */
   def offerRounded(raw: Double, id: Long): Unit =
-    if (n < k || !(raw < scores(k - 1) - 1e-6)) offer(BoundedTopK.round6(raw), id)
+    if (n < k || !(raw < scores(k - 1) - 1e-6)) offer(PcaSolve.sparkRound(raw, 6), id)
 
   /** Adds the entries of `o` whose id this heap does not hold yet. */
   def merge(o: BoundedTopK): BoundedTopK = {
@@ -61,11 +63,4 @@ object BoundedTopK {
     val c = compare(s, s2)
     c > 0 || (c == 0 && id < id2)
   }
-
-  /** Spark SQL's `round(x, 6)` on a double: half-up on the canonical
-    * decimal form (BigDecimal.valueOf), NaN and infinities unchanged. */
-  def round6(x: Double): Double =
-    if (x.isNaN || x.isInfinite) x
-    else java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 }

@@ -3111,9 +3111,10 @@ final class Gen(d: Dialect, useViews: Boolean = false,
   /** The per-doc 60-bit signature build alone (wordCtes → per-word
     * hash/count → 60 masked sign-sums → sig) — the corpus-priced half
     * of the pair chain, split out so the Spark serving path can
-    * scratch-persist it (the g_simsigs artifact) and so SimProf can
-    * time it against the band join. The word hash is a pure function
-    * of the WORD, so it computes once per DISTINCT word (vh —
+    * scratch-persist it (the g_simsigs artifact) and so `graft.Prof
+    * time dedup_simhash_pairs` times it (its BUILD g_simsigs line)
+    * apart from the band join (the key's exec). The word hash is a
+    * pure function of the WORD, so it computes once per DISTINCT word (vh —
     * Heaps-law-bounded vocabulary) and joins back broadcast, instead
     * of one md5 per (doc, word) group (~50M hashes at the 100×
     * decade for a ≤200-word vocabulary; measured r10 at 100×: the
@@ -3153,7 +3154,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     s"""$simhashSigCtes,
        |${simhashPairCtes("sh")}""".stripMargin
 
-  /** Dev/serving split points (graft.SimProf, the g_simsigs/g_simpairs artifacts):
+  /** Serving split points (the g_simsigs/g_simpairs artifacts):
     * the signature table build, and the pair chain reading a persisted
     * (doc_id, sig) view. */
   def simhashSigBuildSql: String =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
+import graft.operators.PcaSolve.{roundAway, sparkRound}
 
 /** Structured Streaming operators over the `events` shape
   * (ts timestamp, user_id long, event_type string, value double).
@@ -350,14 +351,6 @@ object Streams {
   def anomalyStream(hourly: Dataset[(String, Long, Long)])
       : Dataset[AnomalyScore] = {
     import hourly.sparkSession.implicits._
-    def roundAway(x: Double, dec: Int): Double = {
-      // the SQL Prim.roundAway rendered in JVM doubles: identical IEEE
-      // multiply/floor/divide sequence, so results match the batch
-      // query bit-for-bit
-      val m = math.pow(10.0, dec.toDouble)
-      val r = if (x >= 0) math.floor(x * m + 0.5) else -math.floor(-x * m + 0.5)
-      r / m + 0.0
-    }
     hourly
       .groupByKey(_._1)
       .flatMapGroupsWithState[Vector[(Long, Long)], AnomalyScore](
@@ -639,11 +632,6 @@ object Streams {
     * the same finalized-window contract as anomalyStream. */
   def sloBurnStream(hourly: Dataset[(Long, Long, Long)]): Dataset[BurnPoint] = {
     import hourly.sparkSession.implicits._
-    def roundAway(x: Double, dec: Int): Double = {
-      val m = math.pow(10.0, dec.toDouble)
-      val r = if (x >= 0) math.floor(x * m + 0.5) else -math.floor(-x * m + 0.5)
-      r / m + 0.0
-    }
     hourly
       .groupByKey(_ => "all")
       .flatMapGroupsWithState[Vector[(Long, Long, Long)], BurnPoint](
@@ -800,11 +788,6 @@ object Streams {
     * series — the per-key ordering the batch row_number encodes. */
   def ewmaStream(daily: Dataset[(String, Long, Long)]): Dataset[EwmaPoint] = {
     import daily.sparkSession.implicits._
-    def roundAway(x: Double, dec: Int): Double = {
-      val m = math.pow(10.0, dec.toDouble)
-      val r = if (x >= 0) math.floor(x * m + 0.5) else -math.floor(-x * m + 0.5)
-      r / m + 0.0
-    }
     daily
       .groupByKey(_._1)
       .flatMapGroupsWithState[(Long, Long), EwmaPoint](
@@ -1316,10 +1299,4 @@ object HllSketch {
       sparkRound(M * math.log(M.toDouble / v0), 4)
     else raw
   }
-
-  /** Spark SQL round(double, s): HALF_UP on the shortest-decimal form
-    * (BigDecimal.valueOf goes through Double.toString). */
-  def sparkRound(x: Double, s: Int): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(s, java.math.RoundingMode.HALF_UP).doubleValue()
 }
