@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode, InputAdapter,
   LogicalRDD, RDDScanExec, ReusedSubqueryExec, SparkPlan, WholeStageCodegenExec}
@@ -11,13 +13,15 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExc
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
   BroadcastNestedLoopJoinExec, CartesianProductExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.WindowExecBase
+import org.apache.spark.sql.graftbridge.DataFrameBridge
 
 /** Dev profiler of query keys and g_* artifacts, on [[DevSession]].
   * A name is a `SparkEntry.queries` key or a g_* artifact, whose frame
   * is the one WmCache builds it with ([[frame]]).
   *
   *  - `time <name,...> <sfDir> [reps]`: the first touch (artifact
-  *    builds, codegen) timed alone, then `reps` (default 3) reps, each
+  *    builds, codegen) timed alone, with the Spark jobs and stages it
+  *    ran ([[work]]), then `reps` (default 3) reps, each
   *    split into plan (entry → executedPlan) and exec (the count()),
   *    with min and median of plan, exec and total; then the BUILD
   *    seconds of every artifact this run built.
@@ -107,15 +111,37 @@ object Prof {
 
   private def secondsSince(t0: Long): Double = (System.nanoTime() - t0) / 1e9
 
+  /** Wall seconds, Spark jobs and Spark stages of one call. */
+  final case class Work(seconds: Double, jobs: Int, stages: Int)
+
+  /** Runs `body` and counts the Spark jobs and stages it runs, with a
+    * listener added and removed around it (stages that reuse an earlier
+    * shuffle are skipped, not counted). */
+  def work(spark: SparkSession)(body: => Unit): Work = {
+    val jobs, stages = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        stages.incrementAndGet(): Unit
+    }
+    DataFrameBridge.drainListeners(spark)
+    spark.sparkContext.addSparkListener(l)
+    val t0 = System.nanoTime()
+    try body
+    finally {
+      DataFrameBridge.drainListeners(spark)
+      spark.sparkContext.removeSparkListener(l)
+    }
+    Work(secondsSince(t0), jobs.get, stages.get)
+  }
+
   private def time(spark: SparkSession, dir: String, names: Seq[String], reps: Int): Unit = {
     def minMed(xs: Seq[Double]): String = {
       val s = xs.sorted
       f"${s.head}%.3f/${s(s.size / 2)}%.3f"
     }
     for (name <- names) {
-      val t0 = System.nanoTime()
-      frame(spark, dir, name).count()
-      val first = secondsSince(t0)
+      val first = work(spark)(frame(spark, dir, name).count(): Unit)
       val runs = Seq.fill(reps) {
         val t0 = System.nanoTime()
         // the plan count() executes, planned once and then executed
@@ -126,7 +152,8 @@ object Prof {
         counted.collect()
         (plan, secondsSince(t1))
       }
-      println(f"TIME $name%-32s first=$first%.3f plan=${minMed(runs.map(_._1))} " +
+      println(f"TIME $name%-32s first=${first.seconds}%.3f (jobs=${first.jobs} " +
+        s"stages=${first.stages}) plan=${minMed(runs.map(_._1))} " +
         s"exec=${minMed(runs.map(_._2))} total=${minMed(runs.map(r => r._1 + r._2))} " +
         s"(min/med of $reps)")
     }

@@ -81,10 +81,12 @@ object Scratch {
 
   /** Build-or-read artifact `name` for (spark, dir), register it as
     * temp view `name`, and return it. `spec` specifies the rows `build`
-    * computes; it is rendered, and the WmCache artifacts it names
-    * ensured, only on a miss. Memoized per (session, dir, name). */
-  def artifact(spark: SparkSession, dir: String, name: String, spec: => String)(
-      build: => DataFrame): DataFrame = {
+    * computes; it is rendered only on a miss. The key covers the
+    * lineage of every WmCache artifact `spec` names; before the build,
+    * the artifacts `build` reads are ensured: `reads`, or when None
+    * every artifact `spec` names. Memoized per (session, dir, name). */
+  def artifact(spark: SparkSession, dir: String, name: String, spec: => String,
+               reads: Option[Seq[String]] = None)(build: => DataFrame): DataFrame = {
     Tables.register(spark, dir)
     val k = (spark, dir, name)
     val hit = mem.get(k)
@@ -93,7 +95,7 @@ object Scratch {
       // outside computeIfAbsent: ensuring an input can build another
       // artifact, and a nested computeIfAbsent on this map may throw
       // IllegalStateException("Recursive update")
-      val lineage = WmCache.ensureReads(spark, dir, text)
+      val lineage = WmCache.ensureReads(spark, dir, text, reads)
       mem.computeIfAbsent(k, _ => store(spark, dir, name, cacheKey(dir, name, text + lineage), build))
     }
     // the Tables.register rule: registering a view costs milliseconds,
@@ -156,7 +158,7 @@ object Scratch {
       timed(name)(build.repartition(parts).write.mode("overwrite").parquet(p))
       publish(tmp, base, name)
     }
-    spark.read.parquet(new File(served, name).getAbsolutePath)
+    Tables.read(spark, new File(served, name).getAbsolutePath)
   }
 
   /** Publishes the complete build in `tmp` as `base` and returns the

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.{ChainKernels, NnDeep}
-import graft.sqlgen.{Gen, SparkDialect, WmParams}
+import graft.sqlgen.{Gen, WmParams}
 
 /** The registry of the engine's kept artifacts per (session, sf dir):
   * which exist, what each reads, and what builds it. Each artifact is
@@ -17,22 +17,25 @@ import graft.sqlgen.{Gen, SparkDialect, WmParams}
   * for artifact names, and each artifact's own SQL names its inputs
   * the same way, so an artifact is always built after the artifacts it
   * reads, and a build over them keys on their SQL, transitively. A
-  * watermark job ([[ensure]]) builds the chain g_bkt → g_knn → g_indeg
-  * → g_carriers → g_stego — the selection the embed job reads, once
-  * per embed call in the reference too (database/pgvector/
-  * pg_func.py:735 embed_watermark) — and nothing else; a search over
-  * IVF cells builds the two IVF stages and nothing else. An
-  * artifact's SQL is rendered only when something builds or keys it.
+  * build ensures what it reads: a kernel stage only its kernel's
+  * inputs ([[KernelReads]]), every other artifact everything its SQL
+  * names. A watermark job ([[ensure]]) builds g_knn → g_indeg →
+  * g_carriers → g_stego — the selection the embed job reads, once per
+  * embed call in the reference too (database/pgvector/pg_func.py:735
+  * embed_watermark) — and nothing else. g_bkt, which g_knn's SQL
+  * names but its kernel does not read, stays in g_knn's key and is
+  * built by the first statement that reads it, like a search over IVF
+  * cells builds the two IVF stages and nothing else. An artifact's SQL
+  * is rendered only when something builds or keys it.
   *
   * Execution: each artifact's SQL SPECIFIES it — the DuckDB oracle's
   * semantics, the parity reference, the scratch key and the source of
-  * [[ensureReads]] — and [[stageFrame]] EXECUTES it. The three
-  * corpus-priced chain stages (g_bkt, g_knn, g_stego) run as the
-  * precompiled kernels of operators.ChainKernels, row-identical to
-  * their SQL (ChainKernelSpec): on a cold JVM their generated SQL cost
-  * more to compile than to run. g_nn_deep_logits runs as the JVM
-  * forward pass operators.NnDeep (NnDeepSpec). Every other artifact
-  * runs its SQL.
+  * [[ensureReads]] — and [[stageFrame]] EXECUTES it. The five chain
+  * stages run as the precompiled kernels of operators.ChainKernels,
+  * row-identical to their SQL (ChainKernelSpec): on a cold JVM their
+  * generated SQL cost more to compile and plan than to run.
+  * g_nn_deep_logits runs as the JVM forward pass operators.NnDeep
+  * (NnDeepSpec). Every other artifact runs its SQL.
   *
   * Every artifact is an ordinary graft.Scratch artifact, specified by
   * its key text ([[Registry.keyText]]) and built by [[stageFrame]]:
@@ -41,9 +44,15 @@ import graft.sqlgen.{Gen, SparkDialect, WmParams}
   */
 object WmCache {
 
-  /** The stages a precompiled chain kernel builds: their key includes
-    * the kernels' revision. */
-  private val KernelStages = Set("g_bkt", "g_knn", "g_stego")
+  /** The stages a precompiled chain kernel builds, with the artifacts
+    * each kernel reads: a kernel stage's key includes the kernels'
+    * revision, and a build of it ensures only what its kernel reads.
+    * The g_knn kernel buckets the vectors itself, so g_bkt (named by
+    * g_knn's SQL, and kept in its lineage) is built by the first
+    * statement that reads it. */
+  private val KernelReads: Map[String, Seq[String]] = Map(
+    "g_bkt" -> Nil, "g_knn" -> Nil, "g_indeg" -> Seq("g_knn"),
+    "g_carriers" -> Seq("g_indeg"), "g_stego" -> Seq("g_carriers"))
 
   /** The artifacts of one generator, with what each reads. */
   private final class Registry(val gen: Gen) {
@@ -57,20 +66,20 @@ object WmCache {
     }
 
     private val inputs = new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-    /** `name` after everything it reads, transitively. */
+    /** `name` after everything its SQL reads, transitively. */
     def closure(name: String): Seq[String] = {
       val in = inputs.computeIfAbsent(name, n => reads(gen.artifactSql(n)).filterNot(_ == n))
       (in.flatMap(closure) :+ name).distinct
     }
 
-    /** The watermark chain: the stego stage and everything it reads. */
-    lazy val chain: Seq[String] = closure("g_stego")
-    lazy val inChain: Set[String] = chain.toSet
+    /** The watermark chain: the stego stage and everything its SQL
+      * reads. */
+    lazy val inChain: Set[String] = closure("g_stego").toSet
 
     /** What keys a build of artifact `name`: its SQL, and for a kernel
       * stage also the revision of the kernels. */
     def keyText(name: String): String =
-      if (KernelStages(name)) s"${gen.artifactSql(name)}|kernels=${ChainKernels.Revision}"
+      if (KernelReads.contains(name)) s"${gen.artifactSql(name)}|kernels=${ChainKernels.Revision}"
       else gen.artifactSql(name)
 
     private val lineages = new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -100,11 +109,20 @@ object WmCache {
     def excl(key: String): Set[String] = iterator.toSet - key
   }
 
-  /** Idempotently build + register the watermark chain views for
-    * (spark, dir), in order — and nothing else. */
+  /** Idempotently build + register the views a watermark job reads for
+    * (spark, dir), in order — g_knn → g_indeg → g_carriers → g_stego —
+    * and nothing else. */
   def ensure(spark: SparkSession, dir: String): Unit = {
     val reg = registry(spark, dir)
-    reg.chain.foreach(stage(spark, dir, reg, _))
+    JobStages.foreach(stage(spark, dir, reg, _))
+  }
+
+  /** The chain stages a watermark job reads, each after the stages its
+    * kernel reads. Each is staged in turn, so a session that switches
+    * dirs re-registers every one of them, not just the last. */
+  private val JobStages: Seq[String] = {
+    def after(n: String): Seq[String] = (KernelReads(n).flatMap(after) :+ n).distinct
+    after("g_stego")
   }
 
   /** Artifact `name` of (spark, dir), built if missing, and registered
@@ -115,11 +133,12 @@ object WmCache {
   /** Stage `name` of (spark, dir)'s registry, as a Scratch artifact. */
   private def stage(spark: SparkSession, dir: String, reg: Registry,
                     name: String): DataFrame =
-    Scratch.artifact(spark, dir, name, reg.keyText(name))(stageFrame(spark, dir, name))
+    Scratch.artifact(spark, dir, name, reg.keyText(name), KernelReads.get(name))(
+      stageFrame(spark, dir, name))
 
   /** The DataFrame that builds artifact `view` of (spark, dir)'s
     * generator, reading the views it depends on: the chain kernel for
-    * g_bkt, g_knn and g_stego, the NnDeep forward pass for
+    * each chain stage, the NnDeep forward pass for
     * g_nn_deep_logits, the artifact's SQL for every other one. Every
     * build goes through here, and so does every tool that explains
     * one. */
@@ -128,6 +147,8 @@ object WmCache {
     view match {
       case "g_bkt" => ChainKernels.buckets(spark, reg.gen.lshPlanes)
       case "g_knn" => ChainKernels.knn(spark, reg.gen.lshPlanes)
+      case "g_indeg" => ChainKernels.indeg(spark)
+      case "g_carriers" => ChainKernels.carriers(spark, spark.table("g_indeg"), reg.gen.params)
       case "g_stego" => ChainKernels.stego(spark, spark.table("g_carriers"), reg.gen.params)
       case "g_nn_deep_logits" => NnDeep.logits(spark, dir)
       case _ => spark.sql(reg.gen.artifactSql(view))
@@ -136,16 +157,13 @@ object WmCache {
 
   /** The carriers (vec_id, in_degree, sel_rank, blk) of a watermark
     * under `params`: the cached g_carriers for the engine's default
-    * parameters; otherwise `params`' own carrier selection over the
-    * cached g_indeg, which no watermark parameter changes. */
+    * parameters; otherwise the g_carriers kernel under `params` over
+    * the cached g_indeg, which no watermark parameter changes. */
   def carriers(spark: SparkSession, dir: String,
                params: WmParams = WmParams.Default): DataFrame = {
-    if (params == WmParams.Default) stage(spark, dir, registry(spark, dir), "g_carriers")
-    else {
-      val sql = customGen(spark, dir, params).artifactSql("g_carriers")
-      ensureReads(spark, dir, sql)
-      spark.sql(sql)
-    }
+    val reg = registry(spark, dir)
+    if (params == WmParams.Default) stage(spark, dir, reg, "g_carriers")
+    else ChainKernels.carriers(spark, stage(spark, dir, reg, "g_indeg"), params)
   }
 
   /** The stego cells (id, pos, sval) of a watermark under `params`:
@@ -158,20 +176,16 @@ object WmCache {
     else ChainKernels.stego(spark, carriers(spark, dir, params), params)
   }
 
-  private val customGens = new java.util.concurrent.ConcurrentHashMap[(WmParams, Int), Gen]()
-  /** The view-reading generator for `params` at the dir's plane count. */
-  private def customGen(spark: SparkSession, dir: String, params: WmParams): Gen =
-    customGens.computeIfAbsent((params, SparkEntry.sparkGenFor(spark, dir).lshPlanes),
-      { case (p, planes) => new Gen(SparkDialect, useViews = true, p, lshPlanes = planes) })
-
-  /** Ensures every artifact `sql` reads, each after the artifacts it
-    * reads in turn, and returns their lineage (the build SQL of each,
-    * transitively) for a build over them to key its scratch on; "" when
-    * `sql` reads none. */
-  private[graft] def ensureReads(spark: SparkSession, dir: String, sql: String): String = {
+  /** Ensures every artifact `sql` reads (or `only` those, when a kernel
+    * builds over fewer than its SQL names), each after the artifacts it
+    * reads in turn, and returns the lineage of everything `sql` reads
+    * (the build SQL of each, transitively) for a build over them to key
+    * its scratch on; "" when `sql` reads none. */
+  private[graft] def ensureReads(spark: SparkSession, dir: String, sql: String,
+                                 only: Option[Seq[String]] = None): String = {
     val reg = registry(spark, dir)
     val read = reg.reads(sql)
-    read.foreach(stage(spark, dir, reg, _))
+    only.getOrElse(read).foreach(stage(spark, dir, reg, _))
     read.map(reg.lineage).mkString(";")
   }
 

@@ -50,10 +50,21 @@ object Crypto {
       .generateSecret(spec).getEncoded
   }
 
-  private def encKey(password: String) =
-    new SecretKeySpec(pbkdf2(password, Salt, 256), "AES")
-  private def macKey(password: String) =
-    new SecretKeySpec(pbkdf2(password, MacSalt, 256), "HmacSHA256")
+  /** The (AES, HMAC) keys of each password, derived once per JVM: a
+    * derivation is 2 × 100,000 PBKDF2 rounds, and every encrypt and
+    * decrypt needs both keys. */
+  private val keys = new java.util.concurrent.ConcurrentHashMap[String, (SecretKeySpec, SecretKeySpec)]()
+  /** Key pairs derived so far in this JVM. */
+  private[graft] val derivations = new java.util.concurrent.atomic.AtomicLong()
+
+  private def keysOf(password: String): (SecretKeySpec, SecretKeySpec) =
+    keys.computeIfAbsent(password, p => {
+      derivations.incrementAndGet()
+      (new SecretKeySpec(pbkdf2(p, Salt, 256), "AES"),
+        new SecretKeySpec(pbkdf2(p, MacSalt, 256), "HmacSHA256"))
+    })
+  private def encKey(password: String) = keysOf(password)._1
+  private def macKey(password: String) = keysOf(password)._2
 
   /** siv = first 8 bytes of HMAC-SHA256(K_mac, pt). */
   private def siv(password: String, pt: Array[Byte]): Array[Byte] = {

@@ -22,7 +22,7 @@ object Backup {
   def backupCarriers(spark: SparkSession, sfDir: String, path: String): Long = {
     SparkEntry.queries("wm_backup")(spark, sfDir)
       .write.mode("overwrite").parquet(path)
-    spark.read.parquet(path).count()
+    Tables.footerRows(spark, path)
   }
 
   /** Persist the carrier id list (vec_id, blk) as parquet — the
@@ -36,13 +36,8 @@ object Backup {
     WmCache.carriers(spark, sfDir, params)
       .select(col("vec_id").cast("bigint").as("vec_id"), col("blk").cast("bigint").as("blk"))
       .write.mode("overwrite").parquet(path)
-    spark.read.schema(IdsSchema).parquet(path).count()
+    Tables.footerRows(spark, path)
   }
-
-  /** The registry's schema, as [[saveCarrierIds]] writes it: a read
-    * that declares it skips parquet schema inference, a Spark job of
-    * its own on every recover. */
-  private val IdsSchema = "vec_id bigint, blk bigint"
 
   /** Blind extraction from a PERSISTED id list — the reference's
     * extract_watermark(..., ids_file=...) flow (pg_func.py:723): filter
@@ -54,15 +49,21 @@ object Backup {
     * the tiny vote aggregation. Output schema matches `wm_extract`:
     * (blk, bit_idx, bit, votes).
     *
+    * The filter is an IN subquery, not a join: Catalyst pushes it
+    * through `vectors`' deterministic projections (an attacked copy is
+    * a view that rewrites every embedding) and plans it as a LeftSemi
+    * over the scan, so only the carriers' rows are projected. The ids
+    * are unique, so the rows equal those of an inner join.
+    *
     * `vectors` is any (vec_id, embedding) table, e.g. the watermarked
     * parquet written by Writeback. */
   def extractFromIds(vectors: DataFrame, idsPath: String,
                      params: WmParams = WmParams.Default): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    val ids = spark.read.schema(IdsSchema).parquet(idsPath).select("vec_id")
+    val ids = Tables.read(spark, idsPath).select("vec_id")
     vectors
-      .join(broadcast(ids), "vec_id")
+      .where(col("vec_id").isin(ids))
       .select(col("embedding").cast("array<double>"))
       .as[Seq[Double]]
       .flatMap { v =>

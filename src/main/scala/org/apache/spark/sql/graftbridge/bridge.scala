@@ -25,4 +25,10 @@ object DataFrameBridge {
   def fromRows(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rows, schema)
+
+  /** Waits until every event posted to `spark`'s listener bus has been
+    * delivered (the bus is private to Spark), so a listener has seen
+    * every job and stage that ran before the call. */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(60000L)
 }

@@ -8,18 +8,27 @@ import graft.operators.ChainKernels
 import graft.sqlgen.{Gen, SparkDialect, Wm, WmParams}
 
 /** The chain kernels execute their stage SQL exactly: on every corpus,
-  * the kernel-built g_bkt, g_knn and g_stego hold the rows of the
-  * executed `Gen.artifactSql` SQL (exceptAll both ways empty) with the
-  * same column types. */
+  * the kernel-built g_bkt, g_knn, g_indeg, g_carriers and g_stego hold
+  * the rows of the executed `Gen.artifactSql` SQL (exceptAll both ways
+  * empty) with the same column types, g_carriers also under
+  * non-default WmParams; the write-back overlay equals the SQL overlay
+  * it replaced. */
 class ChainKernelSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val kernelStages = Seq("g_bkt", "g_knn", "g_stego")
+  private val kernelStages = Seq("g_bkt", "g_knn", "g_indeg", "g_carriers", "g_stego")
+  /** Another rate and key; the second rate renders with an exponent,
+    * a double literal in Spark SQL. */
+  private val customParams = Seq(
+    WmParams(key = "another-key-77", rate = 0.2),
+    WmParams(message = "CUSTOM MESSAGE!!", key = "k2", rate = 5.0e-4))
 
-  /** A session with `dir`'s chain views built in-session. */
+  /** A session with `dir`'s chain views built in-session, and g_bkt,
+    * which the g_knn SQL reads. */
   private def session(dir: String): SparkSession = {
     val s = spark.newSession()
     s.conf.set("spark.graft.scratch", "off")
     WmCache.ensure(s, dir)
+    WmCache.artifact(s, dir, "g_bkt")
     s
   }
 
@@ -34,8 +43,9 @@ class ChainKernelSpec extends AnyFunSuite {
     kernel.count()
   }
 
-  /** Checks the three kernel stages of `dir` against their SQL;
-    * returns the session the chain was built in. */
+  /** Checks the kernel stages of `dir` against their SQL, g_carriers
+    * also under [[customParams]]; returns the session the chain was
+    * built in. */
   private def checkChain(dir: String, planes: Int): SparkSession = {
     val s = session(dir)
     val gen = SparkEntry.sparkGenFor(s, dir)
@@ -43,6 +53,12 @@ class ChainKernelSpec extends AnyFunSuite {
     for (view <- kernelStages)
       assert(assertSame(WmCache.stageFrame(s, dir, view), s.sql(gen.artifactSql(view)),
         s"$dir $view") > 0)
+    for (p <- customParams) {
+      // the custom SQL reads the session's g_indeg view, as the kernel does
+      val sql = new Gen(SparkDialect, useViews = true, p, lshPlanes = planes).artifactSql("g_carriers")
+      assert(assertSame(ChainKernels.carriers(s, s.table("g_indeg"), p), s.sql(sql),
+        s"$dir g_carriers $p") >= Wm.Blocks)
+    }
     s
   }
 
@@ -128,5 +144,50 @@ class ChainKernelSpec extends AnyFunSuite {
       assert(assertSame(ChainKernels.stego(s, s.table("g_carriers"), p),
         s.sql(gen.artifactSql("g_stego")), s"g_stego $p") > 0)
     }
+  }
+
+  /** The SQL projection the write-back overlay replaced, over
+    * (vec_id, embedding, sv). */
+  private val SqlOverlay = Seq("cast(vec_id as bigint) as vec_id",
+    """case when sv is null then transform(cast(embedding as array<double>), x -> round(x, 6))
+      |else zip_with(cast(embedding as array<double>), sv, (x, s) -> round(coalesce(s, x), 6))
+      |end as embedding""".stripMargin)
+
+  /** The write-back table as the SQL overlay computed it: the same
+    * join, projected by [[SqlOverlay]]. */
+  private def sqlOverlay(s: SparkSession, dir: String, params: WmParams): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val stego = WmCache.stego(s, dir, params)
+      .groupBy(col("id"))
+      .agg(array_sort(collect_list(struct(col("pos"), col("sval")))).as("s"))
+      .select(col("id"), expr("transform(s, e -> e.sval)").as("sv"))
+    s.table("embeddings")
+      .where(size(col("embedding")) > 0)
+      .select(col("vec_id"), col("embedding"))
+      .repartition(s.sessionState.conf.numShufflePartitions, col("vec_id"))
+      .join(stego, col("vec_id") === col("id"), "left")
+      .selectExpr(SqlOverlay: _*)
+  }
+
+  test("the write-back kernel equals the SQL overlay, default and custom params") {
+    for ((dir, p) <- Seq(new File(TestSpark.Sf).getParent + "/sf0.01" -> WmParams.Default,
+                         scaled -> WmParams.Default, TestSpark.Sf -> customParams.head)) {
+      val s = session(dir)
+      assert(assertSame(graft.operators.Writeback.stegoTable(s, dir, p), sqlOverlay(s, dir, p),
+        s"$dir write-back") == Tables.vectorCount(s, dir))
+    }
+  }
+
+  test("the write-back overlay keeps zip_with's null padding and transform's null cells") {
+    val in = spark.sql("""select * from values
+      |  (1L, array(1.0D, null, 3.0000005D), cast(null as array<double>)),
+      |  (2L, array(1.0D, null, -2.5e-7D), array(0.1234565D)),
+      |  (3L, array(1.0D), array(null, 2.0000004D, -0.0D)),
+      |  (cast(null as bigint), array(-0.0D), cast(null as array<double>))
+      |  as t(vec_id, embedding, sv)""".stripMargin)
+    val kernel = graft.operators.Writeback.overlaid(spark, in)
+    val sql = in.selectExpr(SqlOverlay: _*)
+    assert(kernel.collect().toSeq.map(_.toString) == sql.collect().toSeq.map(_.toString))
+    assert(kernel.where("exists(embedding, x -> x is null)").count() == 2)
   }
 }

@@ -3,8 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Prof's census counts node classes of the executed plan — scans per
-  * table, through adaptive and codegen wrappers — and its explain adds
-  * the RDD lineage to a kernel artifact's plan only. */
+  * table, through adaptive and codegen wrappers — its explain adds the
+  * RDD lineage to a kernel artifact's plan only, and its first touch
+  * counts the Spark jobs and stages it ran. */
 class ProfSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -33,5 +34,14 @@ class ProfSpec extends AnyFunSuite {
 
   test("frame rejects a name that is neither a query key nor an artifact") {
     intercept[IllegalArgumentException](Prof.frame(spark, TestSpark.Sf, "no_such_key"))
+  }
+
+  test("work counts the Spark jobs and stages of a g_carriers first touch") {
+    val s = spark.newSession()
+    s.conf.set("spark.graft.scratch", "off")
+    val w = Prof.work(s)(Prof.frame(s, TestSpark.Sf, "g_carriers").count(): Unit)
+    assert(w.jobs > 0 && w.stages > 0 && w.seconds > 0, w)
+    val idle = Prof.work(s)(())
+    assert((idle.jobs, idle.stages) == (0, 0))
   }
 }

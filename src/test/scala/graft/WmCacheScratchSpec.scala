@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Cross-session chain scratch: the first ensure() writes each g_*
-  * stage as parquet under its own (data, SQL)-fingerprinted key; a
+  * stage a watermark job reads (g_knn, g_indeg, g_carriers, g_stego)
+  * as parquet under its own (data, SQL)-fingerprinted key; a
   * second session reuses them (chain build ≈ parquet read) and serves
   * IDENTICAL rows. */
 class WmCacheScratchSpec extends AnyFunSuite {
@@ -17,8 +18,8 @@ class WmCacheScratchSpec extends AnyFunSuite {
     WmCache.ensure(s1, TestSpark.Sf)
     val done = new java.io.File(root).listFiles()
       .filter(f => f.isDirectory && new java.io.File(f, "_DONE").exists())
-    val stages = Seq("g_bkt", "g_knn", "g_indeg", "g_carriers", "g_stego")
-    assert(done.length == 5, s"expected five completed scratch keys, got ${done.length}")
+    val stages = Seq("g_knn", "g_indeg", "g_carriers", "g_stego")
+    assert(done.length == 4, s"expected four completed scratch keys, got ${done.length}")
     // one stage per key
     val stageDir = stages.map(v =>
       v -> done.filter(d => new java.io.File(d, v).isDirectory).toSeq).toMap
