@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageSubmitted}
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode, InputAdapter,
   LogicalRDD, RDDScanExec, ReusedSubqueryExec, SparkPlan, WholeStageCodegenExec}
@@ -111,18 +111,24 @@ object Prof {
 
   private def secondsSince(t0: Long): Double = (System.nanoTime() - t0) / 1e9
 
-  /** Wall seconds, Spark jobs and Spark stages of one call. */
-  final case class Work(seconds: Double, jobs: Int, stages: Int)
+  /** Wall seconds, Spark jobs, Spark stages and shuffle bytes written
+    * of one call. */
+  final case class Work(seconds: Double, jobs: Int, stages: Int, shuffleBytes: Long)
 
-  /** Runs `body` and counts the Spark jobs and stages it runs, with a
-    * listener added and removed around it (stages that reuse an earlier
-    * shuffle are skipped, not counted). */
+  /** Runs `body` and counts the Spark jobs and stages it runs and the
+    * shuffle bytes its tasks write, with a listener added and removed
+    * around it (stages that reuse an earlier shuffle are skipped, not
+    * counted). */
   def work(spark: SparkSession)(body: => Unit): Work = {
     val jobs, stages = new java.util.concurrent.atomic.AtomicInteger()
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         stages.incrementAndGet(): Unit
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          shuffleBytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten): Unit
     }
     DataFrameBridge.drainListeners(spark)
     spark.sparkContext.addSparkListener(l)
@@ -132,7 +138,7 @@ object Prof {
       DataFrameBridge.drainListeners(spark)
       spark.sparkContext.removeSparkListener(l)
     }
-    Work(secondsSince(t0), jobs.get, stages.get)
+    Work(secondsSince(t0), jobs.get, stages.get, shuffleBytes.get)
   }
 
   private def time(spark: SparkSession, dir: String, names: Seq[String], reps: Int): Unit = {
@@ -153,7 +159,7 @@ object Prof {
         (plan, secondsSince(t1))
       }
       println(f"TIME $name%-32s first=${first.seconds}%.3f (jobs=${first.jobs} " +
-        s"stages=${first.stages}) plan=${minMed(runs.map(_._1))} " +
+        s"stages=${first.stages} shuffle_bytes=${first.shuffleBytes}) plan=${minMed(runs.map(_._1))} " +
         s"exec=${minMed(runs.map(_._2))} total=${minMed(runs.map(r => r._1 + r._2))} " +
         s"(min/med of $reps)")
     }

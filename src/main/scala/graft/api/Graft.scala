@@ -1,7 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.{SparkEntry, Tables, WmCache}
+import graft.{SparkEntry, Tables}
 import graft.functions.Crypto
 import graft.operators.Writeback
 import graft.sqlgen.{Gen, SparkDialect, Wm, WmParams}
@@ -134,9 +134,11 @@ final class Graft(spark: SparkSession, dir: String,
     Graft.assembleAndDecrypt(bits, key)
   }
 
-  /** Blind recovery from a persisted carrier-id list (no selection-
-    * chain rebuild — see operators.Backup.extractFromIds): the
-    * reference's extract_watermark(ids_file=...) flow. */
+  /** Blind recovery from a persisted carrier-id list: the reference's
+    * extract_watermark(ids_file=...) flow, with no selection-chain
+    * rebuild. One map-side decode-and-vote pass over the stored
+    * carriers' rows builds the 16×16 vote table, with no shuffle (see
+    * operators.Backup.recoverFromIds). */
   def recoverMessageFromIds(vectors: DataFrame, idsPath: String): String =
     graft.operators.Backup.recoverFromIds(vectors, idsPath, params)
 

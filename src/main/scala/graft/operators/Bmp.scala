@@ -157,7 +157,6 @@ object Bmp {
     * checkerboard Walsh correlate (absolute position), bright-pixel
     * census (value fidelity). */
   def features(px: Array[Int], width: Int): BmpFeats = {
-    val height = px.length / width
     var hg = 0L; var vg = 0L; var ck = 0L; var br = 0L
     var i = 0
     while (i < px.length) {

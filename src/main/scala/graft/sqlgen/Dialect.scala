@@ -261,7 +261,7 @@ object Prim {
     * in 5 at the target scale — common when the input is structured
     * (float columns + dyadic noise), observed 21/10624 rows. floor on
     * bit-identical doubles is bit-identical everywhere. */
-  def roundAway(d: Dialect)(e: String, dec: Int): String = {
+  def roundAway(e: String, dec: Int): String = {
     val m = s"cast(1${"0" * dec} as double)"
     // the trailing + 0 normalizes IEEE negative zero: DuckDB's floor
     // keeps double (-floor → -0.0) while Spark's floor returns bigint

@@ -482,7 +482,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // semantics to diverge between engines).
     val thr = "cast(floor((cast(1048576 as double) * ceil(sqrt(cnt))) / cnt) as bigint)"
     val thrT = "least(1048576, cast(floor((cast(1048576 as double) * cast(8 as double) * ceil(sqrt(cnt))) / cnt) as bigint))"
-    def csimFrom(ct: String, csim: String, src: String = "nn") =
+    def csimFrom(ct: String, csim: String, src: String) =
       s"""$csim as (select $src.id, c.cell, ${d.dot(s"$src.n", "c.cv")} / sqrt(${d.dot("c.cv", "c.cv")}) as sim
          |          from $src cross join $ct c)""".stripMargin
     def asgFrom(csim: String, asg: String) =
@@ -804,7 +804,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
       if (views) Seq(viewAlias("ct2", "g_ivf_ct"), viewAlias("asgF", "g_ivf_asg")).mkString(",\n")
       else Seq(ivfTrainCtes, ivfAssignCtes).mkString(",\n")
     def mse(vs: String, cs: String) =
-      roundAway(d)(s"${d.dot(s"$vs.sv", s"$vs.sv")} - 2 * ${d.dot(s"$vs.sv", s"$cs.cv")} + ${d.dot(s"$cs.cv", s"$cs.cv")}", 9)
+      roundAway(s"${d.dot(s"$vs.sv", s"$vs.sv")} - 2 * ${d.dot(s"$vs.sv", s"$cs.cv")} + ${d.dot(s"$cs.cv", s"$cs.cv")}", 9)
     val resPart = idx match {
       // serving: cached codebook/codes views + the residual subvector
       // derivation (rsub) over the cached IVF views; the oracle's
@@ -823,13 +823,13 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |        from rcodes k join rsub v on v.id = k.id and v.m = k.m
        |                      join rct1 c on c.m = k.m and c.cell = k.cell),
        |era as (select m, ${bigint("count(*)")} as n,
-       |          ${roundAway(d)("cast(sum(cast(mse as decimal(28, 9))) as double) / count(*)", 6)} as mean_raw
+       |          ${roundAway("cast(sum(cast(mse as decimal(28, 9))) as double) / count(*)", 6)} as mean_raw
        |        from er group by m),
-       |erra as (select m, ${roundAway(d)("cast(sum(cast(mse as decimal(28, 9))) as double) / count(*)", 6)} as mean_res
+       |erra as (select m, ${roundAway("cast(sum(cast(mse as decimal(28, 9))) as double) / count(*)", 6)} as mean_res
        |         from err group by m)
        |select ${bigint("a.m")} as subspace, a.n as n_vectors,
        |  a.mean_raw as mean_mse_raw, b.mean_res as mean_mse_residual,
-       |  ${roundAway(d)("case when b.mean_res > 0 then a.mean_raw / b.mean_res end", 4)} as improvement
+       |  ${roundAway("case when b.mean_res > 0 then a.mean_raw / b.mean_res end", 4)} as improvement
        |from era a join erra b on b.m = a.m""".stripMargin
   }
 
@@ -1098,9 +1098,10 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     * reads in place of an inline chain. The SQL SPECIFIES the artifact:
     * a build reads only the g_* views its SQL names, so WmCache derives
     * each artifact's inputs from this text, and the text keys its
-    * scratch. WmCache executes the SQL, except for g_bkt, g_knn and
-    * g_stego (the precompiled kernels of operators.ChainKernels, which
-    * ChainKernelSpec holds row-identical to it) and g_nn_deep_logits
+    * scratch. WmCache executes the SQL, except for the watermark chain
+    * — g_bkt, g_knn, g_indeg, g_carriers and g_stego, the precompiled
+    * kernels of operators.ChainKernels, which ChainKernelSpec holds
+    * row-identical to it — and g_nn_deep_logits
     * (the JVM forward pass operators.NnDeep, which NnDeepSpec holds
     * bit-identical to it). Spark-dialect only. */
   private lazy val artifacts: Seq[(String, () => String)] = Seq(
@@ -1266,7 +1267,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |       from ppb group by wd),
        |z as (select p.source, p.wd,
        |        case when w.s * w.spp - w.sp * w.sp = 0 then ${bigint("0")}
-       |             else ${bigint(roundAway(d)("(p.p - cast(w.sp as double) / w.s) / sqrt((cast(w.s as double) * w.spp - cast(w.sp as double) * w.sp) / (cast(w.s as double) * (w.s - 1))) * 1000000", 0))}
+       |             else ${bigint(roundAway("(p.p - cast(w.sp as double) / w.s) / sqrt((cast(w.s as double) * w.spp - cast(w.sp as double) * w.sp) / (cast(w.s as double) * (w.s - 1))) * 1000000", 0))}
        |        end as zq
        |      from ppb p join ws w on w.wd = p.wd)
        |select source, wd, zq from z""".stripMargin
@@ -1279,7 +1280,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     case Some(v) =>
       s"""with z as (select source, wd, zq from $v)
          |select a.source as source_a, b.source as source_b,
-         |  ${roundAway(d)("cast(sum(abs(a.zq - b.zq)) as double) / 30 / 1000000", 4)} as delta_burrows,
+         |  ${roundAway("cast(sum(abs(a.zq - b.zq)) as double) / 30 / 1000000", 4)} as delta_burrows,
          |  ${bigint("count(*)")} as n_words
          |from z a join z b on b.wd = a.wd and b.source > a.source
          |group by a.source, b.source""".stripMargin
@@ -1309,11 +1310,11 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |       from ppb group by wd),
          |z as (select p.source, p.wd,
          |        case when w.s * w.spp - w.sp * w.sp = 0 then ${bigint("0")}
-         |             else ${bigint(roundAway(d)("(p.p - cast(w.sp as double) / w.s) / sqrt((cast(w.s as double) * w.spp - cast(w.sp as double) * w.sp) / (cast(w.s as double) * (w.s - 1))) * 1000000", 0))}
+         |             else ${bigint(roundAway("(p.p - cast(w.sp as double) / w.s) / sqrt((cast(w.s as double) * w.spp - cast(w.sp as double) * w.sp) / (cast(w.s as double) * (w.s - 1))) * 1000000", 0))}
          |        end as zq
          |      from ppb p join ws w on w.wd = p.wd)
          |select a.source as source_a, b.source as source_b,
-         |  ${roundAway(d)("cast(sum(abs(a.zq - b.zq)) as double) / 30 / 1000000", 4)} as delta_burrows,
+         |  ${roundAway("cast(sum(abs(a.zq - b.zq)) as double) / 30 / 1000000", 4)} as delta_burrows,
          |  ${bigint("count(*)")} as n_words
          |from z a join z b on b.wd = a.wd and b.source > a.source
          |group by a.source, b.source""".stripMargin
@@ -1354,7 +1355,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |dt as (select ${bcast("f")}w.doc_id, f.source, ${bigint("sum(f.df)")} as dot
        |       from dw w join wf f on f.wd = w.wd group by w.doc_id, f.source),
        |sc as (select ${bcast("cn")}dt.doc_id, dt.source,
-       |         ${roundAway(d)("dt.dot / (sqrt(cast(dn.ndw as double)) * sqrt(cast(cn.n2 as double)))", 6)} as score
+       |         ${roundAway("dt.dot / (sqrt(cast(dn.ndw as double)) * sqrt(cast(cn.n2 as double)))", 6)} as score
        |       from dt join dn on dn.doc_id = dt.doc_id
        |               join cn on cn.source = dt.source),
        |pr as (select doc_id, ${d.fieldOf("mx", "s")} as pred from (
@@ -1436,9 +1437,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |        from ks cross join msgbits m
        |        left join art v on v.k = ks.k and v.blk = m.blk and v.bit_idx = m.j
        |        group by ks.k)
-       |select ${roundAway(d)("case e.k when 0 then 0.10 when 1 then 0.25 when 2 then 0.50 else 1.00 end", 2)} as sample_share,
+       |select ${roundAway("case e.k when 0 then 0.10 when 1 then 0.25 when 2 then 0.50 else 1.00 end", 2)} as sample_share,
        |  s.n_scanned, c.n_valid, e.blocks_live,
-       |  e.errors, ${roundAway(d)("e.errors / cast(256 as double)", 4)} as ber,
+       |  e.errors, ${roundAway("e.errors / cast(256 as double)", 4)} as ber,
        |  ${bigint("case when e.errors = 0 then 1 else 0 end")} as fully_recoverable
        |from aer e join asc2 s on s.k = e.k join acar c on c.k = e.k""".stripMargin
   }
@@ -1511,8 +1512,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     val sqrtQn2 = math.sqrt(qn2.toDouble)
     s"""with dt as (select doc_id, dl, tf1, tf2, tf3, nrm2, qdot from $postV),
        |st as (select count(*) as n, sum(dl) as sdl, $dfs from dt)
-       |select dt.doc_id, ${roundAway(d)(bm25Score, 6)} as bm25,
-       |  ${roundAway(d)(s"dt.qdot / (sqrt(cast(dt.nrm2 as double)) * cast($sqrtQn2 as double))", 6)} as csim
+       |select dt.doc_id, ${roundAway(bm25Score, 6)} as bm25,
+       |  ${roundAway(s"dt.qdot / (sqrt(cast(dt.nrm2 as double)) * cast($sqrtQn2 as double))", 6)} as csim
        |from dt cross join st where dt.tf1 + dt.tf2 + dt.tf3 > 0""".stripMargin
   }
 
@@ -1559,8 +1560,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
       if (views.isDefined) "" // sem reads the refreshed score artifact
       else
         s"""st as $matKw(select count(*) as n, sum(dl) as sdl, $dfs from dt),
-           |scs as (select dt.doc_id, ${roundAway(d)(bm25Score, 6)} as bm25,
-           |          ${roundAway(d)(s"dt.qdot / (sqrt(cast(dt.nrm2 as double)) * cast($sqrtQn2 as double))", 6)} as csim
+           |scs as (select dt.doc_id, ${roundAway(bm25Score, 6)} as bm25,
+           |          ${roundAway(s"dt.qdot / (sqrt(cast(dt.nrm2 as double)) * cast($sqrtQn2 as double))", 6)} as csim
            |        from dt cross join st where dt.tf1 + dt.tf2 + dt.tf3 > 0),
            |sem as (select doc_id, bm25, csim from scs),
            |""".stripMargin
@@ -2037,7 +2038,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |        from deagg a cross join dls g),
          |rn as (select k, dl, id, nrm, ${arrLit((0 until MsgLen).map(g => s"sh$g"))} as sharr,
          |          sqrt(1 + $pnSq) as pn,
-         |          ${bigint(roundAway(d)(s"$drift / sqrt(1 + $pnSq) * 1000000000", 0))} as driftq
+         |          ${bigint(roundAway(s"$drift / sqrt(1 + $pnSq) * 1000000000", 0))} as driftq
          |       from rsh)""".stripMargin
       val ratInline =
         s"""rat as (select e.k, e.dl, x.id, x.pos,
@@ -2095,11 +2096,11 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |        group by g.k),
          |rdr as (select k, max(dl) as dl, ${bigint("count(*)")} as nc, ${bigint("sum(driftq)")} as sd,
          |          ${bigint("min(driftq)")} as mnd from rn group by k)
-         |select ${roundAway(d)("dd.dl", 2)} as delta_step, ${bigint("256")} as n_bits, e.errors,
-         |  ${roundAway(d)("e.errors / cast(256 as double)", 4)} as ber,
+         |select ${roundAway("dd.dl", 2)} as delta_step, ${bigint("256")} as n_bits, e.errors,
+         |  ${roundAway("e.errors / cast(256 as double)", 4)} as ber,
          |  e.blocks_live,
-         |  ${roundAway(d)("cast(dd.sd as double) / dd.nc / 1000000000", 6)} as mean_cosine,
-         |  ${roundAway(d)("cast(dd.mnd as double) / 1000000000", 6)} as min_cosine
+         |  ${roundAway("cast(dd.sd as double) / dd.nc / 1000000000", 6)} as mean_cosine,
+         |  ${roundAway("cast(dd.mnd as double) / 1000000000", 6)} as min_cosine
          |from rer e join rdr dd on dd.k = e.k""".stripMargin
       }
   }
@@ -2160,8 +2161,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
            |${tag}t as (select qid, cid from (select qid, cid, row_number() over (partition by qid order by hamming, cid) as rn from ${tag}p) _${tag}h where rn <= 10)""".stripMargin
       def legSel(tag: String, onesT: String) =
         s"""select '$tag' as leg,
-           |  ${roundAway(d)(s"sum(abs(cast(ones as double) / nv - 0.5)) / $Dim", 4)} as mean_balance_dev,
-           |  ${roundAway(d)("sum(4 * (cast(ones as double) / nv) * (1 - cast(ones as double) / nv))", 4)} as effective_bits
+           |  ${roundAway(s"sum(abs(cast(ones as double) / nv - 0.5)) / $Dim", 4)} as mean_balance_dev,
+           |  ${roundAway("sum(4 * (cast(ones as double) / nv) * (1 - cast(ones as double) / nv))", 4)} as effective_bits
            |from $onesT""".stripMargin
       val pre = if (views) Seq(nvCtes, exnCte, bqChain) else Seq(nvCtes, bqChain)
       val rbqInline = s"rbq as (select id, ${bigint(rhi)} as hi, ${bigint(rlo)} as lo from rot)"
@@ -2213,7 +2214,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |         union all
          |         ${legSel("rotated", "rotones")})
          |select l.leg, l.mean_balance_dev, l.effective_bits,
-         |  ${roundAway(d)("h.h / (cast(10 as double) * q.nq)", 4)} as recall10
+         |  ${roundAway("h.h / (cast(10 as double) * q.nq)", 4)} as recall10
          |from legs l join hits h on h.leg = l.leg cross join nq q""".stripMargin
   }
 
@@ -2242,11 +2243,11 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |ht as (select ise, case when ${(0 until BloomK).map(i => bloomTest(s"q$i")).mkString(" and ")} then 1 else 0 end as h
          |       from qr)
          |select bs.n_eval as n_eval_shingles, bs.n_bits_set,
-         |  ${roundAway(d)(s"bs.n_bits_set / cast($BloomBits as double)", 6)} as fill_ratio,
-         |  ${roundAway(d)(s"pow(bs.n_bits_set / cast($BloomBits as double), $BloomK)", 6)} as fpr_expected,
+         |  ${roundAway(s"bs.n_bits_set / cast($BloomBits as double)", 6)} as fill_ratio,
+         |  ${roundAway(s"pow(bs.n_bits_set / cast($BloomBits as double), $BloomK)", 6)} as fpr_expected,
          |  ${bigint("a.n_probes")} as n_probes, ${bigint("a.n_members")} as n_members,
          |  ${bigint("a.n_hits")} as n_hits, ${bigint("a.n_false_pos")} as n_false_pos,
-         |  ${roundAway(d)("a.n_false_pos / cast(a.n_probes - a.n_members as double)", 6)} as fpr_measured
+         |  ${roundAway("a.n_false_pos / cast(a.n_probes - a.n_members as double)", 6)} as fpr_measured
          |from bs cross join (select count(*) as n_probes, sum(ise) as n_members,
          |                           sum(h) as n_hits, sum(h * (1 - ise)) as n_false_pos
          |                    from ht) a""".stripMargin
@@ -2263,11 +2264,11 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |ht as (select ise, case when ${(0 until BloomK).map(i => bloomTest(s"q$i")).mkString(" and ")} then 1 else 0 end as h
          |       from qr)
          |select bs.n_eval as n_eval_shingles, bs.n_bits_set,
-         |  ${roundAway(d)(s"bs.n_bits_set / cast($BloomBits as double)", 6)} as fill_ratio,
-         |  ${roundAway(d)(s"pow(bs.n_bits_set / cast($BloomBits as double), $BloomK)", 6)} as fpr_expected,
+         |  ${roundAway(s"bs.n_bits_set / cast($BloomBits as double)", 6)} as fill_ratio,
+         |  ${roundAway(s"pow(bs.n_bits_set / cast($BloomBits as double), $BloomK)", 6)} as fpr_expected,
          |  ${bigint("a.n_probes")} as n_probes, ${bigint("a.n_members")} as n_members,
          |  ${bigint("a.n_hits")} as n_hits, ${bigint("a.n_false_pos")} as n_false_pos,
-         |  ${roundAway(d)("a.n_false_pos / cast(a.n_probes - a.n_members as double)", 6)} as fpr_measured
+         |  ${roundAway("a.n_false_pos / cast(a.n_probes - a.n_members as double)", 6)} as fpr_measured
          |from bs cross join (select count(*) as n_probes, sum(ise) as n_members,
          |                           sum(h) as n_hits, sum(h * (1 - ise)) as n_false_pos
          |                    from ht) a""".stripMargin
@@ -2312,12 +2313,12 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |               ${bigint(s"sum(case when nm = $BloomK and ise = 0 then 1 else 0 end)")} as n_false_pos
          |        from hq group by m)
          |select ${bigint("r.m")} as m_bits,
-         |  ${roundAway(d)("r.m / cast(ne.n_eval as double)", 2)} as bits_per_key,
+         |  ${roundAway("r.m / cast(ne.n_eval as double)", 2)} as bits_per_key,
          |  ns.n_bits_set,
-         |  ${roundAway(d)("ns.n_bits_set / cast(r.m as double)", 6)} as fill_ratio,
-         |  ${roundAway(d)(s"pow(ns.n_bits_set / cast(r.m as double), $BloomK)", 6)} as fpr_expected,
+         |  ${roundAway("ns.n_bits_set / cast(r.m as double)", 6)} as fill_ratio,
+         |  ${roundAway(s"pow(ns.n_bits_set / cast(r.m as double), $BloomK)", 6)} as fpr_expected,
          |  r.n_probes, r.n_members, r.n_false_pos,
-         |  ${roundAway(d)("r.n_false_pos / cast(r.n_probes - r.n_members as double)", 6)} as fpr_measured
+         |  ${roundAway("r.n_false_pos / cast(r.n_probes - r.n_members as double)", 6)} as fpr_measured
          |from res r join ns on ns.m = r.m cross join ne""".stripMargin
         case None =>
           s"""with $wordCtes,
@@ -2343,12 +2344,12 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |               ${bigint(s"sum(case when nm = $BloomK and ise = 0 then 1 else 0 end)")} as n_false_pos
          |        from hq group by m)
          |select ${bigint("r.m")} as m_bits,
-         |  ${roundAway(d)("r.m / cast(ne.n_eval as double)", 2)} as bits_per_key,
+         |  ${roundAway("r.m / cast(ne.n_eval as double)", 2)} as bits_per_key,
          |  ns.n_bits_set,
-         |  ${roundAway(d)("ns.n_bits_set / cast(r.m as double)", 6)} as fill_ratio,
-         |  ${roundAway(d)(s"pow(ns.n_bits_set / cast(r.m as double), $BloomK)", 6)} as fpr_expected,
+         |  ${roundAway("ns.n_bits_set / cast(r.m as double)", 6)} as fill_ratio,
+         |  ${roundAway(s"pow(ns.n_bits_set / cast(r.m as double), $BloomK)", 6)} as fpr_expected,
          |  r.n_probes, r.n_members, r.n_false_pos,
-         |  ${roundAway(d)("r.n_false_pos / cast(r.n_probes - r.n_members as double)", 6)} as fpr_measured
+         |  ${roundAway("r.n_false_pos / cast(r.n_probes - r.n_members as double)", 6)} as fpr_measured
          |from res r join ns on ns.m = r.m cross join ne""".stripMargin
       }
   }
@@ -2368,7 +2369,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
 
   def textJsDivergenceSql(wfView: Option[String]): String = {
       def lg(x: String): String =
-        bigint(roundAway(d)(s"ln(cast($x as double)) * 1000000000", 0))
+        bigint(roundAway(s"ln(cast($x as double)) * 1000000000", 0))
       val wfHead = wfView match {
         case Some(v) => s"wf as (select /*+ REPARTITION(wd) */ source, wd, k from $v)"
         case None => s"""$wordCtes,
@@ -2394,14 +2395,14 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |agg as (select s1, s2, n1, n2, ${bigint("sum(tp)")} as sp, ${bigint("sum(tq)")} as sq
          |        from tm group by s1, s2, n1, n2)
          |select s1 as source_a, s2 as source_b, n1 as n_tokens_a, n2 as n_tokens_b,
-         |  ${roundAway(d)("(cast(sp as double) / n1 + cast(sq as double) / n2) / cast(2 as double) / 1000000000", 6)} as js_nats,
-         |  ${roundAway(d)("(cast(sp as double) / n1 + cast(sq as double) / n2) / cast(2 as double) / 1000000000 / ln(cast(2 as double))", 4)} as js_normalized
+         |  ${roundAway("(cast(sp as double) / n1 + cast(sq as double) / n2) / cast(2 as double) / 1000000000", 6)} as js_nats,
+         |  ${roundAway("(cast(sp as double) / n1 + cast(sq as double) / n2) / cast(2 as double) / 1000000000 / ln(cast(2 as double))", 4)} as js_normalized
          |from agg""".stripMargin
   }
 
   def textKlDivergenceSql(wfView: Option[String]): String = {
       def lg(x: String): String =
-        bigint(roundAway(d)(s"ln(cast($x as double)) * 1000000000", 0))
+        bigint(roundAway(s"ln(cast($x as double)) * 1000000000", 0))
       val wfHead = wfView match {
         case Some(v) => s"wf as (select /*+ REPARTITION(wd) */ source, wd, k from $v)"
         case None => s"""$wordCtes,
@@ -2419,15 +2420,15 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |                  join cw on cw.wd = wf.wd cross join nt),
          |agg as (select source, ${bigint("sum(t9)")} as s9 from terms group by source)
          |select a.source, ns.n_src as n_tokens, ns.n_types,
-         |  ${roundAway(d)("cast(a.s9 as double) / ns.n_src / 1000000000", 6)} as kl_nats,
-         |  ${roundAway(d)("exp(cast(a.s9 as double) / ns.n_src / 1000000000)", 4)} as perplexity_ratio
+         |  ${roundAway("cast(a.s9 as double) / ns.n_src / 1000000000", 6)} as kl_nats,
+         |  ${roundAway("exp(cast(a.s9 as double) / ns.n_src / 1000000000)", 4)} as perplexity_ratio
          |from agg a join ns on ns.source = a.source""".stripMargin
   }
 
   def textKeywordsLlrSql(wfView: Option[String]): String = {
       // x·round(ln(x)·1e9) with the x = 0 → 0 convention
       def xlnx(x: String): String =
-        s"(case when ($x) > 0 then ($x) * ${bigint(roundAway(d)(s"ln(cast($x as double)) * 1000000000", 0))} else 0 end)"
+        s"(case when ($x) > 0 then ($x) * ${bigint(roundAway(s"ln(cast($x as double)) * 1000000000", 0))} else 0 end)"
       val wfHead = wfView match {
         case Some(v) => s"wf as (select /*+ REPARTITION(wd) */ source, wd, k from $v)"
         case None => s"""$wordCtes,
@@ -2455,7 +2456,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |         row_number() over (partition by source order by t9 desc, wd) as rn
          |       from llr)
          |select source, wd as word, ${bigint("k")} as n_in_source,
-         |  ${roundAway(d)("2.0 * t9 / 1000000000", 4)} as llr, ${bigint("rn")} as rank
+         |  ${roundAway("2.0 * t9 / 1000000000", 4)} as llr, ${bigint("rn")} as rank
          |from rk where rn <= 5""".stripMargin
   }
 
@@ -2473,11 +2474,11 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |               ${bigint("sum(k * (k - 1))")} as rep from wf group by source)
          |select source, n as n_tokens, n_types,
          |  case when n > 1
-         |       then ${roundAway(d)("cast(rep as double) / cast(n * (n - 1) as double)", 6)} end as simpson_lambda,
+         |       then ${roundAway("cast(rep as double) / cast(n * (n - 1) as double)", 6)} end as simpson_lambda,
          |  case when n > 1
-         |       then ${roundAway(d)("cast(1 as double) - cast(rep as double) / cast(n * (n - 1) as double)", 6)} end as diversity,
+         |       then ${roundAway("cast(1 as double) - cast(rep as double) / cast(n * (n - 1) as double)", 6)} end as diversity,
          |  case when rep > 0
-         |       then ${roundAway(d)("cast(n * (n - 1) as double) / cast(rep as double)", 2)} end as eff_vocab
+         |       then ${roundAway("cast(n * (n - 1) as double) / cast(rep as double)", 2)} end as eff_vocab
          |from agg""".stripMargin
   }
 
@@ -2748,7 +2749,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
       case Some(v) => s"e2 as (select src, dst from $v)"
       case None    => "e2 as (select src, dst from knn union select dst, src from knn)"
     }
-    def q6(x: String) = bigint(roundAway(d)(x, 0))
+    def q6(x: String) = bigint(roundAway(x, 0))
     // r12: each hop references its predecessor exactly ONCE — the
     // vec_topk_graph identity-edge carry (e2i = real edges tagged 0 ∪
     // per-node identity edges tagged 1; identity rows pass a state row
@@ -2793,7 +2794,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |         ${bigint(s"sum(case when dv = 2 then ${q6("cast(sv as double) / sw * 1000000")} else ${q6("cast(sv as double) / sw * (1000000 + coalesce(del2, 0))")} end)")} as del
        |       from spd group by qs, v, dv)
        |select ${bigint("node")} as node, ${bigint("count(*)")} as n_source_terms,
-       |  ${roundAway(d)("sum(del) / cast(1000000 as double)", 4)} as betweenness
+       |  ${roundAway("sum(del) / cast(1000000 as double)", 4)} as betweenness
        |from dd
        |group by node""".stripMargin
   }
@@ -2820,7 +2821,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |snd as (select e.v, ${bigint("sum(dw.dg)")} as s from ed2 e join deg dw on dw.v = e.w group by e.v)
        |select ${bigint("dv.dg")} as degree, ${bigint("count(*)")} as n_nodes,
        |  ${bigint("sum(snd.s)")} as sum_neighbor_degree,
-       |  ${roundAway(d)("cast(sum(snd.s) as double) / (dv.dg * count(*))", 4)} as mean_neighbor_degree
+       |  ${roundAway("cast(sum(snd.s) as double) / (dv.dg * count(*))", 4)} as mean_neighbor_degree
        |from snd join deg dv on dv.v = snd.v
        |group by dv.dg""".stripMargin
   }
@@ -2844,7 +2845,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
       case Some(v) => s"e2 as (select src, dst from $v)"
       case None    => "e2 as (select src, dst from knn union select dst, src from knn)"
     }
-    def q6(x: String) = bigint(roundAway(d)(x, 0))
+    def q6(x: String) = bigint(roundAway(x, 0))
     // r12: single-reference hops via the identity-edge carry (see
     // graphBetweennessSql) — the union-all form re-inlined the BFS
     // 2^k-fold under Catalyst. Rows identical: triples are unique in
@@ -2866,7 +2867,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |vt as (select qs, node, ${bigint("min(step)")} as dist from r3 group by qs, node)
        |select ${bigint("node")} as node, ${bigint("count(*)")} as n_sources,
        |  ${bigint("min(dist)")} as min_dist,
-       |  ${roundAway(d)(s"sum(${q6("1000000.0 / dist")}) / cast(1000000 as double)", 4)} as harmonic
+       |  ${roundAway(s"sum(${q6("1000000.0 / dist")}) / cast(1000000 as double)", 4)} as harmonic
        |from vt where dist > 0 group by node""".stripMargin
   }
 
@@ -2999,7 +3000,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |         ${d.idiv("c.n_boiler * 100", "c.n_sh")} as pct
        |       from dc c join documents d on d.doc_id = c.doc_id),
        |ag as (select source, ${bigint("count(*)")} as n_docs,
-       |         ${bigint(s"sum(${bigint(roundAway(d)("cast(n_boiler as double) / n_sh * 1000000", 0))})")} as ssh
+       |         ${bigint(s"sum(${bigint(roundAway("cast(n_boiler as double) / n_sh * 1000000", 0))})")} as ssh
        |       from dp group by source),
        |pc as (select source, pct, ${bigint("count(*)")} as m from dp group by source, pct),
        |p90 as (select source, ${bigint("min(pct)")} as p90_pct from (
@@ -3010,7 +3011,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |        where cm * 10 >= n_docs * 9 group by source),
        |bv as (select ${bigint("count(*)")} as n_boiler_vocab from bl)
        |select a.source, a.n_docs,
-       |  ${roundAway(d)("cast(a.ssh as double) / 1000000 / a.n_docs", 4)} as mean_boiler_share,
+       |  ${roundAway("cast(a.ssh as double) / 1000000 / a.n_docs", 4)} as mean_boiler_share,
        |  p.p90_pct as p90_boiler_pct,
        |  v.n_boiler_vocab
        |from ag a join p90 p on p.source = a.source cross join bv v""".stripMargin
@@ -3536,7 +3537,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // (the quality projection reads the SAME joined row).
     s"""$ctes,
        |mem as (select l.lbl as comp, l.id, q.source,
-       |          ${bigint(roundAway(d)("round((case when q.n_words >= 20 and q.n_words <= 80 then 1.0 else 0.5 end) * (q.n_alpha / q.n_chars), 4) * 10000", 0))} as qi
+       |          ${bigint(roundAway("round((case when q.n_words >= 20 and q.n_words <= 80 then 1.0 else 0.5 end) * (q.n_alpha / q.n_chars), 4) * 10000", 0))} as qi
        |        from $last l join (
        |          select doc_id, source, length(text) as n_chars, ${d.arrLen(splitWs("text"))} as n_words,
        |                 length(${regexReplaceAll("text", "[^a-zA-Z]", "")}) as n_alpha
@@ -3554,10 +3555,10 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |select source, n_members,
        |  n_min as kept_minid,
        |  n_best as kept_bestq,
-       |  case when n_min > 0 then ${roundAway(d)("cast(sq_min as double) / n_min / 10000", 4)} end as mean_q_kept_minid,
-       |  case when n_best > 0 then ${roundAway(d)("cast(sq_best as double) / n_best / 10000", 4)} end as mean_q_kept_bestq,
+       |  case when n_min > 0 then ${roundAway("cast(sq_min as double) / n_min / 10000", 4)} end as mean_q_kept_minid,
+       |  case when n_best > 0 then ${roundAway("cast(sq_best as double) / n_best / 10000", 4)} end as mean_q_kept_bestq,
        |  case when n_members > n_min
-       |       then ${roundAway(d)("cast(sq - sq_min as double) / (n_members - n_min) / 10000", 4)} end as mean_q_dropped_minid
+       |       then ${roundAway("cast(sq - sq_min as double) / (n_members - n_min) / 10000", 4)} end as mean_q_dropped_minid
        |from ag""".stripMargin
   }
 
@@ -3598,8 +3599,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |        from ag)
        |select a.s1 as source_a, a.s2 as source_b, a.n_pairs,
        |  a.n_docs_a as n_docs_involved_a, a.n_docs_b as n_docs_involved_b,
-       |  ${roundAway(d)("cast(a.sh as double) / a.n_pairs", 4)} as mean_hamming,
-       |  ${roundAway(d)("cast(t.nx as double) / t.np", 4)} as cross_source_share
+       |  ${roundAway("cast(a.sh as double) / a.n_pairs", 4)} as mean_hamming,
+       |  ${roundAway("cast(t.nx as double) / t.np", 4)} as cross_source_share
        |from ag a cross join tot t""".stripMargin
   }
 
@@ -3695,9 +3696,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |       from ob a join ob b on a.ok = b.ok and a.br < b.br
        |       group by a.br, b.br)
        |select brand_a, brand_b, ${bigint("c")} as n_orders,
-       |  ${roundAway(d)("c / cast(nt.total as double)", 5)} as support,
-       |  ${roundAway(d)("c / cast(x.cb as double)", 4)} as confidence,
-       |  ${roundAway(d)("(c * cast(nt.total as double)) / (cast(x.cb as double) * cast(y.cb as double))", 4)} as lift
+       |  ${roundAway("c / cast(nt.total as double)", 5)} as support,
+       |  ${roundAway("c / cast(x.cb as double)", 4)} as confidence,
+       |  ${roundAway("(c * cast(nt.total as double)) / (cast(x.cb as double) * cast(y.cb as double))", 4)} as lift
        |from pr join bs x on x.br = pr.brand_a
        |        join bs y on y.br = pr.brand_b
        |        cross join nt
@@ -3871,7 +3872,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
       s"when f.ix = $i then ${fhQueryVec(i)}").mkString(" ")} else 0 end)"
     s"""with $wordCtes,
        |$bm25Ctes,
-       |bs as (select dt.doc_id, ${roundAway(d)(bm25Score, 6)} as bm25
+       |bs as (select dt.doc_id, ${roundAway(bm25Score, 6)} as bm25
        |       from dt cross join st where dt.tf1 + dt.tf2 + dt.tf3 > 0),
        |fh0 as (select doc_id, ${prfMod(d)(FhDim, "'fh'", "wd")} as ix,
        |          case when ${prfMod(d)(2, "'fhs'", "wd")} = 0 then 1 else -1 end as sg
@@ -3880,7 +3881,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |dn as (select doc_id, ${bigint("sum(dv * dv)")} as nrm2 from fh group by doc_id),
        |qd as (select f.doc_id, ${bigint(s"sum(f.dv * $qCase)")} as qdot from fh f group by f.doc_id)
        |select b.doc_id, b.bm25,
-       |  ${roundAway(d)(s"q.qdot / (sqrt(cast(n.nrm2 as double)) * cast($sqrtQn2 as double))", 6)} as csim
+       |  ${roundAway(s"q.qdot / (sqrt(cast(n.nrm2 as double)) * cast($sqrtQn2 as double))", 6)} as csim
        |from bs b join dn n on n.doc_id = b.doc_id join qd q on q.doc_id = b.doc_id""".stripMargin
   }
 
@@ -3940,7 +3941,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |$rrfRankCtes
        |select ${bigint("doc_id")} as doc_id, ${bigint("rk")} as fused_rank,
        |  ${bigint("rl")} as lex_rank, ${bigint("rs")} as sem_rank,
-       |  ${roundAway(d)("fscore", 6)} as rrf_score, bm25, csim as cos_sim
+       |  ${roundAway("fscore", 6)} as rrf_score, bm25, csim as cos_sim
        |from fin where rk <= 10""".stripMargin
   }
 
@@ -3975,7 +3976,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |         ${bigint("row_number() over (order by csim desc, doc_id)")} as rn1
        |       from cand),
        |s30 as (select doc_id, rn1,
-       |          ${roundAway(d)("csim * cast(0.7 as double) + (bm25 / (abs(bm25) + 1)) * cast(0.3 as double)", 6)} as ce
+       |          ${roundAway("csim * cast(0.7 as double) + (bm25 / (abs(bm25) + 1)) * cast(0.3 as double)", 6)} as ce
        |        from sl where rn1 <= 30),
        |r2 as (select doc_id, rn1, ce,
        |         ${bigint("row_number() over (order by ce desc, doc_id)")} as rn2
@@ -3991,9 +3992,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |ov as (select k.k, ${bigint("sum(case when r.rn2 <= k.k then 1 else 0 end)")} as ovl
        |       from r2 r join ks k on r.rn1 <= k.k group by k.k)
        |select ${bigint("a.k")} as k, a.n_pairs, a.conc as concordant, a.disc as discordant,
-       |  ${roundAway(d)("(a.conc - a.disc) / cast(a.n_pairs as double)", 4)} as kendall_tau,
+       |  ${roundAway("(a.conc - a.disc) / cast(a.n_pairs as double)", 4)} as kendall_tau,
        |  o.ovl as overlap_at_k,
-       |  ${roundAway(d)("o.ovl / cast(a.k as double)", 4)} as overlap_share
+       |  ${roundAway("o.ovl / cast(a.k as double)", 4)} as overlap_share
        |from ag a join ov o on o.k = a.k""".stripMargin
   }
 
@@ -4085,17 +4086,17 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |select 'minhash_8x2' as tier, d.n_docs as n_sample_docs, p.n_pos as n_truth_pairs,
        |  m.n_cand as n_candidates, m.tp as tp, ${bigint("m.n_cand - m.tp")} as fp,
        |  ${bigint("p.n_pos - m.tp")} as fn,
-       |  ${roundAway(d)("case when m.n_cand > 0 then m.tp / cast(m.n_cand as double) else cast(0 as double) end", 4)} as precision,
-       |  ${roundAway(d)("case when p.n_pos > 0 then m.tp / cast(p.n_pos as double) else cast(0 as double) end", 4)} as recall,
-       |  ${roundAway(d)("case when m.n_cand + p.n_pos > 0 then 2 * m.tp / cast(m.n_cand + p.n_pos as double) else cast(0 as double) end", 4)} as f1
+       |  ${roundAway("case when m.n_cand > 0 then m.tp / cast(m.n_cand as double) else cast(0 as double) end", 4)} as precision,
+       |  ${roundAway("case when p.n_pos > 0 then m.tp / cast(p.n_pos as double) else cast(0 as double) end", 4)} as recall,
+       |  ${roundAway("case when m.n_cand + p.n_pos > 0 then 2 * m.tp / cast(m.n_cand + p.n_pos as double) else cast(0 as double) end", 4)} as f1
        |from mm m cross join np p cross join nsd d
        |union all
        |select 'simhash_5x12_h4', d.n_docs, p.n_pos,
        |  s.n_cand, s.tp, ${bigint("s.n_cand - s.tp")},
        |  ${bigint("p.n_pos - s.tp")},
-       |  ${roundAway(d)("case when s.n_cand > 0 then s.tp / cast(s.n_cand as double) else cast(0 as double) end", 4)},
-       |  ${roundAway(d)("case when p.n_pos > 0 then s.tp / cast(p.n_pos as double) else cast(0 as double) end", 4)},
-       |  ${roundAway(d)("case when s.n_cand + p.n_pos > 0 then 2 * s.tp / cast(s.n_cand + p.n_pos as double) else cast(0 as double) end", 4)}
+       |  ${roundAway("case when s.n_cand > 0 then s.tp / cast(s.n_cand as double) else cast(0 as double) end", 4)},
+       |  ${roundAway("case when p.n_pos > 0 then s.tp / cast(p.n_pos as double) else cast(0 as double) end", 4)},
+       |  ${roundAway("case when s.n_cand + p.n_pos > 0 then 2 * s.tp / cast(s.n_cand + p.n_pos as double) else cast(0 as double) end", 4)}
        |from sm s cross join np p cross join nsd d""".stripMargin
   }
 
@@ -4221,8 +4222,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |        from wl left join enc e on e.wd = wl.wd group by lang),
        |en as (select cast(n_tokens as double) / n_words as fen from per where lang = 'en')
        |select lang, n_words, n_tokens, n_oov_words,
-       |  ${roundAway(d)("cast(n_tokens as double) / n_words", 4)} as fertility,
-       |  ${roundAway(d)("(cast(n_tokens as double) / n_words) / en.fen", 4)} as fertility_vs_en
+       |  ${roundAway("cast(n_tokens as double) / n_words", 4)} as fertility,
+       |  ${roundAway("(cast(n_tokens as double) / n_words) / en.fen", 4)} as fertility_vs_en
        |from per cross join en""".stripMargin
   }
 
@@ -4421,9 +4422,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
       def rung(w: Int) =
         s"""select ${bigint(w.toString)} as timeout_s,
            |  ${bigint(nSess(w))} as n_sessions,
-           |  ${roundAway(d)(s"max(u.n_events) / cast(${nSess(w)} as double)", 4)} as events_per_session,
+           |  ${roundAway(s"max(u.n_events) / cast(${nSess(w)} as double)", 4)} as events_per_session,
            |  ${bigint(actDur(w))} as active_duration_s,
-           |  ${roundAway(d)(s"${actDur(w)} / cast(${nSess(w)} as double)", 2)} as mean_session_dur_s
+           |  ${roundAway(s"${actDur(w)} / cast(${nSess(w)} as double)", 2)} as mean_session_dur_s
            |from g cross join u""".stripMargin
       s"""with e as (select user_id, event_id, ${evSec("ts")} as sec, ts from events),
          |m as (select user_id, sec - lag(sec) over (partition by user_id order by ts, event_id) as gap
@@ -4474,10 +4475,10 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |         from cen c join cut k on c.gb >= k.cutg group by k.r, k.cutg, c.source),
          |rt as (select r, ${bigint("sum(ntk)")} as rtok from kept group by r)
          |select ${bigint("k.r")} as budget_pct,
-         |  ${roundAway(d)("k.cutg / cast(100 as double)", 2)} as quality_cutoff,
+         |  ${roundAway("k.cutg / cast(100 as double)", 2)} as quality_cutoff,
          |  k.source, k.nd as n_docs_kept, k.ntk as n_tokens_kept,
-         |  ${roundAway(d)("k.ntk / cast(rt.rtok as double)", 4)} as source_share,
-         |  ${roundAway(d)("rt.rtok / cast(t.t as double)", 4)} as rung_token_share
+         |  ${roundAway("k.ntk / cast(rt.rtok as double)", 4)} as source_share,
+         |  ${roundAway("rt.rtok / cast(t.t as double)", 4)} as rung_token_share
          |from kept k join rt on rt.r = k.r cross join tot t""".stripMargin
     },
 
@@ -4552,7 +4553,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |  ${bigint("coalesce(c.n_langs, 0)")} as n_langs,
          |  coalesce(j.majority_lang, 'und') as majority_lang,
          |  case when c.n_classified > 0
-         |       then ${roundAway(d)("cast(j.maj_cnt as double) / c.n_classified", 4)} end as majority_share,
+         |       then ${roundAway("cast(j.maj_cnt as double) / c.n_classified", 4)} end as majority_share,
          |  ${bigint("coalesce(c.n_switches, 0)")} as n_switches
          |from base b left join cls c on c.doc_id = b.doc_id
          |left join maj j on j.doc_id = b.doc_id""".stripMargin
@@ -4918,16 +4919,16 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     "vec_label_separation" renders
       s"""with $nvCtes,
          |lab as (select * from ${d.explodeFrom("nn", "n", "pos", "val", Seq("label"))} _lb),
-         |ctq as (select label, pos, ${roundAway(d)("avg(val)", 6)} as cv from lab group by label, pos),
+         |ctq as (select label, pos, ${roundAway("avg(val)", 6)} as cv from lab group by label, pos),
          |cta as (select label, ${d.arrAggOrdered("cv", "pos")} as c from ctq group by label),
          |cn as (select label, c, sqrt(${d.dot("c", "c")}) as cnrm from cta),
-         |w as (select nn.label, ${roundAway(d)(s"${d.dot("nn.n", "cn.c")} / cn.cnrm", 6)} as sim
+         |w as (select nn.label, ${roundAway(s"${d.dot("nn.n", "cn.c")} / cn.cnrm", 6)} as sim
          |      from nn join cn on cn.label = nn.label),
          |ws as (select label, ${bigint("count(*)")} as n_members,
-         |         ${roundAway(d)("cast(sum(cast(sim as decimal(18, 6))) as double) / count(*)", 4)} as within_sim
+         |         ${roundAway("cast(sum(cast(sim as decimal(18, 6))) as double) / count(*)", 4)} as within_sim
          |       from w group by label),
          |bc as (select a.label as la, b.label as lb,
-         |         ${roundAway(d)(s"${d.dot("a.c", "b.c")} / (a.cnrm * b.cnrm)", 6)} as bsim
+         |         ${roundAway(s"${d.dot("a.c", "b.c")} / (a.cnrm * b.cnrm)", 6)} as bsim
          |       from cn a join cn b on a.label <> b.label),
          |bn as (select la as label, -(${d.fieldOf("mx", "nl")}) as nearest_label, ${d.fieldOf("mx", "s")} as between_sim
          |       from (select la, max(${d.structLit2("s", "bsim", "nl", "-lb")}) as mx from bc group by la) _bn)
@@ -5043,7 +5044,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     "attack_gaussian" renders
       s"""with $nvCtes, $exnCte
          |select ${bigint("id")} as vec_id, ${bigint("pos")} as pos,
-         |  ${roundAway(d)(s"val + 0.1 * ${prfGauss(d)("'ga'", "id", "pos")}", 5)} as noisy_val
+         |  ${roundAway(s"val + 0.1 * ${prfGauss(d)("'ga'", "id", "pos")}", 5)} as noisy_val
          |from exn where ${prfMod(d)(10, "'gpick'", "id")} < 3""".stripMargin,
 
     "attack_mean" renders
@@ -5469,8 +5470,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |  ${bigint("sum(case when j.gap <= ws.w then 1 else 0 end)")} as n_pairs,
          |  ${bigint("count(distinct case when j.gap <= ws.w then j.purchase_id end)")} as n_credited_purchases,
          |  ${bigint("count(distinct case when j.gap <= ws.w then j.click_id end)")} as n_crediting_clicks,
-         |  ${roundAway(d)("count(distinct case when j.gap <= ws.w then j.purchase_id end) / cast(max(tp.n_purch) as double)", 4)} as purchase_coverage,
-         |  ${roundAway(d)("sum(case when j.gap <= ws.w then 1 else 0 end) / cast(count(distinct case when j.gap <= ws.w then j.purchase_id end) as double)", 4)} as pairs_per_purchase
+         |  ${roundAway("count(distinct case when j.gap <= ws.w then j.purchase_id end) / cast(max(tp.n_purch) as double)", 4)} as purchase_coverage,
+         |  ${roundAway("sum(case when j.gap <= ws.w then 1 else 0 end) / cast(count(distinct case when j.gap <= ws.w then j.purchase_id end) as double)", 4)} as pairs_per_purchase
          |from ws cross join tp cross join j
          |group by ws.w""".stripMargin,
 
@@ -5547,12 +5548,12 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |ks as (select max(abs(cdf.co - cds.cs)) as dmax
          |       from cdf join cds on cds.b = cdf.b),
          |mo as (select ${bigint("count(*)")} as n_cells,
-         |         sum(cast(${roundAway(d)("ov", 6)} as decimal(16,6))) as so,
-         |         sum(cast(${roundAway(d)("sv", 6)} as decimal(16,6))) as ss
+         |         sum(cast(${roundAway("ov", 6)} as decimal(16,6))) as so,
+         |         sum(cast(${roundAway("sv", 6)} as decimal(16,6))) as ss
          |       from pair)
          |select mo.n_cells,
-         |  ${roundAway(d)("cast(ks.dmax as double) / mo.n_cells", 4)} as ks_stat,
-         |  ${roundAway(d)("cast(mo.ss - mo.so as double) / mo.n_cells", 6)} as mean_shift
+         |  ${roundAway("cast(ks.dmax as double) / mo.n_cells", 4)} as ks_stat,
+         |  ${roundAway("cast(mo.ss - mo.so as double) / mo.n_cells", 6)} as mean_shift
          |from ks cross join mo""".stripMargin,
 
     // carrier backup: snapshot of the carriers' PRE-embed cells — what
@@ -5791,16 +5792,16 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |       where f.d0 + ks.k <= mxd.md),
          |rk as (select k, ${bigint("count(*)")} as n_eligible, ${bigint("sum(ret)")} as n_retained
          |       from el group by k),
-         |lg as (select k, ${bigint(roundAway(d)("ln(n_retained / cast(n_eligible as double)) * 1000000", 0))} as y
+         |lg as (select k, ${bigint(roundAway("ln(n_retained / cast(n_eligible as double)) * 1000000", 0))} as y
          |       from rk where n_retained > 0),
          |mo as (select ${bigint("count(*)")} as n, ${bigint("sum(k)")} as sx, ${bigint("sum(y)")} as sy,
          |              ${bigint("sum(k * y)")} as sxy, ${bigint("sum(k * k)")} as sxx
          |       from lg)
          |select ${bigint("rk.k")} as k, rk.n_eligible, rk.n_retained,
-         |  ${roundAway(d)("rk.n_retained / cast(rk.n_eligible as double)", 4)} as retention,
-         |  ${roundAway(d)("cast(mo.n * mo.sxy - mo.sx * mo.sy as double) / cast(mo.n * mo.sxx - mo.sx * mo.sx as double) / 1000000.0", 6)} as decay_slope,
+         |  ${roundAway("rk.n_retained / cast(rk.n_eligible as double)", 4)} as retention,
+         |  ${roundAway("cast(mo.n * mo.sxy - mo.sx * mo.sy as double) / cast(mo.n * mo.sxx - mo.sx * mo.sx as double) / 1000000.0", 6)} as decay_slope,
          |  case when mo.n * mo.sxy - mo.sx * mo.sy < 0
-         |       then ${roundAway(d)("-693147.18 * cast(mo.n * mo.sxx - mo.sx * mo.sx as double) / cast(mo.n * mo.sxy - mo.sx * mo.sy as double)", 4)}
+         |       then ${roundAway("-693147.18 * cast(mo.n * mo.sxx - mo.sx * mo.sx as double) / cast(mo.n * mo.sxy - mo.sx * mo.sy as double)", 4)}
          |       else cast(null as double) end as halflife_days
          |from rk cross join mo""".stripMargin,
 
@@ -5921,12 +5922,12 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |         ${bigint("sum(case when c = 0 then 1 else 0 end)")} as na
          |       from alln)
          |select n as n_nodes, ${bigint(K.toString)} as k,
-         |  ${roundAway(d)(mean, 4)} as mean_k_occurrence,
+         |  ${roundAway(mean, 4)} as mean_k_occurrence,
          |  mx as max_k_occurrence,
-         |  ${roundAway(d)(s"$m3 / ($vr * sqrt($vr))", 4)} as skewness_sk,
+         |  ${roundAway(s"$m3 / ($vr * sqrt($vr))", 4)} as skewness_sk,
          |  nh as n_hubs, na as n_antihubs,
-         |  ${roundAway(d)("cast(he as double) / s1", 4)} as hub_in_edge_share,
-         |  ${roundAway(d)("cast(na as double) / n", 4)} as antihub_share
+         |  ${roundAway("cast(he as double) / s1", 4)} as hub_in_edge_share,
+         |  ${roundAway("cast(na as double) / n", 4)} as antihub_share
          |from mo""".stripMargin
     },
 
@@ -6214,7 +6215,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |        from days dd join du u on u.day between dd.day - 6 and dd.day
          |        group by dd.day)
          |select ${bigint("dau.day")} as day, dau.dau, wau.wau,
-         |  ${roundAway(d)("dau.dau / cast(wau.wau as double)", 4)} as stickiness
+         |  ${roundAway("dau.dau / cast(wau.wau as double)", 4)} as stickiness
          |from dau join wau on wau.day = dau.day""".stripMargin
     },
 
@@ -6323,7 +6324,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |nn2 as (select ${bigint("count(*)")} as n_nodes from dg),
          |ne as (select ${bigint("count(*)")} as n_edges from und)
          |select nn2.n_nodes, ne.n_edges, wc.n_wedges, tri.n_tri as n_triangles,
-         |  ${roundAway(d)("3 * tri.n_tri / cast(wc.n_wedges as double)", 6)} as transitivity
+         |  ${roundAway("3 * tri.n_tri / cast(wc.n_wedges as double)", 6)} as transitivity
          |from nn2 cross join ne cross join wc cross join tri""".stripMargin
     },
 
@@ -6349,7 +6350,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |select ${bigint("cnp.a")} as vec_a, ${bigint("cnp.b")} as vec_b,
          |  ${bigint("cnp.nc")} as n_common,
          |  ${bigint("da.deg")} as deg_a, ${bigint("db.deg")} as deg_b,
-         |  ${roundAway(d)("cnp.nc / cast(da.deg + db.deg - cnp.nc as double)", 4)} as jaccard
+         |  ${roundAway("cnp.nc / cast(da.deg + db.deg - cnp.nc as double)", 4)} as jaccard
          |from cnp join dg da on da.u = cnp.a join dg db on db.u = cnp.b
          |where cnp.nc >= 2
          |  and not exists (select 1 from und e where e.a = cnp.a and e.b = cnp.b)""".stripMargin
@@ -6378,8 +6379,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |         cast(s2 as double) / nh - (cast(s as double) / nh) * (cast(s as double) / nh) as vr
          |       from roll where nh >= 12)
          |select event_type, ${bigint("hr")} as hour_epoch, ${bigint("c")} as n,
-         |  ${roundAway(d)("mu", 4)} as mu,
-         |  case when vr > 0 then ${roundAway(d)("(c - mu) / sqrt(vr)", 4)} end as z,
+         |  ${roundAway("mu", 4)} as mu,
+         |  case when vr > 0 then ${roundAway("(c - mu) / sqrt(vr)", 4)} end as z,
          |  ${bigint("case when vr > 0 and abs(c - mu) >= 3 * sqrt(vr) then 1 else 0 end")} as is_anomaly
          |from an""".stripMargin
     },
@@ -6418,7 +6419,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     "q_corr_subquery" renders
       s"""select ${bigint("p_partkey")} as partkey, p_brand, price, brand_avg from
          |  (select p_partkey, p_brand, cast(p_retailprice as double) as price,
-         |     (select ${roundAway(d)("cast(sum(cast(p2.p_retailprice as decimal(18,2))) as double) / count(*)", 2)}
+         |     (select ${roundAway("cast(sum(cast(p2.p_retailprice as decimal(18,2))) as double) / count(*)", 2)}
          |      from part p2 where p2.p_brand = p.p_brand) as brand_avg
          |   from part p) _t
          |where price > brand_avg""".stripMargin,
@@ -6555,7 +6556,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |t as (select src, dst, count(*) as c from s where dst is not null group by src, dst),
          |tt as (select src, sum(c) as n from t group by src)
          |select t.src, t.dst, ${bigint("t.c")} as n_transitions,
-         |  ${roundAway(d)("t.c / cast(tt.n as double)", 4)} as p
+         |  ${roundAway("t.c / cast(tt.n as double)", 4)} as p
          |from t join tt on tt.src = t.src""".stripMargin,
 
     // BM25 keyword retrieval scoring — the lexical-search half of
@@ -6575,7 +6576,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |$bm25Ctes
          |select ${bigint("dt.doc_id")} as doc_id,
          |  ${bigint("dt.tf1")} as tf_dup, ${bigint("dt.tf2")} as tf_spark, ${bigint("dt.tf3")} as tf_hash,
-         |  ${roundAway(d)(bm25Score, 4)} as bm25
+         |  ${roundAway(bm25Score, 4)} as bm25
          |from dt cross join st
          |where dt.tf1 + dt.tf2 + dt.tf3 > 0""".stripMargin,
 
@@ -6692,7 +6693,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |          group by a.doc_id, b.doc_id)
          |select ${bigint("p.da")} as da, ${bigint("p.db")} as db, p.n_shared,
          |  p.np_a, p.np_b,
-         |  ${roundAway(d)("p.n_shared / cast(least(p.np_a, p.np_b) as double)", 4)} as containment
+         |  ${roundAway("p.n_shared / cast(least(p.np_a, p.np_b) as double)", 4)} as containment
          |from pairs p""".stripMargin
     },
 
@@ -6771,7 +6772,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |select ${bigint("b.cell")} as cell, ${bigint("b.n0")} as n_before,
          |  ${bigint("coalesce(af.n1, 0)")} as n_after,
          |  ${bigint("b.n0 - coalesce(af.n1, 0)")} as n_deleted,
-         |  ${roundAway(d)("(b.n0 - coalesce(af.n1, 0)) / cast(b.n0 as double)", 4)} as del_share
+         |  ${roundAway("(b.n0 - coalesce(af.n1, 0)) / cast(b.n0 as double)", 4)} as del_share
          |from b left join af on af.cell = b.cell""".stripMargin
     },
 
@@ -6795,8 +6796,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |za as (select ${d.arrAggOrdered("sv", "ord")} as arr from sq),
          |z as (select ${d.dot("arr", d.arrTransform("arr", "x", "cast(1 as double)"))} as z from za)
          |select sq.source, sq.n_docs, sq.n_tokens,
-         |  ${roundAway(d)("sq.sv / z.z", 6)} as mix_weight,
-         |  ${roundAway(d)("(sq.sv / z.z) * cast(1000000 as double) / cast(sq.n_tokens as double)", 4)} as epochs_at_1m_tokens
+         |  ${roundAway("sq.sv / z.z", 6)} as mix_weight,
+         |  ${roundAway("(sq.sv / z.z) * cast(1000000 as double) / cast(sq.n_tokens as double)", 4)} as epochs_at_1m_tokens
          |from sq cross join z""".stripMargin
     },
 
@@ -6833,7 +6834,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |        count(*) over (partition by user_id order by sec range between 3599 preceding and current row) as cn
          |      from e)
          |select ${bigint("user_id")} as user_id, ${bigint("event_id")} as event_id, ${bigint("sec")} as sec,
-         |  ${roundAway(d)("csum / cast(100 as double)", 2)} as rolling_hour_spend,
+         |  ${roundAway("csum / cast(100 as double)", 2)} as rolling_hour_spend,
          |  ${bigint("cn")} as n_purchases_in_hour
          |from r""".stripMargin,
 
@@ -6854,9 +6855,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |        ${bigint("sum(n * n)")} as syy
          |      from dc cross join b)
          |select ${bigint("m")} as n_days,
-         |  ${roundAway(d)("(m * sxy - sx * sy) / cast(m * sxx - sx * sx as double)", 6)} as slope_per_day,
-         |  ${roundAway(d)("(sy * sxx - sx * sxy) / cast(m * sxx - sx * sx as double)", 4)} as intercept,
-         |  ${roundAway(d)("(cast((m * sxy - sx * sy) * (m * sxy - sx * sy) as double)) / (cast(m * sxx - sx * sx as double) * cast(m * syy - sy * sy as double))", 6)} as r2
+         |  ${roundAway("(m * sxy - sx * sy) / cast(m * sxx - sx * sx as double)", 6)} as slope_per_day,
+         |  ${roundAway("(sy * sxx - sx * sxy) / cast(m * sxx - sx * sx as double)", 4)} as intercept,
+         |  ${roundAway("(cast((m * sxy - sx * sy) * (m * sxy - sx * sy) as double)) / (cast(m * sxx - sx * sx as double) * cast(m * syy - sy * sy as double))", 6)} as r2
          |from s""".stripMargin,
 
     // TPC-H Q6 forecasting-revenue-change: the canonical
@@ -6867,7 +6868,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // so the double comparison is unambiguous in both engines.
     "q6_forecast" renders
       s"""select
-         |  ${roundAway(d)("cast(sum(cast(l_extendedprice as decimal(18,4)) * cast(l_discount as decimal(18,4))) as double)", 2)} as revenue,
+         |  ${roundAway("cast(sum(cast(l_extendedprice as decimal(18,4)) * cast(l_discount as decimal(18,4))) as double)", 2)} as revenue,
          |  ${bigint("count(*)")} as n_items
          |from lineitem
          |where l_shipdate >= timestamp '1997-01-01 00:00:00'
@@ -7047,7 +7048,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |          ${bigint("sum(lat_days * c) over (partition by yr, mo)")} as s
          |        from lc)
          |select ${bigint("yr")} as yr, ${bigint("mo")} as mo, ${bigint("max(cnt)")} as n_lineitems,
-         |  ${roundAway(d)("max(s) / cast(max(cnt) as double)", 4)} as mean_days,
+         |  ${roundAway("max(s) / cast(max(cnt) as double)", 4)} as mean_days,
          |  ${bigint("min(case when cum >= cast(ceil(cnt * 0.5) as bigint) then lat_days end)")} as p50_days,
          |  ${bigint("min(case when cum >= cast(ceil(cnt * 0.9) as bigint) then lat_days end)")} as p90_days,
          |  ${bigint("max(lat_days)")} as max_days
@@ -7078,8 +7079,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |select ${bigint("len")} as seq_len, ${bigint("sum(n_docs)")} as n_docs,
          |  ${bigint("sum(n_tokens)")} as n_tokens, ${bigint("sum(n_seqs)")} as n_seqs,
          |  ${bigint("sum(n_boundary)")} as n_boundary_docs,
-         |  ${roundAway(d)("sum(n_tokens) / cast(sum(n_seqs) * len as double)", 4)} as fill_rate,
-         |  ${roundAway(d)("sum(n_boundary) / cast(sum(n_docs) as double)", 4)} as boundary_share
+         |  ${roundAway("sum(n_tokens) / cast(sum(n_seqs) * len as double)", 4)} as fill_rate,
+         |  ${roundAway("sum(n_boundary) / cast(sum(n_docs) as double)", 4)} as boundary_share
          |from per group by len""".stripMargin,
 
     // TPC-H Q18 (large-volume customers): the classic
@@ -7204,7 +7205,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |select ${bigint("lv.lvl")} as lvl, ${bigint("lv.mfmax")} as extra_probes,
          |  ${bigint("coalesce(nc.n_cand, 0)")} as n_cand,
          |  ${bigint("coalesce(ht.hits, 0)")} as hits,
-         |  ${roundAway(d)("coalesce(ht.hits, 0) / (cast(10 as double) * nq.n)", 4)} as recall10
+         |  ${roundAway("coalesce(ht.hits, 0) / (cast(10 as double) * nq.n)", 4)} as recall10
          |from lv cross join nq
          |  left join nc on nc.lvl = lv.lvl
          |  left join ht on ht.lvl = lv.lvl""".stripMargin
@@ -7361,7 +7362,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |nq as (select ${bigint("count(*)")} as nq from exq)
          |select g.sel as selectivity, f.n_pass as n_filtered_corpus,
          |  c.n_cand as n_surviving_candidates, p.n_post as n_post_results,
-         |  ${roundAway(d)("coalesce(h.hits, 0) / (cast(10 as double) * q.nq)", 4)} as post_recall10,
+         |  ${roundAway("coalesce(h.hits, 0) / (cast(10 as double) * q.nq)", 4)} as post_recall10,
          |  ${bigint("f.n_pass * q.nq")} as prefilter_score_rows
          |from sg g join nf f on f.maxlab = g.maxlab join ncand c on c.maxlab = g.maxlab
          |join np p on p.maxlab = g.maxlab left join ht h on h.maxlab = g.maxlab cross join nq q""".stripMargin,
@@ -7530,8 +7531,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |from documents)
          |select ${bigint("doc_id")} as doc_id, ${bigint("n_words")} as n_words,
          |  ${bigint("n_sent")} as n_sentences, ${bigint("n_syll")} as n_syllables,
-         |  ${roundAway(d)(flesch, 4)} as flesch,
-         |  ${roundAway(d)(fk, 4)} as fk_grade
+         |  ${roundAway(flesch, 4)} as flesch,
+         |  ${roundAway(fk, 4)} as fk_grade
          |from t""".stripMargin
     },
 
@@ -7630,7 +7631,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |         ${bigint("sum(case when fdoc = doc_id then 1 else 0 end)")} as n_novel
          |       from fw group by doc_id)
          |select ${bigint("doc_id")} as doc_id, n_shingles, n_novel,
-         |  ${roundAway(d)("n_novel / cast(n_shingles as double)", 4)} as novelty_rate
+         |  ${roundAway("n_novel / cast(n_shingles as double)", 4)} as novelty_rate
          |from nv""".stripMargin,
 
     // DEDUP THRESHOLD TUNING CURVE — the aggressiveness knob every
@@ -7663,7 +7664,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |bc as (select wd, w2, count(*) as c12 from bg where w2 is not null group by wd, w2),
          |nb as (select count(*) as t from bg where w2 is not null)
          |select concat_ws(' ', bc.wd, bc.w2) as bigram, ${bigint("bc.c12")} as freq,
-         |  ${roundAway(d)("""ln(cast(bc.c12 as double) * cast(nw.t as double) * cast(nw.t as double)
+         |  ${roundAway("""ln(cast(bc.c12 as double) * cast(nw.t as double) * cast(nw.t as double)
          |           / (cast(nb.t as double) * cast(a.c1 as double) * cast(b.c1 as double)))""", 4)} as pmi
          |from bc join ug a on a.wd = bc.wd join ug b on b.wd = bc.w2
          |cross join nw cross join nb
@@ -7696,14 +7697,14 @@ final class Gen(d: Dialect, useViews: Boolean = false,
            s"select $k as k, 1 + ($dk % (nx.n - 1)) as delta from nx" }.mkString("\n|       union all ")}),
          |pr as (select a.id as ia, (a.id + dl.delta) % nx.n as ib
          |       from nn a cross join dl cross join nx),
-         |ps as (select ${roundAway(d)(d.dot("na.n", "nb.n"), 6)} as sim
+         |ps as (select ${roundAway(d.dot("na.n", "nb.n"), 6)} as sim
          |       from pr p join nn na on na.id = p.ia join nn nb on nb.id = p.ib
          |       where p.ia <> p.ib),
          |bi as (select least(19, cast(floor((sim + 1) * 10) as bigint)) as bin, sim from ps)
          |select ${bigint("bin")} as bin,
-         |  ${roundAway(d)("bin / 10.0 - 1.0", 1)} as sim_lo,
+         |  ${roundAway("bin / 10.0 - 1.0", 1)} as sim_lo,
          |  ${bigint("count(*)")} as n_pairs,
-         |  ${roundAway(d)("cast(sum(cast(sim as decimal(18, 6))) as double) / count(*)", 4)} as mean_sim
+         |  ${roundAway("cast(sum(cast(sim as decimal(18, 6))) as double) / count(*)", 4)} as mean_sim
          |from bi group by bin""".stripMargin
     },
 
@@ -7721,7 +7722,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
       s"""with $nvCtes, $exnCte,
          |mx as (select ${bigint("max(id)")} as m from ev),
          |h as (select case when e.id * 2 <= mx.m then 0 else 1 end as half, e.pos,
-         |             cast(${roundAway(d)("e.val", 6)} as decimal(18, 6)) as qv
+         |             cast(${roundAway("e.val", 6)} as decimal(18, 6)) as qv
          |      from exn e cross join mx),
          |ag as (select half, pos, ${bigint("count(*)")} as c,
          |              sum(qv) as s1, sum(qv * qv) as s2
@@ -7813,8 +7814,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |         $pwCols
          |       from agg)
          |select ${bigint("g.p")} as period_days,
-         |  ${roundAway(d)(pwCase, 4)} as power,
-         |  case when $tot > 0 then ${roundAway(d)(s"($pwCase) / ($tot)", 4)} end as power_share,
+         |  ${roundAway(pwCase, 4)} as power,
+         |  case when $tot > 0 then ${roundAway(s"($pwCase) / ($tot)", 4)} end as power_share,
          |  ${bigint(domCase)} as is_dominant
          |from pw cross join ($spine) g""".stripMargin
     },
@@ -8064,7 +8065,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |kv as (select case kpos when 0 then 1 when 1 then 5 when 2 then 10 else 20 end as k from ks)
          |select ${bigint("kv.k")} as k,
          |  ${bigint("sum(case when h.tr <= kv.k and h.lr <= kv.k then 1 else 0 end)")} as total_hits,
-         |  ${roundAway(d)("sum(case when h.tr <= kv.k and h.lr <= kv.k then 1 else 0 end) / (cast(kv.k as double) * max(nq.m))", 4)} as recall_at_k
+         |  ${roundAway("sum(case when h.tr <= kv.k and h.lr <= kv.k then 1 else 0 end) / (cast(kv.k as double) * max(nq.m))", 4)} as recall_at_k
          |from kv cross join nq cross join hit h
          |group by kv.k""".stripMargin,
 
@@ -8101,8 +8102,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |       from cu c join pr p on p.la = c.la and p.lb = c.lb
          |       group by c.la, c.lb)
          |select la as lang_a, lb as lang_b, na as n_a, nb as n_b, n_values,
-         |  ${roundAway(d)("cast(dint as double) / (cast(na as double) * nb)", 6)} as ks_d,
-         |  ${roundAway(d)("1.358 * sqrt(cast(na + nb as double) / (cast(na as double) * nb))", 6)} as ks_crit_95,
+         |  ${roundAway("cast(dint as double) / (cast(na as double) * nb)", 6)} as ks_d,
+         |  ${roundAway("1.358 * sqrt(cast(na + nb as double) / (cast(na as double) * nb))", 6)} as ks_crit_95,
          |  ${bigint("case when cast(dint as double) / (cast(na as double) * nb) > 1.358 * sqrt(cast(na + nb as double) / (cast(na as double) * nb)) then 1 else 0 end")} as reject_h0
          |from dm""".stripMargin,
 
@@ -8196,22 +8197,22 @@ final class Gen(d: Dialect, useViews: Boolean = false,
         Seq("lam1" -> "lam1", "lam2" -> rayleighC, "tr" -> trace))
       s"""with $nvCtes,
          |${(p1 ++ p2 :+ fin).mkString(",\n")}
-         |select 'pc1' as component, ${roundAway(d)("lam1", 6)} as lambda,
-         |  ${roundAway(d)("lam1 / tr", 4)} as explained_share,
-         |  ${roundAway(d)("lam1 / tr", 4)} as cum_explained_share,
-         |  ${roundAway(d)("tr", 6)} as total_variance
+         |select 'pc1' as component, ${roundAway("lam1", 6)} as lambda,
+         |  ${roundAway("lam1 / tr", 4)} as explained_share,
+         |  ${roundAway("lam1 / tr", 4)} as cum_explained_share,
+         |  ${roundAway("tr", 6)} as total_variance
          |from fin
          |union all
-         |select 'pc2', ${roundAway(d)("lam2", 6)},
-         |  ${roundAway(d)("lam2 / tr", 4)},
-         |  ${roundAway(d)("(lam1 + lam2) / tr", 4)},
-         |  ${roundAway(d)("tr", 6)}
+         |select 'pc2', ${roundAway("lam2", 6)},
+         |  ${roundAway("lam2 / tr", 4)},
+         |  ${roundAway("(lam1 + lam2) / tr", 4)},
+         |  ${roundAway("tr", 6)}
          |from fin
          |union all
-         |select 'residual', ${roundAway(d)("tr - lam1 - lam2", 6)},
-         |  ${roundAway(d)("(tr - lam1 - lam2) / tr", 4)},
-         |  ${roundAway(d)("cast(1.0 as double)", 4)},
-         |  ${roundAway(d)("tr", 6)}
+         |select 'residual', ${roundAway("tr - lam1 - lam2", 6)},
+         |  ${roundAway("(tr - lam1 - lam2) / tr", 4)},
+         |  ${roundAway("cast(1.0 as double)", 4)},
+         |  ${roundAway("tr", 6)}
          |from fin""".stripMargin
     },
 
@@ -8405,7 +8406,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |         from pc join eu on eu.s_suppkey = pc.l_suppkey
          |         join part p on p.p_partkey = pc.l_partkey and p.p_type = 'LARGE')
          |select ${bigint("l_partkey")} as p_partkey, ${bigint("l_suppkey")} as s_suppkey,
-         |  s_name, n_name, ${roundAway(d)("cost", 4)} as unit_cost
+         |  s_name, n_name, ${roundAway("cost", 4)} as unit_cost
          |from (select b.*, min(b.cost) over (partition by b.l_partkey) as mc from base b) _m
          |where cost = mc""".stripMargin,
 
@@ -8433,7 +8434,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |  join nation sn on sn.n_nationkey = s.s_nationkey
          |  group by sn.n_name, year(o.o_orderdate))
          |select nation, ${bigint("o_year")} as o_year,
-         |  ${roundAway(d)("cast(rev as double) - cast(0.4 as double) * cast(cost as double)", 2)} as profit
+         |  ${roundAway("cast(rev as double) - cast(0.4 as double) * cast(cost as double)", 2)} as profit
          |from pf""".stripMargin,
 
     // TPC-H Q11 shape: important stock — the HAVING-against-a-global-
@@ -8608,7 +8609,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |  length(${regexReplaceAll("text", "[^a-zA-Z]", "")}) as n_alpha
          |from documents),
          |sc as (select doc_id, source, n_words,
-         |  ${roundAway(d)("(case when n_words >= 20 and n_words <= 80 then cast(1.0 as double) else cast(0.5 as double) end) * (n_alpha / n_chars)", 6)} as quality
+         |  ${roundAway("(case when n_words >= 20 and n_words <= 80 then cast(1.0 as double) else cast(0.5 as double) end) * (n_alpha / n_chars)", 6)} as quality
          |from q),
          |st as (select source, n_words, quality,
          |         ntile(4) over (partition by source order by quality, doc_id) as stage
@@ -8700,10 +8701,10 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |mx as (select m0 as cohort_month, age, ${bigint("count(distinct cust)")} as n_customers, sum(rev) as revenue from act group by m0, age),
          |cs as (select cohort_month, n_customers as n_cohort, revenue as rev0 from mx where age = 0)
          |select ${bigint("m.cohort_month")} as cohort_month, ${bigint("m.age")} as age_months,
-         |  m.n_customers, ${roundAway(d)("cast(m.revenue as double)", 2)} as revenue,
+         |  m.n_customers, ${roundAway("cast(m.revenue as double)", 2)} as revenue,
          |  cs.n_cohort,
-         |  ${roundAway(d)("m.n_customers / cast(cs.n_cohort as double)", 4)} as retention,
-         |  ${roundAway(d)("cast(m.revenue as double) / cast(cs.rev0 as double)", 4)} as revenue_ratio
+         |  ${roundAway("m.n_customers / cast(cs.n_cohort as double)", 4)} as retention,
+         |  ${roundAway("cast(m.revenue as double) / cast(cs.rev0 as double)", 4)} as revenue_ratio
          |from mx m join cs on cs.cohort_month = m.cohort_month""".stripMargin,
 
     "events_cohort_matrix" renders
@@ -8742,9 +8743,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |grid as (select h from ${rangeTable("gh", "h", 1, 7)})
          |select ${bigint("g.h")} as horizon_days, ${bigint("b.dmax + g.h")} as day,
          |  ${bigint("(b.dmax + g.h) % 7")} as dow,
-         |  ${roundAway(d)("(cast(s.sy * s.sxx - s.sx * s.sxy as double) + cast(s.m * s.sxy - s.sx * s.sy as double) * (b.dmax + g.h - b.d0)) / cast(s.m * s.sxx - s.sx * s.sx as double)", 4)} as trend,
-         |  ${roundAway(d)("(cast(p.tot as double) / p.nd) / (cast(ba.gt as double) / ba.gd)", 4)} as seasonal_idx,
-         |  ${roundAway(d)("((cast(s.sy * s.sxx - s.sx * s.sxy as double) + cast(s.m * s.sxy - s.sx * s.sy as double) * (b.dmax + g.h - b.d0)) / cast(s.m * s.sxx - s.sx * s.sx as double)) * ((cast(p.tot as double) / p.nd) / (cast(ba.gt as double) / ba.gd))", 2)} as forecast
+         |  ${roundAway("(cast(s.sy * s.sxx - s.sx * s.sxy as double) + cast(s.m * s.sxy - s.sx * s.sy as double) * (b.dmax + g.h - b.d0)) / cast(s.m * s.sxx - s.sx * s.sx as double)", 4)} as trend,
+         |  ${roundAway("(cast(p.tot as double) / p.nd) / (cast(ba.gt as double) / ba.gd)", 4)} as seasonal_idx,
+         |  ${roundAway("((cast(s.sy * s.sxx - s.sx * s.sxy as double) + cast(s.m * s.sxy - s.sx * s.sy as double) * (b.dmax + g.h - b.d0)) / cast(s.m * s.sxx - s.sx * s.sx as double)) * ((cast(p.tot as double) / p.nd) / (cast(ba.gt as double) / ba.gd))", 2)} as forecast
          |from grid g cross join b cross join s cross join base ba
          |join prof p on p.dow = (b.dmax + g.h) % 7""".stripMargin,
 
@@ -8779,7 +8780,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |select ${bigint("bucket")} as bucket,
          |  ${bigint("case when bucket = -1 then 0 else cast(pow(2, bucket) as bigint) end")} as gap_lo_s,
          |  ${bigint("count(*)")} as n_gaps,
-         |  ${roundAway(d)("sum(gap) / cast(count(*) as double)", 2)} as mean_gap_s
+         |  ${roundAway("sum(gap) / cast(count(*) as double)", 2)} as mean_gap_s
          |from b group by bucket""".stripMargin,
 
     "events_bot_detect" renders
@@ -8792,11 +8793,11 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |      from sq where gap is not null group by user_id
          |      having count(*) >= 5)
          |select ${bigint("user_id")} as user_id, n_gaps,
-         |  ${roundAway(d)("cast(sg as double) / n_gaps", 2)} as mean_gap_s,
+         |  ${roundAway("cast(sg as double) / n_gaps", 2)} as mean_gap_s,
          |  case when sg > 0
-         |       then ${roundAway(d)("sqrt(cast(n_gaps * sgg - sg * sg as double)) / cast(sg as double)", 4)}
+         |       then ${roundAway("sqrt(cast(n_gaps * sgg - sg * sg as double)) / cast(sg as double)", 4)}
          |       else cast(0 as double) end as gap_cv,
-         |  ${bigint(s"case when (sg > 0 and ${roundAway(d)("sqrt(cast(n_gaps * sgg - sg * sg as double)) / cast(sg as double)", 4)} < cast(0.3 as double)) or sg = 0 then 1 else 0 end")} as bot_like
+         |  ${bigint(s"case when (sg > 0 and ${roundAway("sqrt(cast(n_gaps * sgg - sg * sg as double)) / cast(sg as double)", 4)} < cast(0.3 as double)) or sg = 0 then 1 else 0 end")} as bot_like
          |from g""".stripMargin,
 
     // CUSUM CHANGEPOINT DETECTION — the level-shift monitor the
@@ -8828,10 +8829,10 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |         ${bigint("sum(case when d.day > cp.cp_day then 1 else 0 end)")} as da
          |       from daily d cross join cp)
          |select ${bigint("cp.cp_day")} as cp_day, ${bigint("t.m")} as n_days,
-         |  ${roundAway(d)("cast(cp.peak as double) / t.m", 2)} as cusum_peak,
-         |  ${roundAway(d)("cast(ba.nb as double) / ba.db", 2)} as mean_before,
-         |  ${roundAway(d)("cast(ba.na as double) / ba.da", 2)} as mean_after,
-         |  ${roundAway(d)("cast(ba.na as double) / ba.da - cast(ba.nb as double) / ba.db", 2)} as level_shift
+         |  ${roundAway("cast(cp.peak as double) / t.m", 2)} as cusum_peak,
+         |  ${roundAway("cast(ba.nb as double) / ba.db", 2)} as mean_before,
+         |  ${roundAway("cast(ba.na as double) / ba.da", 2)} as mean_after,
+         |  ${roundAway("cast(ba.na as double) / ba.da - cast(ba.nb as double) / ba.db", 2)} as level_shift
          |from cp cross join tot t cross join ba""".stripMargin,
 
     // PERSONALIZED PAGERANK — the recommendation-serving twin of
@@ -8936,8 +8937,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |      from v left join c on c.user_id = v.user_id
          |             left join p on p.user_id = v.user_id)
          |select nv as n_viewed, nc as n_clicked_1h, np as n_purchased_24h,
-         |  ${roundAway(d)("nc / cast(nv as double)", 4)} as view_to_click,
-         |  ${roundAway(d)("np / cast(nc as double)", 4)} as click_to_buy
+         |  ${roundAway("nc / cast(nv as double)", 4)} as view_to_click,
+         |  ${roundAway("np / cast(nc as double)", 4)} as click_to_buy
          |from f""".stripMargin,
 
     // NEAREST-CENTROID (ROCCHIO) SOURCE CLASSIFIER — the in-engine
@@ -8983,8 +8984,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |          $zsums
          |       from wc)
          |select n_types, f2 as f2_exact,
-         |  ${roundAway(d)(s"cast($estNum as double) / 16", 2)} as f2_est,
-         |  ${roundAway(d)(s"abs(cast($estNum as double) / 16 - cast(f2 as double)) / cast(f2 as double)", 4)} as rel_err
+         |  ${roundAway(s"cast($estNum as double) / 16", 2)} as f2_est,
+         |  ${roundAway(s"abs(cast($estNum as double) / 16 - cast(f2 as double)) / cast(f2 as double)", 4)} as rel_err
          |from zz""".stripMargin
     },
 
@@ -9096,7 +9097,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |select ${bigint("dg.id")} as vec_id, ${bigint("dg.deg")} as degree,
          |  ${bigint("coalesce(tv.t, 0)")} as n_triangles,
          |  case when dg.deg < 2 then cast(0.0 as double)
-         |       else ${roundAway(d)("2.0 * coalesce(tv.t, 0) / (dg.deg * (dg.deg - 1.0))", 6)} end as local_cc
+         |       else ${roundAway("2.0 * coalesce(tv.t, 0) / (dg.deg * (dg.deg - 1.0))", 6)} end as local_cc
          |from dg left join tv on tv.id = dg.id""".stripMargin
     },
 
@@ -9234,9 +9235,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |t1 as (select cast(s_above as double) + (kk.k1 - n_above) * (cast(s as double) / n) as top_rev
          |       from lz cross join kk where n_above < kk.k1 and n_above + n >= kk.k1)
          |select tot.nt as n_customers, round(cast(tot.st as double), 2) as total_revenue,
-         |  ${roundAway(d)("t10.top_rev / cast(tot.st as double)", 4)} as top10pct_share,
-         |  ${roundAway(d)("t1.top_rev / cast(tot.st as double)", 4)} as top1pct_share,
-         |  ${roundAway(d)("1.0 - cast(gin.terms as double) / (cast(tot.nt as double) * cast(tot.st as double))", 4)} as gini
+         |  ${roundAway("t10.top_rev / cast(tot.st as double)", 4)} as top10pct_share,
+         |  ${roundAway("t1.top_rev / cast(tot.st as double)", 4)} as top1pct_share,
+         |  ${roundAway("1.0 - cast(gin.terms as double) / (cast(tot.nt as double) * cast(tot.st as double))", 4)} as gini
          |from tot cross join gin cross join t10 cross join t1""".stripMargin,
 
     // ZIPF-LAW FIT — OLS of ln(frequency) on ln(rank) over the
@@ -9262,16 +9263,16 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |  from wc) _p where prn <= 100),
          |rk as (select c, ${bigint("row_number() over (order by c desc, wd)")} as rank from pre),
          |top as (select rank, c from rk where rank <= 100),
-         |lg as (select ${bigint(roundAway(d)("ln(cast(rank as double)) * 1000000", 0))} as x,
-         |              ${bigint(roundAway(d)("ln(cast(c as double)) * 1000000", 0))} as y
+         |lg as (select ${bigint(roundAway("ln(cast(rank as double)) * 1000000", 0))} as x,
+         |              ${bigint(roundAway("ln(cast(c as double)) * 1000000", 0))} as y
          |       from top),
          |mo as (select ${bigint("count(*)")} as n, ${bigint("sum(x)")} as sx, ${bigint("sum(y)")} as sy,
          |              ${bigint("sum(x * y)")} as sxy, ${bigint("sum(x * x)")} as sxx, ${bigint("sum(y * y)")} as syy
          |       from lg)
          |select n as n_words,
-         |  ${roundAway(d)("cast(n * sxy - sx * sy as double) / cast(n * sxx - sx * sx as double)", 4)} as zipf_slope,
-         |  ${roundAway(d)("(cast(sy as double) - (cast(n * sxy - sx * sy as double) / cast(n * sxx - sx * sx as double)) * sx) / (n * 1000000.0)", 4)} as intercept_ln,
-         |  ${roundAway(d)("(cast(n * sxy - sx * sy as double) * cast(n * sxy - sx * sy as double)) / (cast(n * sxx - sx * sx as double) * cast(n * syy - sy * sy as double))", 4)} as r2
+         |  ${roundAway("cast(n * sxy - sx * sy as double) / cast(n * sxx - sx * sx as double)", 4)} as zipf_slope,
+         |  ${roundAway("(cast(sy as double) - (cast(n * sxy - sx * sy as double) / cast(n * sxx - sx * sx as double)) * sx) / (n * 1000000.0)", 4)} as intercept_ln,
+         |  ${roundAway("(cast(n * sxy - sx * sy as double) * cast(n * sxy - sx * sy as double)) / (cast(n * sxx - sx * sx as double) * cast(n * syy - sy * sy as double))", 4)} as r2
          |from mo""".stripMargin
     },
 
@@ -9302,16 +9303,16 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |        from ${rangeTable("l", "lvl", 1, 4)} join tok t on t.lvl <= l.lvl group by l.lvl),
          |cv as (select l.lvl, ${bigint("sum(v.v_new)")} as v_types
          |       from ${rangeTable("l", "lvl", 1, 4)} join vc v on v.lvl <= l.lvl group by l.lvl),
-         |lg as (select ${bigint(roundAway(d)("ln(cast(c.n_tokens as double)) * 1000000", 0))} as x,
-         |              ${bigint(roundAway(d)("ln(cast(v.v_types as double)) * 1000000", 0))} as y
+         |lg as (select ${bigint(roundAway("ln(cast(c.n_tokens as double)) * 1000000", 0))} as x,
+         |              ${bigint(roundAway("ln(cast(v.v_types as double)) * 1000000", 0))} as y
          |       from cum c join cv v on v.lvl = c.lvl),
          |mo as (select ${bigint("count(*)")} as n, ${bigint("sum(x)")} as sx, ${bigint("sum(y)")} as sy,
          |              ${bigint("sum(x * y)")} as sxy, ${bigint("sum(x * x)")} as sxx
          |       from lg)
          |select ${bigint("c.lvl")} as prefix_lvl, c.n_tokens, v.v_types,
-         |  ${roundAway(d)("v.v_types / cast(c.n_tokens as double)", 6)} as type_token_ratio,
-         |  ${roundAway(d)("cast(mo.n * mo.sxy - mo.sx * mo.sy as double) / cast(mo.n * mo.sxx - mo.sx * mo.sx as double)", 4)} as heaps_beta,
-         |  ${roundAway(d)("(cast(mo.sy as double) - (cast(mo.n * mo.sxy - mo.sx * mo.sy as double) / cast(mo.n * mo.sxx - mo.sx * mo.sx as double)) * mo.sx) / (mo.n * 1000000.0)", 4)} as heaps_lnk
+         |  ${roundAway("v.v_types / cast(c.n_tokens as double)", 6)} as type_token_ratio,
+         |  ${roundAway("cast(mo.n * mo.sxy - mo.sx * mo.sy as double) / cast(mo.n * mo.sxx - mo.sx * mo.sx as double)", 4)} as heaps_beta,
+         |  ${roundAway("(cast(mo.sy as double) - (cast(mo.n * mo.sxy - mo.sx * mo.sy as double) / cast(mo.n * mo.sxx - mo.sx * mo.sx as double)) * mo.sx) / (mo.n * 1000000.0)", 4)} as heaps_lnk
          |from cum c join cv v on v.lvl = c.lvl cross join mo""".stripMargin
     },
 
@@ -9336,9 +9337,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |              ${bigint("sum(case when c = 1 then 1 else 0 end)")} as v_hapax
          |       from gw)
          |select ${bigint("dt.doc_id")} as doc_id, dt.n_tokens, dt.n_types, dt.n_hapax,
-         |  ${roundAway(d)("dt.n_types / cast(dt.n_tokens as double)", 4)} as ttr,
-         |  ${roundAway(d)("dt.n_hapax / cast(dt.n_types as double)", 4)} as hapax_share,
-         |  ${roundAway(d)("gh.v_hapax / cast(gh.v_types as double)", 4)} as corpus_hapax_share
+         |  ${roundAway("dt.n_types / cast(dt.n_tokens as double)", 4)} as ttr,
+         |  ${roundAway("dt.n_hapax / cast(dt.n_types as double)", 4)} as hapax_share,
+         |  ${roundAway("gh.v_hapax / cast(gh.v_types as double)", 4)} as corpus_hapax_share
          |from dt cross join gh""".stripMargin,
 
     // PQ RECONSTRUCTION-DISTORTION REPORT — the quantization-error
@@ -9362,12 +9363,12 @@ final class Gen(d: Dialect, useViews: Boolean = false,
       s"""with $nvCtes,
          |$chain,
          |er as (select k.m, k.cell,
-         |         ${roundAway(d)(s"${d.dot("v.sv", "v.sv")} - 2 * ${d.dot("v.sv", "c.cv")} + ${d.dot("c.cv", "c.cv")}", 9)} as mse
+         |         ${roundAway(s"${d.dot("v.sv", "v.sv")} - 2 * ${d.dot("v.sv", "c.cv")} + ${d.dot("c.cv", "c.cv")}", 9)} as mse
          |       from codes k join vsub v on v.id = k.id and v.m = k.m
          |                    join pct1 c on c.m = k.m and c.cell = k.cell)
          |select ${bigint("m")} as subspace, ${bigint("count(*)")} as n_vectors,
          |  ${bigint("count(distinct cell)")} as n_cells_used,
-         |  ${roundAway(d)("cast(sum(cast(mse as decimal(28, 9))) as double) / count(*)", 6)} as mean_mse,
+         |  ${roundAway("cast(sum(cast(mse as decimal(28, 9))) as double) / count(*)", 6)} as mean_mse,
          |  max(mse) as max_mse
          |from er group by m""".stripMargin
     },
@@ -9396,7 +9397,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |              ${bigint("sum(j + k)")} as sj, ${bigint("sum(j * j + k * k)")} as sj2
          |       from ed)
          |select m as m_edges, sjk as sum_jk,
-         |  ${roundAway(d)("cast(4 * m * sjk - sj * sj as double) / cast(2 * m * sj2 - sj * sj as double)", 6)} as assortativity
+         |  ${roundAway("cast(4 * m * sjk - sj * sj as double) / cast(2 * m * sj2 - sj * sj as double)", 6)} as assortativity
          |from mo""".stripMargin,
 
     // GRAPH-SEARCH BEAM-WIDTH TUNING CURVE — recall@10 at beam ∈
@@ -9459,10 +9460,10 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // corpus work.
     "wm_vote_margin" renders
       s"""${wmChain("extract")},
-         |mg as (select blk, bit_idx, n, ${roundAway(d)("abs(vote) / cast(n as double)", 6)} as margin from votes),
+         |mg as (select blk, bit_idx, n, ${roundAway("abs(vote) / cast(n as double)", 6)} as margin from votes),
          |pb as (select blk, ${bigint("count(*)")} as n_bits, ${bigint("max(n)")} as n_carriers,
          |         min(margin) as min_margin,
-         |         ${roundAway(d)("cast(sum(cast(margin as decimal(18, 6))) as double) / count(*)", 4)} as mean_margin,
+         |         ${roundAway("cast(sum(cast(margin as decimal(18, 6))) as double) / count(*)", 4)} as mean_margin,
          |         min(${d.structLit2("m", "margin", "b", "bit_idx")}) as mn
          |       from mg group by blk)
          |select ${bigint("blk")} as blk, n_bits, n_carriers, min_margin, mean_margin,
@@ -9482,23 +9483,6 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // total errors over all 16 blocks × 16 bits. Four bounded
     // carrier-row passes over the cached stego view — no corpus work.
     "wm_ber_curve" renders {
-      def exC(pfx: String, src: String) = {
-        val qS = (0 until MsgLen).map(g =>
-          s"sum(sval * ${d.arrIdx0(wLitOf(g), "pos - 1")}) as q$g").mkString(",\n|            ")
-        def bitE(g: Int) = s"((cast(floor(q$g / nr / $Delta + 0.5) as bigint) % 2) + 2) % 2"
-        s"""${pfx}xagg as (select id, sqrt(sum(sval * sval)) as nr,
-           |            $qS
-           |          from $src group by id),
-           |${pfx}xb as (select id, ${(0 until MsgLen).map(g => s"${bitE(g)} as b$g").mkString(",\n|          ")}
-           |        from ${pfx}xagg),
-           |${pfx}xh as (select id, b0 * 8 + b1 * 4 + b2 * 2 + b3 as idx, b4 * 8 + b5 * 4 + b6 * 2 + b7 as crc,
-           |          ${arrLit((8 until MsgLen).map(g => s"b$g"))} as pbits
-           |        from ${pfx}xb),
-           |${pfx}valid as (select id, idx as blk, pbits from ${pfx}xh where crc = ${d.arrIdx0(crcLit, "idx")}),
-           |${pfx}vx as (select blk, p1 - 1 as bit_idx, b from ${d.explodeFrom(s"${pfx}valid", "pbits", "p1", "b", Seq("blk"))} _${pfx}vx),
-           |${pfx}votes as (select blk, bit_idx, sum(2 * b - 1) as vote, count(*) as n
-           |           from ${pfx}vx group by blk, bit_idx)""".stripMargin
-      }
       val levels = Seq(1, 2, 3, 5) // sigma in centi-units
       // r12: the 4 σ legs run through ONE rung-tagged attack table +
       // ONE extraction chain (σ is a COLUMN over a 4-row spine — the
@@ -9538,7 +9522,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |       left join cvotes v on v.s = g.s and v.blk = m.blk and v.bit_idx = m.j
          |       group by g.s)
          |select sigma_centi, ${bigint("256")} as n_bits, errors,
-         |  ${roundAway(d)("errors / cast(256 as double)", 4)} as ber
+         |  ${roundAway("errors / cast(256 as double)", 4)} as ber
          |from cu""".stripMargin
     },
 
@@ -9584,7 +9568,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |           join idx b on b.rn = a.rn - kk.k
          |           group by kk.k)
          |select ${bigint("l.k")} as lag, ${bigint("l.np")} as n_pairs,
-         |  ${roundAway(d)("cast(t.m * t.m * l.pk - t.m * t.s * (l.ak + l.bk) + l.np * t.s * t.s as double) / cast(t.m * t.m * t.q - t.m * t.s * t.s as double)", 4)} as acf
+         |  ${roundAway("cast(t.m * t.m * l.pk - t.m * t.s * (l.ak + l.bk) + l.np * t.s * t.s as double) / cast(t.m * t.m * t.q - t.m * t.s * t.s as double)", 4)} as acf
          |from lagged l cross join tot t""".stripMargin,
 
     // ONE LLOYD REFINEMENT ROUND over the served IVF index — the
@@ -9611,7 +9595,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |mem as (select a.cell, nn.n from asgF a join nn on nn.id = a.id),
          |mx as (select cell, pos, val from ${d.explodeFrom("mem", "n", "pos", "val", Seq("cell"))} _mx),
          |ncomp as (select cell, pos,
-         |            cast(sum(cast(${roundAway(d)("val", 9)} as decimal(28, 9))) as double) / count(*) as np
+         |            cast(sum(cast(${roundAway("val", 9)} as decimal(28, 9))) as double) / count(*) as np
          |          from mx group by cell, pos),
          |diff as (select n.cell, n.pos, n.np, ${d.arrIdx0("c.cv", "n.pos - 1")} as op
          |         from ncomp n join ct2 c on c.cell = n.cell),
@@ -9619,14 +9603,14 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |               ${d.arrAggOrdered("np - op", "pos")} as da
          |        from diff group by cell),
          |ib as (select a.cell, ${bigint("count(*)")} as n_members,
-         |         cast(sum(cast(${roundAway(d)(d.dot("nn.n", "c.cv"), 6)} as decimal(18, 6))) as double) as sdot,
-         |         min(${roundAway(d)(d.dot("c.cv", "c.cv"), 6)}) as cc2
+         |         cast(sum(cast(${roundAway(d.dot("nn.n", "c.cv"), 6)} as decimal(18, 6))) as double) as sdot,
+         |         min(${roundAway(d.dot("c.cv", "c.cv"), 6)}) as cc2
          |       from asgF a join nn on nn.id = a.id join ct2 c on c.cell = a.cell
          |       group by a.cell)
          |select ${bigint("ib.cell")} as cell, ib.n_members,
-         |  ${roundAway(d)(s"sqrt(${d.dot("ag.da", "ag.da")})", 6)} as movement,
-         |  ${roundAway(d)("ib.n_members * (1 + ib.cc2) - 2 * ib.sdot", 4)} as inertia_before,
-         |  ${roundAway(d)(s"ib.n_members * (1 - ${d.dot("ag.na", "ag.na")})", 4)} as inertia_after
+         |  ${roundAway(s"sqrt(${d.dot("ag.da", "ag.da")})", 6)} as movement,
+         |  ${roundAway("ib.n_members * (1 + ib.cc2) - 2 * ib.sdot", 4)} as inertia_before,
+         |  ${roundAway(s"ib.n_members * (1 - ${d.dot("ag.na", "ag.na")})", 4)} as inertia_after
          |from ib join agg ag on ag.cell = ib.cell""".stripMargin
     },
 
@@ -9702,7 +9686,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |tot as (select ${bigint("sum(n_events)")} as n from cells)
          |select ${bigint("c.dow")} as dow, ${bigint("c.hod")} as hour,
          |  c.n_events, u.n_users,
-         |  ${roundAway(d)("100.0 * c.n_events / t.n", 4)} as pct_events
+         |  ${roundAway("100.0 * c.n_events / t.n", 4)} as pct_events
          |from cells c join cu u on u.dow = c.dow and u.hod = c.hod
          |cross join tot t""".stripMargin,
 
@@ -9732,7 +9716,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |select ${bigint("d2.day")} as day, ${bigint("d2.x")} as n_events,
          |  ${bigint("m.md")} as median_events, ${bigint("a.mv")} as mad,
          |  case when a.mv > 0
-         |       then ${roundAway(d)("0.6745 * (d2.x - m.md) / cast(a.mv as double)", 4)} end as robust_z,
+         |       then ${roundAway("0.6745 * (d2.x - m.md) / cast(a.mv as double)", 4)} end as robust_z,
          |  case when a.mv > 0 and abs(0.6745 * (d2.x - m.md) / cast(a.mv as double)) > 3.5
          |       then 1 else 0 end as is_outlier
          |from dev d2 cross join med m cross join mad a""".stripMargin,
@@ -9763,9 +9747,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |               ${bigint("sum(x * x)")} as q
          |        from grid group by event_type)
          |select event_type, m as n_days,
-         |  ${roundAway(d)("cast(s as double) / m", 4)} as mean_daily,
-         |  ${roundAway(d)("cast(m * q - s * s as double) / cast(m as double) / cast(s as double)", 4)} as fano,
-         |  ${roundAway(d)("cast(m * q - s * s as double) / cast(s as double) / cast(s as double)", 4)} as cv2,
+         |  ${roundAway("cast(s as double) / m", 4)} as mean_daily,
+         |  ${roundAway("cast(m * q - s * s as double) / cast(m as double) / cast(s as double)", 4)} as fano,
+         |  ${roundAway("cast(m * q - s * s as double) / cast(s as double) / cast(s as double)", 4)} as cv2,
          |  case when cast(m * q - s * s as double) / cast(m as double) / cast(s as double) > 1.0
          |       then 1 else 0 end as overdispersed
          |from mom""".stripMargin,
@@ -9786,7 +9770,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
         s"when $dd then cast(${math.log10(1 + 1.0 / dd)} as double)")
         .mkString("case dg.dig ", " ", " end")
       val toStr = if (d.name == "spark") "string" else "varchar"
-      s"""with cents as (select ${bigint(roundAway(d)("l_extendedprice * 100", 0))} as c
+      s"""with cents as (select ${bigint(roundAway("l_extendedprice * 100", 0))} as c
          |               from lineitem where l_extendedprice > 0),
          |digs as (select cast(substr(cast(c as $toStr), 1, 1) as bigint) as dig from cents),
          |cnt as (select dig, ${bigint("count(*)")} as n_obs from digs group by dig),
@@ -9794,14 +9778,14 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |           from ${rangeTable("dg", "dig", 1, 9)} left join cnt c on c.dig = dg.dig),
          |tot as (select ${bigint("sum(n_obs)")} as n from census),
          |terms as (select c.dig, c.n_obs, c.p_exp, t.n,
-         |            ${bigint(roundAway(d)("(c.n_obs - t.n * c.p_exp) * (c.n_obs - t.n * c.p_exp) / (t.n * c.p_exp) * 1000000", 0))} as t6
+         |            ${bigint(roundAway("(c.n_obs - t.n * c.p_exp) * (c.n_obs - t.n * c.p_exp) / (t.n * c.p_exp) * 1000000", 0))} as t6
          |          from census c cross join tot t),
          |chi as (select ${bigint("sum(t6)")} as chi6 from terms)
          |select ${bigint("t.dig")} as digit, t.n_obs,
-         |  ${roundAway(d)("cast(t.n_obs as double) / t.n", 6)} as obs_share,
-         |  ${roundAway(d)("t.p_exp", 6)} as exp_share,
-         |  ${roundAway(d)("cast(t.n_obs as double) / t.n - t.p_exp", 6)} as deviation,
-         |  ${roundAway(d)("cast(ch.chi6 as double) / 1000000", 4)} as chi2
+         |  ${roundAway("cast(t.n_obs as double) / t.n", 6)} as obs_share,
+         |  ${roundAway("t.p_exp", 6)} as exp_share,
+         |  ${roundAway("cast(t.n_obs as double) / t.n - t.p_exp", 6)} as deviation,
+         |  ${roundAway("cast(ch.chi6 as double) / 1000000", 4)} as chi2
          |from terms t cross join chi ch""".stripMargin
     },
 
@@ -9836,17 +9820,17 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |irk as (select ic, ${bigint("row_number() over (order by ic, t)")} as rn from ic),
          |icept as (select min(ic) as i from irk cross join nm
          |          where rn = cast(ceil(m * 0.5) as bigint)),
-         |ols0 as (select m.t - t0.t0 as tr, ${bigint(roundAway(d)("m.rev * 100", 0))} as c
+         |ols0 as (select m.t - t0.t0 as tr, ${bigint(roundAway("m.rev * 100", 0))} as c
          |         from mon m cross join (select min(t) as t0 from mon) t0),
          |om as (select ${bigint("count(*)")} as m2, ${bigint("sum(tr)")} as st, ${bigint("sum(tr * tr)")} as stt,
          |              ${bigint("sum(c)")} as sc, ${bigint("sum(tr * c)")} as stc from ols0),
          |ols as (select cast(m2 * stc - st * sc as double) / cast(m2 * stt - st * st as double) / 100 as b1
          |        from om)
          |select n.m as n_months, p.p as n_pairs,
-         |  ${roundAway(d)("s.s", 2)} as ts_slope,
-         |  ${roundAway(d)("i.i", 2)} as ts_intercept,
-         |  ${roundAway(d)("o.b1", 2)} as ols_slope,
-         |  ${roundAway(d)("s.s - o.b1", 2)} as robust_gap
+         |  ${roundAway("s.s", 2)} as ts_slope,
+         |  ${roundAway("i.i", 2)} as ts_intercept,
+         |  ${roundAway("o.b1", 2)} as ols_slope,
+         |  ${roundAway("s.s - o.b1", 2)} as robust_gap
          |from slope s cross join icept i cross join ols o
          |cross join nm n cross join np p""".stripMargin
     },
@@ -9876,9 +9860,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |        from wt),
          |sm as (select day, x, i, cast(mt as double) / pow(2, cast(i as double)) as ewma from cum)
          |select ${bigint("day")} as day, ${bigint("x")} as n_events,
-         |  ${roundAway(d)("ewma", 4)} as ewma,
-         |  ${roundAway(d)("lag(ewma) over (order by i)", 4)} as forecast,
-         |  ${roundAway(d)("x - lag(ewma) over (order by i)", 4)} as residual
+         |  ${roundAway("ewma", 4)} as ewma,
+         |  ${roundAway("lag(ewma) over (order by i)", 4)} as forecast,
+         |  ${roundAway("x - lag(ewma) over (order by i)", 4)} as residual
          |from sm""".stripMargin,
 
     "events_survival" renders
@@ -9900,7 +9884,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |         from ev cross join tot t),
          |hz as (select dur, d_ev, d_cs, n_risk,
          |         case when d_ev > 0 and d_ev < n_risk
-         |              then ${bigint(roundAway(d)("ln(1.0 - d_ev / cast(n_risk as double)) * 10000000", 0))}
+         |              then ${bigint(roundAway("ln(1.0 - d_ev / cast(n_risk as double)) * 10000000", 0))}
          |              else 0 end as lhz,
          |         case when d_ev >= n_risk then 1 else 0 end as absorbed
          |       from risk),
@@ -9911,7 +9895,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |select ${bigint("dur")} as dur_days, ${bigint("n_risk")} as n_risk,
          |  ${bigint("d_ev")} as n_conversions, ${bigint("d_cs")} as n_censored,
          |  case when ab = 1 then cast(0.0 as double)
-         |       else ${roundAway(d)("exp(cast(clhz as double) / 10000000)", 4)} end as survival
+         |       else ${roundAway("exp(cast(clhz as double) / 10000000)", 4)} end as survival
          |from km""".stripMargin,
 
     // see kmvSql for the full design note
@@ -10004,7 +9988,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |rc as (select ${bigint("count(*)")} as n_repeat from
          |         (select ck, ${bigint("count(*)")} as nd from od group by ck) _c where nd >= 2)
          |select r.n_repeat as n_repeat_customers, ${bigint("sel.n")} as n_gaps,
-         |  ${roundAway(d)("cast(sel.s as double) / sel.n", 4)} as mean_gap_days,
+         |  ${roundAway("cast(sel.s as double) / sel.n", 4)} as mean_gap_days,
          |  ${bigint("sel.p50")} as p50_gap, ${bigint("sel.p90")} as p90_gap,
          |  ${bigint("sel.mx")} as max_gap
          |from sel cross join rc r""".stripMargin
@@ -10024,9 +10008,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |       from tu a join tu b on b.user_id = a.user_id and a.event_type < b.event_type
          |       group by a.event_type, b.event_type)
          |select p.ta as type_a, p.tb as type_b, na.n as n_users_a, nb.n as n_users_b, p.nab as n_both,
-         |  ${roundAway(d)("cast(p.nab as double) / (na.n + nb.n - p.nab)", 4)} as jaccard,
-         |  ${roundAway(d)("cast(p.nab as double) / na.n", 4)} as p_b_given_a,
-         |  ${roundAway(d)("cast(p.nab as double) / nb.n", 4)} as p_a_given_b
+         |  ${roundAway("cast(p.nab as double) / (na.n + nb.n - p.nab)", 4)} as jaccard,
+         |  ${roundAway("cast(p.nab as double) / na.n", 4)} as p_b_given_a,
+         |  ${roundAway("cast(p.nab as double) / nb.n", 4)} as p_a_given_b
          |from px p join nt na on na.event_type = p.ta join nt nb on nb.event_type = p.tb""".stripMargin,
 
     // SUPPLIER-CONCENTRATION HHI per nation — the Herfindahl index
@@ -10048,7 +10032,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // share-scale-invariant.
     "q_hhi_supplier" renders
       s"""with sr as (select s.s_nationkey as nk, l.l_suppkey as sk,
-         |              ${bigint(s"sum(${bigint(roundAway(d)("l_extendedprice * (1 - l_discount) * 1000000", 0))})")} as c
+         |              ${bigint(s"sum(${bigint(roundAway("l_extendedprice * (1 - l_discount) * 1000000", 0))})")} as c
          |            from lineitem l join supplier s on s.s_suppkey = l.l_suppkey
          |            group by s.s_nationkey, l.l_suppkey),
          |agg as (select nk, ${bigint("count(*)")} as n_suppliers,
@@ -10056,10 +10040,10 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |          ${bigint("sum(c)")} as tot, max(c) as mx
          |        from sr group by nk)
          |select n.n_name as nation, a.n_suppliers,
-         |  ${roundAway(d)("cast(a.tot as double) / 1000000", 2)} as total_revenue,
-         |  ${roundAway(d)("cast(a.q2 as double) / (cast(a.tot as double) * cast(a.tot as double))", 6)} as hhi,
-         |  ${roundAway(d)("cast(a.mx as double) / a.tot", 4)} as top_share,
-         |  case when ${roundAway(d)("cast(a.q2 as double) / (cast(a.tot as double) * cast(a.tot as double))", 6)} > 0.25
+         |  ${roundAway("cast(a.tot as double) / 1000000", 2)} as total_revenue,
+         |  ${roundAway("cast(a.q2 as double) / (cast(a.tot as double) * cast(a.tot as double))", 6)} as hhi,
+         |  ${roundAway("cast(a.mx as double) / a.tot", 4)} as top_share,
+         |  case when ${roundAway("cast(a.q2 as double) / (cast(a.tot as double) * cast(a.tot as double))", 6)} > 0.25
          |       then 1 else 0 end as concentrated
          |from agg a join nation n on n.n_nationkey = a.nk""".stripMargin,
 
@@ -10076,8 +10060,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // one 1-row moment fold. Σx²/Σy²/Σxy stay in bigint to ~10¹⁴
     // rows; past that pre-scale counts (r is scale-invariant).
     "q_discount_elasticity" renders {
-      val xg = bigint(roundAway(d)("l_discount * 100", 0))
-      val yg = bigint(roundAway(d)("l_quantity", 0))
+      val xg = bigint(roundAway("l_discount * 100", 0))
+      val yg = bigint(roundAway("l_quantity", 0))
       s"""with g as (select $xg as x, $yg as y from lineitem),
          |lvl as (select x, ${bigint("count(*)")} as n, ${bigint("sum(y)")} as sy from g group by x),
          |mom as (select ${bigint("count(*)")} as n, ${bigint("sum(x)")} as sx, ${bigint("sum(y)")} as sy,
@@ -10088,8 +10072,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |                    / sqrt(cast(n * sxx - sx * sx as double))
          |                    / sqrt(cast(n * syy - sy * sy as double)) end as pr from mom)
          |select ${bigint("l.x")} as discount_pct, l.n as n_lines,
-         |  ${roundAway(d)("cast(l.sy as double) / l.n", 4)} as avg_quantity,
-         |  ${roundAway(d)("r.pr", 4)} as pearson_r
+         |  ${roundAway("cast(l.sy as double) / l.n", 4)} as avg_quantity,
+         |  ${roundAway("r.pr", 4)} as pearson_r
          |from lvl l cross join r""".stripMargin
     },
 
@@ -10114,9 +10098,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |select ${bigint("b.bucket")} as log2_bucket,
          |  ${bigint(s"cast(pow(2, b.bucket) as bigint)")} as bucket_min,
          |  b.n_users, b.n_events,
-         |  ${roundAway(d)("cast(b.n_users as double) / t.u", 4)} as user_share,
-         |  ${roundAway(d)("cast(b.n_events as double) / t.e", 4)} as event_share,
-         |  ${roundAway(d)("cast(sum(b.n_users) over (order by b.bucket) as double) / t.u", 4)} as cum_user_share
+         |  ${roundAway("cast(b.n_users as double) / t.u", 4)} as user_share,
+         |  ${roundAway("cast(b.n_events as double) / t.e", 4)} as event_share,
+         |  ${roundAway("cast(sum(b.n_users) over (order by b.bucket) as double) / t.u", 4)} as cum_user_share
          |from bc b cross join tot t""".stripMargin
     },
 
@@ -10137,7 +10121,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |        from days dd join ud u on u.day between dd.day - 27 and dd.day
          |        group by dd.day)
          |select ${bigint("a.day")} as day, a.dau, m.mau,
-         |  ${roundAway(d)("cast(a.dau as double) / m.mau", 4)} as stickiness
+         |  ${roundAway("cast(a.dau as double) / m.mau", 4)} as stickiness
          |from dau a join mau m on m.day = a.day""".stripMargin,
 
     // SPEARMAN RANK CORRELATION with tie correction — the monotone-
@@ -10166,8 +10150,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
       val den = "sqrt((cast(n as double) * sxx - cast(sx as double) * sx) * (cast(n as double) * syy - cast(sy as double) * sy))"
       val rnum = "(cast(n as double) * rxy - cast(rx as double) * ry)"
       val rden = "sqrt((cast(n as double) * rxx - cast(rx as double) * rx) * (cast(n as double) * ryy - cast(ry as double) * ry))"
-      s"""with li as (select ${bigint(roundAway(d)("l_discount * 100", 0))} as x,
-         |              ${bigint(roundAway(d)("l_quantity", 0))} as y from lineitem),
+      s"""with li as (select ${bigint(roundAway("l_discount * 100", 0))} as x,
+         |              ${bigint(roundAway("l_quantity", 0))} as y from lineitem),
          |${census("x", "cx")},
          |${census("y", "cy")},
          |jc as (select x, y, ${bigint("count(*)")} as cnt from li group by x, y),
@@ -10183,9 +10167,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |         ${bigint("count(*)")} as n_cells
          |       from jr)
          |select n as n_rows, n_cells as n_joint_cells,
-         |  ${roundAway(d)(s"$rnum / $rden", 6)} as rho_spearman,
-         |  ${roundAway(d)(s"$num / $den", 6)} as r_pearson,
-         |  ${roundAway(d)(s"$rnum / $rden - $num / $den", 6)} as rho_minus_r
+         |  ${roundAway(s"$rnum / $rden", 6)} as rho_spearman,
+         |  ${roundAway(s"$num / $den", 6)} as r_pearson,
+         |  ${roundAway(s"$rnum / $rden - $num / $den", 6)} as rho_minus_r
          |from mo""".stripMargin
     },
 
@@ -10226,12 +10210,12 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |       from dc group by decile),
          |tot as (select ${bigint("sum(spend_cents)")} as ts from ag)
          |select ${bigint("decile")} as decile, n_customers,
-         |  ${roundAway(d)("cast(spend_cents as double) / 100", 2)} as total_spend,
-         |  ${roundAway(d)("cast(spend_cents as double) / n_customers / 100", 2)} as avg_spend,
-         |  ${roundAway(d)("cast(min_cents as double) / 100", 2)} as min_spend,
-         |  ${roundAway(d)("cast(max_cents as double) / 100", 2)} as max_spend,
-         |  ${roundAway(d)("cast(spend_cents as double) / t.ts", 4)} as spend_share,
-         |  ${roundAway(d)("cast(sum(spend_cents) over (order by decile rows between unbounded preceding and current row) as double) / t.ts", 4)} as cum_spend_share
+         |  ${roundAway("cast(spend_cents as double) / 100", 2)} as total_spend,
+         |  ${roundAway("cast(spend_cents as double) / n_customers / 100", 2)} as avg_spend,
+         |  ${roundAway("cast(min_cents as double) / 100", 2)} as min_spend,
+         |  ${roundAway("cast(max_cents as double) / 100", 2)} as max_spend,
+         |  ${roundAway("cast(spend_cents as double) / t.ts", 4)} as spend_share,
+         |  ${roundAway("cast(sum(spend_cents) over (order by decile rows between unbounded preceding and current row) as double) / t.ts", 4)} as cum_spend_share
          |from ag cross join tot t""".stripMargin
     },
 
@@ -10286,10 +10270,10 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |mad as (select min(ad) as mv from drk cross join mt
          |        where rn = cast(ceil(m * 0.5) as bigint))
          |select ${bigint("s.day")} as day, ${bigint("s.x")} as n_events, ${bigint("s.dow")} as dow,
-         |  ${roundAway(d)("s.dow_mean", 4)} as dow_mean,
-         |  ${roundAway(d)("s.r", 4)} as residual,
+         |  ${roundAway("s.dow_mean", 4)} as dow_mean,
+         |  ${roundAway("s.r", 4)} as residual,
          |  case when a.mv > 0
-         |       then ${roundAway(d)("0.6745 * (s.r - m.md) / a.mv", 4)} end as robust_z,
+         |       then ${roundAway("0.6745 * (s.r - m.md) / a.mv", 4)} end as robust_z,
          |  case when a.mv > 0 and abs(0.6745 * (s.r - m.md) / a.mv) > 3.5
          |       then 1 else 0 end as is_outlier
          |from res s cross join med m cross join mad a""".stripMargin,
@@ -10317,10 +10301,10 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |               ${bigint("max(ld)")} as mx
          |        from lat group by pri)
          |select pri as priority, n as n_lines,
-         |  ${roundAway(d)("cast(s as double) / n", 4)} as mean_latency_days,
-         |  ${roundAway(d)("cast(w30 as double) / n", 4)} as pct_within_30d,
-         |  ${roundAway(d)("cast(w60 as double) / n", 4)} as pct_within_60d,
-         |  ${roundAway(d)("cast(w90 as double) / n", 4)} as pct_within_90d,
+         |  ${roundAway("cast(s as double) / n", 4)} as mean_latency_days,
+         |  ${roundAway("cast(w30 as double) / n", 4)} as pct_within_30d,
+         |  ${roundAway("cast(w60 as double) / n", 4)} as pct_within_60d,
+         |  ${roundAway("cast(w90 as double) / n", 4)} as pct_within_90d,
          |  mx as max_latency_days
          |from agg""".stripMargin
     },
@@ -10357,7 +10341,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |              else cast(pow(cast(2 as double), bits) as bigint) - 1 end as cmax
          |       from qz),
          |er as (select bits, cmax, code, abs(val - deq) as ae,
-         |         ${bigint(roundAway(d)("(val - deq) * (val - deq) * 1000000000000", 0))} as e2q
+         |         ${bigint(roundAway("(val - deq) * (val - deq) * 1000000000000", 0))} as e2q
          |       from rc),
          |agg as (select bits, ${bigint("count(*)")} as n, ${bigint("sum(e2q)")} as se2,
          |          max(ae) as mae,
@@ -10365,10 +10349,10 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |        from er group by bits)
          |select ${bigint("bits")} as bits,
          |  ${bigint(s"cast(pow(cast(2 as double), bits) as bigint)")} as n_levels,
-         |  ${roundAway(d)("cast(se2 as double) / (cast(n as double) * 1000000000000)", 9)} as mse,
-         |  ${roundAway(d)("mae", 6)} as max_abs_err,
+         |  ${roundAway("cast(se2 as double) / (cast(n as double) * 1000000000000)", 9)} as mse,
+         |  ${roundAway("mae", 6)} as max_abs_err,
          |  clamped as n_clamped,
-         |  ${roundAway(d)("cast(64 as double) / bits", 2)} as compression_x
+         |  ${roundAway("cast(64 as double) / bits", 2)} as compression_x
          |from agg""".stripMargin
     },
 
@@ -10407,8 +10391,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |hits as (select p.dm, ${bigint("count(*)")} as hits
          |         from pt p join bt b on b.qid = p.qid and b.cid = p.cid group by p.dm)
          |select ${bigint("dm")} as prefix_dim, hits,
-         |  ${roundAway(d)("cast(hits as double) / 50", 4)} as recall10,
-         |  ${roundAway(d)("cast(64 as double) / dm", 2)} as compression_x
+         |  ${roundAway("cast(hits as double) / 50", 4)} as recall10,
+         |  ${roundAway("cast(64 as double) / dm", 2)} as compression_x
          |from hits""".stripMargin
     },
 
@@ -10436,9 +10420,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |select ${bigint("b.bucket")} as log2_bucket,
          |  ${bigint("case when b.bucket < 0 then 0 else cast(pow(cast(2 as double), b.bucket) as bigint) end")} as bucket_min,
          |  b.n_nodes, b.n_in_edges,
-         |  ${roundAway(d)("cast(b.n_nodes as double) / t.u", 4)} as node_share,
-         |  ${roundAway(d)("cast(b.n_in_edges as double) / t.e", 4)} as edge_share,
-         |  ${roundAway(d)("cast(sum(b.n_nodes) over (order by b.bucket) as double) / t.u", 4)} as cum_node_share
+         |  ${roundAway("cast(b.n_nodes as double) / t.u", 4)} as node_share,
+         |  ${roundAway("cast(b.n_in_edges as double) / t.e", 4)} as edge_share,
+         |  ${roundAway("cast(sum(b.n_nodes) over (order by b.bucket) as double) / t.u", 4)} as cum_node_share
          |from bc b cross join tot t""".stripMargin
     },
 
@@ -10455,7 +10439,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // windows. Bigint ceiling: n·lnq(n) < 2^63 holds to ~10⁸ events
     // per user — far past any real per-user cap.
     "events_user_entropy" renders {
-      def lnq(x: String) = bigint(roundAway(d)(s"ln(cast($x as double)) * 1000000000", 0))
+      def lnq(x: String) = bigint(roundAway(s"ln(cast($x as double)) * 1000000000", 0))
       s"""with tc as (select user_id, event_type, ${bigint("count(*)")} as k from events
          |            group by user_id, event_type),
          |ue as (select user_id, ${bigint("sum(k)")} as n,
@@ -10463,20 +10447,20 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |         ${bigint("count(*)")} as n_types
          |       from tc group by user_id),
          |hu as (select user_id, n, n_types,
-         |         ${roundAway(d)(s"cast(n * ${lnq("n")} - slnk as double) / (cast(n as double) * 1000000000)", 6)} as h
+         |         ${roundAway(s"cast(n * ${lnq("n")} - slnk as double) / (cast(n as double) * 1000000000)", 6)} as h
          |       from ue),
          |hb as (select cast(floor(h * 4) as bigint) as bin, h, n_types from hu),
          |bc as (select bin, ${bigint("count(*)")} as n_users,
          |         ${bigint("sum(case when n_types = 1 then 1 else 0 end)")} as n_single
          |       from hb group by bin),
-         |mh as (select ${bigint(s"sum(${bigint(roundAway(d)("h * 1000000", 0))})")} as smq,
+         |mh as (select ${bigint(s"sum(${bigint(roundAway("h * 1000000", 0))})")} as smq,
          |         ${bigint("count(*)")} as nu
          |       from hu)
          |select ${bigint("b.bin")} as bin,
-         |  ${roundAway(d)("b.bin / cast(4 as double)", 2)} as bin_lo_nats,
+         |  ${roundAway("b.bin / cast(4 as double)", 2)} as bin_lo_nats,
          |  b.n_users, b.n_single as n_single_type,
-         |  ${roundAway(d)("cast(b.n_users as double) / m.nu", 4)} as user_share,
-         |  ${roundAway(d)("cast(m.smq as double) / 1000000 / m.nu", 6)} as mean_entropy
+         |  ${roundAway("cast(b.n_users as double) / m.nu", 4)} as user_share,
+         |  ${roundAway("cast(m.smq as double) / 1000000 / m.nu", 6)} as mean_entropy
          |from bc b cross join mh m""".stripMargin
     },
 
@@ -10494,7 +10478,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // clamped at 1e-12, stated) are censused, not silently dropped.
     // Output ≤ 102 clamped unit bins + the exact-sum global mean.
     "vec_lid" renders {
-      def lnq9(x: String) = bigint(roundAway(d)(s"ln($x) * 1000000000", 0))
+      def lnq9(x: String) = bigint(roundAway(s"ln($x) * 1000000000", 0))
       s"""${wmChain("knn")},
          |dk as (select src, max(rn) as kk from knn group by src),
          |lastn as (select k.src, k.sim as sk from knn k join dk on dk.src = k.src and k.rn = dk.kk),
@@ -10507,14 +10491,14 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |              else cast(null as double) end as lid
          |       from pl),
          |hb as (select least(${bigint("floor(lid)")}, ${bigint("100")}) as bin,
-         |              ${bigint(roundAway(d)("lid * 1000000", 0))} as lq
+         |              ${bigint(roundAway("lid * 1000000", 0))} as lq
          |       from li where lid is not null),
          |bc as (select bin, ${bigint("count(*)")} as n_nodes, ${bigint("sum(lq)")} as slq from hb group by bin),
          |tot as (select ${bigint("sum(n_nodes)")} as nn, ${bigint("sum(slq)")} as sq from bc),
          |dg as (select ${bigint("count(*)")} as n_degenerate from li where lid is null)
          |select ${bigint("b.bin")} as lid_bin, b.n_nodes,
-         |  ${roundAway(d)("cast(b.n_nodes as double) / t.nn", 4)} as node_share,
-         |  ${roundAway(d)("cast(t.sq as double) / 1000000 / t.nn", 6)} as mean_lid,
+         |  ${roundAway("cast(b.n_nodes as double) / t.nn", 4)} as node_share,
+         |  ${roundAway("cast(t.sq as double) / 1000000 / t.nn", 6)} as mean_lid,
          |  g.n_degenerate
          |from bc b cross join tot t cross join dg g""".stripMargin
     },
@@ -10534,7 +10518,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // all-dmin tail (Σ = 0) → α null. Bigint ceiling n·lnq(dmax)
     // < 2^63 to ~10⁸ tail nodes.
     "graph_powerlaw_fit" renders {
-      def lnq9(x: String) = bigint(roundAway(d)(s"ln($x) * 1000000000", 0))
+      def lnq9(x: String) = bigint(roundAway(s"ln($x) * 1000000000", 0))
       s"""${wmChain("knn")},
          |tl as (select in_degree as c from indeg where in_degree >= 2),
          |allc as (select ${bigint("count(*)")} as n_all from indeg),
@@ -10547,13 +10531,13 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |dg as (select c, ${bigint("count(*)")} as m from tl group by c),
          |cg as (select c, ${bigint("sum(m) over (order by c desc)")} as n_ge from dg),
          |ks as (select max(abs(cast(g.n_ge as double) / a.n -
-         |         ${roundAway(d)(s"exp((cast(1 as double) - a.alpha) * cast(${lnq9("cast(g.c as double)")} - ${lnq9("cast(2 as double)")} as double) / 1000000000)", 6)})) as ksd
+         |         ${roundAway(s"exp((cast(1 as double) - a.alpha) * cast(${lnq9("cast(g.c as double)")} - ${lnq9("cast(2 as double)")} as double) / 1000000000)", 6)})) as ksd
          |       from cg g cross join al a where a.alpha is not null)
          |select x.n_all as n_nodes, a.n as n_tail, ${bigint("2")} as d_min,
-         |  ${roundAway(d)("a.alpha", 6)} as alpha,
-         |  ${roundAway(d)("case when a.alpha is null then cast(null as double) else (a.alpha - 1) / sqrt(cast(a.n as double)) end", 6)} as alpha_se,
-         |  ${roundAway(d)("k.ksd", 4)} as ks_d,
-         |  ${roundAway(d)("cast(a.n as double) / x.n_all", 4)} as tail_share
+         |  ${roundAway("a.alpha", 6)} as alpha,
+         |  ${roundAway("case when a.alpha is null then cast(null as double) else (a.alpha - 1) / sqrt(cast(a.n as double)) end", 6)} as alpha_se,
+         |  ${roundAway("k.ksd", 4)} as ks_d,
+         |  ${roundAway("cast(a.n as double) / x.n_all", 4)} as tail_share
          |from al a cross join allc x cross join ks k""".stripMargin
     },
 
@@ -10575,7 +10559,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // combinable groupBys; 1-row output. Bigint ceiling n·lnq(n) <
     // 2^63 to ~10⁸ transitions (then pre-scale counts, §4 ladder).
     "events_entropy_rate" renders {
-      def lnq9(x: String) = bigint(roundAway(d)(s"ln(cast($x as double)) * 1000000000", 0))
+      def lnq9(x: String) = bigint(roundAway(s"ln(cast($x as double)) * 1000000000", 0))
       s"""with e as (select user_id, event_id, event_type, ${evSec("ts")} as sec from events),
          |s as (select event_type as src,
          |        lead(event_type) over (partition by user_id order by sec, event_id) as dst
@@ -10587,10 +10571,10 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |       from t join tt on tt.src = t.src),
          |hm as (select ${bigint(s"sum(n * ${lnq9("n")})")} as snn, ${bigint("count(*)")} as n_types from tt)
          |select r.nn as n_transitions, m.n_types,
-         |  ${roundAway(d)(s"cast(r.nn * ${lnq9("r.nn")} - m.snn as double) / (cast(r.nn as double) * 1000000000)", 6)} as h_marginal,
-         |  ${roundAway(d)("cast(r.num as double) / (cast(r.nn as double) * 1000000000)", 6)} as h_rate,
-         |  ${roundAway(d)(s"cast((r.nn * ${lnq9("r.nn")} - m.snn) - r.num as double) / (cast(r.nn as double) * 1000000000)", 6)} as info_gain,
-         |  ${roundAway(d)(s"case when r.nn * ${lnq9("r.nn")} - m.snn = 0 then cast(null as double) else cast(r.num as double) / cast(r.nn * ${lnq9("r.nn")} - m.snn as double) end", 4)} as conditional_share
+         |  ${roundAway(s"cast(r.nn * ${lnq9("r.nn")} - m.snn as double) / (cast(r.nn as double) * 1000000000)", 6)} as h_marginal,
+         |  ${roundAway("cast(r.num as double) / (cast(r.nn as double) * 1000000000)", 6)} as h_rate,
+         |  ${roundAway(s"cast((r.nn * ${lnq9("r.nn")} - m.snn) - r.num as double) / (cast(r.nn as double) * 1000000000)", 6)} as info_gain,
+         |  ${roundAway(s"case when r.nn * ${lnq9("r.nn")} - m.snn = 0 then cast(null as double) else cast(r.num as double) / cast(r.nn * ${lnq9("r.nn")} - m.snn as double) end", 4)} as conditional_share
          |from hr r cross join hm m""".stripMargin
     },
 
@@ -10746,7 +10730,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
                 |          ${bigint("sum(case when rrn <= 10 then 1 else 0 end)")} as n_r, ${bigint("sum(case when rrn <= 10 then hit else 0 end)")} as h_r
                 |        from hx)
                 |select method, n_pairs, hits,
-                |  ${roundAway(d)("cast(hits as double) / 50", 4)} as recall10
+                |  ${roundAway("cast(hits as double) / 50", 4)} as recall10
                 |from (select stack(4, 'lsh', n_l, h_l, 'ivf', n_i, h_i, 'bq', n_b, h_b, 'rrf', n_r, h_r) as (method, n_pairs, hits)
                 |      from agg) _s""".stripMargin
            else
@@ -10763,7 +10747,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
                 |         from allm m left join bt b on b.qid = m.qid and b.cid = m.cid
                 |         group by m.method)
                 |select method, n_pairs, hits,
-                |  ${roundAway(d)("cast(hits as double) / 50", 4)} as recall10
+                |  ${roundAway("cast(hits as double) / 50", 4)} as recall10
                 |from hits""".stripMargin
          }""".stripMargin
     },
@@ -10786,7 +10770,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     "events_exp_fit" renders {
       val lad = (39 to 1 by -1).map(b =>
         s"when gap >= ${1L << b} then $b").mkString("case ", " ", " else 0 end")
-      def qexp(x: String) = roundAway(d)(s"exp(-(l.lambda) * ($x))", 9)
+      def qexp(x: String) = roundAway(s"exp(-(l.lambda) * ($x))", 9)
       s"""with e as (select user_id, event_id, ${evSec("ts")} as sec from events),
          |g as (select sec - lag(sec) over (partition by user_id order by sec, event_id) as gap from e),
          |gp as (select gap from g where gap is not null and gap >= 1),
@@ -10798,16 +10782,16 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |          - ${qexp("cast(pow(cast(2 as double), o.b + 1) as double)")}) as p
          |       from ob o cross join lam l),
          |ch as (select b, obs, n, lambda, sg, p, cast(n as double) * p as expn,
-         |         case when p > 0 then ${bigint(roundAway(d)("(obs - cast(n as double) * p) * (obs - cast(n as double) * p) / (cast(n as double) * p) * 1000000", 0))}
+         |         case when p > 0 then ${bigint(roundAway("(obs - cast(n as double) * p) * (obs - cast(n as double) * p) / (cast(n as double) * p) * 1000000", 0))}
          |              else cast(null as bigint) end as chq
          |       from ex),
          |tot as (select ${bigint("sum(chq)")} as schq, ${bigint("count(chq)")} as n_tested from ch)
          |select ${bigint("c.b")} as log2_bucket,
          |  ${bigint("cast(pow(cast(2 as double), c.b) as bigint)")} as bucket_lo_s,
-         |  c.obs as n_obs, ${roundAway(d)("c.expn", 4)} as expected_n,
-         |  ${roundAway(d)("c.lambda", 9)} as lambda,
-         |  ${roundAway(d)("cast(c.sg as double) / c.n", 4)} as mean_gap_s,
-         |  ${roundAway(d)("cast(t.schq as double) / 1000000", 4)} as chi2_total,
+         |  c.obs as n_obs, ${roundAway("c.expn", 4)} as expected_n,
+         |  ${roundAway("c.lambda", 9)} as lambda,
+         |  ${roundAway("cast(c.sg as double) / c.n", 4)} as mean_gap_s,
+         |  ${roundAway("cast(t.schq as double) / 1000000", 4)} as chi2_total,
          |  t.n_tested as n_buckets_tested
          |from ch c cross join tot t""".stripMargin
     },
@@ -10829,7 +10813,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
       s"""with tok as (select doc_id, ${bigint(d.arrLen(splitWs("lower(text)")))} as ntok from documents),
          |pos as (select ntok from tok where ntok >= 1),
          |zc as (select ${bigint("count(*)")} as n_zero from tok where ntok < 1),
-         |lq as (select ntok, ${bigint(roundAway(d)("ln(cast(ntok as double)) * 1000", 0))} as l3 from pos),
+         |lq as (select ntok, ${bigint(roundAway("ln(cast(ntok as double)) * 1000", 0))} as l3 from pos),
          |st as (select ${bigint("count(*)")} as n, ${bigint("sum(l3)")} as s1, ${bigint("sum(l3 * l3)")} as s2 from lq),
          |fit as (select n, s1, s2,
          |          cast(s1 as double) / n / 1000 as mu,
@@ -10840,14 +10824,14 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |med as (select ${bigint("min(ntok)")} as v from cw cross join st where cm * 2 >= st.n),
          |p84 as (select ${bigint("min(ntok)")} as v from cw cross join st where cm * 100 >= st.n * 84)
          |select f.n as n_docs, z.n_zero as n_zero_docs,
-         |  ${roundAway(d)("f.mu", 6)} as mu_ln_tokens,
-         |  ${roundAway(d)("f.sigma", 6)} as sigma_ln_tokens,
+         |  ${roundAway("f.mu", 6)} as mu_ln_tokens,
+         |  ${roundAway("f.sigma", 6)} as sigma_ln_tokens,
          |  m.v as median_tokens,
-         |  ${roundAway(d)("exp(f.mu)", 4)} as fitted_median,
-         |  ${roundAway(d)("cast(m.v as double) / exp(f.mu)", 4)} as median_ratio,
+         |  ${roundAway("exp(f.mu)", 4)} as fitted_median,
+         |  ${roundAway("cast(m.v as double) / exp(f.mu)", 4)} as median_ratio,
          |  p.v as p84_tokens,
-         |  ${roundAway(d)("exp(f.mu + f.sigma)", 4)} as fitted_p84,
-         |  ${roundAway(d)("cast(p.v as double) / exp(f.mu + f.sigma)", 4)} as p84_ratio
+         |  ${roundAway("exp(f.mu + f.sigma)", 4)} as fitted_p84,
+         |  ${roundAway("cast(p.v as double) / exp(f.mu + f.sigma)", 4)} as p84_ratio
          |from fit f cross join med m cross join p84 p cross join zc z""".stripMargin,
 
     // POISSON ORDER-SIZE GOF — the count-data member of the GOF trio
@@ -10871,23 +10855,23 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |lam as (select n, sk, sk2, cast(sk as double) / n as lambda from st),
          |kc as (select k, ${bigint("count(*)")} as obs from oc group by k),
          |fl as $fk,
-         |p0 as (select ${roundAway(d)("exp(-lambda)", 9)} as pz, lambda, n, sk, sk2 from lam),
+         |p0 as (select ${roundAway("exp(-lambda)", 9)} as pz, lambda, n, sk, sk2 from lam),
          |ex as (select kc.k, kc.obs, p.n, p.lambda, p.pz, p.sk, p.sk2, fl.fk,
-         |         ${roundAway(d)("exp(-p.lambda) * pow(p.lambda, kc.k) / fl.fk", 9)} as praw
+         |         ${roundAway("exp(-p.lambda) * pow(p.lambda, kc.k) / fl.fk", 9)} as praw
          |       from kc left join fl on fl.k = kc.k cross join p0 p),
          |ch as (select k, obs, n, lambda, sk, sk2,
          |         case when fk is not null and pz < 1 then praw / (1 - pz) else cast(null as double) end as pt
          |       from ex),
          |ct as (select k, obs, n, lambda, sk, sk2, pt, cast(n as double) * pt as expn,
-         |         case when pt > 0 then ${bigint(roundAway(d)("(obs - cast(n as double) * pt) * (obs - cast(n as double) * pt) / (cast(n as double) * pt) * 1000000", 0))}
+         |         case when pt > 0 then ${bigint(roundAway("(obs - cast(n as double) * pt) * (obs - cast(n as double) * pt) / (cast(n as double) * pt) * 1000000", 0))}
          |              else cast(null as bigint) end as chq
          |       from ch),
          |tot as (select ${bigint("sum(chq)")} as schq, ${bigint("count(chq)")} as n_tested from ct)
          |select ${bigint("c.k")} as n_lineitems, c.obs as n_orders,
-         |  ${roundAway(d)("c.expn", 4)} as expected_n,
-         |  ${roundAway(d)("c.lambda", 6)} as lambda,
-         |  ${roundAway(d)("cast(c.n * c.sk2 - c.sk * c.sk as double) / (cast(c.n as double) * c.sk)", 6)} as dispersion_idx,
-         |  ${roundAway(d)("cast(t.schq as double) / 1000000", 4)} as chi2_total,
+         |  ${roundAway("c.expn", 4)} as expected_n,
+         |  ${roundAway("c.lambda", 6)} as lambda,
+         |  ${roundAway("cast(c.n * c.sk2 - c.sk * c.sk as double) / (cast(c.n as double) * c.sk)", 6)} as dispersion_idx,
+         |  ${roundAway("cast(t.schq as double) / 1000000", 4)} as chi2_total,
          |  t.n_tested as n_k_tested
          |from ct c cross join tot t""".stripMargin
     },
@@ -10931,13 +10915,13 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |       from exn group by pos),
          |tot as (select ${bigint("sum(ones * (n - ones))")} as cross_sum,
          |          ${bigint("min(n)")} as nv,
-         |          ${bigint(s"sum(${bigint(roundAway(d)("4 * (cast(ones as double) / n) * (1 - cast(ones as double) / n) * 1000000", 0))})")} as effq
+         |          ${bigint(s"sum(${bigint(roundAway("4 * (cast(ones as double) / n) * (1 - cast(ones as double) / n) * 1000000", 0))})")} as effq
          |        from pb)
          |select ${bigint("p.pos")} as bit_idx, p.ones as n_ones,
-         |  ${roundAway(d)("cast(p.ones as double) / p.n", 4)} as ones_share,
-         |  ${roundAway(d)("abs(cast(p.ones as double) / p.n - cast(1 as double) / 2)", 4)} as balance_dev,
-         |  ${roundAway(d)("cast(t.cross_sum as double) * 2 / (cast(t.nv as double) * (t.nv - 1))", 4)} as mean_pairwise_hamming,
-         |  ${roundAway(d)("cast(t.effq as double) / 1000000", 4)} as effective_bits
+         |  ${roundAway("cast(p.ones as double) / p.n", 4)} as ones_share,
+         |  ${roundAway("abs(cast(p.ones as double) / p.n - cast(1 as double) / 2)", 4)} as balance_dev,
+         |  ${roundAway("cast(t.cross_sum as double) * 2 / (cast(t.nv as double) * (t.nv - 1))", 4)} as mean_pairwise_hamming,
+         |  ${roundAway("cast(t.effq as double) / 1000000", 4)} as effective_bits
          |from pb p cross join tot t""".stripMargin,
 
     // FORECAST BACKTEST — is the trend × seasonality model worth
@@ -10974,14 +10958,14 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |       left join prof p on p.dow = t.dow
          |       left join daily lv on lv.day = b.dmax - 7
          |       left join daily d7 on d7.day = t.day - 7),
-         |er as (select 'model' as method, ${bigint(roundAway(d)("abs(n - p_model) * 1000000", 0))} as ae, ${bigint(roundAway(d)("(n - p_model) * 1000000", 0))} as se from pv
-         |       union all select 'naive_last' as method, ${bigint(roundAway(d)("abs(n - p_last) * 1000000", 0))} as ae, ${bigint(roundAway(d)("(n - p_last) * 1000000", 0))} as se from pv
-         |       union all select 'seasonal_naive' as method, ${bigint(roundAway(d)("abs(n - p_seasonal) * 1000000", 0))} as ae, ${bigint(roundAway(d)("(n - p_seasonal) * 1000000", 0))} as se from pv),
+         |er as (select 'model' as method, ${bigint(roundAway("abs(n - p_model) * 1000000", 0))} as ae, ${bigint(roundAway("(n - p_model) * 1000000", 0))} as se from pv
+         |       union all select 'naive_last' as method, ${bigint(roundAway("abs(n - p_last) * 1000000", 0))} as ae, ${bigint(roundAway("(n - p_last) * 1000000", 0))} as se from pv
+         |       union all select 'seasonal_naive' as method, ${bigint(roundAway("abs(n - p_seasonal) * 1000000", 0))} as ae, ${bigint(roundAway("(n - p_seasonal) * 1000000", 0))} as se from pv),
          |agg as (select method, ${bigint("count(*)")} as n_test, ${bigint("sum(ae)")} as sae, ${bigint("sum(se)")} as sse
          |        from er group by method)
          |select method, n_test,
-         |  ${roundAway(d)("cast(sae as double) / 1000000 / n_test", 4)} as mae,
-         |  ${roundAway(d)("cast(sse as double) / 1000000 / n_test", 4)} as mean_bias
+         |  ${roundAway("cast(sae as double) / 1000000 / n_test", 4)} as mae,
+         |  ${roundAway("cast(sse as double) / 1000000 / n_test", 4)} as mean_bias
          |from agg""".stripMargin,
 
     // PQ CODEBOOK-USAGE BALANCE — the last member of the per-index
@@ -10998,7 +10982,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // Output = |subspaces| rows. Dead codes come from the LEFT join
     // of the trained codebook onto usage — never dropped silently.
     "vec_pq_codebook_balance" renders {
-      def lnq9(x: String) = bigint(roundAway(d)(s"ln(cast($x as double)) * 1000000000", 0))
+      def lnq9(x: String) = bigint(roundAway(s"ln(cast($x as double)) * 1000000000", 0))
       val chain =
         if (views) Seq(viewAlias("pct1", "g_pq_ct"), viewAlias("codes", "g_pq_codes")).mkString(",\n")
         else Seq(pqBaseCtes, pqTrainCtes, pqEncodeCtes).mkString(",\n")
@@ -11014,9 +10998,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |         ${bigint(s"sum(case when c > 0 then c * ${lnq9("c")} else ${bigint("0")} end)")} as slnk
          |       from tb group by m)
          |select ${bigint("m")} as subspace, n_codes, n_dead,
-         |  ${roundAway(d)(s"cast(n * ${lnq9("n")} - slnk as double) / (cast(n as double) * 1000000000)", 6)} as usage_entropy,
-         |  ${roundAway(d)(s"exp(cast(n * ${lnq9("n")} - slnk as double) / (cast(n as double) * 1000000000))", 4)} as usage_perplexity,
-         |  ${roundAway(d)("cast(cmax as double) / n", 4)} as max_code_share
+         |  ${roundAway(s"cast(n * ${lnq9("n")} - slnk as double) / (cast(n as double) * 1000000000)", 6)} as usage_entropy,
+         |  ${roundAway(s"exp(cast(n * ${lnq9("n")} - slnk as double) / (cast(n as double) * 1000000000))", 4)} as usage_perplexity,
+         |  ${roundAway("cast(cmax as double) / n", 4)} as max_code_share
          |from ag""".stripMargin
     },
 
@@ -11049,7 +11033,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // and per-pair folds run on ≤ |days|·|types| rows.
     "events_mix_shift" renders {
       def lg(x: String): String =
-        bigint(roundAway(d)(s"ln(cast($x as double)) * 1000000000", 0))
+        bigint(roundAway(s"ln(cast($x as double)) * 1000000000", 0))
       s"""with dt as (select ${d.idiv(evSec("ts"), "86400")} as day, event_type, ${bigint("count(*)")} as c
          |            from events group by ${d.idiv(evSec("ts"), "86400")}, event_type),
          |nd as (select day, ${bigint("sum(c)")} as n from dt group by day),
@@ -11067,8 +11051,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |         ${bigint(s"sum(case when c2 > 0 then c2 * (${lg("2 * c2 * n1")} - ${lg("c1 * n2 + c2 * n1")}) else ${bigint("0")} end)")} as sq
          |       from tm group by d1, d2, n1, n2)
          |select ${bigint("d2")} as day, ${bigint("d1")} as prev_day, n2 as n_events, n1 as n_prev,
-         |  ${roundAway(d)("(cast(sp as double) / n1 + cast(sq as double) / n2) / cast(2 as double) / 1000000000", 6)} as js_nats,
-         |  ${roundAway(d)("(cast(sp as double) / n1 + cast(sq as double) / n2) / cast(2 as double) / 1000000000 / ln(cast(2 as double))", 4)} as js_normalized
+         |  ${roundAway("(cast(sp as double) / n1 + cast(sq as double) / n2) / cast(2 as double) / 1000000000", 6)} as js_nats,
+         |  ${roundAway("(cast(sp as double) / n1 + cast(sq as double) / n2) / cast(2 as double) / 1000000000 / ln(cast(2 as double))", 4)} as js_normalized
          |from js""".stripMargin
     },
 
@@ -11148,8 +11132,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |       group by m.method, m.bytes_per_vector),
          |rawr as (select 'raw_f64' as method, ${bigint("512")} as bytes_per_vector, ${bigint("count(*)")} as hits from bt)
          |select method, bytes_per_vector, hits,
-         |  ${roundAway(d)("cast(hits as double) / 50", 4)} as recall10,
-         |  ${roundAway(d)("cast(512 as double) / bytes_per_vector", 2)} as compression_x
+         |  ${roundAway("cast(hits as double) / 50", 4)} as recall10,
+         |  ${roundAway("cast(512 as double) / bytes_per_vector", 2)} as compression_x
          |from (select * from rawr union all select * from hh) _u""".stripMargin
     },
 
@@ -11178,10 +11162,10 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |       group by c.k),
          |tot as (select ${bigint("count(*)")} as n_all from indeg)
          |select ${bigint("s.k")} as degree_gt, s.n_club,
-         |  ${roundAway(d)("cast(s.n_club as double) / t.n_all", 4)} as club_share,
+         |  ${roundAway("cast(s.n_club as double) / t.n_all", 4)} as club_share,
          |  coalesce(e.n_edges, ${bigint("0")}) as n_intra_edges,
          |  case when s.n_club >= 2
-         |       then ${roundAway(d)("cast(coalesce(e.n_edges, 0) as double) / (cast(s.n_club as double) * (s.n_club - 1))", 4)}
+         |       then ${roundAway("cast(coalesce(e.n_edges, 0) as double) / (cast(s.n_club as double) * (s.n_club - 1))", 4)}
          |       else cast(null as double) end as phi
          |from cs s cross join tot t left join ce e on e.k = s.k""".stripMargin,
 
@@ -11233,7 +11217,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |select ${bigint("stage")} as stage,
          |  case when stage = 1 then 'view_to_click' else 'click_to_purchase' end as transition,
          |  n as n_converted,
-         |  ${roundAway(d)("cast(sdt as double) / n / 60", 4)} as mean_minutes,
+         |  ${roundAway("cast(sdt as double) / n / 60", 4)} as mean_minutes,
          |  med as median_minutes, p90 as p90_minutes
          |from q""".stripMargin
     },
@@ -11301,7 +11285,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |  m.n_active, c.n_cohort,
          |  round(cast(m.val as double), 2) as period_value,
          |  round(cast(m.cval as double), 2) as cum_value,
-         |  ${roundAway(d)("cast(m.cval as double) / c.n_cohort", 4)} as ltv_per_user
+         |  ${roundAway("cast(m.cval as double) / c.n_cohort", 4)} as ltv_per_user
          |from cm m join cs c on c.cohort_wk = m.cohort_wk""".stripMargin,
 
     // ADJACENT-WORD ENTROPY RATE — the text twin of
@@ -11317,7 +11301,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // case but observed-pairs-sized in practice — the same envelope
     // as text_cooccur. Ceiling n·lnq(n) < 2^63 to ~10⁸ tokens.
     "text_entropy_rate" renders {
-      def lnq9(x: String) = bigint(roundAway(d)(s"ln(cast($x as double)) * 1000000000", 0))
+      def lnq9(x: String) = bigint(roundAway(s"ln(cast($x as double)) * 1000000000", 0))
       s"""with $wordCtes,
          |bg as (select wd as w1, w2 from (${adjWordsFrom(2)}) _bg),
          |t as (select w1, w2, ${bigint("count(*)")} as c from bg where w2 is not null group by w1, w2),
@@ -11327,10 +11311,10 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |       from t join tt on tt.w1 = t.w1),
          |hm as (select ${bigint(s"sum(n * ${lnq9("n")})")} as snn, ${bigint("count(*)")} as n_types from tt)
          |select r.nn as n_bigrams, m.n_types as n_first_words,
-         |  ${roundAway(d)(s"cast(r.nn * ${lnq9("r.nn")} - m.snn as double) / (cast(r.nn as double) * 1000000000)", 6)} as h_unigram,
-         |  ${roundAway(d)("cast(r.num as double) / (cast(r.nn as double) * 1000000000)", 6)} as h_conditional,
-         |  ${roundAway(d)(s"cast((r.nn * ${lnq9("r.nn")} - m.snn) - r.num as double) / (cast(r.nn as double) * 1000000000)", 6)} as mutual_info,
-         |  ${roundAway(d)(s"case when r.nn * ${lnq9("r.nn")} - m.snn = 0 then cast(null as double) else cast(r.num as double) / cast(r.nn * ${lnq9("r.nn")} - m.snn as double) end", 4)} as conditional_share
+         |  ${roundAway(s"cast(r.nn * ${lnq9("r.nn")} - m.snn as double) / (cast(r.nn as double) * 1000000000)", 6)} as h_unigram,
+         |  ${roundAway("cast(r.num as double) / (cast(r.nn as double) * 1000000000)", 6)} as h_conditional,
+         |  ${roundAway(s"cast((r.nn * ${lnq9("r.nn")} - m.snn) - r.num as double) / (cast(r.nn as double) * 1000000000)", 6)} as mutual_info,
+         |  ${roundAway(s"case when r.nn * ${lnq9("r.nn")} - m.snn = 0 then cast(null as double) else cast(r.num as double) / cast(r.nn * ${lnq9("r.nn")} - m.snn as double) end", 4)} as conditional_share
          |from hr r cross join hm m""".stripMargin
     },
 
@@ -11374,7 +11358,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |       from rt t left join bt b on b.qid = t.qid and b.cid = t.cid
          |       group by t.r)
          |select ${bigint("r")} as refine_depth, n_pairs, hits,
-         |  ${roundAway(d)("cast(hits as double) / 50", 4)} as recall10,
+         |  ${roundAway("cast(hits as double) / 50", 4)} as recall10,
          |  ${bigint("r * 5")} as n_exact_scored
          |from hh""".stripMargin
     },
@@ -11420,7 +11404,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |         ${bigint("min(case when hops >= 1 and (n - 1) * 10 >= (mxn - 1) * 9 then hops end)")} as eff_diameter
          |       from wn group by qid)
          |select ${bigint("qid")} as qid, reached as n_reached,
-         |  ${roundAway(d)("cast(sw as double) / reached", 4)} as mean_path_len,
+         |  ${roundAway("cast(sw as double) / reached", 4)} as mean_path_len,
          |  eff_diameter
          |from ag""".stripMargin
     },
@@ -11437,7 +11421,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // ≤ |types| rows — no float fold order anywhere. F and η² are two
     // final divisions; k = 1 or zero within-variance reports null F.
     "events_value_anova" renders {
-      val x = bigint(roundAway(d)("value * 100", 0))
+      val x = bigint(roundAway("value * 100", 0))
       s"""with e as (select event_type, $x as x from events),
          |t as (select event_type, ${bigint("count(*)")} as n, ${bigint("sum(x)")} as s1, ${bigint("sum(x * x)")} as s2
          |      from e group by event_type),
@@ -11447,16 +11431,16 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |        cast(g.st as double) / g.nt / 100 as gmean
          |      from t cross join g),
          |q as (select event_type, n, nt, k, mean_t, gmean,
-         |        ${bigint(roundAway(d)("n * (mean_t - gmean) * (mean_t - gmean) * 10000", 0))} as ssb_q,
-         |        ${bigint(roundAway(d)("(cast(s2 as double) / 10000 - cast(s1 as double) * s1 / n / 10000) * 10000", 0))} as ssw_q
+         |        ${bigint(roundAway("n * (mean_t - gmean) * (mean_t - gmean) * 10000", 0))} as ssb_q,
+         |        ${bigint(roundAway("(cast(s2 as double) / 10000 - cast(s1 as double) * s1 / n / 10000) * 10000", 0))} as ssw_q
          |      from m),
          |agg as (select nt, k, ${bigint("sum(ssb_q)")} as ssb, ${bigint("sum(ssw_q)")} as ssw
          |        from q group by nt, k)
-         |select q.event_type, q.n as n_events, ${roundAway(d)("q.mean_t", 4)} as mean_value,
-         |  ${roundAway(d)("q.gmean", 4)} as grand_mean,
+         |select q.event_type, q.n as n_events, ${roundAway("q.mean_t", 4)} as mean_value,
+         |  ${roundAway("q.gmean", 4)} as grand_mean,
          |  a.k - 1 as df_between, a.nt - a.k as df_within,
-         |  ${roundAway(d)("case when a.k > 1 and a.ssw > 0 then (cast(a.ssb as double) / (a.k - 1)) / (cast(a.ssw as double) / (a.nt - a.k)) else cast(null as double) end", 4)} as f_stat,
-         |  ${roundAway(d)("case when a.ssb + a.ssw > 0 then cast(a.ssb as double) / (a.ssb + a.ssw) else cast(null as double) end", 6)} as eta_squared
+         |  ${roundAway("case when a.k > 1 and a.ssw > 0 then (cast(a.ssb as double) / (a.k - 1)) / (cast(a.ssw as double) / (a.nt - a.k)) else cast(null as double) end", 4)} as f_stat,
+         |  ${roundAway("case when a.ssb + a.ssw > 0 then cast(a.ssb as double) / (a.ssb + a.ssw) else cast(null as double) end", 6)} as eta_squared
          |from q cross join agg a""".stripMargin
     },
 
@@ -11477,14 +11461,14 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |  ${bigint("count(distinct case when user_id % 2 = 1 then user_id end)")} as nb
          |  from events)
          |select ${bigint("0")} as variant, na as n_users,
-         |  ${roundAway(d)("cast(na + nb as double) / 2", 1)} as expected_users,
-         |  ${roundAway(d)(chi2, 4)} as chi2,
+         |  ${roundAway("cast(na + nb as double) / 2", 1)} as expected_users,
+         |  ${roundAway(chi2, 4)} as chi2,
          |  ${bigint(s"case when $chi2 > 3.841 then 1 else 0 end")} as srm_flag
          |from c
          |union all
          |select ${bigint("1")}, nb,
-         |  ${roundAway(d)("cast(na + nb as double) / 2", 1)},
-         |  ${roundAway(d)(chi2, 4)},
+         |  ${roundAway("cast(na + nb as double) / 2", 1)},
+         |  ${roundAway(chi2, 4)},
          |  ${bigint(s"case when $chi2 > 3.841 then 1 else 0 end")}
          |from c""".stripMargin
     },
@@ -11515,7 +11499,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |select ${bigint("b.bucket")} as log2_bucket,
          |  ${bigint("cast(pow(cast(2 as double), b.bucket) as bigint)")} as bucket_lo,
          |  b.n_users, b.max_peak,
-         |  ${roundAway(d)("cast(b.n_users as double) / t.nu", 4)} as user_share,
+         |  ${roundAway("cast(b.n_users as double) / t.nu", 4)} as user_share,
          |  h.n_over_10, h.n_over_100
          |from bc b cross join tot t cross join th h""".stripMargin
     },
@@ -11553,7 +11537,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // |t| > 1.96. The variant key is the served user_id % 2
     // assignment. 2-row output.
     "events_ab_value_ttest" renders {
-      val x = bigint(roundAway(d)("value * 100", 0))
+      val x = bigint(roundAway("value * 100", 0))
       def mean(p: String) = s"cast(${p}s1 as double) / ${p}n / 100"
       def vr(p: String) = s"((cast(${p}n as double) * ${p}s2 - cast(${p}s1 as double) * ${p}s1) / (cast(${p}n as double) * (${p}n - 1)) / 10000)"
       val se2 = s"(${vr("a")} / an + ${vr("b")} / bn)"
@@ -11571,19 +11555,19 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |        max(case when variant = 1 then s2 end) as bs2
          |      from t),
          |f as (select an, bn, as1, bs1, as2, bs2,
-         |        ${roundAway(d)(tstat, 4)} as t_stat,
-         |        ${roundAway(d)(dfW, 2)} as df_welch
+         |        ${roundAway(tstat, 4)} as t_stat,
+         |        ${roundAway(dfW, 2)} as df_welch
          |      from w)
          |select ${bigint("0")} as variant, an as n_events,
-         |  ${roundAway(d)(mean("a"), 4)} as mean_value,
-         |  ${roundAway(d)(vr("a"), 4)} as var_value,
+         |  ${roundAway(mean("a"), 4)} as mean_value,
+         |  ${roundAway(vr("a"), 4)} as var_value,
          |  f.t_stat, f.df_welch,
          |  ${bigint("case when abs(f.t_stat) > 1.96 then 1 else 0 end")} as significant
          |from f
          |union all
          |select ${bigint("1")}, bn,
-         |  ${roundAway(d)(mean("b"), 4)},
-         |  ${roundAway(d)(vr("b"), 4)},
+         |  ${roundAway(mean("b"), 4)},
+         |  ${roundAway(vr("b"), 4)},
          |  f.t_stat, f.df_welch,
          |  ${bigint("case when abs(f.t_stat) > 1.96 then 1 else 0 end")}
          |from f""".stripMargin
@@ -11636,12 +11620,12 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |tl as (select cast(th as double) as th from $thLad _t),
          |sv as (select t.th, s.id_a, s.id_b, s.cos_sim from tl t join sims2 s on s.cos_sim >= t.th),
          |pg as (select th, ${bigint("count(*)")} as n_pairs,
-         |         ${bigint(s"sum(${bigint(roundAway(d)("cos_sim * 1000000", 0))})")} as ssim
+         |         ${bigint(s"sum(${bigint(roundAway("cos_sim * 1000000", 0))})")} as ssim
          |       from sv group by th),
          |dg as (select th, ${bigint("count(distinct id)")} as n_docs from (
          |         select th, id_a as id from sv union select th, id_b from sv) _d group by th)
-         |select ${roundAway(d)("p.th", 2)} as cos_threshold, p.n_pairs, g.n_docs as n_docs_involved,
-         |  ${roundAway(d)("cast(p.ssim as double) / 1000000 / p.n_pairs", 4)} as mean_survivor_sim
+         |select ${roundAway("p.th", 2)} as cos_threshold, p.n_pairs, g.n_docs as n_docs_involved,
+         |  ${roundAway("cast(p.ssim as double) / 1000000 / p.n_pairs", 4)} as mean_survivor_sim
          |from pg p join dg g on g.th = p.th""".stripMargin
     },
 
@@ -11680,16 +11664,16 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |t as (select ${bigint("sum(n)")} as nt, ${bigint("count(distinct event_type)")} as nr,
          |             ${bigint("count(distinct dow)")} as nc from o),
          |cell as (select r.event_type, c.dow, r.rt, coalesce(o.n, ${bigint("0")}) as obs,
-         |           ${bigint(roundAway(d)(s"(coalesce(o.n, ${bigint("0")}) - $e) * (coalesce(o.n, ${bigint("0")}) - $e) / ($e) * 1000000", 0))} as tq
+         |           ${bigint(roundAway(s"(coalesce(o.n, ${bigint("0")}) - $e) * (coalesce(o.n, ${bigint("0")}) - $e) / ($e) * 1000000", 0))} as tq
          |         from r cross join c cross join t
          |         left join o on o.event_type = r.event_type and o.dow = c.dow),
          |byt as (select event_type, ${bigint("max(rt)")} as rt, ${bigint("sum(tq)")} as tq from cell group by event_type),
          |tot as (select ${bigint("sum(tq)")} as tq from cell)
          |select b.event_type, b.rt as n_events,
-         |  ${roundAway(d)("cast(b.tq as double) / 1000000", 4)} as chi2_contrib,
-         |  ${roundAway(d)("cast(tot.tq as double) / 1000000", 4)} as chi2_total,
+         |  ${roundAway("cast(b.tq as double) / 1000000", 4)} as chi2_contrib,
+         |  ${roundAway("cast(tot.tq as double) / 1000000", 4)} as chi2_total,
          |  (t.nr - 1) * (t.nc - 1) as df,
-         |  ${roundAway(d)("sqrt(cast(tot.tq as double) / 1000000 / (cast(t.nt as double) * (case when t.nr < t.nc then t.nr else t.nc end - 1)))", 6)} as cramers_v
+         |  ${roundAway("sqrt(cast(tot.tq as double) / 1000000 / (cast(t.nt as double) * (case when t.nr < t.nc then t.nr else t.nc end - 1)))", 6)} as cramers_v
          |from byt b cross join tot cross join t""".stripMargin
     },
 
@@ -11726,7 +11710,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |      group by ks.k)
          |select ${bigint("p.k")} as lag_days, p.n as n_days,
          |  p.sx as sum_view, p.sy as sum_purchase,
-         |  ${roundAway(d)(s"case when p.n >= 3 and p.n * p.sxx > p.sx * p.sx and p.n * p.syy > p.sy * p.sy then $num / $den else cast(null as double) end", 6)} as pearson_r
+         |  ${roundAway(s"case when p.n >= 3 and p.n * p.sxx > p.sx * p.sx and p.n * p.syy > p.sy * p.sy then $num / $den else cast(null as double) end", 6)} as pearson_r
          |from p""".stripMargin
     },
 
@@ -11767,8 +11751,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |       from pw p join nn on nn.event_type = p.event_type
          |       join ties ti on ti.event_type = p.event_type)
          |select event_type, nd as n_days, s as s_stat,
-         |  ${roundAway(d)("case when var18 > 0 then (s - (case when s > 0 then 1 when s < 0 then -1 else 0 end)) / sqrt(cast(var18 as double) / 18) else cast(null as double) end", 4)} as z_stat,
-         |  ${roundAway(d)("case when n0 > tie2 then s / sqrt(cast(n0 as double) * (n0 - tie2)) else cast(null as double) end", 4)} as tau_b,
+         |  ${roundAway("case when var18 > 0 then (s - (case when s > 0 then 1 when s < 0 then -1 else 0 end)) / sqrt(cast(var18 as double) / 18) else cast(null as double) end", 4)} as z_stat,
+         |  ${roundAway("case when n0 > tie2 then s / sqrt(cast(n0 as double) * (n0 - tie2)) else cast(null as double) end", 4)} as tau_b,
          |  ${bigint("case when var18 > 0 and abs(s - (case when s > 0 then 1 when s < 0 then -1 else 0 end)) / sqrt(cast(var18 as double) / 18) > 1.96 then (case when s > 0 then 1 else -1 end) else 0 end")} as trend_flag
          |from mk""".stripMargin
     },
@@ -11790,7 +11774,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |select ${bigint("yr0")} as yr, n as n_items,
          |  round(cast(rev as double), 2) as revenue,
          |  round(cast(prev as double), 2) as prev_revenue,
-         |  ${roundAway(d)("(cast(rev as double) - cast(prev as double)) / cast(prev as double)", 6)} as yoy_growth
+         |  ${roundAway("(cast(rev as double) - cast(prev as double)) / cast(prev as double)", 6)} as yoy_growth
          |from w""".stripMargin,
 
     // K-MEANS ELBOW CURVE — "how many clusters does this corpus
@@ -11825,7 +11809,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |mem as (select a.cell, nn.n from asgF a join nn on nn.id = a.id),
          |mx as (select cell, pos, val from ${d.explodeFrom("mem", "n", "pos", "val", Seq("cell"))} _mx),
          |csum as (select cell, pos,
-         |           sum(cast(${roundAway(d)("val", 9)} as decimal(28, 9))) as s9
+         |           sum(cast(${roundAway("val", 9)} as decimal(28, 9))) as s9
          |         from mx group by cell, pos),
          |cc as (select cell, ${bigint("count(*)")} as n from asgF group by cell),
          |lv as (select 1 as l union all select 2 union all select 4 union all
@@ -11835,16 +11819,16 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |gcnt as (select lv.l, cc.cell % lv.l as g, ${bigint("sum(cc.n)")} as ng
          |         from lv cross join cc group by lv.l, cc.cell % lv.l),
          |gq as (select l, g,
-         |         ${bigint(s"sum(${bigint(roundAway(d)("cast(sg as double) * cast(sg as double) * 1000000", 0))})")} as q
+         |         ${bigint(s"sum(${bigint(roundAway("cast(sg as double) * cast(sg as double) * 1000000", 0))})")} as q
          |       from gsum group by l, g),
          |gi as (select q.l, q.g, n.ng,
-         |         ${bigint("n.ng * 1000000")} - ${bigint(roundAway(d)("cast(q.q as double) / n.ng", 0))} as imicro
+         |         ${bigint("n.ng * 1000000")} - ${bigint(roundAway("cast(q.q as double) / n.ng", 0))} as imicro
          |       from gq q join gcnt n on n.l = q.l and n.g = q.g),
          |lvl as (select l, ${bigint("count(*)")} as n_groups, ${bigint("sum(imicro)")} as iq from gi group by l),
          |base as (select ${bigint("max(case when l = 1 then iq end)")} as iq1 from lvl)
          |select ${bigint("lvl.l")} as k_clusters, lvl.n_groups,
-         |  ${roundAway(d)("cast(lvl.iq as double) / 1000000", 4)} as inertia,
-         |  ${roundAway(d)("case when base.iq1 > 0 then 1 - cast(lvl.iq as double) / base.iq1 else cast(null as double) end", 6)} as explained_frac
+         |  ${roundAway("cast(lvl.iq as double) / 1000000", 4)} as inertia,
+         |  ${roundAway("case when base.iq1 > 0 then 1 - cast(lvl.iq as double) / base.iq1 else cast(null as double) end", 6)} as explained_frac
          |from lvl cross join base""".stripMargin
     },
 
@@ -11862,28 +11846,28 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // with a = b = 0 yield null s (stated). Work: one explode for
     // centroids + one broadcast N × |labels| dot join.
     "vec_silhouette" renders {
-      val silq = s"""${roundAway(d)("case when (case when 1 - sown > 1 - sother then 1 - sown else 1 - sother end) > 0 then ((1 - sother) - (1 - sown)) / (case when 1 - sown > 1 - sother then 1 - sown else 1 - sother end) else cast(null as double) end", 6)}"""
+      val silq = s"""${roundAway("case when (case when 1 - sown > 1 - sother then 1 - sown else 1 - sother end) > 0 then ((1 - sother) - (1 - sown)) / (case when 1 - sown > 1 - sother then 1 - sown else 1 - sother end) else cast(null as double) end", 6)}"""
       s"""with $nvCtes,
          |lab as (select * from ${d.explodeFrom("nn", "n", "pos", "val", Seq("label"))} _lb),
-         |ctq as (select label, pos, ${roundAway(d)("avg(val)", 6)} as cv from lab group by label, pos),
+         |ctq as (select label, pos, ${roundAway("avg(val)", 6)} as cv from lab group by label, pos),
          |cta as (select label, ${d.arrAggOrdered("cv", "pos")} as c from ctq group by label),
          |cn as (select label, c, sqrt(${d.dot("c", "c")}) as cnrm from cta),
          |sims as (select nn.id, nn.label as own, cn.label as other,
-         |           ${roundAway(d)(s"${d.dot("nn.n", "cn.c")} / cn.cnrm", 6)} as sim
+         |           ${roundAway(s"${d.dot("nn.n", "cn.c")} / cn.cnrm", 6)} as sim
          |         from nn cross join cn),
          |pv as (select id, own,
          |         max(case when other = own then sim end) as sown,
          |         max(case when other <> own then sim end) as sother
          |       from sims group by id, own),
          |sv as (select id, own, $silq as silq,
-         |         ${roundAway(d)("1 - sown", 6)} as a6, ${roundAway(d)("1 - sother", 6)} as b6
+         |         ${roundAway("1 - sown", 6)} as a6, ${roundAway("1 - sother", 6)} as b6
          |       from pv),
-         |ov as (select ${roundAway(d)("cast(sum(cast(silq as decimal(18, 6))) as double) / count(silq)", 4)} as osil from sv)
+         |ov as (select ${roundAway("cast(sum(cast(silq as decimal(18, 6))) as double) / count(silq)", 4)} as osil from sv)
          |select ${bigint("sv.own")} as label, ${bigint("count(*)")} as n_members,
-         |  ${roundAway(d)("cast(sum(cast(sv.a6 as decimal(18, 6))) as double) / count(*)", 4)} as mean_intra_dist,
-         |  ${roundAway(d)("cast(sum(cast(sv.b6 as decimal(18, 6))) as double) / count(*)", 4)} as mean_nearest_dist,
-         |  ${roundAway(d)("cast(sum(cast(sv.silq as decimal(18, 6))) as double) / count(sv.silq)", 4)} as mean_silhouette,
-         |  ${roundAway(d)("max(ov.osil)", 4)} as overall_silhouette
+         |  ${roundAway("cast(sum(cast(sv.a6 as decimal(18, 6))) as double) / count(*)", 4)} as mean_intra_dist,
+         |  ${roundAway("cast(sum(cast(sv.b6 as decimal(18, 6))) as double) / count(*)", 4)} as mean_nearest_dist,
+         |  ${roundAway("cast(sum(cast(sv.silq as decimal(18, 6))) as double) / count(sv.silq)", 4)} as mean_silhouette,
+         |  ${roundAway("max(ov.osil)", 4)} as overall_silhouette
          |from sv cross join ov group by sv.own""".stripMargin
     },
 
@@ -11915,7 +11899,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |${step("w2", "w3")},
          |tot as (select ${bigint("sum(r)")} as s from w3)
          |select ${bigint("w3.id")} as vec_id, w3.r as walk3_count,
-         |  ${roundAway(d)("case when tot.s > 0 then cast(w3.r as double) / tot.s else cast(null as double) end", 9)} as centrality_share
+         |  ${roundAway("case when tot.s > 0 then cast(w3.r as double) / tot.s else cast(null as double) end", 9)} as centrality_share
          |from w3 cross join tot""".stripMargin
     },
 
@@ -11960,9 +11944,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |select ${bigint("x.r")} as removal_pct, ${bigint("x.dcut")} as degree_cutoff,
          |  x.n_removed, ${bigint("nt.n - x.n_removed")} as n_survivors,
          |  ${bigint(s"${d.idiv("coalesce(m2.sk, 0)", "2")}")} as n_edges_surviving,
-         |  ${roundAway(d)("coalesce(m2.sk, 0) / (cast(2 as double) * mt.m)", 4)} as edge_survival_share,
-         |  ${roundAway(d)("coalesce(m2.sk, 0) / cast(nt.n - x.n_removed as double)", 4)} as mean_surviving_degree,
-         |  ${roundAway(d)("case when coalesce(m2.sk, 0) > 0 then m2.sk2 / cast(m2.sk as double) end", 4)} as molloy_reed_kappa,
+         |  ${roundAway("coalesce(m2.sk, 0) / (cast(2 as double) * mt.m)", 4)} as edge_survival_share,
+         |  ${roundAway("coalesce(m2.sk, 0) / cast(nt.n - x.n_removed as double)", 4)} as mean_surviving_degree,
+         |  ${roundAway("case when coalesce(m2.sk, 0) > 0 then m2.sk2 / cast(m2.sk as double) end", 4)} as molloy_reed_kappa,
          |  ${bigint("case when coalesce(m2.sk, 0) > 0 and m2.sk2 > 2 * m2.sk then 1 else 0 end")} as giant_component
          |from rem x left join mom m2 on m2.r = x.r cross join nt cross join mt""".stripMargin
     },
@@ -12041,15 +12025,15 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |  from sol),
          |rat as (select w1, w2, w3, w4, l1, l2,
          |    case when l1 > 0 and abs(l2) > 0 and abs(l2) < l1
-         |         then ${roundAway(d)("abs(l2) / l1", 6)} end as r6
+         |         then ${roundAway("abs(l2) / l1", 6)} end as r6
          |  from lam)
          |select nn_n.n as n_nodes, ne.m as n_edges,
          |  w1 as walks_1, w2 as walks_2, w3 as walks_3, w4 as walks_4,
-         |  ${roundAway(d)("l1", 4)} as lambda1_est,
-         |  ${roundAway(d)("l2", 4)} as lambda2_est,
-         |  ${roundAway(d)("l1 - abs(l2)", 4)} as spectral_gap,
+         |  ${roundAway("l1", 4)} as lambda1_est,
+         |  ${roundAway("l2", 4)} as lambda2_est,
+         |  ${roundAway("l1 - abs(l2)", 4)} as spectral_gap,
          |  r6 as lambda_ratio,
-         |  ${roundAway(d)("case when r6 is not null and r6 > 0 then ln(cast(100 as double)) / (0 - ln(r6)) end", 2)} as mixing_steps_1pct
+         |  ${roundAway("case when r6 is not null and r6 > 0 then ln(cast(100 as double)) / (0 - ln(r6)) end", 2)} as mixing_steps_1pct
          |from rat cross join nn_n cross join ne""".stripMargin
     },
 
@@ -12076,8 +12060,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |              ${bigint("sum(c * c)")} as s2
          |       from tc group by wd)
          |select ws.wd as word, ws.df, ws.tot as total_count,
-         |  ${roundAway(d)("cast(ws.tot as double) / nd.n", 6)} as mean_per_doc,
-         |  ${roundAway(d)(vmr, 4)} as vmr,
+         |  ${roundAway("cast(ws.tot as double) / nd.n", 6)} as mean_per_doc,
+         |  ${roundAway(vmr, 4)} as vmr,
          |  ${bigint(s"case when $vmr > 1 then 1 else 0 end")} as bursty_flag
          |from ws cross join nd where ws.df >= 5""".stripMargin
     },
@@ -12126,10 +12110,10 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |        from cen)
          |select keycol as key_column, ${bigint("max(nk)")} as n_keys, ${bigint("max(nr)")} as n_rows,
          |  ${bigint("max(c)")} as max_rows_per_key,
-         |  ${roundAway(d)("cast(max(nr) as double) / max(nk)", 4)} as mean_rows_per_key,
+         |  ${roundAway("cast(max(nr) as double) / max(nk)", 4)} as mean_rows_per_key,
          |  ${bigint("min(case when cumk >= cast(ceil(nk * 0.99) as bigint) then c end)")} as p99_rows_per_key,
-         |  ${roundAway(d)("cast(max(c) as double) * max(nk) / max(nr)", 4)} as skew_factor,
-         |  ${roundAway(d)("cast(max(case when cumk >= cast(ceil(nk * 0.99) as bigint) then rows_at_or_above end) as double) / max(nr)", 6)} as p99_share
+         |  ${roundAway("cast(max(c) as double) * max(nk) / max(nr)", 4)} as skew_factor,
+         |  ${roundAway("cast(max(case when cumk >= cast(ceil(nk * 0.99) as bigint) then rows_at_or_above end) as double) / max(nr)", 6)} as p99_share
          |from cum
          |group by keycol""".stripMargin
     },
@@ -12271,7 +12255,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |      from dcg a join dcg b on b.day = a.day and a.event_type < b.event_type
          |      group by a.event_type, b.event_type)
          |select p.ta as type_a, p.tb as type_b, p.n as n_days,
-         |  ${roundAway(d)(s"case when p.n >= 3 and p.n * p.sxx > p.sx * p.sx and p.n * p.syy > p.sy * p.sy then $num / $den else cast(null as double) end", 6)} as pearson_r
+         |  ${roundAway(s"case when p.n >= 3 and p.n * p.sxx > p.sx * p.sx and p.n * p.syy > p.sy * p.sy then $num / $den else cast(null as double) end", 6)} as pearson_r
          |from p""".stripMargin
     },
 
@@ -12324,13 +12308,13 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |         from rates r cross join ${rangeTable("g", "blk", 0, Blocks - 1)}
          |         left join car on car.rpct = r.rpct and car.blk = g.blk
          |         group by r.rpct, g.blk)
-         |select ${roundAway(d)("b.rpct / 100.0", 2)} as embed_rate,
+         |select ${roundAway("b.rpct / 100.0", 2)} as embed_rate,
          |  ${bigint("sum(b.nc)")} as n_carriers,
          |  ${bigint("sum(case when b.nc > 0 then 1 else 0 end)")} as n_blocks_covered,
          |  ${bigint("min(b.nc)")} as min_redundancy,
-         |  ${roundAway(d)("sum(b.nc) / cast(16 as double)", 4)} as mean_redundancy,
+         |  ${roundAway("sum(b.nc) / cast(16 as double)", 4)} as mean_redundancy,
          |  ${bigint(s"case when min(b.nc) > 0 then ${d.idiv("(min(b.nc) - 1)", "2")} else 0 end")} as vote_tolerance,
-         |  ${roundAway(d)("sum(b.nc) / cast(max(p.nvec) as double)", 4)} as corpus_share
+         |  ${roundAway("sum(b.nc) / cast(max(p.nvec) as double)", 4)} as corpus_share
          |from blkc b join rpar p on p.rpct = b.rpct
          |group by b.rpct""".stripMargin
     },
@@ -12356,7 +12340,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
       val se = s"sqrt(${varOf("tp")} / tp.n + ${varOf("tr")} / tr.n + ${varOf("cp")} / cp.n + ${varOf("cr")} / cr.n)"
       s"""with li as (select case when p.p_type = 'PROMO' then 1 else 0 end as treated,
          |             case when l.l_shipdate >= timestamp '1998-01-01 00:00:00' then 1 else 0 end as post,
-         |             ${bigint(roundAway(d)("l.l_discount * 100", 0))} as x
+         |             ${bigint(roundAway("l.l_discount * 100", 0))} as x
          |           from lineitem l join part p on p.p_partkey = l.l_partkey),
          |cells as (select treated, post, ${bigint("count(*)")} as n, ${bigint("sum(x)")} as s1,
          |            ${bigint("sum(x * x)")} as s2
@@ -12364,12 +12348,12 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |tr as ${cell("1", "0")}, tp as ${cell("1", "1")},
          |cr as ${cell("0", "0")}, cp as ${cell("0", "1")}
          |select ${bigint("c.treated")} as treated, ${bigint("c.post")} as post,
-         |  c.n as n_items, ${roundAway(d)("cast(c.s1 as double) / c.n / 100", 6)} as mean_discount,
-         |  ${roundAway(d)("tp.m - tr.m", 6)} as treated_delta,
-         |  ${roundAway(d)("cp.m - cr.m", 6)} as control_delta,
-         |  ${roundAway(d)(did, 6)} as did_estimate,
-         |  ${roundAway(d)(se, 6)} as did_se,
-         |  ${roundAway(d)(s"$did / $se", 4)} as did_t
+         |  c.n as n_items, ${roundAway("cast(c.s1 as double) / c.n / 100", 6)} as mean_discount,
+         |  ${roundAway("tp.m - tr.m", 6)} as treated_delta,
+         |  ${roundAway("cp.m - cr.m", 6)} as control_delta,
+         |  ${roundAway(did, 6)} as did_estimate,
+         |  ${roundAway(se, 6)} as did_se,
+         |  ${roundAway(s"$did / $se", 4)} as did_t
          |from cells c cross join tr cross join tp cross join cr cross join cp""".stripMargin
     },
 
@@ -12397,10 +12381,10 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |a as (select n_click, n from v where variant = 0),
          |b as (select n_click, n from v where variant = 1)
          |select ${bigint("a.n")} as n_a, ${bigint("b.n")} as n_b,
-         |  ${roundAway(d)(pp, 6)} as p_pooled,
-         |  ${roundAway(d)(mde, 6)} as mde_abs,
-         |  ${roundAway(d)(s"case when $pp > 0 then $mde / $pp else cast(null as double) end", 4)} as mde_rel,
-         |  ${roundAway(d)(diff, 6)} as observed_diff,
+         |  ${roundAway(pp, 6)} as p_pooled,
+         |  ${roundAway(mde, 6)} as mde_abs,
+         |  ${roundAway(s"case when $pp > 0 then $mde / $pp else cast(null as double) end", 4)} as mde_rel,
+         |  ${roundAway(diff, 6)} as observed_diff,
          |  ${bigint(s"case when abs($diff) > 1e-12 then cast(ceil($reqN) as bigint) else null end")} as required_n_per_arm,
          |  ${bigint(s"case when abs($diff) >= $mde then 1 else 0 end")} as powered_flag
          |from a cross join b""".stripMargin
@@ -12429,7 +12413,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // reduction ≈ 0 IS the honest readout (stated — the machinery is
     // what's under test). 2-row output.
     "events_ab_cuped" renders {
-      val x = bigint(roundAway(d)("value * 100", 0))
+      val x = bigint(roundAway("value * 100", 0))
       // per-variant prefixed moment getters over the wide 1-row table
       def m(p: String, c: String) = s"cast(${p}$c as double)"
       def vr(p: String, a: String, b: String) =
@@ -12446,16 +12430,16 @@ final class Gen(d: Dialect, useViews: Boolean = false,
       val zRaw = s"($diffRaw / sqrt(${varRaw("a")} / an + ${varRaw("b")} / bn))"
       def arm(v: Int, p: String) =
         s"""select ${bigint(v.toString)} as variant, ${bigint(s"${p}n")} as n_users,
-           |  ${roundAway(d)(mean(p, "x"), 4)} as mean_pre,
-           |  ${roundAway(d)(mean(p, "y"), 4)} as mean_post,
-           |  ${roundAway(d)(meanAdj(p), 4)} as mean_adjusted,
-           |  ${roundAway(d)(varRaw(p), 4)} as var_raw,
-           |  ${roundAway(d)(varAdj(p), 4)} as var_adjusted,
-           |  ${roundAway(d)(s"${varAdj(p)} / ${varRaw(p)}", 4)} as var_ratio,
-           |  ${roundAway(d)("th", 6)} as theta,
-           |  ${roundAway(d)(diffAdj, 4)} as diff_adjusted,
-           |  ${roundAway(d)(zAdj, 4)} as z_adjusted,
-           |  ${roundAway(d)(zRaw, 4)} as z_raw
+           |  ${roundAway(mean(p, "x"), 4)} as mean_pre,
+           |  ${roundAway(mean(p, "y"), 4)} as mean_post,
+           |  ${roundAway(meanAdj(p), 4)} as mean_adjusted,
+           |  ${roundAway(varRaw(p), 4)} as var_raw,
+           |  ${roundAway(varAdj(p), 4)} as var_adjusted,
+           |  ${roundAway(s"${varAdj(p)} / ${varRaw(p)}", 4)} as var_ratio,
+           |  ${roundAway("th", 6)} as theta,
+           |  ${roundAway(diffAdj, 4)} as diff_adjusted,
+           |  ${roundAway(zAdj, 4)} as z_adjusted,
+           |  ${roundAway(zRaw, 4)} as z_raw
            |from f""".stripMargin
       s"""with e as (select user_id, ${d.idiv(evSec("ts"), "86400")} as day, $x as v from events),
          |u as (select user_id, user_id % 2 as variant,
@@ -12526,7 +12510,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
         s"${bigint(s"sum(w$r * x)")} as swx$r, ${bigint(s"sum(w$r)")} as sw$r").mkString(",\n|        ")
       val mCase = (0 until B).map(r =>
         s"when $r then cast(swx$r as double) / sw$r / 100").mkString("case r ", " ", " end")
-      s"""with p as (select event_id, ${bigint(roundAway(d)("value * 100", 0))} as x
+      s"""with p as (select event_id, ${bigint(roundAway("value * 100", 0))} as x
          |           from events where event_type = 'purchase'),
          |ph as (select x,
          |        $hashCols
@@ -12539,7 +12523,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |        from pw),
          |reps as (select r, $mCase as m
          |         from agg cross join ${rangeTable("rs", "r", 0, B - 1)}),
-         |rq as (select r, m, ${bigint(roundAway(d)("m * 10000", 0))} as q,
+         |rq as (select r, m, ${bigint(roundAway("m * 10000", 0))} as q,
          |         ${bigint("row_number() over (order by m, r)")} as rn from reps),
          |se as (select ${bigint("count(*)")} as b, ${bigint("sum(q)")} as s1,
          |              ${bigint("sum(q * q)")} as s2 from rq),
@@ -12548,10 +12532,10 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |         min(case when rn = ${math.ceil(B * 0.975).toInt} then m end) as hi
          |       from rq)
          |select n as n_rows, ${bigint(B.toString)} as n_replicas,
-         |  ${roundAway(d)("cast(sx as double) / n / 100", 4)} as point_mean,
-         |  ${roundAway(d)("ci.lo", 4)} as boot_lo_95,
-         |  ${roundAway(d)("ci.hi", 4)} as boot_hi_95,
-         |  ${roundAway(d)("sqrt((cast(se.b as double) * se.s2 - cast(se.s1 as double) * se.s1) / (cast(se.b as double) * (se.b - 1))) / 10000", 4)} as boot_se,
+         |  ${roundAway("cast(sx as double) / n / 100", 4)} as point_mean,
+         |  ${roundAway("ci.lo", 4)} as boot_lo_95,
+         |  ${roundAway("ci.hi", 4)} as boot_hi_95,
+         |  ${roundAway("sqrt((cast(se.b as double) * se.s2 - cast(se.s1 as double) * se.s1) / (cast(se.b as double) * (se.b - 1))) / 10000", 4)} as boot_se,
          |  ${bigint("case when cast(sx as double) / n / 100 >= ci.lo and cast(sx as double) / n / 100 <= ci.hi then 1 else 0 end")} as point_in_ci
          |from agg cross join ci cross join se""".stripMargin
     },
@@ -12585,9 +12569,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |         ${roll("ne", 24)} as e24, ${roll("n", 24)} as t24
          |       from he)
          |select ${bigint("hr")} as hour_idx, n as n_events, ne as n_errors,
-         |  ${roundAway(d)(burn("e1", "t1"), 4)} as burn_1h,
-         |  ${roundAway(d)(burn("e6", "t6"), 4)} as burn_6h,
-         |  ${roundAway(d)(burn("e24", "t24"), 4)} as burn_24h,
+         |  ${roundAway(burn("e1", "t1"), 4)} as burn_1h,
+         |  ${roundAway(burn("e6", "t6"), 4)} as burn_6h,
+         |  ${roundAway(burn("e24", "t24"), 4)} as burn_24h,
          |  ${bigint(s"case when ${burn("e1", "t1")} > 2.0 and ${burn("e6", "t6")} > 2.0 then 1 else 0 end")} as page_alert,
          |  ${bigint(s"case when ${burn("e6", "t6")} > 1.5 and ${burn("e24", "t24")} > 1.5 then 1 else 0 end")} as ticket_alert
          |from rw""".stripMargin
@@ -12618,14 +12602,14 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          | when $rel < 1.0 then 'gap_sub_100pct'
          | else 'gap_over_100pct' end""".stripMargin.replaceAll("\n", "")
       s"""with ls as (select l_orderkey, ${bigint("count(*)")} as nl,
-         |              ${bigint(s"sum(${bigint(roundAway(d)("l_extendedprice * 100", 0))} * (100 - ${bigint(roundAway(d)("l_discount * 100", 0))}) * (100 + ${bigint(roundAway(d)("l_tax * 100", 0))}))")} as r4
+         |              ${bigint(s"sum(${bigint(roundAway("l_extendedprice * 100", 0))} * (100 - ${bigint(roundAway("l_discount * 100", 0))}) * (100 + ${bigint(roundAway("l_tax * 100", 0))}))")} as r4
          |            from lineitem group by l_orderkey),
          |oj as (select o.o_orderkey, ls.nl,
-         |         ${bigint(roundAway(d)("o_totalprice * 100", 0))} * 10000 as o4, ls.r4
+         |         ${bigint(roundAway("o_totalprice * 100", 0))} * 10000 as o4, ls.r4
          |       from orders o full outer join ls on ls.l_orderkey = o.o_orderkey),
          |tag as (select $bucket as bucket, nl,
          |          case when o4 is not null and r4 is not null
-         |               then ${bigint(roundAway(d)(s"$rel * 1000000", 0))} end as relq
+         |               then ${bigint(roundAway(s"$rel * 1000000", 0))} end as relq
          |        from oj),
          |tot as (select ${bigint("count(*)")} as n from tag),
          |ag as (select bucket, ${bigint("count(*)")} as n_orders,
@@ -12633,8 +12617,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |         ${bigint("sum(relq)")} as srel
          |       from tag group by bucket)
          |select bucket, n_orders, n_lineitems,
-         |  ${roundAway(d)("cast(n_orders as double) / t.n", 4)} as order_share,
-         |  ${roundAway(d)("cast(srel as double) / n_orders / 1000000", 4)} as mean_abs_rel_gap
+         |  ${roundAway("cast(n_orders as double) / t.n", 4)} as order_share,
+         |  ${roundAway("cast(srel as double) / n_orders / 1000000", 4)} as mean_abs_rel_gap
          |from ag cross join tot t""".stripMargin
     },
 
@@ -12671,12 +12655,12 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |select ${bigint("bucket")} as log2_activity_bucket,
          |  ${bigint("count(*)")} as n_users,
          |  ${bigint("sum(churned)")} as n_churned,
-         |  ${roundAway(d)("cast(sum(churned) as double) / count(*)", 4)} as churn_rate,
-         |  ${roundAway(d)("cast(sum(recency) as double) / count(*)", 2)} as mean_recency_days,
-         |  ${roundAway(d)("cast(sum(tenure) as double) / count(*)", 2)} as mean_tenure_days,
-         |  ${roundAway(d)("cast(sum(adays) as double) / count(*)", 2)} as mean_active_days,
-         |  ${roundAway(d)("cast(sum(np) as double) / count(*)", 2)} as mean_purchases,
-         |  ${roundAway(d)("cast(count(*) as double) / max(t.n)", 4)} as user_share
+         |  ${roundAway("cast(sum(churned) as double) / count(*)", 4)} as churn_rate,
+         |  ${roundAway("cast(sum(recency) as double) / count(*)", 2)} as mean_recency_days,
+         |  ${roundAway("cast(sum(tenure) as double) / count(*)", 2)} as mean_tenure_days,
+         |  ${roundAway("cast(sum(adays) as double) / count(*)", 2)} as mean_active_days,
+         |  ${roundAway("cast(sum(np) as double) / count(*)", 2)} as mean_purchases,
+         |  ${roundAway("cast(count(*) as double) / max(t.n)", 4)} as user_share
          |from f cross join tot t group by bucket""".stripMargin
     },
 
@@ -12703,7 +12687,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |       from e),
          |kept as (select label, vec_id, h from rk cross join mn where rn <= target)
          |select l.label, l.n as n_before, ${bigint("count(k.vec_id)")} as n_after,
-         |  ${roundAway(d)("count(k.vec_id) / cast(l.n as double)", 4)} as keep_rate,
+         |  ${roundAway("count(k.vec_id) / cast(l.n as double)", 4)} as keep_rate,
          |  ${bigint("sum(k.h % 1000000)")} as selection_checksum
          |from lc l left join kept k on k.label = l.label
          |group by l.label, l.n""".stripMargin
@@ -12720,7 +12704,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // the variance-reduction receipt in one combinable aggregation +
     // one census window. 1-row output.
     "events_metric_winsorize" renders
-      s"""with v as (select ${bigint(roundAway(d)("value * 100", 0))} as x
+      s"""with v as (select ${bigint(roundAway("value * 100", 0))} as x
          |           from events where event_type = 'purchase'),
          |cen as (select x, ${bigint("count(*)")} as c from v group by x),
          |tot as (select ${bigint("sum(c)")} as n from cen),
@@ -12735,13 +12719,13 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |         ${bigint("sum(case when x > cap then 1 else 0 end)")} as n_capped,
          |         ${bigint("max(cap)")} as capv
          |       from v cross join cap)
-         |select n as n_rows, ${roundAway(d)("cast(capv as double) / 100", 2)} as p99_cap,
-         |  n_capped, ${roundAway(d)("cast(n_capped as double) / n", 4)} as capped_share,
-         |  ${roundAway(d)("cast(s1 as double) / n / 100", 4)} as mean_raw,
-         |  ${roundAway(d)("cast(c1 as double) / n / 100", 4)} as mean_capped,
-         |  ${roundAway(d)("(cast(n as double) * s2 - cast(s1 as double) * s1) / (cast(n as double) * (n - 1)) / 10000", 4)} as var_raw,
-         |  ${roundAway(d)("(cast(n as double) * c2 - cast(c1 as double) * c1) / (cast(n as double) * (n - 1)) / 10000", 4)} as var_capped,
-         |  ${roundAway(d)("1 - ((cast(n as double) * c2 - cast(c1 as double) * c1) / (cast(n as double) * s2 - cast(s1 as double) * s1))", 4)} as var_reduction
+         |select n as n_rows, ${roundAway("cast(capv as double) / 100", 2)} as p99_cap,
+         |  n_capped, ${roundAway("cast(n_capped as double) / n", 4)} as capped_share,
+         |  ${roundAway("cast(s1 as double) / n / 100", 4)} as mean_raw,
+         |  ${roundAway("cast(c1 as double) / n / 100", 4)} as mean_capped,
+         |  ${roundAway("(cast(n as double) * s2 - cast(s1 as double) * s1) / (cast(n as double) * (n - 1)) / 10000", 4)} as var_raw,
+         |  ${roundAway("(cast(n as double) * c2 - cast(c1 as double) * c1) / (cast(n as double) * (n - 1)) / 10000", 4)} as var_capped,
+         |  ${roundAway("1 - ((cast(n as double) * c2 - cast(c1 as double) * c1) / (cast(n as double) * s2 - cast(s1 as double) * s1))", 4)} as var_reduction
          |from ag""".stripMargin,
 
     // TPC-H Q12 (shipmode priority) ADAPTED to the shipped schema —
@@ -12833,7 +12817,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // top-decile spend shares) off the same cumulative table. Exact
     // bigints until the final divisions. 1-row output.
     "q_gini_revenue" renders
-      s"""with cs as (select o_custkey, ${d.idiv(bigint(s"sum(${bigint(roundAway(d)("o_totalprice * 100", 0))})"), "10000")} as spend_h
+      s"""with cs as (select o_custkey, ${d.idiv(bigint(s"sum(${bigint(roundAway("o_totalprice * 100", 0))})"), "10000")} as spend_h
          |            from orders group by o_custkey),
          |cen as (select spend_h, ${bigint("count(*)")} as c from cs group by spend_h),
          |cum as (select spend_h, c,
@@ -12846,10 +12830,10 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |          ${bigint("sum(case when cum.f > cast(ceil(ag.n * 0.9) as bigint) then cum.spend_h * cum.c else 0 end)")} as top10
          |        from cum cross join ag)
          |select ag.n as n_customers,
-         |  ${roundAway(d)("cast(ag.sx as double) * 100 / ag.n", 2)} as mean_spend,
-         |  ${roundAway(d)("2.0 * ag.six / (cast(ag.n as double) * ag.sx) - (ag.n + 1.0) / ag.n", 4)} as gini,
-         |  ${roundAway(d)("cast(lor.bot50 as double) / ag.sx", 4)} as bot50_share,
-         |  ${roundAway(d)("cast(lor.top10 as double) / ag.sx", 4)} as top10_share
+         |  ${roundAway("cast(ag.sx as double) * 100 / ag.n", 2)} as mean_spend,
+         |  ${roundAway("2.0 * ag.six / (cast(ag.n as double) * ag.sx) - (ag.n + 1.0) / ag.n", 4)} as gini,
+         |  ${roundAway("cast(lor.bot50 as double) / ag.sx", 4)} as bot50_share,
+         |  ${roundAway("cast(lor.top10 as double) / ag.sx", 4)} as top10_share
          |from ag cross join lor""".stripMargin,
 
     // ANN RECALL AFTER DELETE (4g4) — the index-maintenance audit
@@ -12947,7 +12931,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
       s"""with e as (select user_id, user_id % 2 as variant, ${d.idiv(evSec("ts"), "86400")} as day, event_type, value from events),
          |u as (select user_id, ${bigint("max(variant)")} as variant,
          |        ${bigint("sum(case when day < 19746 then 1 else 0 end)")} as pre_n,
-         |        ${bigint(s"sum(case when day >= 19746 and event_type = 'purchase' then ${bigint(roundAway(d)("value * 100", 0))} else 0 end)")} as post_c
+         |        ${bigint(s"sum(case when day >= 19746 and event_type = 'purchase' then ${bigint(roundAway("value * 100", 0))} else 0 end)")} as post_c
          |      from e group by user_id),
          |cen as (select pre_n, ${bigint("count(*)")} as c from u group by pre_n),
          |cum as (select pre_n, c, ${bigint("sum(c) over (order by pre_n rows between unbounded preceding and current row)")} as f from cen),
@@ -12962,9 +12946,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |select ${bigint("dec.decile")} as decile,
          |  ${bigint("coalesce(ag.n_control, 0)")} as n_control,
          |  ${bigint("coalesce(ag.n_treat, 0)")} as n_treat,
-         |  ${roundAway(d)("case when ag.n_control > 0 then cast(ag.c_control as double) / ag.n_control / 100 end", 4)} as mean_post_control,
-         |  ${roundAway(d)("case when ag.n_treat > 0 then cast(ag.c_treat as double) / ag.n_treat / 100 end", 4)} as mean_post_treat,
-         |  ${roundAway(d)("case when ag.n_control > 0 and ag.n_treat > 0 then cast(ag.c_treat as double) / ag.n_treat / 100 - cast(ag.c_control as double) / ag.n_control / 100 end", 4)} as uplift
+         |  ${roundAway("case when ag.n_control > 0 then cast(ag.c_control as double) / ag.n_control / 100 end", 4)} as mean_post_control,
+         |  ${roundAway("case when ag.n_treat > 0 then cast(ag.c_treat as double) / ag.n_treat / 100 end", 4)} as mean_post_treat,
+         |  ${roundAway("case when ag.n_control > 0 and ag.n_treat > 0 then cast(ag.c_treat as double) / ag.n_treat / 100 - cast(ag.c_control as double) / ag.n_control / 100 end", 4)} as uplift
          |from ${rangeTable("dec", "decile", 0, 9)} left join ag on ag.decile = dec.decile""".stripMargin,
 
     // NN-DECODER INFERENCE FORWARD PASS (21r) — the deterministic
@@ -13002,7 +12986,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
           s"h$j * ${lit(WmConst.nnWeight("nw2", m, j))}").mkString(" + ")
         s"g$m" -> s"${lit(WmConst.nnWeight("nb2", m, 0))} + $sum"
       }
-      val q6 = out.map(m => s"q$m" -> bigint(roundAway(d)(s"g$m * 1000000", 0)))
+      val q6 = out.map(m => s"q$m" -> bigint(roundAway(s"g$m * 1000000", 0)))
       s"""with $nvCtes,
          |hx as (select ${hDefs.map { case (n, e) => s"$e as $n" }.mkString(",\n|  ")} from nv),
          |gx as (select ${logitDefs.map { case (n, e) => s"$e as $n" }.mkString(",\n|  ")} from hx),
@@ -13013,8 +12997,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |from qx)
          |select ${bigint("mm.m")} as bit_pos,
          |  case mm.m ${out.map(m => s"when $m then o$m").mkString(" ")} end as n_ones,
-         |  ${roundAway(d)(s"(case mm.m ${out.map(m => s"when $m then o$m").mkString(" ")} end) / cast(n as double)", 4)} as ones_rate,
-         |  ${roundAway(d)(s"(case mm.m ${out.map(m => s"when $m then s$m").mkString(" ")} end) / cast(n as double) / 1000000", 6)} as mean_logit
+         |  ${roundAway(s"(case mm.m ${out.map(m => s"when $m then o$m").mkString(" ")} end) / cast(n as double)", 4)} as ones_rate,
+         |  ${roundAway(s"(case mm.m ${out.map(m => s"when $m then s$m").mkString(" ")} end) / cast(n as double) / 1000000", 6)} as mean_logit
          |from ag cross join ${rangeTable("mm", "m", 1, 24)}""".stripMargin
     },
 
@@ -13060,10 +13044,10 @@ final class Gen(d: Dialect, useViews: Boolean = false,
       val maxCols = terms.map { case (q, i, t) =>
         val w = graft.functions.WmConst.maxsimVec(t)
         val dot = idx.map(k => s"t$k * cast(${w(k - 1)} as double)").mkString(" + ")
-        s"max(${roundAway(d)(dot, 6)}) as m${q}_$i"
+        s"max(${roundAway(dot, 6)}) as m${q}_$i"
       }
       val scoreCols = Wm.MaxSimQueries.map { case (q, ts) =>
-        ts.indices.map(i => bigint(roundAway(d)(s"m${q}_${i + 1} * 1000000", 0)))
+        ts.indices.map(i => bigint(roundAway(s"m${q}_${i + 1} * 1000000", 0)))
           .mkString("(", " + ", s") as s$q")
       }
       val qCase = "case qq.qid " +
@@ -13082,7 +13066,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |       from sc cross join ${rangeTable("qq", "qid", 1, nQ)}),
          |rk as (select qid, doc_id, s, row_number() over (partition by qid order by s desc, doc_id) as rn from sq)
          |select ${bigint("qid")} as qid, ${bigint("rn")} as rank, ${bigint("doc_id")} as doc_id,
-         |  ${roundAway(d)("cast(s as double) / cast(1000000 as double)", 6)} as score
+         |  ${roundAway("cast(s as double) / cast(1000000 as double)", 6)} as score
          |from rk where rn <= 10""".stripMargin
     },
 
@@ -13113,14 +13097,14 @@ final class Gen(d: Dialect, useViews: Boolean = false,
       val maxCols = terms.map { case (q, i, t) =>
         val w = graft.functions.WmConst.maxsimVec(t)
         val dot = idx.map(k => s"t$k * cast(${w(k - 1)} as double)").mkString(" + ")
-        s"max(${roundAway(d)(dot, 6)}) as m${q}_$i"
+        s"max(${roundAway(dot, 6)}) as m${q}_$i"
       }
       val flagCols = Wm.MaxSimQueries.map { case (q, ts) =>
         val probes = ts.flatMap(graft.functions.WmConst.maxsimProbes).distinct.sorted
         s"max(case when bkt in (${probes.mkString(", ")}) then 1 else 0 end) as f$q"
       }
       val scoreCols = Wm.MaxSimQueries.map { case (q, ts) =>
-        ts.indices.map(i => bigint(roundAway(d)(s"m${q}_${i + 1} * 1000000", 0)))
+        ts.indices.map(i => bigint(roundAway(s"m${q}_${i + 1} * 1000000", 0)))
           .mkString("(", " + ", s") as s$q")
       }
       def qCase(col: String) = "case qq.qid " +
@@ -13145,7 +13129,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |rp as (select qid, doc_id, s, f, rn_full, row_number() over (partition by qid, f order by s desc, doc_id) as rn_f from rf)
          |select ${bigint("qid")} as qid, ${bigint("sum(f)")} as n_cand,
          |  ${bigint(overlap)} as overlap10,
-         |  ${roundAway(d)(s"$overlap / cast(10 as double)", 2)} as recall10,
+         |  ${roundAway(s"$overlap / cast(10 as double)", 2)} as recall10,
          |  ${bigint("max(case when rn_full = 1 and f = 1 and rn_f = 1 then 1 else 0 end)")} as top1_match
          |from rp group by qid""".stripMargin
     },
@@ -13255,10 +13239,10 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |${step("p7", "p8")},
        |tot as (select ${bigint("sum(n)")} as n from oc)
        |select e.src as state, e.n as n_out_transitions,
-       |  ${roundAway(d)("cast(e.n as double) / tot.n", 6)} as occupancy,
-       |  ${roundAway(d)("coalesce(p8.pi, 0) / cast(1000000000000 as double)", 6)} as pi_stationary,
-       |  ${roundAway(d)("coalesce(p7.pi, 0) / cast(1000000000000 as double)", 6)} as pi_prev_step,
-       |  ${roundAway(d)("abs(coalesce(p8.pi, 0) - coalesce(p7.pi, 0)) / cast(1000000000000 as double)", 6)} as step_delta
+       |  ${roundAway("cast(e.n as double) / tot.n", 6)} as occupancy,
+       |  ${roundAway("coalesce(p8.pi, 0) / cast(1000000000000 as double)", 6)} as pi_stationary,
+       |  ${roundAway("coalesce(p7.pi, 0) / cast(1000000000000 as double)", 6)} as pi_prev_step,
+       |  ${roundAway("abs(coalesce(p8.pi, 0) - coalesce(p7.pi, 0)) / cast(1000000000000 as double)", 6)} as step_delta
        |from oc e left join p8 on p8.st = e.src left join p7 on p7.st = e.src cross join tot""".stripMargin
   }
 
@@ -13313,11 +13297,11 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |         1.0 - cast(rp_ as double) / fp_ as eff from res),
        |sre as (select sum(1.0 - cast(rp_ as double) / fp_) as s from res)
        |select channel,
-       |  ${roundAway(d)("cast(fp_ as double) / 1000000000000", 6)} as conv_full,
-       |  ${roundAway(d)("cast(rp_ as double) / 1000000000000", 6)} as conv_removed,
-       |  ${roundAway(d)("eff", 6)} as removal_effect,
-       |  ${roundAway(d)("eff / sre.s", 4)} as attribution,
-       |  ${roundAway(d)("1.0 - cast(ab_ as double) / 1000000000000", 6)} as mass_unabsorbed
+       |  ${roundAway("cast(fp_ as double) / 1000000000000", 6)} as conv_full,
+       |  ${roundAway("cast(rp_ as double) / 1000000000000", 6)} as conv_removed,
+       |  ${roundAway("eff", 6)} as removal_effect,
+       |  ${roundAway("eff / sre.s", 4)} as attribution,
+       |  ${roundAway("1.0 - cast(ab_ as double) / 1000000000000", 6)} as mass_unabsorbed
        |from re cross join sre""".stripMargin
   }
 
@@ -13351,13 +13335,13 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |                   join shx sb on sb.doc_id = c.db and sb.sh = sa.sh
          |       group by c.da, c.db),
          |tj as (select c.da, c.db,
-         |         ${roundAway(d)("coalesce(iv.i, 0) / (za.ns + zb.ns - coalesce(iv.i, 0))", 6)} as jt
+         |         ${roundAway("coalesce(iv.i, 0) / (za.ns + zb.ns - coalesce(iv.i, 0))", 6)} as jt
          |       from cand c
          |       join sz za on za.doc_id = c.da join sz zb on zb.doc_id = c.db
          |       left join iv on iv.da = c.da and iv.db = c.db),
          |th as (select ${bigint("50")} as t_centi union all select ${bigint("70")} union all select ${bigint("90")}),
          |pa as (select t.t_centi, ${bigint("count(*)")} as n_pairs,
-         |         ${roundAway(d)("cast(sum(cast(j.jt as decimal(18, 6))) as double) / count(*)", 4)} as mean_jaccard
+         |         ${roundAway("cast(sum(cast(j.jt as decimal(18, 6))) as double) / count(*)", 4)} as mean_jaccard
          |       from tj j join th t on j.jt >= t.t_centi / 100.0 group by t.t_centi),
          |sides as (select t.t_centi, j.da as d2 from tj j join th t on j.jt >= t.t_centi / 100.0
          |          union
@@ -13387,16 +13371,16 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |       left join iv on iv.da = c.da and iv.db = c.db),
          |bn as (select ${bigint("floor(jt * 10)")} as bin, est, jt from pv),
          |ag as (select bin, ${bigint("count(*)")} as n_pairs,
-         |         ${bigint(s"sum(${bigint(roundAway(d)("est * 10000", 0))})")} as sest,
-         |         ${bigint(s"sum(${bigint(roundAway(d)("jt * 10000", 0))})")} as strue,
-         |         ${bigint(s"sum(${bigint(roundAway(d)("abs(est - jt) * 10000", 0))})")} as serr
+         |         ${bigint(s"sum(${bigint(roundAway("est * 10000", 0))})")} as sest,
+         |         ${bigint(s"sum(${bigint(roundAway("jt * 10000", 0))})")} as strue,
+         |         ${bigint(s"sum(${bigint(roundAway("abs(est - jt) * 10000", 0))})")} as serr
          |       from bn group by bin)
          |select bin as true_jaccard_decile,
-         |  ${roundAway(d)("bin / cast(10 as double)", 1)} as bin_lo, n_pairs,
-         |  ${roundAway(d)("cast(strue as double) / 10000 / n_pairs", 4)} as mean_true,
-         |  ${roundAway(d)("cast(sest as double) / 10000 / n_pairs", 4)} as mean_est,
-         |  ${roundAway(d)("cast(serr as double) / 10000 / n_pairs", 4)} as mean_abs_err,
-         |  ${roundAway(d)("cast(sest - strue as double) / 10000 / n_pairs", 4)} as mean_bias
+         |  ${roundAway("bin / cast(10 as double)", 1)} as bin_lo, n_pairs,
+         |  ${roundAway("cast(strue as double) / 10000 / n_pairs", 4)} as mean_true,
+         |  ${roundAway("cast(sest as double) / 10000 / n_pairs", 4)} as mean_est,
+         |  ${roundAway("cast(serr as double) / 10000 / n_pairs", 4)} as mean_abs_err,
+         |  ${roundAway("cast(sest - strue as double) / 10000 / n_pairs", 4)} as mean_bias
          |from ag""".stripMargin
 
   /** Banded MinHash near-dup candidates — `mhViews`: Some((sig, _))
@@ -13726,9 +13710,9 @@ final class Gen(d: Dialect, useViews: Boolean = false,
          |          from dfc c join tot t on t.w = c.w) _p
          |        where cm * 100 >= n_distinct * 99 group by w)
          |select ${bigint("t.w")} as shingle_w, t.n_shingles, t.n_distinct,
-         |  ${roundAway(d)("cast(t.n_distinct as double) / t.n_shingles", 4)} as distinct_ratio,
+         |  ${roundAway("cast(t.n_distinct as double) / t.n_shingles", 4)} as distinct_ratio,
          |  t.collision_mass, t.max_df, p.p99_df,
-         |  ${roundAway(d)("cast(t.boiler_mass as double) / t.n_shingles", 4)} as boilerplate_share
+         |  ${roundAway("cast(t.boiler_mass as double) / t.n_shingles", 4)} as boilerplate_share
          |from tot t join p99 p on p.w = t.w""".stripMargin
     censusFrom match {
       case Some(v) =>
@@ -13811,7 +13795,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
            |td as (select tb.et, tb.lbl, tb.r, tb.bin, cum.c as bc2, cum.cumc - cum.c as cumbefore
            |       from tb join cum on cum.et = tb.et and cum.bin = tb.bin),
            |ap as (select td.et, td.lbl, td.r, td.bin, td.bc2, td.cumbefore,
-           |         ${roundAway(d)(s"mm.mn + (td.bin + (td.r - td.cumbefore) / cast(td.bc2 as double)) * (mm.mx - mm.mn) / cast($b as double)", 4)} as approx_v
+           |         ${roundAway(s"mm.mn + (td.bin + (td.r - td.cumbefore) / cast(td.bc2 as double)) * (mm.mx - mm.mn) / cast($b as double)", 4)} as approx_v
            |       from td join mm on mm.et = td.et),
            |lr as (select bn.et, bn.bin, bn.x, row_number() over (partition by bn.et, bn.bin order by bn.x) as lrk
            |       from bn join (select distinct et, bin from td) tb2 on tb2.et = bn.et and tb2.bin = bn.bin),
@@ -13820,7 +13804,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
            |       group by t.et, t.lbl)
            |select ap.et as event_type, ap.lbl as quantile, ex.exact_v,
            |  ap.approx_v,
-           |  ${roundAway(d)("abs(ap.approx_v - ex.exact_v) / ex.exact_v", 6)} as rel_err
+           |  ${roundAway("abs(ap.approx_v - ex.exact_v) / ex.exact_v", 6)} as rel_err
            |from ap join ex on ex.et = ap.et and ex.lbl = ap.lbl""".stripMargin
       case Some(v) =>
         s"""with src as (select event_type as et, cast(value as double) as x from events),
@@ -13836,7 +13820,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
            |td as (select tb.et, tb.lbl, tb.r, tb.bin, cum.c as bc2, cum.cumc - cum.c as cumbefore
            |       from tb join cum on cum.et = tb.et and cum.bin = tb.bin),
            |ap as (select td.et, td.lbl, td.r, td.bin, td.bc2, td.cumbefore,
-           |         ${roundAway(d)(s"st.mn + (td.bin + (td.r - td.cumbefore) / cast(td.bc2 as double)) * (st.mx - st.mn) / cast($b as double)", 4)} as approx_v
+           |         ${roundAway(s"st.mn + (td.bin + (td.r - td.cumbefore) / cast(td.bc2 as double)) * (st.mx - st.mn) / cast($b as double)", 4)} as approx_v
            |       from td join st on st.et = td.et),
            |sb as (select s.et, s.x, least(${b - 1}, greatest(0, cast(floor((s.x - st.mn) * cast($b as double) / (st.mx - st.mn)) as bigint))) as bin
            |       from src s join st on st.et = s.et),
@@ -13847,7 +13831,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
            |       group by t.et, t.lbl)
            |select ap.et as event_type, ap.lbl as quantile, ex.exact_v,
            |  ap.approx_v,
-           |  ${roundAway(d)("abs(ap.approx_v - ex.exact_v) / ex.exact_v", 6)} as rel_err
+           |  ${roundAway("abs(ap.approx_v - ex.exact_v) / ex.exact_v", 6)} as rel_err
            |from ap join ex on ex.et = ap.et and ex.lbl = ap.lbl""".stripMargin
     }
   }
@@ -13899,7 +13883,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
            |td as (select tb.lbl, tb.r, tb.bin, cum.c as bc, cum.cumc - cum.c as cumbefore
            |       from tb join cum on cum.bin = tb.bin),
            |ap as (select lbl, r, bin, bc, cumbefore,
-           |         ${roundAway(d)(s"mm.mn + (bin + (r - cumbefore) / cast(bc as double)) * (mm.mx - mm.mn) / cast($b as double)", 4)} as approx_v
+           |         ${roundAway(s"mm.mn + (bin + (r - cumbefore) / cast(bc as double)) * (mm.mx - mm.mn) / cast($b as double)", 4)} as approx_v
            |       from td cross join mm),
            |lr as (select bn.bin, bn.x, row_number() over (partition by bn.bin order by bn.x) as lrk
            |       from bn join (select distinct bin from td) tbins on tbins.bin = bn.bin),
@@ -13907,7 +13891,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
            |       from td t join lr l on l.bin = t.bin and l.lrk = t.r - t.cumbefore
            |       group by t.lbl)
            |select ap.lbl as quantile, ex.exact_v, ap.approx_v,
-           |  ${roundAway(d)("abs(ap.approx_v - ex.exact_v) / ex.exact_v", 6)} as rel_err
+           |  ${roundAway("abs(ap.approx_v - ex.exact_v) / ex.exact_v", 6)} as rel_err
            |from ap join ex on ex.lbl = ap.lbl""".stripMargin
       case Some(v) =>
         s"""with src as (select cast(l_extendedprice as double) as x from lineitem),
@@ -13922,7 +13906,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
            |td as (select tb.lbl, tb.r, tb.bin, cum.c as bc, cum.cumc - cum.c as cumbefore, cum.mn, cum.mx
            |       from tb join cum on cum.bin = tb.bin),
            |ap as (select lbl, r, bin, bc, cumbefore,
-           |         ${roundAway(d)(s"mn + (bin + (r - cumbefore) / cast(bc as double)) * (mx - mn) / cast($b as double)", 4)} as approx_v
+           |         ${roundAway(s"mn + (bin + (r - cumbefore) / cast(bc as double)) * (mx - mn) / cast($b as double)", 4)} as approx_v
            |       from td),
            |mx1 as (select min(mn) as mn, min(mx) as mx from bc),
            |sb as (select s.x, least(${b - 1}, greatest(0, cast(floor((s.x - m.mn) * cast($b as double) / (m.mx - m.mn)) as bigint))) as bin
@@ -13933,7 +13917,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
            |       from td t join lr l on l.bin = t.bin and l.lrk = t.r - t.cumbefore
            |       group by t.lbl)
            |select ap.lbl as quantile, ex.exact_v, ap.approx_v,
-           |  ${roundAway(d)("abs(ap.approx_v - ex.exact_v) / ex.exact_v", 6)} as rel_err
+           |  ${roundAway("abs(ap.approx_v - ex.exact_v) / ex.exact_v", 6)} as rel_err
            |from ap join ex on ex.lbl = ap.lbl""".stripMargin
     }
   }
@@ -13966,7 +13950,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
            |td as $matKw(select tb.lv, tb.lbl, tb.r, tb.bin, cum.c as bc, cum.cumc - cum.c as cumbefore
            |       from tb join cum on cum.lv = tb.lv and cum.bin = tb.bin),
            |ap as (select lv, lbl, r, bin, bc, cumbefore,
-           |         ${roundAway(d)("mm.mn + (bin + (r - cumbefore) / cast(bc as double)) * (mm.mx - mm.mn) / cast(lv as double)", 4)} as approx_v
+           |         ${roundAway("mm.mn + (bin + (r - cumbefore) / cast(bc as double)) * (mm.mx - mm.mn) / cast(lv as double)", 4)} as approx_v
            |       from td cross join mm),
            |lr as (select bn.b256 as bin, bn.x, row_number() over (partition by bn.b256 order by bn.x) as lrk
            |       from bn join (select distinct bin from td where lv = 256) tbins on tbins.bin = bn.b256),
@@ -13974,7 +13958,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
            |       from td t join lr l on l.bin = t.bin and l.lrk = t.r - t.cumbefore
            |       where t.lv = 256 group by t.lbl)
            |select ${bigint("ap.lv")} as n_bins, ap.lbl as quantile, ex.exact_v, ap.approx_v,
-           |  ${roundAway(d)("abs(ap.approx_v - ex.exact_v) / ex.exact_v", 6)} as rel_err
+           |  ${roundAway("abs(ap.approx_v - ex.exact_v) / ex.exact_v", 6)} as rel_err
            |from ap join ex on ex.lbl = ap.lbl""".stripMargin
       case Some(v) =>
         s"""with src as (select cast(l_extendedprice as double) as x from lineitem),
@@ -13991,7 +13975,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
            |td as (select tb.lv, tb.lbl, tb.r, tb.bin, cum.c as bc, cum.cumc - cum.c as cumbefore, cum.mn, cum.mx
            |       from tb join cum on cum.lv = tb.lv and cum.bin = tb.bin),
            |ap as (select lv, lbl, r, bin, bc, cumbefore,
-           |         ${roundAway(d)("mn + (bin + (r - cumbefore) / cast(bc as double)) * (mx - mn) / cast(lv as double)", 4)} as approx_v
+           |         ${roundAway("mn + (bin + (r - cumbefore) / cast(bc as double)) * (mx - mn) / cast(lv as double)", 4)} as approx_v
            |       from td),
            |mx1 as (select min(mn) as mn, min(mx) as mx from bc),
            |sb as (select s.x, least(255, greatest(0, cast(floor((s.x - m.mn) * cast(256 as double) / (m.mx - m.mn)) as bigint))) as bin
@@ -14002,7 +13986,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
            |       from td t join lr l on l.bin = t.bin and l.lrk = t.r - t.cumbefore
            |       where t.lv = 256 group by t.lbl)
            |select ${bigint("ap.lv")} as n_bins, ap.lbl as quantile, ex.exact_v, ap.approx_v,
-           |  ${roundAway(d)("abs(ap.approx_v - ex.exact_v) / ex.exact_v", 6)} as rel_err
+           |  ${roundAway("abs(ap.approx_v - ex.exact_v) / ex.exact_v", 6)} as rel_err
            |from ap join ex on ex.lbl = ap.lbl""".stripMargin
     }
   }
@@ -14043,7 +14027,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     // onto it, and every block output re-grids — the vec_data_drift
     // moment convention, which also stops cross-block drift
     sb.append(s"x0 as (select id, ${dims.map(k =>
-      s"${roundAway(d)(s"${d.arrIdx0("v", s"${k - 1}")} * 1000000", 0)} / cast(1000000 as double) as x$k").mkString(", ")} from nv)")
+      s"${roundAway(s"${d.arrIdx0("v", s"${k - 1}")} * 1000000", 0)} / cast(1000000 as double) as x$k").mkString(", ")} from nv)")
     def momentStages(b: String, src: String): Unit = {
       val s1 = dims.map(k => s"x$k * cast(1000000 as double)").mkString(" + ")
       val s2 = dims.map(k => s"(x$k * cast(1000000 as double)) * (x$k * cast(1000000 as double))").mkString(" + ")
@@ -14075,7 +14059,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
       sb.append(s",\nh$b as (select ${blockBarrier}id, ${dims.map(k => s"x$k").mkString(", ")}, $hs from sv$b)")
       val xs = dims.map { k =>
         val terms = hid.map(j => s"h$j * ${lit(WmConst.nnWeight(s"dw2_$b", k, j))}").mkString(" + ")
-        s"${roundAway(d)(s"(x$k + ${lit(WmConst.nnWeight(s"db2_$b", k, 0))} + $terms) * 1000000", 0)} / cast(1000000 as double) as x$k"
+        s"${roundAway(s"(x$k + ${lit(WmConst.nnWeight(s"db2_$b", k, 0))} + $terms) * 1000000", 0)} / cast(1000000 as double) as x$k"
       }.mkString(", ")
       sb.append(s",\nx$b as (select ${blockBarrier}id, $xs from h$b)")
     }
@@ -14096,7 +14080,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
       s"(select $headBarrier" + "id, " +
         (prev.map(m => s"g$m") ++ gs).mkString(", ") + keep + s" from $src)"
     }
-    val q6 = out.map(m => s"${bigint(roundAway(d)(s"g$m * 1000000", 0))} as p$m").mkString(", ")
+    val q6 = out.map(m => s"${bigint(roundAway(s"g$m * 1000000", 0))} as p$m").mkString(", ")
     s"""$nvCtes,
        |${sb.toString},
        |ga as ${logitThird(1 to 8, Seq.empty, "svF")},
@@ -14146,8 +14130,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |from qx)
        |select ${bigint("mm.m")} as bit_pos,
        |  case mm.m ${out.map(m => s"when $m then o$m").mkString(" ")} end as n_ones,
-       |  ${roundAway(d)(s"(case mm.m ${out.map(m => s"when $m then o$m").mkString(" ")} end) / cast(n as double)", 4)} as ones_rate,
-       |  ${roundAway(d)(s"(case mm.m ${out.map(m => s"when $m then s$m").mkString(" ")} end) / cast(n as double) / 1000000", 6)} as mean_logit
+       |  ${roundAway(s"(case mm.m ${out.map(m => s"when $m then o$m").mkString(" ")} end) / cast(n as double)", 4)} as ones_rate,
+       |  ${roundAway(s"(case mm.m ${out.map(m => s"when $m then s$m").mkString(" ")} end) / cast(n as double) / 1000000", 6)} as mean_logit
        |from ag cross join ${rangeTable("mm", "m", 1, 24)}""".stripMargin
   }
 
@@ -14263,7 +14247,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |       from lab left join deg on deg.v = lab.id group by lab.r, lab.lab),
        |dq as (select r, ${bigint("sum(dsum * dsum)")} as sds, ${bigint("count(*)")} as n_communities from dc group by r)
        |select ${bigint("q.r")} as n_rounds, q.n_communities, i.ic as intra_edges, m.m as m_edges,
-       |  ${roundAway(d)(
+       |  ${roundAway(
           "cast(i.ic as double) / cast(m.m as double) - cast(q.sds as double) / (cast(4 as double) * cast(m.m as double) * cast(m.m as double))",
           6)} as modularity
        |from dq q join intra i on i.r = q.r cross join mm m""".stripMargin
@@ -14304,7 +14288,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |       from l3 left join deg on deg.v = l3.id group by l3.lab),
        |dq as (select ${bigint("sum(dsum * dsum)")} as sds, ${bigint("count(*)")} as n_communities from dc)
        |select mm.m as m_edges, dq.n_communities, intra.ic as intra_edges, dq.sds as sum_deg_sq,
-       |  ${roundAway(d)(
+       |  ${roundAway(
             "cast(intra.ic as double) / cast(mm.m as double) - cast(dq.sds as double) / (cast(4 as double) * cast(mm.m as double) * cast(mm.m as double))",
             6)} as modularity
        |from mm cross join intra cross join dq""".stripMargin
@@ -14347,7 +14331,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |select ${bigint("v.lab")} as community, v.n_members, v.volume,
        |  ${bigint("coalesce(c.cut_edges, 0)")} as cut_edges,
        |  ${bigint("coalesce(i.intra_edges, 0)")} as intra_edges,
-       |  ${roundAway(d)("cast(coalesce(c.cut_edges, 0) as double) / least(v.volume, 2 * m.m - v.volume)", 6)} as conductance
+       |  ${roundAway("cast(coalesce(c.cut_edges, 0) as double) / least(v.volume, 2 * m.m - v.volume)", 6)} as conductance
        |from vol v cross join mm m
        |left join cut c on c.lab = v.lab
        |left join intra i on i.lab = v.lab""".stripMargin
@@ -14365,7 +14349,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     * the two renderings hash-match). Sims pre-round to 6dp, rank ties
     * break by id: deterministic under any partitioning (NativeTopkSpec
     * pins partitioning-invariance of the aggregate itself). */
-  def groupedTopkSql(src: Option[String] = None): String = {
+  def groupedTopkSql: String = {
     val base =
       s"""q as (select id as qid, n as qn from nn where id in ($qIdLit)),
          |p as (select q.qid, nn.label, nn.id as cid, round(${d.dot("q.qn", "nn.n")}, 6) as sim
@@ -14456,8 +14440,8 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |$sketch
        |select source, ${bigint("k")} as k, n_exact, nk as n_sketch,
        |  ${bigint("hk")} as kth_hash,
-       |  ${roundAway(d)(est, 4)} as kmv_est,
-       |  ${roundAway(d)(s"abs(($est) - n_exact) / n_exact", 4)} as rel_err
+       |  ${roundAway(est, 4)} as kmv_est,
+       |  ${roundAway(s"abs(($est) - n_exact) / n_exact", 4)} as rel_err
        |from kk""".stripMargin
   }
 
@@ -14509,10 +14493,10 @@ final class Gen(d: Dialect, useViews: Boolean = false,
        |        group by a.source, b.source)
        |select u.sa as source_a, u.sb as source_b,
        |  u.na + u.nb - coalesce(i.ni, 0) as n_union_exact,
-       |  ${roundAway(d)("cast(coalesce(i.ni, 0) as double) / (u.na + u.nb - coalesce(i.ni, 0))", 4)} as jaccard_exact,
-       |  ${roundAway(d)(estU, 4)} as union_est,
-       |  ${roundAway(d)("cast(nboth as double) / nk", 4)} as jaccard_est,
-       |  ${roundAway(d)(s"abs(($estU) - (u.na + u.nb - coalesce(i.ni, 0))) / (u.na + u.nb - coalesce(i.ni, 0))", 4)} as union_rel_err
+       |  ${roundAway("cast(coalesce(i.ni, 0) as double) / (u.na + u.nb - coalesce(i.ni, 0))", 4)} as jaccard_exact,
+       |  ${roundAway(estU, 4)} as union_est,
+       |  ${roundAway("cast(nboth as double) / nk", 4)} as jaccard_est,
+       |  ${roundAway(s"abs(($estU) - (u.na + u.nb - coalesce(i.ni, 0))) / (u.na + u.nb - coalesce(i.ni, 0))", 4)} as union_rel_err
        |from uk u
        |left join ixa i on i.sa = u.sa and i.sb = u.sb""".stripMargin
   }
@@ -14604,7 +14588,6 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     def keep(cols: Seq[String]) = cols.map(c => s"max($c) as $c")
     def mat(nm: String) = for { i <- idx; j <- idx } yield s"$nm$i$j"
     val mus = idx.map(i => s"mu$i")
-    val vs = idx.map(i => s"v$i")
     // one aggregation CTE: keep `carry`, compute `defs` (name -> expr)
     def stage(name: String, src: String, carry: Seq[String],
               defs: Seq[(String, String)]) =
@@ -14653,8 +14636,6 @@ final class Gen(d: Dialect, useViews: Boolean = false,
       idx.map(i => s"w2$i" -> s"v$i * ${sgn("v1")}") ++
       Seq("m1" -> idx.map(i => s"mu$i * ev$i * ${sgn("ev1")}").mkString(" + "),
           "m2" -> idx.map(i => s"mu$i * v$i * ${sgn("v1")}").mkString(" + ")))
-    def proj(w: String, m: String) =
-      s"round(${idx.map(i => s"${d.arrIdx0("nv.v", s"${i - 1}")} * pr.$w$i").mkString(" + ")} - pr.$m, 5)"
 (p1 ++ p2 :+ pr).mkString(",\n")
   }
 
@@ -14748,13 +14729,13 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     val tot = idx.map(i => s"${c(i)} * ${c(i)}").mkString(" + ")
     val p1 = idx.map(i => s"${c(i)} * ${w1(i)}").mkString(" + ")
     val p2 = idx.map(i => s"${c(i)} * ${w2(i)}").mkString(" + ")
-    val r6 = bigint(roundAway(d)(
+    val r6 = bigint(roundAway(
       s"greatest(($tot) - ($p1) * ($p1) - ($p2) * ($p2), cast(0 as double)) * 1000000", 0))
     s"""rz as (select nv.label, $r6 as r6 from $src)
        |select ${bigint("case when grouping(label) = 1 then -1 else label end")} as label,
        |  ${bigint("count(*)")} as n_vectors,
-       |  ${roundAway(d)("sum(r6) / cast(count(*) as double) / 1000000", 6)} as mean_resid_energy,
-       |  ${roundAway(d)("max(r6) / cast(1000000 as double)", 6)} as max_resid_energy
+       |  ${roundAway("sum(r6) / cast(count(*) as double) / 1000000", 6)} as mean_resid_energy,
+       |  ${roundAway("max(r6) / cast(1000000 as double)", 6)} as max_resid_energy
        |from rz group by rollup(label)""".stripMargin
   }
 
@@ -14830,7 +14811,7 @@ final class Gen(d: Dialect, useViews: Boolean = false,
     "events_attribution_markov" renders markovAttributionSql(None),
     // native bounded-state per-group top-k (functions.TopKAgg) on
     // Spark; the oracle is the window form of the same ranking
-    "vec_topk_grouped" renders groupedTopkSql(),
+    "vec_topk_grouped" renders groupedTopkSql,
     // the native aggregates (functions.HllAgg, CmsAgg, KmvAgg) must
     // reproduce their SQL sketches exactly, so each oracle IS the SQL
     // rendering: sketch_distinct_by_source, sketch_cms, and the k=64

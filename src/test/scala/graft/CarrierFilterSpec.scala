@@ -11,9 +11,10 @@ import graft.operators.{Backup, Writeback}
 import graft.sqlgen.Wm
 
 /** Recovery from a carrier-id list filters the attacked copy to the
-  * carriers before the copy's own projection runs: an IN subquery that
-  * Catalyst turns into a LeftSemi below the view, with the votes and
-  * the message of the inner join it replaced. */
+  * carriers before the copy's own projection runs: the rows its
+  * decode-and-vote pass scans (`Backup.carrierRows`) are an IN subquery
+  * that Catalyst turns into a LeftSemi below the view, with the votes
+  * and the message of the inner join it replaced. */
 class CarrierFilterSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -34,7 +35,7 @@ class CarrierFilterSpec extends AnyFunSuite {
   }
 
   test("the carrier filter is a LeftSemi below the attacked view's projection") {
-    val plan = Backup.extractFromIds(attacked.head, ids).queryExecution.optimizedPlan
+    val plan = Backup.carrierRows(attacked.head, ids).queryExecution.optimizedPlan
     val view = plan.collectFirst {
       case p: Project if p.projectList.exists(_.exists(_.isInstanceOf[ArrayTransform])) => p
     }
