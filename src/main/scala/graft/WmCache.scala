@@ -20,13 +20,15 @@ import graft.sqlgen.{Gen, WmParams}
   * build ensures what it reads: a kernel stage only its kernel's
   * inputs ([[KernelReads]]), every other artifact everything its SQL
   * names. A watermark job ([[ensure]]) builds g_knn → g_indeg →
-  * g_carriers → g_stego — the selection the embed job reads, once per
-  * embed call in the reference too (database/pgvector/pg_func.py:735
-  * embed_watermark) — and nothing else. g_bkt, which g_knn's SQL
-  * names but its kernel does not read, stays in g_knn's key and is
-  * built by the first statement that reads it, like a search over IVF
-  * cells builds the two IVF stages and nothing else. An artifact's SQL
-  * is rendered only when something builds or keys it.
+  * g_carriers — the selection the embed job reads, once per embed call
+  * in the reference too (database/pgvector/pg_func.py:735
+  * embed_watermark) — and nothing else: the write-back embeds each
+  * carrier as it writes it (operators.Writeback), so g_stego, like
+  * g_bkt, is built by the first statement that reads it. g_bkt, which
+  * g_knn's SQL names but its kernel does not read, stays in g_knn's
+  * key; a search over IVF cells likewise builds the two IVF stages and
+  * nothing else. An artifact's SQL is rendered only when something
+  * builds or keys it.
   *
   * Execution: each artifact's SQL SPECIFIES it — the DuckDB oracle's
   * semantics, the parity reference, the scratch key and the source of
@@ -110,8 +112,8 @@ object WmCache {
   }
 
   /** Idempotently build + register the views a watermark job reads for
-    * (spark, dir), in order — g_knn → g_indeg → g_carriers → g_stego —
-    * and nothing else. */
+    * (spark, dir), in order — g_knn → g_indeg → g_carriers — and
+    * nothing else: the write-back reads the carriers, not g_stego. */
   def ensure(spark: SparkSession, dir: String): Unit = {
     val reg = registry(spark, dir)
     JobStages.foreach(stage(spark, dir, reg, _))
@@ -122,7 +124,7 @@ object WmCache {
     * dirs re-registers every one of them, not just the last. */
   private val JobStages: Seq[String] = {
     def after(n: String): Seq[String] = (KernelReads(n).flatMap(after) :+ n).distinct
-    after("g_stego")
+    after("g_carriers")
   }
 
   /** Artifact `name` of (spark, dir), built if missing, and registered
@@ -164,16 +166,6 @@ object WmCache {
     val reg = registry(spark, dir)
     if (params == WmParams.Default) stage(spark, dir, reg, "g_carriers")
     else ChainKernels.carriers(spark, stage(spark, dir, reg, "g_indeg"), params)
-  }
-
-  /** The stego cells (id, pos, sval) of a watermark under `params`:
-    * the cached g_stego for the default parameters, otherwise the
-    * g_stego kernel over [[carriers]]. Custom results are computed on
-    * demand and register no view. */
-  def stego(spark: SparkSession, dir: String,
-            params: WmParams = WmParams.Default): DataFrame = {
-    if (params == WmParams.Default) stage(spark, dir, registry(spark, dir), "g_stego")
-    else ChainKernels.stego(spark, carriers(spark, dir, params), params)
   }
 
   /** Ensures every artifact `sql` reads (or `only` those, when a kernel

@@ -25,7 +25,7 @@ final class Graft(spark: SparkSession, dir: String,
   // arguments (pg_func.py:616)
   private val isDefault = params == WmParams.Default
   // at the dir's N-derived plane count, like the chain its write-back
-  // (WmCache.carriers/stego) selects carriers from
+  // (WmCache.carriers) selects carriers from
   private lazy val customGen = new Gen(SparkDialect, useViews = false, params,
     lshPlanes = SparkEntry.sparkGenFor(spark, dir).lshPlanes)
   private def q(name: String): DataFrame =

@@ -160,7 +160,7 @@ object Backup {
     * passes through. */
   def restore(cells: DataFrame, backupPath: String): DataFrame = {
     val spark = cells.sparkSession
-    val bk = spark.read.parquet(backupPath)
+    val bk = Tables.read(spark, backupPath)
       .select(col("vec_id").as("b_id"), col("pos").as("b_pos"),
         col("val").as("b_val"))
     cells.join(bk,

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Tables
 import graft.functions.WmConst
 
 /** Distributed forward pass of the deep NN-decoder witness
@@ -120,7 +121,7 @@ object NnDeep {
   def logits(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, element_at}
-    spark.read.parquet(s"$dir/embeddings.parquet")
+    Tables.read(spark, s"$dir/embeddings.parquet")
       .select("embedding").as[Seq[Float]]
       .mapPartitions(_.map(emb => forward(emb.map(_.toDouble).toArray)))
       .select((1 to Out).map(m => element_at(col("value"), m).as(s"p$m")): _*)

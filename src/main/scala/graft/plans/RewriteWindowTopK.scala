@@ -44,9 +44,15 @@ import graft.functions.RowTopKAgg
   */
 object RewriteWindowTopK extends Rule[LogicalPlan] with PredicateHelper {
 
-  private def maxK: Int =
-    try conf.getConfString("spark.graft.topkRewrite.maxK", "100").toInt
-    catch { case _: Exception => 100 }
+  private val MaxKConf = "spark.graft.topkRewrite.maxK"
+
+  /** The largest k the rewrite fires for; a malformed setting throws
+    * instead of reading as the default. */
+  private def maxK: Int = {
+    val v = conf.getConfString(MaxKConf, "100")
+    v.trim.toIntOption.getOrElse(
+      throw new IllegalArgumentException(s"$MaxKConf must be an integer, got '$v'"))
+  }
 
   /** rn-limit from one conjunct: Some((k, subsumed)) when the conjunct
     * bounds rn from above; None when it doesn't mention rn; bail marker

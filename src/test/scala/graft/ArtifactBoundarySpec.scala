@@ -7,15 +7,16 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Backup, Writeback}
 
 /** The build boundary of a watermark job: `WmCache.ensure` builds the
-  * four chain stages the job reads and nothing else, g_bkt and the
-  * indexes are built by the first statement that reads them, and the
-  * write-back overlays stego values without changing a single written
-  * value. */
+  * three chain stages the job reads and nothing else, the write-back
+  * embeds the carriers itself, g_stego, g_bkt and the indexes are built
+  * by the first statement that reads them, and the write-back overlay
+  * changes no written value. */
 class ArtifactBoundarySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   /** What a watermark job reads: the g_knn kernel buckets the vectors
-    * itself, so g_bkt is not among them. */
-  private val chain = Set("g_knn", "g_indeg", "g_carriers", "g_stego")
+    * itself, so g_bkt is not among them, and the write-back embeds the
+    * carriers itself, so g_stego is not either. */
+  private val chain = Set("g_knn", "g_indeg", "g_carriers")
 
   private def freshSession(): (SparkSession, File) = {
     val root = java.nio.file.Files.createTempDirectory("graft_boundary").toFile
@@ -40,13 +41,34 @@ class ArtifactBoundarySpec extends AnyFunSuite {
       .map(d => d.getName -> d.listFiles().filter(_.isDirectory).map(_.getName).toSet)
       .toMap
 
-  test("ensure on a fresh scratch root builds exactly the four chain stages") {
+  test("ensure on a fresh scratch root builds exactly the three chain stages") {
     val (s, root) = freshSession()
     assert(built(WmCache.ensure(s, TestSpark.Sf)) == chain)
     assert(listing(root).values.toSet == chain.map(Set(_)),
       s"scratch holds more than the chain: ${listing(root)}")
     for (v <- Seq("g_ivf_ct", "g_ivf_asg", "g_pq_ct", "g_pq_codes", "g_bq"))
       assert(!s.catalog.tableExists(v), s"ensure registered index view $v")
+  }
+
+  test("a watermark job builds the three chain stages; a later wm_extract builds g_stego") {
+    val (s, root) = freshSession()
+    val out = java.nio.file.Files.createTempDirectory("graft_job").toString
+    val job = built {
+      WmCache.ensure(s, TestSpark.Sf)
+      graft.api.Graft(s, TestSpark.Sf).writeWatermarked(s"$out/stego")
+      Backup.saveCarrierIds(s, TestSpark.Sf, s"$out/ids")
+    }
+    assert(job == chain)
+    assert(listing(root).values.toSet == chain.map(Set(_)))
+    def answer(x: SparkSession): Seq[String] =
+      SparkEntry.queries("wm_extract")(x, TestSpark.Sf).collect().map(_.toString).sorted.toSeq
+    var got = Seq.empty[String]
+    assert(built { got = answer(s) } == Set("g_stego"))
+    // the answer of a session that built g_stego before the query
+    val ref = spark.newSession()
+    ref.conf.set("spark.graft.scratch", "off")
+    WmCache.artifact(ref, TestSpark.Sf, "g_stego")
+    assert(got.nonEmpty && got == answer(ref))
   }
 
   test("a key reading g_bkt builds g_bkt on first use, and nothing else") {

@@ -41,4 +41,16 @@ class BackupSpec extends AnyFunSuite {
     assert(row.getLong(3) == nullRow.getLong(0),
       "restored table extracts exactly like the never-watermarked control")
   }
+
+  test("building a restore over a backup runs 0 Spark jobs") {
+    val bk = java.nio.file.Files.createTempDirectory("graft_bk_jobs").toString + "/bk"
+    spark.range(3).selectExpr("id as vec_id", "2 as pos", "cast(id as double) as val")
+      .write.parquet(bk)
+    val cells = spark.range(4).selectExpr("id as vec_id", "2 as pos", "-1.0D as val")
+    var restored: org.apache.spark.sql.DataFrame = null
+    val w = Prof.work(spark) { restored = Backup.restore(cells, bk) }
+    assert(w.jobs == 0, w)
+    assert(restored.orderBy("vec_id").collect().map(_.getDouble(2)).toSeq ==
+      Seq(0.0, 1.0, 2.0, -1.0))
+  }
 }

@@ -34,6 +34,7 @@ class ChainArtifactSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_chain_stages").toFile
     val s1 = session(root)
     WmCache.ensure(s1, TestSpark.Sf)
+    WmCache.artifact(s1, TestSpark.Sf, "g_stego")
     val clean = Seq("g_carriers", "g_stego").map(rows(s1, _))
     val removed = root.listFiles().filter(d =>
       new File(d, "g_carriers").isDirectory || new File(d, "g_stego").isDirectory)
@@ -41,7 +42,10 @@ class ChainArtifactSpec extends AnyFunSuite {
     removed.foreach(Scratch.deleteRec)
 
     val s2 = session(root)
-    assert(built(WmCache.ensure(s2, TestSpark.Sf)) == Set("g_carriers", "g_stego"))
+    assert(built {
+      WmCache.ensure(s2, TestSpark.Sf)
+      WmCache.artifact(s2, TestSpark.Sf, "g_stego")
+    } == Set("g_carriers", "g_stego"))
     assert(Seq("g_carriers", "g_stego").map(rows(s2, _)) == clean)
   }
 

@@ -22,12 +22,14 @@ class ChainKernelSpec extends AnyFunSuite {
     WmParams(key = "another-key-77", rate = 0.2),
     WmParams(message = "CUSTOM MESSAGE!!", key = "k2", rate = 5.0e-4))
 
-  /** A session with `dir`'s chain views built in-session, and g_bkt,
-    * which the g_knn SQL reads. */
+  /** A session with `dir`'s chain views built in-session: the stages
+    * a watermark job reads, g_stego, and g_bkt, which the g_knn SQL
+    * reads. */
   private def session(dir: String): SparkSession = {
     val s = spark.newSession()
     s.conf.set("spark.graft.scratch", "off")
     WmCache.ensure(s, dir)
+    WmCache.artifact(s, dir, "g_stego")
     WmCache.artifact(s, dir, "g_bkt")
     s
   }
@@ -147,17 +149,22 @@ class ChainKernelSpec extends AnyFunSuite {
   }
 
   /** The SQL projection the write-back overlay replaced, over
-    * (vec_id, embedding, sv). */
+    * (vec_id, embedding, sv): sv is a carrier's stego values, regrouped
+    * from its g_stego cells. */
   private val SqlOverlay = Seq("cast(vec_id as bigint) as vec_id",
     """case when sv is null then transform(cast(embedding as array<double>), x -> round(x, 6))
       |else zip_with(cast(embedding as array<double>), sv, (x, s) -> round(coalesce(s, x), 6))
       |end as embedding""".stripMargin)
 
-  /** The write-back table as the SQL overlay computed it: the same
-    * join, projected by [[SqlOverlay]]. */
+  /** The write-back table as the SQL overlay computed it: the g_stego
+    * cells of `params` regrouped into one array per carrier, joined to
+    * the repartitioned corpus and projected by [[SqlOverlay]]. */
   private def sqlOverlay(s: SparkSession, dir: String, params: WmParams): DataFrame = {
     import org.apache.spark.sql.functions._
-    val stego = WmCache.stego(s, dir, params)
+    val cells =
+      if (params == WmParams.Default) WmCache.artifact(s, dir, "g_stego")
+      else ChainKernels.stego(s, WmCache.carriers(s, dir, params), params)
+    val stego = cells
       .groupBy(col("id"))
       .agg(array_sort(collect_list(struct(col("pos"), col("sval")))).as("s"))
       .select(col("id"), expr("transform(s, e -> e.sval)").as("sv"))
@@ -178,16 +185,18 @@ class ChainKernelSpec extends AnyFunSuite {
     }
   }
 
-  test("the write-back overlay keeps zip_with's null padding and transform's null cells") {
+  test("the write-back overlay keeps a non-carrier's null cells and a null vec_id") {
     val in = spark.sql("""select * from values
-      |  (1L, array(1.0D, null, 3.0000005D), cast(null as array<double>)),
-      |  (2L, array(1.0D, null, -2.5e-7D), array(0.1234565D)),
-      |  (3L, array(1.0D), array(null, 2.0000004D, -0.0D)),
-      |  (cast(null as bigint), array(-0.0D), cast(null as array<double>))
-      |  as t(vec_id, embedding, sv)""".stripMargin)
-    val kernel = graft.operators.Writeback.overlaid(spark, in)
-    val sql = in.selectExpr(SqlOverlay: _*)
+      |  (1L, array(1.0D, null, 3.0000005D), cast(null as int)),
+      |  (2L, array(-2.5e-7D, 0.1234565D), cast(null as int)),
+      |  (cast(null as bigint), array(-0.0D, null), cast(null as int))
+      |  as t(vec_id, embedding, blk)""".stripMargin)
+    val kernel = graft.operators.Writeback.overlaid(spark, in, WmParams.Default)
+    // a row with no stego values is the SQL overlay's transform branch
+    val sql = in.selectExpr("vec_id", "cast(null as array<double>) as sv", "embedding")
+      .selectExpr(SqlOverlay: _*)
     assert(kernel.collect().toSeq.map(_.toString) == sql.collect().toSeq.map(_.toString))
     assert(kernel.where("exists(embedding, x -> x is null)").count() == 2)
+    assert(kernel.where("vec_id is null").count() == 1)
   }
 }

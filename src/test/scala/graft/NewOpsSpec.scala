@@ -128,9 +128,8 @@ class NewOpsSpec extends AnyFunSuite {
   }
 
   test("pii_redact fingerprints differ from raw text exactly when digits exist") {
-    import spark.implicits._
     Tables.register(spark, TestSpark.Sf)
-    val joined = run("pii_redact").createOrReplaceTempView("pii")
+    run("pii_redact").createOrReplaceTempView("pii")
     val bad = spark.sql(
       """select count(*) from pii p join documents d on d.doc_id = p.doc_id
         |where (md5(d.text) = p.redacted_fp) <> (p.n_digit_runs = 0 and

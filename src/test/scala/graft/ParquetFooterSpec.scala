@@ -30,6 +30,7 @@ class ParquetFooterSpec extends AnyFunSuite {
     val s = spark.newSession()
     s.conf.set("spark.graft.scratch", root.getAbsolutePath)
     WmCache.ensure(s, TestSpark.Sf)
+    WmCache.artifact(s, TestSpark.Sf, "g_stego")
     WmCache.artifact(s, TestSpark.Sf, "g_bkt")
     val dirs = for {
       key <- root.listFiles().toSeq if new File(key, "_DONE").exists()

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.Prf
 
 /** JVM mirrors for the profiling/association round-6 ops: the MinHash
   * verify stage's exact-Jaccard law, PMI's closed form, the

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{Prf, WmConst, WmDecode}
-import graft.sqlgen.{Wm, WmParams}
+import graft.sqlgen.WmParams
 
 /** Semantic gates for the round-7 thirty-eighth batch: the
   * session-timeout curve (gap census refolded per rung; the 30-min

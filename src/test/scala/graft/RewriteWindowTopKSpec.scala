@@ -73,4 +73,17 @@ class RewriteWindowTopKSpec extends AnyFunSuite {
     }
     assert(residual.collect().map(_.toString).sorted.toSeq == refResidual)
   }
+
+  test("a malformed spark.graft.topkRewrite.maxK throws instead of reading as 100") {
+    // a session of its own: registering installs the rule in it
+    val s = spark.newSession()
+    Tables.register(s, TestSpark.Sf)
+    s.conf.set("spark.graft.topkRewrite.maxK", "ten")
+    val df = s.sql(
+      """select * from (select c_custkey,
+        |  row_number() over (partition by c_nationkey order by c_acctbal desc, c_custkey) as rn
+        |from customer) _t where rn <= 3""".stripMargin)
+    val e = intercept[IllegalArgumentException](df.queryExecution.optimizedPlan)
+    assert(e.getMessage.contains("spark.graft.topkRewrite.maxK"), e.getMessage)
+  }
 }

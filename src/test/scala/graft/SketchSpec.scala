@@ -113,7 +113,6 @@ class SketchSpec extends AnyFunSuite {
     val edges = spark.sql(
       "select distinct least(src, dst) as a, greatest(src, dst) as b from g_knn")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val adj = edges.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
     val nbrs = (edges.map(e => e._1 -> e._2) ++ edges.map(e => e._2 -> e._1))
       .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
     val brute = edges.toSeq.map { case (a, b) =>

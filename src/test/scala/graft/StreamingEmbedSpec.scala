@@ -49,7 +49,7 @@ class StreamingEmbedSpec extends AnyFunSuite {
 
       // the batch chain's raw stego cells: every streamed cell must be
       // the same double
-      val batch = WmCache.stego(spark, TestSpark.Sf)
+      val batch = WmCache.artifact(spark, TestSpark.Sf, "g_stego")
         .collect().map(r => (r.getLong(0), r.getInt(1).toLong) -> r.getDouble(2)).toMap
       assert(streamed.keySet == batch.keySet, "same carrier cells")
       for ((k, sv) <- streamed)

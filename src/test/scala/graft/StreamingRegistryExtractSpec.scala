@@ -63,7 +63,6 @@ class StreamingRegistryExtractSpec extends AnyFunSuite {
   }
 
   test("batch wm_extract_ids key agrees with the clean-path registry votes") {
-    import spark.implicits._
     // the oracle-backed batch key extracts under wm_ber's 30% attack;
     // its surviving vote rows must still majority-decode the message
     // (the registry path's whole point: damage shrinks votes, not

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Cross-session chain scratch: the first ensure() writes each g_*
-  * stage a watermark job reads (g_knn, g_indeg, g_carriers, g_stego)
+  * stage a watermark job reads (g_knn, g_indeg, g_carriers)
   * as parquet under its own (data, SQL)-fingerprinted key; a
   * second session reuses them (chain build ≈ parquet read) and serves
   * IDENTICAL rows. */
@@ -18,8 +18,8 @@ class WmCacheScratchSpec extends AnyFunSuite {
     WmCache.ensure(s1, TestSpark.Sf)
     val done = new java.io.File(root).listFiles()
       .filter(f => f.isDirectory && new java.io.File(f, "_DONE").exists())
-    val stages = Seq("g_knn", "g_indeg", "g_carriers", "g_stego")
-    assert(done.length == 4, s"expected four completed scratch keys, got ${done.length}")
+    val stages = Seq("g_knn", "g_indeg", "g_carriers")
+    assert(done.length == 3, s"expected three completed scratch keys, got ${done.length}")
     // one stage per key
     val stageDir = stages.map(v =>
       v -> done.filter(d => new java.io.File(d, v).isDirectory).toSeq).toMap
